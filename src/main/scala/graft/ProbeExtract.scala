@@ -2,7 +2,7 @@ package graft
 
 // Measurement probe for the q182 stage-A ledger pass (guide §1.4: noop
 // sink, component isolation) — reproduces the stage-A cost decomposition
-// recorded in OPTIMIZATION_r15.md / OPTIMIZATION_r16.md. Not part of the
+// recorded in OPTIMIZATION_r15.md. Not part of the
 // library surface; the corpus IS the benched fixture
 // (SparkEntry.crawlDocs), so probe numbers can never measure a diverged
 // synthesis.

@@ -465,39 +465,28 @@ object Decontam {
 
   // ---- persisted winnowing-fingerprint index ([[EpochStore]] layout) ----
 
-  /** On-disk format version of the fingerprint index; bump on change. */
-  val FingerprintIndexFormatVersion: Int = 1
+  /** On-disk format version of the fingerprint index; bump on change.
+    * v2 records (n, w) in the [[EpochStore]] epoch header.
+    */
+  val FingerprintIndexFormatVersion: Int = 2
+
+  private[graft] val FingerprintIndex = EpochStore.IndexKind(
+    "fingerprint", FingerprintIndexFormatVersion, "writeFingerprintIndex")
 
   private def fpPostings(
       df: DataFrame, idCol: String, textCol: String, n: Int, w: Int): DataFrame =
     df.select(col(idCol).as("id"),
       explode(winnowedGramKeys(col(textCol), n, w)).as("__g"))
 
-  private def writeFpMeta(
-      spark: org.apache.spark.sql.SparkSession, dir: String, n: Int, w: Int): Unit = {
-    import spark.implicits._
-    Seq((n, w, FingerprintIndexFormatVersion)).toDF("n", "w", "format_version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
   private[graft] def resolveFingerprintIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): (String, org.apache.spark.sql.Row) = {
-    val dir = EpochStore.epochDir(spark, path)
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val v = meta.getAs[Int]("format_version")
-    require(v == FingerprintIndexFormatVersion,
-      s"fingerprint index at $path has on-disk format version $v but this " +
-      s"build reads version $FingerprintIndexFormatVersion — rebuild it " +
-      "with writeFingerprintIndex")
-    (dir, meta)
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
+    EpochStore.resolve(spark, path, FingerprintIndex)
 
   /** Persist the standing WINNOWING-FINGERPRINT index — the fourth index
     * lifecycle on the shared [[EpochStore]] delta-epoch layout (next to
     * LSH dedup, ANN, and paragraph hashes): `postings` = (id, 16-hex
-    * fingerprint) rows, `fsizes` = per-doc fingerprint counts, and `meta`
-    * holding (n, w) so probes can never run with mismatched winnowing
+    * fingerprint) rows, `fsizes` = per-doc fingerprint counts, and the epoch
+    * header holding (n, w) so probes can never run with mismatched winnowing
     * parameters. A daily job probes arrivals for partial overlap against
     * the whole standing corpus ([[winnowingPairsAgainstIndex]]) and folds
     * them in ([[appendFingerprintIndex]]) without re-reading corpus text.
@@ -523,8 +512,7 @@ object Decontam {
       retainEpochs: Int = 2): Unit = {
     val spark = corpus.sparkSession
     EpochStore.withLease(spark, path) {
-    val cur = EpochStore.currentEpoch(spark, path)
-    if (cur.isEmpty) EpochStore.resetKeepingLease(spark, path)
+    val cur = EpochStore.buildBase(spark, path)
     val en = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
     val epoch = EpochStore.epochName(en)
     val dir = s"$path/$epoch"
@@ -532,21 +520,21 @@ object Decontam {
     val postingsDir = EpochStore.dataDirName("postings", en)
     val sizesDir = EpochStore.dataDirName("fsizes", en)
     val posted = fpPostings(corpus, idCol, textCol, n, w)
-    // postings and per-doc counts are independent writes — overlap them
+    val sizes = posted.groupBy(col("id")).agg(count(lit(1)).as("nf"))
+    var bloom: EpochStore.IdBloom = null
+    // postings and per-doc counts are independent writes — overlap them;
+    // `fsizes` holds one row per posted id, so its footers size the bloom
     EpochStore.inParallel(
+      () => posted.write.mode("overwrite").parquet(s"$path/data/$postingsDir"),
       () => {
-        posted.write.mode("overwrite").parquet(s"$path/data/$postingsDir")
-        val ids = spark.read.parquet(s"$path/data/$postingsDir").select("id").distinct()
-        val items = EpochStore.idBloomItems(ids.count())
-        EpochStore.writeIdBloom(spark, dir,
-          EpochStore.buildIdBloom(ids, "id", items, EpochStore.IdBloomFpp),
-          items, EpochStore.IdBloomFpp)
-      },
-      () => posted.groupBy(col("id")).agg(count(lit(1)).as("nf"))
-        .write.mode("overwrite").parquet(s"$path/data/$sizesDir"))
-    writeFpMeta(spark, dir, n, w)
-    EpochStore.writeManifest(spark, dir,
-      Seq("postings" -> postingsDir, "fsizes" -> sizesDir))
+        sizes.write.mode("overwrite").parquet(s"$path/data/$sizesDir")
+        bloom = EpochStore.writeFreshIdBloomOf(
+          spark, dir, s"$path/data/$sizesDir", sizes.schema)
+      })
+    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(FingerprintIndex,
+      Map("n" -> n.toString, "w" -> w.toString),
+      Seq("postings" -> postingsDir, "fsizes" -> sizesDir),
+      Map("postings" -> posted.schema, "fsizes" -> sizes.schema), Some(bloom)))
     EpochStore.commitEpoch(spark, path, epoch, cur)
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
@@ -567,14 +555,13 @@ object Decontam {
       textCol: String,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val spark = newDocs.sparkSession
     EpochStore.withLease(spark, path) {
-    val (curDir, meta) = resolveFingerprintIndex(spark, path)
-    val n = meta.getAs[Int]("n")
-    val w = meta.getAs[Int]("w")
-    if (EpochStore.idGuardNeedsExact(spark, curDir, newDocs, idCol)) {
-      val dupIds = EpochStore.readTable(spark, curDir, "fsizes").select("id")
+    val cur = resolveFingerprintIndex(spark, path)
+    val n = cur.header.int("n")
+    val w = cur.header.int("w")
+    if (EpochStore.idGuardNeedsExact(spark, cur, newDocs, idCol)) {
+      val dupIds = EpochStore.readTable(spark, cur, "fsizes").select("id")
         .join(newDocs.select(col(idCol).as("id")), Seq("id"), "left_semi")
         .limit(3).collect().map(_.get(0))
       require(dupIds.isEmpty,
@@ -582,8 +569,7 @@ object Decontam {
         s"(e.g. ${dupIds.mkString(", ")}) — append requires disjoint ids; " +
         "re-appending a committed batch would double its postings")
     }
-    val curEpoch = new HPath(curDir).getName
-    val en = EpochStore.epochNumber(curEpoch) + 1L
+    val en = cur.number + 1L
     val epoch = EpochStore.epochName(en)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir)
@@ -594,18 +580,11 @@ object Decontam {
       () => posted.write.mode("overwrite").parquet(s"$path/data/$postingsDir"),
       () => posted.groupBy(col("id")).agg(count(lit(1)).as("nf"))
         .write.mode("overwrite").parquet(s"$path/data/$sizesDir"),
-      () => {
-        val (bItems, bFpp, bBytes) = EpochStore.appendedIdBloom(
-          spark, curDir, newDocs.select(col(idCol).as("id")),
-          EpochStore.readTable(spark, curDir, "fsizes").select("id")
-            .unionByName(newDocs.select(col(idCol).as("id"))), "id")
-        EpochStore.writeIdBloom(spark, dir, bBytes, bItems, bFpp)
-      })
-    writeFpMeta(spark, dir, n, w)
-    EpochStore.writeManifest(spark, dir,
-      EpochStore.readManifest(spark, curDir) ++
-        Seq("postings" -> postingsDir, "fsizes" -> sizesDir))
-    EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+      () => EpochStore.writeIdBloom(spark, dir, EpochStore.appendedIdBloom(
+        spark, cur, newDocs.select(col(idCol).as("id")), "id")))
+    EpochStore.writeHeader(spark, dir, cur.header.copy(manifest = cur.header.manifest ++
+      Seq("postings" -> postingsDir, "fsizes" -> sizesDir)))
+    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
   }
@@ -618,32 +597,27 @@ object Decontam {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     EpochStore.withLease(spark, path) {
-    val (curDir, meta) = resolveFingerprintIndex(spark, path)
-    val curEpoch = new HPath(curDir).getName
-    val en = EpochStore.epochNumber(curEpoch) + 1L
+    val cur = resolveFingerprintIndex(spark, path)
+    val en = cur.number + 1L
     val epoch = EpochStore.epochName(en)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir)
     val postingsDir = EpochStore.dataDirName("postings", en)
     val sizesDir = EpochStore.dataDirName("fsizes", en)
+    var bloom: EpochStore.IdBloom = null
     EpochStore.inParallel(
+      () => EpochStore.readTable(spark, cur, "postings")
+        .write.mode("overwrite").parquet(s"$path/data/$postingsDir"),
       () => {
-        EpochStore.readTable(spark, curDir, "postings")
-          .write.mode("overwrite").parquet(s"$path/data/$postingsDir")
-        val ids = spark.read.parquet(s"$path/data/$postingsDir").select("id").distinct()
-        val items = EpochStore.idBloomItems(ids.count())
-        EpochStore.writeIdBloom(spark, dir,
-          EpochStore.buildIdBloom(ids, "id", items, EpochStore.IdBloomFpp),
-          items, EpochStore.IdBloomFpp)
-      },
-      () => EpochStore.readTable(spark, curDir, "fsizes")
-        .write.mode("overwrite").parquet(s"$path/data/$sizesDir"))
-    writeFpMeta(spark, dir, meta.getAs[Int]("n"), meta.getAs[Int]("w"))
-    EpochStore.writeManifest(spark, dir,
-      Seq("postings" -> postingsDir, "fsizes" -> sizesDir))
-    EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+        EpochStore.readTable(spark, cur, "fsizes")
+          .write.mode("overwrite").parquet(s"$path/data/$sizesDir")
+        bloom = EpochStore.writeFreshIdBloomOf(
+          spark, dir, s"$path/data/$sizesDir", cur.header.schemas("fsizes"))
+      })
+    EpochStore.writeHeader(spark, dir, cur.header.copy(
+      manifest = Seq("postings" -> postingsDir, "fsizes" -> sizesDir), bloom = Some(bloom)))
+    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
   }
@@ -668,9 +642,9 @@ object Decontam {
     require(maxDf >= 2, s"maxDf must be >= 2 (no pair can share a df-1 fingerprint), got $maxDf")
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     val spark = batch.sparkSession
-    val (dir, meta) = resolveFingerprintIndex(spark, path)
-    val n = meta.getAs[Int]("n")
-    val w = meta.getAs[Int]("w")
+    val ep = resolveFingerprintIndex(spark, path)
+    val n = ep.header.int("n")
+    val w = ep.header.int("w")
     // the batch's fingerprints feed the touched-key broadcast, the df
     // counts, the pair join, and the per-doc sizes — materialize once so
     // the batch text is winnowed exactly once. The PRUNED standing side
@@ -681,7 +655,7 @@ object Decontam {
     val nf = Materialize.eager(fpPostings(batch, idCol, textCol, n, w)
       .withColumnRenamed("id", "new_id"))
     val touched = nf.select(col("__g")).distinct()
-    val ef = EpochStore.readTable(spark, dir, "postings")
+    val ef = EpochStore.readTable(spark, ep, "postings")
       .join(broadcast(touched), Seq("__g"), "left_semi")
       .withColumnRenamed("id", "existing_id")
     val gc = nf.select(col("__g"))
@@ -695,7 +669,7 @@ object Decontam {
       .agg(count(lit(1)).as("shared_fps"))
       .where(col("shared_fps") >= minShared)
       .join(nf.groupBy(col("new_id")).agg(count(lit(1)).as("n_fps_new")), Seq("new_id"))
-      .join(EpochStore.readTable(spark, dir, "fsizes")
+      .join(EpochStore.readTable(spark, ep, "fsizes")
         .select(col("id").as("existing_id"), col("nf").as("n_fps_existing")),
         Seq("existing_id"))
       .select(col("new_id"), col("existing_id"), col("shared_fps"),

@@ -229,35 +229,27 @@ object Dedup {
 
   // ---- persisted paragraph-hash index ([[EpochStore]] delta-epoch layout) ----
 
-  /** On-disk format version of the paragraph index; bump on layout change. */
-  val ParagraphIndexFormatVersion: Int = 1
+  /** On-disk format version of the paragraph index; bump on layout change.
+    * v2 records everything per-epoch in the [[EpochStore]] header.
+    */
+  val ParagraphIndexFormatVersion: Int = 2
+
+  private[graft] val ParagraphIndex = EpochStore.IndexKind(
+    "paragraph", ParagraphIndexFormatVersion, "writeParagraphIndex")
 
   /** Distinct paragraph hashes of a corpus — the whole index payload. */
   private def paraHashes(df: DataFrame, textCol: String): DataFrame =
     df.select(explode(split(col(textCol), ParaSep)).as("__para"))
       .select(md5(col("__para").cast("binary")).as("h")).distinct()
 
-  private def writeParaMeta(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    import spark.implicits._
-    Seq(Tuple1(ParagraphIndexFormatVersion)).toDF("format_version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
   private[graft] def resolveParagraphIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val dir = EpochStore.epochDir(spark, path)
-    val v = spark.read.parquet(s"$dir/meta").head().getAs[Int]("format_version")
-    require(v == ParagraphIndexFormatVersion,
-      s"paragraph index at $path has on-disk format version $v but this " +
-      s"build reads version $ParagraphIndexFormatVersion — rebuild it with " +
-      "writeParagraphIndex")
-    dir
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
+    EpochStore.resolve(spark, path, ParagraphIndex)
 
   /** The live hash table (`h`) of a resolved epoch — pure delta union. */
   private[graft] def paragraphIndexHashes(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    EpochStore.readTable(spark, dir, "phashes")
+      spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch): DataFrame =
+    EpochStore.readTable(spark, ep, "phashes")
 
   /** Persist the standing PARAGRAPH-hash index: the distinct md5 of every
     * blank-line paragraph in the corpus, on the shared [[EpochStore]]
@@ -276,16 +268,16 @@ object Dedup {
       retainEpochs: Int = 2): Unit = {
     val spark = corpus.sparkSession
     EpochStore.withLease(spark, path) {
-    val cur = EpochStore.currentEpoch(spark, path)
-    if (cur.isEmpty) EpochStore.resetKeepingLease(spark, path)
+    val cur = EpochStore.buildBase(spark, path)
     val n = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir)
     val d = EpochStore.dataDirName("phashes", n)
-    paraHashes(corpus, textCol).write.mode("overwrite").parquet(s"$path/data/$d")
-    writeParaMeta(spark, dir)
-    EpochStore.writeManifest(spark, dir, Seq("phashes" -> d))
+    val hashes = paraHashes(corpus, textCol)
+    hashes.write.mode("overwrite").parquet(s"$path/data/$d")
+    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(ParagraphIndex,
+      Map.empty, Seq("phashes" -> d), Map("phashes" -> hashes.schema), None))
     EpochStore.commitEpoch(spark, path, epoch, cur)
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
@@ -304,28 +296,25 @@ object Dedup {
       textCol: String,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val spark = newDocs.sparkSession
     EpochStore.withLease(spark, path) {
-    val curDir = resolveParagraphIndex(spark, path)
-    val curEpoch = new HPath(curDir).getName
-    val n = EpochStore.epochNumber(curEpoch) + 1L
+    val cur = resolveParagraphIndex(spark, path)
+    val n = cur.number + 1L
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir)
     val d = EpochStore.dataDirName("phashes", n)
-    val delta = paraHashes(newDocs, textCol)
-      .join(paragraphIndexHashes(spark, curDir), Seq("h"), "left_anti")
-    delta.write.mode("overwrite").parquet(s"$path/data/$d")
-    if (spark.read.parquet(s"$path/data/$d").isEmpty) {
+    paraHashes(newDocs, textCol)
+      .join(paragraphIndexHashes(spark, cur), Seq("h"), "left_anti")
+      .write.mode("overwrite").parquet(s"$path/data/$d")
+    if (EpochStore.parquetRowCount(spark, s"$path/data/$d") == 0L) {
       // nothing new — leave the live epoch untouched (idempotent replay)
       EpochStore.deleteDir(spark, s"$path/data/$d")
       EpochStore.deleteDir(spark, dir)
     } else {
-      writeParaMeta(spark, dir)
-      EpochStore.writeManifest(spark, dir,
-        EpochStore.readManifest(spark, curDir) ++ Seq("phashes" -> d))
-      EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+      EpochStore.writeHeader(spark, dir, cur.header.copy(
+        manifest = cur.header.manifest :+ ("phashes" -> d)))
+      EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
       EpochStore.gc(spark, path, epoch, retainEpochs)
     }
     }
@@ -338,20 +327,17 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     EpochStore.withLease(spark, path) {
-    val curDir = resolveParagraphIndex(spark, path)
-    val curEpoch = new HPath(curDir).getName
-    val n = EpochStore.epochNumber(curEpoch) + 1L
+    val cur = resolveParagraphIndex(spark, path)
+    val n = cur.number + 1L
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir)
     val d = EpochStore.dataDirName("phashes", n)
-    paragraphIndexHashes(spark, curDir)
+    paragraphIndexHashes(spark, cur)
       .write.mode("overwrite").parquet(s"$path/data/$d")
-    writeParaMeta(spark, dir)
-    EpochStore.writeManifest(spark, dir, Seq("phashes" -> d))
-    EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+    EpochStore.writeHeader(spark, dir, cur.header.copy(manifest = Seq("phashes" -> d)))
+    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
   }
@@ -374,8 +360,8 @@ object Dedup {
       path: String,
       withinBatch: Boolean = true): DataFrame = {
     val spark = docs.sparkSession
-    val dir = resolveParagraphIndex(spark, path)
-    val idx = paragraphIndexHashes(spark, dir).withColumnRenamed("h", "__h")
+    val idx = paragraphIndexHashes(spark, resolveParagraphIndex(spark, path))
+      .withColumnRenamed("h", "__h")
     val fresh = paragraphOccurrences(docs, idCol, textCol)
       .join(idx, Seq("__h"), "left_anti")
     val keep = if (withinBatch) firstOccurrence(fresh, idCol) else fresh
@@ -619,33 +605,27 @@ object Dedup {
     * manifest over immutable `data/` parquet dirs, so an append writes
     * only its delta files and carries the standing data forward BY
     * REFERENCE — never a copy of the index (v3 rewrote both tables, and
-    * `sets` is the same order of magnitude as the corpus token stream).
+    * `sets` is the same order of magnitude as the corpus token stream);
+    * v5 replaces the per-epoch `manifest`/`meta`/`idbloom` parquet tables
+    * with the one epoch header (read and written without Spark jobs).
     */
-  val DedupIndexFormatVersion: Int = 4
+  val DedupIndexFormatVersion: Int = 5
+
+  private[graft] val DedupIndex = EpochStore.IndexKind(
+    "dedup", DedupIndexFormatVersion, "writeDedupIndex")
 
   /** Directory of the live epoch — see [[EpochStore.epochDir]]. */
   private[graft] def epochDir(
       spark: org.apache.spark.sql.SparkSession, path: String): String =
     EpochStore.epochDir(spark, path)
 
-  /** Resolve the live epoch and check its meta's format version — every
-    * index reader goes through this, so drifted layouts fail loudly.
+  /** Resolve the live epoch and check its header's kind and format
+    * version — every index reader goes through this, so drifted layouts
+    * fail loudly. Banding parameters are header params.
     */
   private[graft] def resolveIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): (String, org.apache.spark.sql.Row) = {
-    val dir = epochDir(spark, path)
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val v =
-      if (meta.schema.fieldNames.contains("format_version")) meta.getAs[Int]("format_version")
-      else 1
-    require(v == DedupIndexFormatVersion,
-      s"dedup index at $path has on-disk format version $v but this build " +
-      s"reads version $DedupIndexFormatVersion — rebuild it with " +
-      "writeDedupIndex (a standing index outlives code versions; silent " +
-      "banding/layout drift is exactly what this check prevents)")
-    (dir, meta)
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
+    EpochStore.resolve(spark, path, DedupIndex)
 
   /** The live `buckets` table of a resolved epoch: the union of the
     * manifest's data dirs (one multi-path scan) minus tombstoned buckets.
@@ -655,29 +635,20 @@ object Dedup {
     * carried-forward files (`dropped` is one tiny row per oversize bucket).
     */
   private[graft] def indexBuckets(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    EpochStore.readTable(spark, dir, "buckets").join(
-      broadcast(indexDropped(spark, dir).select("band", "bhash")),
+      spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch): DataFrame =
+    EpochStore.readTable(spark, ep, "buckets").join(
+      broadcast(indexDropped(spark, ep).select("band", "bhash")),
       Seq("band", "bhash"), "left_anti")
 
   /** The `sets` table (id, hs) of a resolved epoch — pure delta union. */
   private[graft] def indexSets(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    EpochStore.readTable(spark, dir, "sets")
+      spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch): DataFrame =
+    EpochStore.readTable(spark, ep, "sets")
 
   /** Oversize-bucket tombstones (band, bhash, n) — per-epoch, tiny. */
   private[graft] def indexDropped(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/dropped")
-
-  private def writeMeta(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      k: Int, numHashes: Int, bands: Int, maxBucketSize: Int): Unit = {
-    import spark.implicits._
-    Seq((k, numHashes, bands, maxBucketSize, DedupIndexFormatVersion))
-      .toDF("k", "num_hashes", "bands", "max_bucket_size", "format_version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+      spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch): DataFrame =
+    EpochStore.readEpochTable(spark, ep, "dropped")
 
   /** Persist the standing dedup index: the corpus's LSH buckets (oversize-
     * guarded) and hashed shingle sets, written once as parquet so arrivals
@@ -685,15 +656,16 @@ object Dedup {
     * 100 TB the index is a few 8-byte columns, the corpus re-scan it
     * replaces is the whole text column.
     *
-    * Layout (v4, delta-epoch — see [[EpochStore]]): `<path>/current` names
-    * the live epoch dir; `<path>/epoch-N/` holds `manifest` (which
-    * immutable `<path>/data/` dirs form the `buckets` = (band, bhash, id)
-    * and `sets` = (id, hs) tables), `dropped` = (band, bhash, n)
-    * tombstones for oversize-dropped buckets (their TRUE total count —
-    * [[appendDedupIndex]] needs it so rows arriving into an already-
-    * dropped bucket stay dropped, keeping append ≡ rebuild), and `meta` =
-    * banding parameters + format version, which every reader resolves FROM
-    * the index so a probe can never run with mismatched banding.
+    * Layout (v5, delta-epoch — see [[EpochStore]]): `<path>/current` names
+    * the live epoch dir; `<path>/epoch-N/` holds the epoch `header` (its
+    * manifest names the immutable `<path>/data/` dirs that form the
+    * `buckets` = (band, bhash, id) and `sets` = (id, hs) tables; its params
+    * are the banding parameters, which every reader resolves FROM the index
+    * so a probe can never run with mismatched banding), the compressed id
+    * bloom, and `dropped` = (band, bhash, n) tombstones for oversize-dropped
+    * buckets (their TRUE total count — [[appendDedupIndex]] needs it so
+    * rows arriving into an already-dropped bucket stay dropped, keeping
+    * append ≡ rebuild).
     *
     * Rebuilding over an EXISTING index is non-destructive: the new state
     * is written as epoch N+1 referencing only its own fresh data dirs and
@@ -717,8 +689,7 @@ object Dedup {
       retainEpochs: Int = 2): Unit = {
     val spark = existing.sparkSession
     EpochStore.withLease(spark, path) {
-    val cur = EpochStore.currentEpoch(spark, path)
-    if (cur.isEmpty) EpochStore.resetKeepingLease(spark, path)
+    val cur = EpochStore.buildBase(spark, path)
     val n = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
@@ -728,41 +699,39 @@ object Dedup {
     // over the corpus text, not one per output table
     val stage = s"$dir/stage"
     val w = Window.partitionBy(col("band"), col("bhash"))
-    existing.select(
+    val staging = existing.select(
       col(idCol).as("id"),
       graft.functions.native
         .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
         .as("bh"))
       .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id"))
       .withColumn("n", count(lit(1)).over(w))
-      .write.mode("overwrite").parquet(stage)
-    val staged = spark.read.parquet(stage)
+    staging.write.mode("overwrite").parquet(stage)
+    val staged = spark.read.schema(staging.schema).parquet(stage)
     val bucketsDir = EpochStore.dataDirName("buckets", n)
     val setsDir = EpochStore.dataDirName("sets", n)
+    val buckets = staged.where(col("n") <= maxBucketSize).select("band", "bhash", "id")
+    val dropped = staged.where(col("n") > maxBucketSize)
+      .select("band", "bhash", "n").distinct()
+    val sets = existing.select(
+      col(idCol).as("id"),
+      graft.functions.native
+        .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs"))
     // the three epoch tables derive independently (buckets/dropped from the
     // staged parquet, sets from the corpus) — overlap their write jobs
     EpochStore.inParallel(
-      () => staged.where(col("n") <= maxBucketSize)
-        .select("band", "bhash", "id")
-        .write.mode("overwrite").parquet(s"$path/data/$bucketsDir"),
-      () => staged.where(col("n") > maxBucketSize)
-        .select("band", "bhash", "n").distinct()
-        .write.mode("overwrite").parquet(s"$dir/dropped"),
-      () => existing.select(
-        col(idCol).as("id"),
-        graft.functions.native
-          .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs"))
-        .write.mode("overwrite").parquet(s"$path/data/$setsDir"))
+      () => buckets.write.mode("overwrite").parquet(s"$path/data/$bucketsDir"),
+      () => dropped.write.mode("overwrite").parquet(s"$dir/dropped"),
+      () => sets.write.mode("overwrite").parquet(s"$path/data/$setsDir"))
     // id bloom for the O(1) append guard — built from the just-written
     // sets file (footer-count sizing + one narrow id read)
-    val setsIds = spark.read.parquet(s"$path/data/$setsDir").select("id")
-    val bloomItems = EpochStore.idBloomItems(setsIds.count())
-    EpochStore.writeIdBloom(spark, dir,
-      EpochStore.buildIdBloom(setsIds, "id", bloomItems, EpochStore.IdBloomFpp),
-      bloomItems, EpochStore.IdBloomFpp)
-    writeMeta(spark, dir, k, numHashes, bands, maxBucketSize)
-    EpochStore.writeManifest(spark, dir,
-      Seq("buckets" -> bucketsDir, "sets" -> setsDir))
+    val bloom = EpochStore.writeFreshIdBloomOf(spark, dir, s"$path/data/$setsDir", sets.schema)
+    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(DedupIndex,
+      Map("k" -> k.toString, "num_hashes" -> numHashes.toString,
+        "bands" -> bands.toString, "max_bucket_size" -> maxBucketSize.toString),
+      Seq("buckets" -> bucketsDir, "sets" -> setsDir),
+      Map("buckets" -> buckets.schema, "sets" -> sets.schema, "dropped" -> dropped.schema),
+      Some(bloom)))
     EpochStore.deleteDir(spark, stage)
     EpochStore.commitEpoch(spark, path, epoch, cur)
     EpochStore.gc(spark, path, epoch, retainEpochs)
@@ -788,7 +757,7 @@ object Dedup {
     * Ids already present in the index are rejected LOUDLY before any write
     * (a retried already-committed batch would otherwise double-count
     * bucket sizes and duplicate probe pairs — silently). Banding
-    * parameters come FROM the index meta; the format version is checked
+    * parameters come FROM the epoch header; the format version is checked
     * first. The previous epoch is retained for one generation (in-flight
     * readers that resolved it keep working) and older epochs are
     * garbage-collected.
@@ -818,19 +787,18 @@ object Dedup {
       idCol: String,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val spark = newDocs.sparkSession
     EpochStore.withLease(spark, path) {
-    val (curDir, meta) = resolveIndex(spark, path)
-    val k = meta.getAs[Int]("k")
-    val numHashes = meta.getAs[Int]("num_hashes")
-    val bands = meta.getAs[Int]("bands")
-    val maxBucketSize = meta.getAs[Int]("max_bucket_size")
+    val cur = resolveIndex(spark, path)
+    val k = cur.header.int("k")
+    val numHashes = cur.header.int("num_hashes")
+    val bands = cur.header.int("bands")
+    val maxBucketSize = cur.header.int("max_bucket_size")
     // dup-id guard: the epoch's id bloom clears a clean batch without
     // touching the standing `sets` id column at all; only a bloom hit (a
     // real dup or an fpp false positive) pays the exact semi-join
-    if (EpochStore.idGuardNeedsExact(spark, curDir, newDocs, idCol)) {
-      val dupIds = indexSets(spark, curDir).select("id")
+    if (EpochStore.idGuardNeedsExact(spark, cur, newDocs, idCol)) {
+      val dupIds = indexSets(spark, cur).select("id")
         .join(newDocs.select(col(idCol).as("id")), Seq("id"), "left_semi")
         .limit(3).collect().map(_.get(0))
       require(dupIds.isEmpty,
@@ -839,8 +807,7 @@ object Dedup {
         "the same contract as unioning the corpora; re-appending a committed " +
         "batch would double-count bucket sizes and duplicate probe pairs")
     }
-    val curEpoch = new HPath(curDir).getName
-    val n = EpochStore.epochNumber(curEpoch) + 1L
+    val n = cur.number + 1L
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir) // debris from a crashed prior attempt
@@ -848,19 +815,19 @@ object Dedup {
     // count below derive from the staged parquet, so the signature kernel
     // runs exactly once over the new docs
     val stage = s"$dir/stage"
-    newDocs.select(
+    val staging = newDocs.select(
       col(idCol).as("id"),
       graft.functions.native
         .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
         .as("bh"))
       .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id"))
-      .write.mode("overwrite").parquet(stage)
-    val staged = spark.read.parquet(stage)
+    staging.write.mode("overwrite").parquet(stage)
+    val staged = spark.read.schema(staging.schema).parquet(stage)
     val touched = staged.select("band", "bhash").distinct()
-    val tomb = indexDropped(spark, curDir)
+    val tomb = indexDropped(spark, cur)
     // prior live counts for TOUCHED buckets only — the broadcast semi-join
     // prunes the standing scan; nothing untouched is counted or shuffled
-    val priorCounts = EpochStore.readTable(spark, curDir, "buckets")
+    val priorCounts = EpochStore.readTable(spark, cur, "buckets")
       .join(broadcast(touched), Seq("band", "bhash"), "left_semi")
       .groupBy("band", "bhash").agg(count(lit(1)).as("n_scan"))
     // a tombstoned bucket's true total lives in its tombstone: stale
@@ -879,7 +846,7 @@ object Dedup {
     val setsDir = EpochStore.dataDirName("sets", n)
     // three independent arms overlap: (a) tombstones then the delta bucket
     // rows they gate, (b) the batch's shingle sets (the heavy kernel pass),
-    // (c) the successor id bloom (reads only standing ids + batch ids)
+    // (c) the successor id bloom (reads only the batch ids)
     EpochStore.inParallel(
       () => {
         tomb.join(broadcast(touched), Seq("band", "bhash"), "left_anti")
@@ -887,7 +854,7 @@ object Dedup {
             totals.where(col("n_tomb").isNotNull || col("n") > maxBucketSize)
               .select("band", "bhash", "n"))
           .write.mode("overwrite").parquet(s"$dir/dropped")
-        val dropped = spark.read.parquet(s"$dir/dropped")
+        val dropped = spark.read.schema(tomb.schema).parquet(s"$dir/dropped")
         staged.join(broadcast(dropped.select("band", "bhash")),
           Seq("band", "bhash"), "left_anti")
           .select("band", "bhash", "id")
@@ -898,21 +865,12 @@ object Dedup {
         graft.functions.native
           .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs"))
         .write.mode("overwrite").parquet(s"$path/data/$setsDir"),
-      () => {
-        // successor bloom: delta over the batch merged into the standing
-        // bits (pre-bloom indexes upgrade once from the union id set)
-        val (bItems, bFpp, bBytes) = EpochStore.appendedIdBloom(
-          spark, curDir, newDocs.select(col(idCol).as("id")),
-          indexSets(spark, curDir).select("id")
-            .unionByName(newDocs.select(col(idCol).as("id"))), "id")
-        EpochStore.writeIdBloom(spark, dir, bBytes, bItems, bFpp)
-      })
-    writeMeta(spark, dir, k, numHashes, bands, maxBucketSize)
-    EpochStore.writeManifest(spark, dir,
-      EpochStore.readManifest(spark, curDir) ++
-        Seq("buckets" -> bucketsDir, "sets" -> setsDir))
+      () => EpochStore.writeIdBloom(spark, dir, EpochStore.appendedIdBloom(
+        spark, cur, newDocs.select(col(idCol).as("id")), "id")))
+    EpochStore.writeHeader(spark, dir, cur.header.copy(manifest =
+      cur.header.manifest ++ Seq("buckets" -> bucketsDir, "sets" -> setsDir)))
     EpochStore.deleteDir(spark, stage)
-    EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
   }
@@ -937,11 +895,9 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     EpochStore.withLease(spark, path) {
-    val (curDir, meta) = resolveIndex(spark, path)
-    val curEpoch = new HPath(curDir).getName
-    val n = EpochStore.epochNumber(curEpoch) + 1L
+    val cur = resolveIndex(spark, path)
+    val n = cur.number + 1L
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir)
@@ -949,24 +905,19 @@ object Dedup {
     val setsDir = EpochStore.dataDirName("sets", n)
     // the three table rewrites are independent — overlap their jobs
     EpochStore.inParallel(
-      () => indexBuckets(spark, curDir)
+      () => indexBuckets(spark, cur)
         .write.mode("overwrite").parquet(s"$path/data/$bucketsDir"),
-      () => indexSets(spark, curDir)
+      () => indexSets(spark, cur)
         .write.mode("overwrite").parquet(s"$path/data/$setsDir"),
-      () => indexDropped(spark, curDir)
+      () => indexDropped(spark, cur)
         .write.mode("overwrite").parquet(s"$dir/dropped"))
     // right-size a fresh id bloom from the compacted sets (merged blooms
     // keep build-time capacity; compaction is where capacity resets)
-    val setsIds = spark.read.parquet(s"$path/data/$setsDir").select("id")
-    val bloomItems = EpochStore.idBloomItems(setsIds.count())
-    EpochStore.writeIdBloom(spark, dir,
-      EpochStore.buildIdBloom(setsIds, "id", bloomItems, EpochStore.IdBloomFpp),
-      bloomItems, EpochStore.IdBloomFpp)
-    writeMeta(spark, dir, meta.getAs[Int]("k"), meta.getAs[Int]("num_hashes"),
-      meta.getAs[Int]("bands"), meta.getAs[Int]("max_bucket_size"))
-    EpochStore.writeManifest(spark, dir,
-      Seq("buckets" -> bucketsDir, "sets" -> setsDir))
-    EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+    val bloom = EpochStore.writeFreshIdBloomOf(
+      spark, dir, s"$path/data/$setsDir", cur.header.schemas("sets"))
+    EpochStore.writeHeader(spark, dir, cur.header.copy(
+      manifest = Seq("buckets" -> bucketsDir, "sets" -> setsDir), bloom = Some(bloom)))
+    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
   }
@@ -974,7 +925,7 @@ object Dedup {
   /** Probe a persisted index ([[writeDedupIndex]]) with new documents —
     * identical result to [[minhashPairsAgainst]] on the original corpus,
     * but the only work on the existing side is reading two narrow parquet
-    * tables. Banding parameters come FROM the index's meta table, so the
+    * tables. Banding parameters come FROM the epoch header, so the
     * new side always hashes compatibly.
     */
   def minhashPairsAgainstIndex(
@@ -984,10 +935,10 @@ object Dedup {
       path: String,
       threshold: Double = 0.5): DataFrame = {
     val spark = newDocs.sparkSession
-    val (dir, meta) = resolveIndex(spark, path)
-    val k = meta.getAs[Int]("k")
-    val numHashes = meta.getAs[Int]("num_hashes")
-    val bands = meta.getAs[Int]("bands")
+    val ep = resolveIndex(spark, path)
+    val k = ep.header.int("k")
+    val numHashes = ep.header.int("num_hashes")
+    val bands = ep.header.int("bands")
     val newSide = newDocs.select(
       col(idCol).as("new_id"),
       graft.functions.native
@@ -997,9 +948,9 @@ object Dedup {
         .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs_a"))
       .select(col("new_id"), col("hs_a"),
         posexplode(col("bh")).as(Seq("band", "bhash")))
-    val buckets = indexBuckets(spark, dir)
+    val buckets = indexBuckets(spark, ep)
       .withColumnRenamed("id", "existing_id")
-    val sets = indexSets(spark, dir)
+    val sets = indexSets(spark, ep)
       .select(col("id").as("existing_id"), col("hs").as("hs_b"))
     newSide.join(buckets, Seq("band", "bhash"))
       // hs_a is identical on every row of a new_id, so the arbitrary-row

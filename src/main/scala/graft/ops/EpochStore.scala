@@ -1,24 +1,39 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Shared epoch/manifest machinery for the persisted on-disk indexes (the
-  * dedup LSH index and the ANN/IVF index).
+/** Shared epoch machinery for the six persisted on-disk indexes (LSH dedup,
+  * paragraph hashes, ANN/IVF, winnowing fingerprints, token frequencies and
+  * the classifier counters).
   *
   * Layout (one index root `path`):
   * {{{
   *   <path>/current               # pointer file naming the live epoch dir
   *   <path>/data/<table>-NNNNNNNNN/   # immutable parquet data dirs, never rewritten
   *   <path>/epoch-NNNNNNNNN/
-  *     manifest/                  # parquet (table, dir): which data dirs form each table
-  *     ... per-index small tables (dropped/centroids/meta), rewritten per epoch
+  *     header                     # ONE immutable file: index kind, format
+  *                                #   version, parameters, the manifest (which
+  *                                #   data dirs form each table), every table's
+  *                                #   schema, the id-bloom parameters, a CRC32
+  *     idbloom.deflate            # deflate-compressed id-bloom bits (five of
+  *                                #   the six indexes; see [[IdBloomFileName]])
+  *     ... per-index small tables (dropped/centroids), rewritten per epoch
   * }}}
+  *
+  * The header is written and read directly through the Hadoop FileSystem
+  * API — resolving an epoch, building a table's DataFrame and gc's
+  * reference scan launch no Spark job. Readers parse it once per operation
+  * ([[resolve]]) and pass the parsed [[Epoch]] along; tables are read with
+  * their recorded schema, so no read infers one. A header whose CRC does
+  * not match its body (a truncated or corrupted file) fails loudly.
   *
   * The delta-epoch contract: data dirs are IMMUTABLE once written. A new
   * epoch's manifest references the previous epoch's data dirs plus fresh
   * delta dirs for new arrivals — appending to a 100 TB index writes only
   * the delta, never a copy of the standing data. Small per-epoch tables
-  * (tombstones, centroids, meta) are rewritten each epoch; they are O(keys)
+  * (tombstones, centroids) are rewritten each epoch; they are O(keys)
   * or O(1), not O(corpus). The epoch becomes live via ONE atomic pointer
   * rename ([[commitEpoch]]); [[gc]] afterwards deletes epochs older than
   * the retention window and any data dir no retained manifest references.
@@ -56,7 +71,6 @@ private[graft] object EpochStore {
   def acquireLease(
       spark: SparkSession, path: String,
       staleMs: Long = DefaultLeaseStaleMs): String = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = hadoopFs(spark, path)
     val p = new HPath(path, LeaseFileName)
     val token = java.util.UUID.randomUUID().toString
@@ -89,20 +103,16 @@ private[graft] object EpochStore {
   /** The current content of the lease file (the holder's fencing token),
     * or None when no lease exists.
     */
-  private def readLeaseToken(spark: SparkSession, path: String): Option[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val fs = hadoopFs(spark, path)
-    val p = new HPath(path, LeaseFileName)
+  private def readLeaseToken(spark: SparkSession, path: String): Option[String] =
+    readBytes(hadoopFs(spark, path), new HPath(path, LeaseFileName))
+      .map(new String(_, "UTF-8"))
+
+  /** The whole content of a small file, or None when it does not exist. */
+  private def readBytes(fs: FileSystem, p: HPath): Option[Array[Byte]] =
     try {
-      val st = fs.getFileStatus(p)
       val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](st.getLen.toInt)
-        in.readFully(bytes)
-        Some(new String(bytes, "UTF-8"))
-      } finally in.close()
+      try Some(in.readAllBytes()) finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
-  }
 
   /** Release the lease IF still held with `token` — a stale-lease takeover
     * may have replaced it, in which case the new holder's lease is left
@@ -110,7 +120,6 @@ private[graft] object EpochStore {
     * the fence/tripwire failed it).
     */
   def releaseLease(spark: SparkSession, path: String, token: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     if (readLeaseToken(spark, path).contains(token)) {
       hadoopFs(spark, path).delete(new HPath(path, LeaseFileName), false)
       ()
@@ -181,30 +190,38 @@ private[graft] object EpochStore {
     * hit pays ONE left-join aggregate returning both numbers, instead of
     * the prior separate semi-join count + total count. Standing `ids`
     * rows are globally unique (disjoint appends are the store's commit
-    * invariant), so the left join cannot multiply batch rows. Callers
+    * invariant); a standing id matched more than once proves the table
+    * corrupt, and the guard fails loudly rather than mistake a partial
+    * replay for a full one (a silent no-op that drops new ids). Callers
     * should pass a persisted `batchIds` — the guard, the ids delta write
     * and the bloom merge all re-read it.
     */
   def counterGuardCounts(
-      spark: SparkSession, epochDir: String,
+      spark: SparkSession, cur: Epoch,
       batchIds: DataFrame): (Long, Long) = {
     import org.apache.spark.sql.functions._
-    if (!idGuardNeedsExact(spark, epochDir, batchIds, "id"))
+    if (!idGuardNeedsExact(spark, cur, batchIds, "id"))
       (0L, batchIds.count())
     else {
-      val standing = readTable(spark, epochDir, "ids")
+      val standing = readTable(spark, cur, "ids")
         .select(col("id"), lit(1L).as("__hit"))
       // total counts DISTINCT batch ids, not post-join rows: standing ids
       // are globally unique by the disjoint-append invariant, but if that
       // is ever violated (a corrupted or partially-compacted epoch) the
       // left join multiplies batch rows — a row-count total would inflate
       // in lockstep with overlap and the replay guard could mis-drive
-      // silently. Distinct-counting pins total to the batch alone, so a
-      // broken ids table can only inflate overlap, which fails LOUD.
+      // silently. Distinct-counting pins total to the batch alone, and a
+      // matched id counted more than once proves the corruption.
       val r = batchIds.join(standing, Seq("id"), "left")
-        .agg(countDistinct(col("id")).as("__t"), count(col("__hit")).as("__o"))
+        .agg(countDistinct(col("id")), count(col("__hit")),
+          countDistinct(when(col("__hit").isNotNull, col("id"))))
         .head()
-      (r.getLong(1), r.getLong(0))
+      val (total, overlap) = (r.getLong(0), r.getLong(1))
+      require(overlap <= total && overlap == r.getLong(2),
+        s"standing ids table has duplicate ids — epoch corrupt (${cur.dir}: " +
+        s"$overlap matched rows for ${r.getLong(2)} matched batch ids); " +
+        "rebuild the index")
+      (overlap, total)
     }
   }
 
@@ -251,27 +268,42 @@ private[graft] object EpochStore {
     bos.toByteArray
   }
 
-  /** Persist an epoch's id bloom (one parquet row: parameters + bits). */
-  def writeIdBloom(
-      spark: SparkSession, epochDir: String,
-      bytes: Array[Byte], items: Long, fpp: Double): Unit = {
-    import spark.implicits._
-    Seq((items, fpp, bytes)).toDF("expected_items", "fpp", "bloom")
-      .coalesce(1).write.mode("overwrite").parquet(s"$epochDir/idbloom")
+  /** Persist an epoch's id-bloom bits as the deflate-compressed sidecar.
+    * The bits of a sparsely filled bloom are mostly zero words (1.26 MB raw
+    * at the 2^20-item floor, tens of KB deflated); the zlib trailer's
+    * Adler-32 makes a corrupted or truncated sidecar fail on read.
+    */
+  def writeIdBloom(spark: SparkSession, epochDir: String, bytes: Array[Byte]): Unit = {
+    val out = new java.util.zip.DeflaterOutputStream(
+      hadoopFs(spark, epochDir).create(new HPath(epochDir, IdBloomFileName), true))
+    try out.write(bytes) finally out.close()
   }
 
-  /** (items, fpp, bits) of the epoch's id bloom; None on epochs written
-    * before blooms existed (the guard then falls back to the exact check,
-    * and the next append upgrades the index with a full bloom).
+  /** Build and persist a fresh id bloom over `ids` sized for `n` ids;
+    * returns the parameters the epoch header records.
     */
-  def readIdBloom(spark: SparkSession, epochDir: String): Option[(Long, Double, Array[Byte])] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = s"$epochDir/idbloom"
-    if (!hadoopFs(spark, p).exists(new HPath(p))) None
-    else {
-      val r = spark.read.parquet(p).head()
-      Some((r.getLong(0), r.getDouble(1), r.getAs[Array[Byte]](2)))
-    }
+  def writeFreshIdBloom(
+      spark: SparkSession, epochDir: String, ids: DataFrame, n: Long): IdBloom = {
+    val b = IdBloom(idBloomItems(n), IdBloomFpp)
+    writeIdBloom(spark, epochDir, buildIdBloom(ids, "id", b.items, b.fpp))
+    b
+  }
+
+  /** [[writeFreshIdBloom]] over the `id` column of a just-written parquet
+    * dir: read with its known schema, sized from its footers.
+    */
+  def writeFreshIdBloomOf(
+      spark: SparkSession, epochDir: String, dataDir: String, schema: StructType): IdBloom =
+    writeFreshIdBloom(spark, epochDir, spark.read.schema(schema).parquet(dataDir).select("id"),
+      parquetRowCount(spark, dataDir))
+
+  /** The serialized id bloom of a resolved epoch. */
+  def readIdBloom(spark: SparkSession, ep: Epoch): Array[Byte] = {
+    if (ep.header.bloom.isEmpty)
+      throw new IllegalStateException(s"epoch at ${ep.dir} records no id bloom")
+    val in = new java.util.zip.InflaterInputStream(
+      hadoopFs(spark, ep.dir).open(new HPath(ep.dir, IdBloomFileName)))
+    try in.readAllBytes() finally in.close()
   }
 
   /** Does the duplicate-id guard need the exact semi-join for this batch?
@@ -279,40 +311,29 @@ private[graft] object EpochStore {
     * negatives), so a clean append touches NO standing id data at all.
     */
   def idGuardNeedsExact(
-      spark: SparkSession, epochDir: String,
-      batch: DataFrame, idCol: String): Boolean =
-    readIdBloom(spark, epochDir) match {
-      case None => true
-      case Some((_, _, bytes)) =>
-        import org.apache.spark.sql.functions.col
-        !batch.where(
-          Decontam.bloomMightContainKey(bytes, col(idCol).cast("string"))).isEmpty
-    }
+      spark: SparkSession, ep: Epoch,
+      batch: DataFrame, idCol: String): Boolean = {
+    import org.apache.spark.sql.functions.col
+    !batch.where(Decontam.bloomMightContainKey(
+      readIdBloom(spark, ep), col(idCol).cast("string"))).isEmpty
+  }
 
-  /** The successor epoch's bloom: merge a delta over the batch ids into
-    * the standing bloom (same parameters ⇒ same bit geometry), or — on a
-    * pre-bloom index — build the full bloom once from `allIds` (the same
-    * narrow scan the exact guard just paid anyway). Returns
-    * (items, fpp, bytes) to hand to [[writeIdBloom]].
+  /** The successor epoch's bloom bits: a delta over the batch ids merged
+    * into the standing bloom (same parameters ⇒ same bit geometry, so the
+    * header's bloom parameters carry over unchanged).
     */
   def appendedIdBloom(
-      spark: SparkSession, epochDir: String,
-      batch: DataFrame, allIds: => DataFrame, idCol: String): (Long, Double, Array[Byte]) =
-    readIdBloom(spark, epochDir) match {
-      case Some((items, fpp, bytes)) =>
-        (items, fpp,
-          mergeIdBlooms(bytes, buildIdBloom(batch, idCol, items, fpp)))
-      case None =>
-        val ids = allIds
-        val items = idBloomItems(ids.count())
-        (items, IdBloomFpp, buildIdBloom(ids, idCol, items, IdBloomFpp))
-    }
+      spark: SparkSession, cur: Epoch,
+      batch: DataFrame, idCol: String): Array[Byte] = {
+    val standing = readIdBloom(spark, cur)
+    val b = cur.header.bloom.get
+    mergeIdBlooms(standing, buildIdBloom(batch, idCol, b.items, b.fpp))
+  }
 
   /** Hard-reset an index path that has no committed pointer (debris from a
     * never-committed first build), PRESERVING the caller's lease file.
     */
   def resetKeepingLease(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = hadoopFs(spark, path)
     val root = new HPath(path)
     if (fs.exists(root))
@@ -329,7 +350,7 @@ private[graft] object EpochStore {
     * threads finish (in-flight siblings may complete their writes — they
     * are pre-commit debris the failed lifecycle's next attempt or GC
     * clears, exactly as with sequential writes). Commit ordering is
-    * unchanged: callers invoke this strictly before the manifest write
+    * unchanged: callers invoke this strictly before the header write
     * and pointer rename.
     */
   def inParallel(actions: (() => Unit)*): Unit = {
@@ -365,7 +386,7 @@ private[graft] object EpochStore {
         }
       }
       if (interrupted) {
-        // a CANCELLED lifecycle must not proceed to manifest + commit:
+        // a CANCELLED lifecycle must not proceed to header + commit:
         // re-assert the flag and propagate, so withLease releases and
         // nothing is published (debris is cleared by the next build/GC)
         Thread.currentThread().interrupt()
@@ -392,20 +413,9 @@ private[graft] object EpochStore {
   /** Name of the committed epoch (contents of the `current` pointer), or
     * None when the pointer does not exist (no index / fresh build).
     */
-  def currentEpoch(spark: SparkSession, path: String): Option[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val fs = hadoopFs(spark, path)
-    val ptr = new HPath(path, "current")
-    if (!fs.exists(ptr)) None
-    else {
-      val in = fs.open(ptr)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(ptr).getLen.toInt)
-        in.readFully(bytes)
-        Some(new String(bytes, "UTF-8").trim)
-      } finally in.close()
-    }
-  }
+  def currentEpoch(spark: SparkSession, path: String): Option[String] =
+    readBytes(hadoopFs(spark, path), new HPath(path, "current"))
+      .map(new String(_, "UTF-8").trim)
 
   /** Directory of the live epoch, resolved through the `current` pointer.
     * Resolve ONCE per operation and read every table through the returned
@@ -436,7 +446,7 @@ private[graft] object EpochStore {
   def commitEpoch(
       spark: SparkSession, path: String, epoch: String,
       expectCurrent: Option[String]): Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
+    import org.apache.hadoop.fs.{FileContext, Options}
     val live = currentEpoch(spark, path)
     require(live == expectCurrent,
       s"concurrent writer detected on index at $path: the 'current' pointer " +
@@ -470,33 +480,187 @@ private[graft] object EpochStore {
       fs.makeQualified(new HPath(path, "current")), Options.Rename.OVERWRITE)
   }
 
-  /** Write an epoch's manifest: which `data/` dirs form each logical table,
-    * in (table, dir) rows. Tiny — one row per data dir.
+  // ---- the epoch header ----
+
+  val HeaderFileName = "header"
+  val IdBloomFileName = "idbloom.deflate"
+  private val HeaderMagic = "graft-epoch-header"
+  /** Encoding of the header file itself — independent of index formats. */
+  private val HeaderLayout = 1
+
+  /** One index family: the `kind` its headers record, the on-disk format
+    * version this build reads, and the build call that rebuilds it.
     */
-  def writeManifest(
-      spark: SparkSession, epochDir: String,
-      entries: Seq[(String, String)]): Unit = {
-    import spark.implicits._
-    entries.toDF("table", "dir").coalesce(1)
-      .write.mode("overwrite").parquet(s"$epochDir/manifest")
+  final case class IndexKind(name: String, formatVersion: Int, rebuildWith: String)
+
+  /** Parameters of an epoch's id bloom (its bits live in the sidecar). */
+  final case class IdBloom(items: Long, fpp: Double)
+
+  /** Everything an epoch records besides its data: immutable once written. */
+  final case class EpochHeader(
+      kind: String,
+      formatVersion: Int,
+      params: Map[String, String],
+      manifest: Seq[(String, String)],
+      schemas: Map[String, StructType],
+      bloom: Option[IdBloom]) {
+    def int(key: String): Int = param(key).toInt
+    def bool(key: String): Boolean = param(key).toBoolean
+    private def param(key: String): String = params.getOrElse(key,
+      throw new IllegalStateException(s"epoch header records no parameter '$key'"))
   }
 
-  def readManifest(spark: SparkSession, epochDir: String): Seq[(String, String)] =
-    spark.read.parquet(s"$epochDir/manifest")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+  object EpochHeader {
+    def apply(
+        kind: IndexKind, params: Map[String, String],
+        manifest: Seq[(String, String)], schemas: Map[String, StructType],
+        bloom: Option[IdBloom]): EpochHeader =
+      EpochHeader(kind.name, kind.formatVersion, params, manifest, schemas, bloom)
+  }
 
-  /** A logical table of the epoch at `epochDir`: the union of its manifest's
-    * data dirs, read as ONE multi-path parquet scan (a single FileScan node
-    * — delta history does not deepen the plan).
+  /** A resolved epoch: its directory and its parsed header. */
+  final case class Epoch(dir: String, header: EpochHeader) {
+    def name: String = new HPath(dir).getName
+    def number: Long = epochNumber(name)
+  }
+
+  /** `<magic> <layout> <body bytes> <crc32 hex>` on the first line, then
+    * the JSON body.
     */
-  def readTable(spark: SparkSession, epochDir: String, table: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(epochDir).getParent.toString
-    val dirs = readManifest(spark, epochDir).collect {
+  private def encodeHeader(h: EpochHeader): Array[Byte] = {
+    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+    val m = new ObjectMapper()
+    val root = m.createObjectNode()
+    root.put("kind", h.kind)
+    root.put("format_version", h.formatVersion)
+    val params = root.putObject("params")
+    h.params.toSeq.sorted.foreach { case (k, v) => params.put(k, v) }
+    val manifest = root.putArray("manifest")
+    h.manifest.foreach { case (t, d) => manifest.addObject().put("table", t).put("dir", d) }
+    val schemas = root.putObject("schemas")
+    h.schemas.toSeq.sortBy(_._1).foreach { case (t, st) =>
+      schemas.set[JsonNode](t, m.readTree(st.json))
+    }
+    h.bloom.foreach(b => root.putObject("id_bloom").put("items", b.items).put("fpp", b.fpp))
+    val body = m.writeValueAsBytes(root)
+    val crc = new java.util.zip.CRC32()
+    crc.update(body)
+    s"$HeaderMagic $HeaderLayout ${body.length} ${java.lang.Long.toHexString(crc.getValue)}\n"
+      .getBytes("UTF-8") ++ body
+  }
+
+  private def decodeHeader(file: HPath, bytes: Array[Byte]): EpochHeader = {
+    import scala.jdk.CollectionConverters._
+    def corrupt(why: String): Nothing = throw new IllegalStateException(
+      s"epoch header $file is corrupt ($why) — the epoch cannot be read; " +
+      "rebuild the index")
+    val nl = bytes.indexOf('\n'.toByte)
+    if (nl < 0) corrupt("no header line")
+    val f = new String(bytes, 0, nl, "UTF-8").split(" ")
+    if (f.length != 4 || f(0) != HeaderMagic) corrupt("bad header line")
+    if (f(1) != HeaderLayout.toString) corrupt(s"unknown header layout ${f(1)}")
+    val body = java.util.Arrays.copyOfRange(bytes, nl + 1, bytes.length)
+    if (f(2) != body.length.toString)
+      corrupt(s"truncated: ${body.length} body bytes, ${f(2)} recorded")
+    val crc = new java.util.zip.CRC32()
+    crc.update(body)
+    if (java.lang.Long.toHexString(crc.getValue) != f(3)) corrupt("CRC32 mismatch")
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+    EpochHeader(
+      root.get("kind").asText(),
+      root.get("format_version").asInt(),
+      root.get("params").properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap,
+      root.get("manifest").elements().asScala
+        .map(e => e.get("table").asText() -> e.get("dir").asText()).toSeq,
+      root.get("schemas").properties().asScala.map(e =>
+        e.getKey -> DataType.fromJson(e.getValue.toString).asInstanceOf[StructType]).toMap,
+      Option(root.get("id_bloom")).map(b => IdBloom(b.get("items").asLong(), b.get("fpp").asDouble())))
+  }
+
+  /** Write the header of the (uncommitted) epoch at `epochDir` — the last
+    * file a lifecycle writes before [[commitEpoch]].
+    */
+  def writeHeader(spark: SparkSession, epochDir: String, h: EpochHeader): Unit = {
+    val out = hadoopFs(spark, epochDir).create(new HPath(epochDir, HeaderFileName), true)
+    try out.write(encodeHeader(h)) finally out.close()
+  }
+
+  /** The parsed header of the epoch at `epochDir`; None when it has none
+    * (a pre-header layout, or an attempt that crashed before writing it).
+    */
+  def readHeader(spark: SparkSession, epochDir: String): Option[EpochHeader] = {
+    val p = new HPath(epochDir, HeaderFileName)
+    readBytes(hadoopFs(spark, epochDir), p).map(decodeHeader(p, _))
+  }
+
+  /** Resolve the live epoch of a `kind` index and check its header: every
+    * index reader and writer goes through this, so an index written by
+    * another format version — or by a build before epoch headers — fails
+    * loudly instead of probing a drifted layout.
+    */
+  def resolve(spark: SparkSession, path: String, kind: IndexKind): Epoch = {
+    val dir = epochDir(spark, path)
+    val h = readHeader(spark, dir).getOrElse(throw new IllegalArgumentException(
+      s"${kind.name} index at $path has a pre-header on-disk layout (no epoch " +
+      s"header) but this build reads format version ${kind.formatVersion} — " +
+      s"rebuild it with ${kind.rebuildWith}"))
+    require(h.kind == kind.name,
+      s"index at $path is a ${h.kind} index, not a ${kind.name} index")
+    require(h.formatVersion == kind.formatVersion,
+      s"${kind.name} index at $path has on-disk format version ${h.formatVersion} " +
+      s"but this build reads version ${kind.formatVersion} — rebuild it with " +
+      kind.rebuildWith)
+    Epoch(dir, h)
+  }
+
+  /** The committed epoch a BUILD supersedes. A path with no pointer, or
+    * whose live epoch has no header (a pre-header layout), is hard-reset
+    * first — keeping the caller's lease — and the build starts at epoch 1.
+    */
+  def buildBase(spark: SparkSession, path: String): Option[String] = {
+    val cur = currentEpoch(spark, path).filter(e =>
+      hadoopFs(spark, path).exists(new HPath(s"$path/$e", HeaderFileName)))
+    if (cur.isEmpty) resetKeepingLease(spark, path)
+    cur
+  }
+
+  private def schemaOf(ep: Epoch, table: String): StructType =
+    ep.header.schemas.getOrElse(table, throw new IllegalStateException(
+      s"epoch header at ${ep.dir} records no schema for table '$table'"))
+
+  /** A logical table of a resolved epoch: the union of its manifest's data
+    * dirs, read with the recorded schema as ONE multi-path parquet scan (a
+    * single FileScan node — delta history does not deepen the plan).
+    */
+  def readTable(spark: SparkSession, ep: Epoch, table: String): DataFrame = {
+    val root = new HPath(ep.dir).getParent.toString
+    val dirs = ep.header.manifest.collect {
       case (t, d) if t == table => s"$root/data/$d"
     }
     require(dirs.nonEmpty,
-      s"epoch at $epochDir has no data dirs for table '$table' in its manifest")
-    spark.read.parquet(dirs: _*)
+      s"epoch at ${ep.dir} has no data dirs for table '$table' in its manifest")
+    spark.read.schema(schemaOf(ep, table)).parquet(dirs: _*)
+  }
+
+  /** A small per-epoch table stored inside the epoch dir (tombstones,
+    * centroids), read with its recorded schema.
+    */
+  def readEpochTable(spark: SparkSession, ep: Epoch, table: String): DataFrame =
+    spark.read.schema(schemaOf(ep, table)).parquet(s"${ep.dir}/$table")
+
+  /** Rows in a freshly written parquet dir, summed from the file footers
+    * — a direct FS read, no Spark job.
+    */
+  def parquetRowCount(spark: SparkSession, dir: String): Long = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    hadoopFs(spark, dir).listStatus(new HPath(dir))
+      .filter(_.getPath.getName.startsWith("part-"))
+      .map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
   }
 
   /** Garbage-collect after a successful commit: keep the committed epoch
@@ -508,7 +672,6 @@ private[graft] object EpochStore {
     * last reference to them.
     */
   def gc(spark: SparkSession, path: String, committed: String, retain: Int): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     require(retain >= 1, s"retain must be >= 1, got $retain")
     val fs = hadoopFs(spark, path)
     val floor = epochNumber(committed) - retain + 1
@@ -519,13 +682,10 @@ private[graft] object EpochStore {
       n >= floor && n <= epochNumber(committed)
     }
     doomed.foreach(nm => fs.delete(new HPath(path, nm), true))
-    val referenced = kept.flatMap { nm =>
-      // a retained epoch without a manifest is a crashed-in-range attempt;
-      // treat it as referencing nothing (its data dirs die with it here)
-      if (fs.exists(new HPath(s"$path/$nm/manifest")))
-        readManifest(spark, s"$path/$nm").map(_._2)
-      else Seq.empty
-    }.toSet
+    // a retained epoch without a header is a crashed-in-range attempt;
+    // treat it as referencing nothing (its data dirs die with it here)
+    val referenced = kept.flatMap(nm =>
+      readHeader(spark, s"$path/$nm").toSeq.flatMap(_.manifest.map(_._2))).toSet
     val dataRoot = new HPath(path, "data")
     if (fs.exists(dataRoot)) {
       fs.listStatus(dataRoot).foreach { st =>

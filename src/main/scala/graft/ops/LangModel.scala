@@ -615,26 +615,17 @@ object LangModel {
   // token-frequency lifecycle: a full replay NO-OPs, a partial overlap
   // fails loudly instead of double-counting.
 
-  /** On-disk format version of the classifier index. */
-  val ClassifierIndexFormatVersion: Int = 1
+  /** On-disk format version of the classifier index (v2: the
+    * [[EpochStore]] epoch header).
+    */
+  val ClassifierIndexFormatVersion: Int = 2
 
-  private def writeClsMeta(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    import spark.implicits._
-    Seq(Tuple1(ClassifierIndexFormatVersion)).toDF("format_version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+  private[graft] val ClassifierIndex = EpochStore.IndexKind(
+    "classifier", ClassifierIndexFormatVersion, "writeClassifierIndex")
 
   private[graft] def resolveClassifierIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val dir = EpochStore.epochDir(spark, path)
-    val v = spark.read.parquet(s"$dir/meta").head().getAs[Int]("format_version")
-    require(v == ClassifierIndexFormatVersion,
-      s"classifier index at $path has on-disk format version $v but this " +
-      s"build reads version $ClassifierIndexFormatVersion — rebuild it " +
-      "with writeClassifierIndex")
-    dir
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
+    EpochStore.resolve(spark, path, ClassifierIndex)
 
   // shared counter-lifecycle helpers — one definition for both counter
   // indexes ([[EpochStore.counterBatchIds]] / requireCounterIdsNotNull)
@@ -657,14 +648,14 @@ object LangModel {
         lit(0L)).as("dn"))
 
   private def clsCountsAt(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    EpochStore.readTable(spark, dir, "cls")
+      spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch): DataFrame =
+    EpochStore.readTable(spark, ep, "cls")
       .groupBy(col("token"))
       .agg(sum(col("cp")).as("cp"), sum(col("cn")).as("cn"))
 
   private def clsDocsAt(
-      spark: org.apache.spark.sql.SparkSession, dir: String): (Long, Long) = {
-    val r = EpochStore.readTable(spark, dir, "docs")
+      spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch): (Long, Long) = {
+    val r = EpochStore.readTable(spark, ep, "docs")
       .agg(sum("dp"), sum("dn")).head()
     (r.getLong(0), r.getLong(1))
   }
@@ -686,8 +677,7 @@ object LangModel {
     val spark = labeled.sparkSession
     requireIdsNotNull(labeled, idCol, "writeClassifierIndex")
     EpochStore.withLease(spark, path) {
-    val cur = EpochStore.currentEpoch(spark, path)
-    if (cur.isEmpty) EpochStore.resetKeepingLease(spark, path)
+    val cur = EpochStore.buildBase(spark, path)
     val n = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
@@ -701,22 +691,19 @@ object LangModel {
     // sibling writes and only the commit below observes any of them
     val batchIds = clsBatchIds(labeled, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cls = labeledTokenCounts(labeled, textCol, labelCol)
+    val docs = labeledDocCounts(labeled, labelCol).coalesce(1)
+    var bloom: EpochStore.IdBloom = null
     try EpochStore.inParallel(
-      () => labeledTokenCounts(labeled, textCol, labelCol)
-        .write.mode("overwrite").parquet(s"$path/data/$dCls"),
-      () => labeledDocCounts(labeled, labelCol)
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/data/$dDocs"),
+      () => cls.write.mode("overwrite").parquet(s"$path/data/$dCls"),
+      () => docs.write.mode("overwrite").parquet(s"$path/data/$dDocs"),
       () => batchIds.write.mode("overwrite").parquet(s"$path/data/$dIds"),
-      () => {
-        val items = EpochStore.idBloomItems(batchIds.count())
-        EpochStore.writeIdBloom(spark, dir,
-          EpochStore.buildIdBloom(batchIds, "id", items, EpochStore.IdBloomFpp),
-          items, EpochStore.IdBloomFpp)
-      })
+      () => bloom = EpochStore.writeFreshIdBloom(spark, dir, batchIds, batchIds.count()))
     finally batchIds.unpersist(blocking = false)
-    writeClsMeta(spark, dir)
-    EpochStore.writeManifest(spark, dir,
-      Seq("cls" -> dCls, "docs" -> dDocs, "ids" -> dIds))
+    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(ClassifierIndex,
+      Map.empty, Seq("cls" -> dCls, "docs" -> dDocs, "ids" -> dIds),
+      Map("cls" -> cls.schema, "docs" -> docs.schema, "ids" -> batchIds.schema),
+      Some(bloom)))
     EpochStore.commitEpoch(spark, path, epoch, cur)
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
@@ -738,12 +725,10 @@ object LangModel {
       labelCol: String,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val spark = newLabeled.sparkSession
     requireIdsNotNull(newLabeled, idCol, "appendClassifierIndex")
     EpochStore.withLease(spark, path) {
-    val curDir = resolveClassifierIndex(spark, path)
-    val curEpoch = new HPath(curDir).getName
+    val cur = resolveClassifierIndex(spark, path)
     // persisted once: the replay guard, the ids delta write and the bloom
     // merge below all re-read this frame — uncached, each use would re-run
     // the batch scan + repartition + distinct (measured ~0.4 s apiece at
@@ -752,14 +737,14 @@ object LangModel {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
     val (overlap, total) =
-      EpochStore.counterGuardCounts(spark, curDir, batchIds)
+      EpochStore.counterGuardCounts(spark, cur, batchIds)
     if (total > 0L && overlap < total) {
       require(overlap == 0L,
         s"appendClassifierIndex: $overlap of $total batch ids are already " +
         s"committed in the index at $path — folding this batch would " +
         "double-count their tokens. Split the batch into the new ids and " +
         "re-append; a FULL replay (all ids committed) is a no-op")
-      val n = EpochStore.epochNumber(curEpoch) + 1L
+      val n = cur.number + 1L
       val epoch = EpochStore.epochName(n)
       val dir = s"$path/$epoch"
       EpochStore.deleteDir(spark, dir)
@@ -774,17 +759,11 @@ object LangModel {
         () => labeledDocCounts(newLabeled, labelCol)
           .coalesce(1).write.mode("overwrite").parquet(s"$path/data/$dDocs"),
         () => batchIds.write.mode("overwrite").parquet(s"$path/data/$dIds"),
-        () => {
-          val (items, fpp, bloom) = EpochStore.appendedIdBloom(
-            spark, curDir, batchIds,
-            EpochStore.readTable(spark, curDir, "ids"), "id")
-          EpochStore.writeIdBloom(spark, dir, bloom, items, fpp)
-        })
-      writeClsMeta(spark, dir)
-      EpochStore.writeManifest(spark, dir,
-        EpochStore.readManifest(spark, curDir) ++
-          Seq("cls" -> dCls, "docs" -> dDocs, "ids" -> dIds))
-      EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+        () => EpochStore.writeIdBloom(spark, dir,
+          EpochStore.appendedIdBloom(spark, cur, batchIds, "id")))
+      EpochStore.writeHeader(spark, dir, cur.header.copy(manifest = cur.header.manifest ++
+        Seq("cls" -> dCls, "docs" -> dDocs, "ids" -> dIds)))
+      EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
       EpochStore.gc(spark, path, epoch, retainEpochs)
     } // else: empty batch or full replay — live epoch untouched
     } finally batchIds.unpersist(blocking = false)
@@ -800,11 +779,9 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     EpochStore.withLease(spark, path) {
-    val curDir = resolveClassifierIndex(spark, path)
-    val curEpoch = new HPath(curDir).getName
-    val n = EpochStore.epochNumber(curEpoch) + 1L
+    val cur = resolveClassifierIndex(spark, path)
+    val n = cur.number + 1L
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir)
@@ -812,23 +789,19 @@ object LangModel {
     val dDocs = EpochStore.dataDirName("docs", n)
     val dIds = EpochStore.dataDirName("ids", n)
     EpochStore.inParallel(
-      () => clsCountsAt(spark, curDir)
+      () => clsCountsAt(spark, cur)
         .write.mode("overwrite").parquet(s"$path/data/$dCls"),
-      () => EpochStore.readTable(spark, curDir, "docs")
+      () => EpochStore.readTable(spark, cur, "docs")
         .agg(sum("dp").as("dp"), sum("dn").as("dn"))
         .coalesce(1).write.mode("overwrite").parquet(s"$path/data/$dDocs"),
       // append-guard disjointness makes the union already distinct
-      () => EpochStore.readTable(spark, curDir, "ids")
+      () => EpochStore.readTable(spark, cur, "ids")
         .write.mode("overwrite").parquet(s"$path/data/$dIds"))
-    val idsDf = spark.read.parquet(s"$path/data/$dIds")
-    val items = EpochStore.idBloomItems(idsDf.count())
-    EpochStore.writeIdBloom(spark, dir,
-      EpochStore.buildIdBloom(idsDf, "id", items, EpochStore.IdBloomFpp),
-      items, EpochStore.IdBloomFpp)
-    writeClsMeta(spark, dir)
-    EpochStore.writeManifest(spark, dir,
-      Seq("cls" -> dCls, "docs" -> dDocs, "ids" -> dIds))
-    EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+    val bloom = EpochStore.writeFreshIdBloomOf(
+      spark, dir, s"$path/data/$dIds", cur.header.schemas("ids"))
+    EpochStore.writeHeader(spark, dir, cur.header.copy(
+      manifest = Seq("cls" -> dCls, "docs" -> dDocs, "ids" -> dIds), bloom = Some(bloom)))
+    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
   }
@@ -853,9 +826,9 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       microNats: Long = 1000000L): TokenClassifier = {
-    val dir = resolveClassifierIndex(spark, path)
-    val (dp, dn) = clsDocsAt(spark, dir)
-    classifierFrom(clsCountsAt(spark, dir), dp, dn, microNats)
+    val ep = resolveClassifierIndex(spark, path)
+    val (dp, dn) = clsDocsAt(spark, ep)
+    classifierFrom(clsCountsAt(spark, ep), dp, dn, microNats)
   }
 
   /** Score DAILY ARRIVALS under the standing model: derive the weights

@@ -785,7 +785,7 @@ object Similarity {
       nprobe: Int,
       withinBatch: Boolean): (DataFrame, DataFrame, DataFrame) = {
     val spark = batch.sparkSession
-    val (dir, _) = resolveAnnIndex(spark, path)
+    val ep = resolveAnnIndex(spark, path)
     val ids = batch.select(col(idCol).as("id"))
     // replay guard: an already-indexed id anchors to itself (self-edges
     // are closure no-ops, but the id joins the anchor set below). The
@@ -793,12 +793,14 @@ object Similarity {
     // ids — without touching the standing id column at all (no false
     // negatives, so an all-miss batch provably has no replays); only
     // bloom hits pay the exact semi-join.
-    val probePlan = annRangeAgainstIndex(batch, vecCol, idCol, path, minCosine, nprobe)
+    val (centroids, counts) = readAnnCentroidsWithCounts(spark, ep)
+    val probePlan = annRangeAt(spark, ep, centroids, counts, batch, vecCol, idCol,
+        minCosine, nprobe)
       .select(col("query_id").as("id_a"), col("neighbor_id").as("id_b"))
     val withReplays =
-      if (!EpochStore.idGuardNeedsExact(spark, dir, batch, idCol)) probePlan
+      if (!EpochStore.idGuardNeedsExact(spark, ep, batch, idCol)) probePlan
       else probePlan.unionByName(ids
-        .join(EpochStore.readTable(spark, dir, "assigned").select("id"),
+        .join(EpochStore.readTable(spark, ep, "assigned").select("id"),
           Seq("id"), "left_semi")
         .select(col("id").as("id_a"), col("id").as("id_b")))
     // cross pairs: batch → standing (consumed twice below — once as
@@ -810,7 +812,6 @@ object Similarity {
         // the standing index's per-cell populations proxy the batch's own
         // distribution (a templated cell in the corpus is templated in its
         // arrivals too), so the in-batch join inherits the salt guard
-        val (centroids, counts) = readAnnCentroidsWithCounts(spark, dir)
         val idx0 = IvfIndex(centroids, null,
           saltFactors(counts, DefaultMaxCellFraction))
         val idx = idx0.copy(assigned = batch.select(
@@ -889,76 +890,57 @@ object Similarity {
     * version check as the dedup index ([[Dedup.DedupIndexFormatVersion]]):
     * a standing index outlives code versions, and probing with drifted
     * centroids or layout must fail, not silently return wrong neighbors.
+    * v2 records nlist/dim/quantized in the [[EpochStore]] epoch header.
     */
-  val AnnIndexFormatVersion: Int = 1
+  val AnnIndexFormatVersion: Int = 2
+
+  private[graft] val AnnIndex = EpochStore.IndexKind(
+    "ANN", AnnIndexFormatVersion, "writeAnnIndex")
 
   private[graft] def resolveAnnIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): (String, org.apache.spark.sql.Row) = {
-    val dir = EpochStore.epochDir(spark, path)
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val v = meta.getAs[Int]("format_version")
-    require(v == AnnIndexFormatVersion,
-      s"ANN index at $path has on-disk format version $v but this build " +
-      s"reads version $AnnIndexFormatVersion — rebuild it with writeAnnIndex")
-    (dir, meta)
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
+    EpochStore.resolve(spark, path, AnnIndex)
 
   private def readAnnCentroids(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Seq[(Int, Seq[Float])] =
-    readAnnCentroidsWithCounts(spark, dir)._1
+      spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch): Seq[(Int, Seq[Float])] =
+    readAnnCentroidsWithCounts(spark, ep)._1
 
   /** Centroids plus the PERSISTED per-cell population estimates (the
-    * dense-cell salt guard's input — see [[saltFactors]]). Epochs written
-    * before counts existed read an empty map: probes then run unsalted,
-    * exactly the pre-counts behavior, and the next build/compact — or the
-    * first [[appendAnnIndex]], which recounts the standing assigned table
-    * rather than persisting batch-only populations — upgrades the table
-    * with TRUE counts.
+    * dense-cell salt guard's input — see [[saltFactors]]).
     */
   private def readAnnCentroidsWithCounts(
       spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Seq[(Int, Seq[Float])], Map[Int, Long]) = {
-    val t = spark.read.parquet(s"$dir/centroids")
-    val hasN = t.schema.fieldNames.contains("n")
-    val rows = t.collect()
-    val centroids = rows.map(r => (r.getInt(0), r.getSeq[Float](1))).toSeq.sortBy(_._1)
-    val counts =
-      if (!hasN) Map.empty[Int, Long]
-      else rows.map(r => r.getInt(0) -> r.getLong(t.schema.fieldIndex("n"))).toMap
-    (centroids, counts)
+      ep: EpochStore.Epoch): (Seq[(Int, Seq[Float])], Map[Int, Long]) = {
+    val rows = EpochStore.readEpochTable(spark, ep, "centroids").collect()
+    (rows.map(r => (r.getInt(0), r.getSeq[Float](1))).toSeq.sortBy(_._1),
+      rows.map(r => r.getInt(0) -> r.getLong(2)).toMap)
   }
 
-  private def writeAnnEpochSmallTables(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      centroids: Seq[(Int, Seq[Float])], nlist: Int,
-      quantized: Boolean,
-      counts: Map[Int, Long]): Unit = {
+  /** The epoch's `centroids` table: (cell, centroid, n) in one file. */
+  private def annCentroidsTable(
+      spark: org.apache.spark.sql.SparkSession,
+      centroids: Seq[(Int, Seq[Float])], counts: Map[Int, Long]): DataFrame = {
     import spark.implicits._
     centroids.map { case (c, v) => (c, v, counts.getOrElse(c, 0L)) }
       .toDF("cell", "centroid", "n").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    val dim = centroids.headOption.map(_._2.length).getOrElse(0)
-    Seq((nlist, dim, AnnIndexFormatVersion, quantized))
-      .toDF("nlist", "dim", "format_version", "quantized")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  /** Whether the index stores int8 codes (pre-quantization epochs read
-    * false — their meta predates the column).
-    */
-  private def annMetaQuantized(meta: org.apache.spark.sql.Row): Boolean =
-    meta.schema.fieldNames.contains("quantized") && meta.getAs[Boolean]("quantized")
+  /** The header params of an ANN epoch. */
+  private def annParams(
+      centroids: Seq[(Int, Seq[Float])], nlist: Int, quantized: Boolean): Map[String, String] =
+    Map("nlist" -> nlist.toString,
+      "dim" -> centroids.headOption.map(_._2.length).getOrElse(0).toString,
+      "quantized" -> quantized.toString)
 
   /** The assigned table as (cell, id, vec float vectors) regardless of
     * storage: quantized epochs dequantize on read (`q · scale`, fused into
     * the scan — codegen arithmetic, no shuffle, no UDF).
     */
   private def readAssignedVecs(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      quantized: Boolean): DataFrame = {
-    val t = EpochStore.readTable(spark, dir, "assigned")
-    if (quantized) dequantizeInt8(t, "qvec", "scale", "vec").select("cell", "id", "vec")
+      spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch): DataFrame = {
+    val t = EpochStore.readTable(spark, ep, "assigned")
+    if (ep.header.bool("quantized"))
+      dequantizeInt8(t, "qvec", "scale", "vec").select("cell", "id", "vec")
     else t.select("cell", "id", "vec")
   }
 
@@ -1037,9 +1019,10 @@ object Similarity {
     * and re-assigning the corpus per session — the ANN twin of
     * [[Dedup.writeDedupIndex]], on the same [[EpochStore]] delta-epoch
     * layout: `<path>/current` → live epoch; the epoch holds `centroids`
-    * (tiny: nlist × dim, rewritten per epoch), `meta` (nlist/dim/format
-    * version — probes read parameters FROM the index), and a manifest over
-    * immutable `data/assigned-N` dirs of (cell, id, vec) rows. Build
+    * (tiny: nlist × dim, rewritten per epoch) and the epoch header (nlist/
+    * dim/quantized and the format version — probes read parameters FROM the
+    * index — plus the manifest over immutable `data/assigned-N` dirs of
+    * (cell, id, vec) rows). Build
     * commits epoch N+1 atomically over a live index (non-destructive, like
     * the dedup rebuild); single writer at a time
     * ([[EpochStore.commitEpoch]]).
@@ -1057,7 +1040,7 @@ object Similarity {
     *
     * `quantize = true` stores per-vector int8 codes + a float scale
     * ([[quantizeInt8]]) instead of float vectors — the 4× storage/IO cut a
-    * 100 TB vector store takes first. The scheme is recorded in `meta` and
+    * 100 TB vector store takes first. The scheme is recorded in the header and
     * every reader honors it: probes dequantize ON READ (`q · scale` fused
     * into the scan — codegen arithmetic, no shuffle), appends quantize
     * their deltas to match the standing epochs (per-vector max-abs scaling
@@ -1086,32 +1069,32 @@ object Similarity {
       c -> math.round(n / trainFraction)
     }
     val idx = IvfIndex(centroids, null)
-    val cur = EpochStore.currentEpoch(spark, path)
-    if (cur.isEmpty) EpochStore.resetKeepingLease(spark, path)
+    val cur = EpochStore.buildBase(spark, path)
     val n = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir)
     val assignedDir = EpochStore.dataDirName("assigned", n)
+    val assigned = assignedStorage(
+      corpus.select(
+        idx.nearestCell(col(vecCol)).as("cell"),
+        col(idCol).as("id"), col(vecCol).as("vec")),
+      quantize)
+    val cents = annCentroidsTable(spark, centroids, counts)
+    var bloom: EpochStore.IdBloom = null
     // the corpus-sized assigned write (then its read-back bloom) overlaps
-    // the O(nlist) small-table writes
+    // the O(nlist) centroids write
     EpochStore.inParallel(
       () => {
-        assignedStorage(
-          corpus.select(
-            idx.nearestCell(col(vecCol)).as("cell"),
-            col(idCol).as("id"), col(vecCol).as("vec")),
-          quantize)
-          .write.mode("overwrite").parquet(s"$path/data/$assignedDir")
+        assigned.write.mode("overwrite").parquet(s"$path/data/$assignedDir")
         // id bloom for the O(1) append guard ([[EpochStore.idGuardNeedsExact]])
-        val annIds = spark.read.parquet(s"$path/data/$assignedDir").select("id")
-        val bloomItems = EpochStore.idBloomItems(annIds.count())
-        EpochStore.writeIdBloom(spark, dir,
-          EpochStore.buildIdBloom(annIds, "id", bloomItems, EpochStore.IdBloomFpp),
-          bloomItems, EpochStore.IdBloomFpp)
+        bloom = EpochStore.writeFreshIdBloomOf(
+          spark, dir, s"$path/data/$assignedDir", assigned.schema)
       },
-      () => writeAnnEpochSmallTables(spark, dir, centroids, nlist, quantize, counts))
-    EpochStore.writeManifest(spark, dir, Seq("assigned" -> assignedDir))
+      () => cents.write.mode("overwrite").parquet(s"$dir/centroids"))
+    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(AnnIndex,
+      annParams(centroids, nlist, quantize), Seq("assigned" -> assignedDir),
+      Map("assigned" -> assigned.schema, "centroids" -> cents.schema), Some(bloom)))
     EpochStore.commitEpoch(spark, path, epoch, cur)
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
@@ -1133,29 +1116,15 @@ object Similarity {
       idCol: String,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val spark = newVecs.sparkSession
     EpochStore.withLease(spark, path) {
-    val (curDir, meta) = resolveAnnIndex(spark, path)
-    val nlist = meta.getAs[Int]("nlist")
-    val quantized = annMetaQuantized(meta) // storage scheme is the index's, not the caller's
-    val (centroids, storedCounts) = readAnnCentroidsWithCounts(spark, curDir)
-    // legacy epoch (pre-'n' centroids table): the stored counts are absent,
-    // and summing the batch's counts alone would persist batch-only
-    // populations as the successor's full 'n' — later probes would salt
-    // from estimates reflecting only the last batch (load-balance skew,
-    // results exact either way). Derive the TRUE standing populations from
-    // the assigned table instead: one narrow (cell) aggregate, paid once —
-    // the successor epoch carries real counts from here on.
-    val standingCounts =
-      if (storedCounts.nonEmpty || centroids.isEmpty) storedCounts
-      else EpochStore.readTable(spark, curDir, "assigned")
-        .groupBy("cell").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val cur = resolveAnnIndex(spark, path)
+    val quantized = cur.header.bool("quantized") // storage scheme is the index's, not the caller's
+    val (centroids, standingCounts) = readAnnCentroidsWithCounts(spark, cur)
     // dup-id guard: bloom clears clean batches without reading the
     // standing `assigned` id column; hits fall back to the exact check
-    if (EpochStore.idGuardNeedsExact(spark, curDir, newVecs, idCol)) {
-      val dupIds = EpochStore.readTable(spark, curDir, "assigned").select("id")
+    if (EpochStore.idGuardNeedsExact(spark, cur, newVecs, idCol)) {
+      val dupIds = EpochStore.readTable(spark, cur, "assigned").select("id")
         .join(newVecs.select(col(idCol).as("id")), Seq("id"), "left_semi")
         .limit(3).collect().map(_.get(0))
       require(dupIds.isEmpty,
@@ -1163,8 +1132,7 @@ object Similarity {
         s"(e.g. ${dupIds.mkString(", ")}) — append requires disjoint ids; " +
         "re-appending a committed batch would duplicate neighbors")
     }
-    val curEpoch = new HPath(curDir).getName
-    val n = EpochStore.epochNumber(curEpoch) + 1L
+    val n = cur.number + 1L
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir)
@@ -1187,17 +1155,13 @@ object Similarity {
           col(idCol).as("id"), col(vecCol).as("vec")),
         quantized)
         .write.mode("overwrite").parquet(s"$path/data/$assignedDir"),
-      () => {
-        val (bItems, bFpp, bBytes) = EpochStore.appendedIdBloom(
-          spark, curDir, newVecs.select(col(idCol).as("id")),
-          EpochStore.readTable(spark, curDir, "assigned").select("id")
-            .unionByName(newVecs.select(col(idCol).as("id"))), "id")
-        EpochStore.writeIdBloom(spark, dir, bBytes, bItems, bFpp)
-      },
-      () => writeAnnEpochSmallTables(spark, dir, centroids, nlist, quantized, counts))
-    EpochStore.writeManifest(spark, dir,
-      EpochStore.readManifest(spark, curDir) :+ ("assigned" -> assignedDir))
-    EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+      () => EpochStore.writeIdBloom(spark, dir, EpochStore.appendedIdBloom(
+        spark, cur, newVecs.select(col(idCol).as("id")), "id")),
+      () => annCentroidsTable(spark, centroids, counts)
+        .write.mode("overwrite").parquet(s"$dir/centroids"))
+    EpochStore.writeHeader(spark, dir, cur.header.copy(
+      manifest = cur.header.manifest :+ ("assigned" -> assignedDir)))
+    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
   }
@@ -1710,10 +1674,10 @@ object Similarity {
   def prototypeScoresFromIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val (dir, meta) = resolveAnnIndex(spark, path)
-    val t = EpochStore.readTable(spark, dir, "assigned")
+    val ep = resolveAnnIndex(spark, path)
+    val t = EpochStore.readTable(spark, ep, "assigned")
     val q =
-      if (annMetaQuantized(meta))
+      if (ep.header.bool("quantized"))
         t.select(col("cell"), col("id"), col("qvec").as("__qv"))
       else t.select(col("cell"), col("id"), int8Codes(col("vec")).as("__qv"))
     q.join(broadcast(cellSumFrame(q, "cell")), Seq("cell"))
@@ -1810,8 +1774,22 @@ object Similarity {
       floor: Double,
       nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    val (dir, meta) = resolveAnnIndex(spark, path)
-    val (centroids, counts) = readAnnCentroidsWithCounts(spark, dir)
+    val ep = resolveAnnIndex(spark, path)
+    val (centroids, counts) = readAnnCentroidsWithCounts(spark, ep)
+    annRangeAt(spark, ep, centroids, counts, queries, vecCol, idCol, floor, nprobe)
+  }
+
+  /** [[annRangeAgainstIndex]] over a resolved epoch and its centroids. */
+  private def annRangeAt(
+      spark: org.apache.spark.sql.SparkSession,
+      ep: EpochStore.Epoch,
+      centroids: Seq[(Int, Seq[Float])],
+      counts: Map[Int, Long],
+      queries: DataFrame,
+      vecCol: String,
+      idCol: String,
+      floor: Double,
+      nprobe: Int): DataFrame = {
     // dense cells salt from the PERSISTED population estimates: with a
     // corpus-sized query frame this join shuffles on the cell key, and a
     // templated-embedding cell would otherwise funnel through one task
@@ -1820,7 +1798,7 @@ object Similarity {
     // stays streaming-compatible.
     val idx = IvfIndex(
       centroids,
-      readAssignedVecs(spark, dir, annMetaQuantized(meta)).select(
+      readAssignedVecs(spark, ep).select(
         col("cell"), col("id").as("neighbor_id"), col("vec").as("cv")),
       saltFactors(counts, DefaultMaxCellFraction))
     saltedCandidateJoin(idx, queries.select(
@@ -1864,18 +1842,16 @@ object Similarity {
       retainEpochs: Int = 2,
       retrain: Boolean = false,
       trainFraction: Double = 1.0): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     EpochStore.withLease(spark, path) {
-    val (curDir, meta) = resolveAnnIndex(spark, path)
-    val nlist = meta.getAs[Int]("nlist")
-    val curEpoch = new HPath(curDir).getName
-    val n = EpochStore.epochNumber(curEpoch) + 1L
+    val cur = resolveAnnIndex(spark, path)
+    val nlist = cur.header.int("nlist")
+    val n = cur.number + 1L
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir)
     val assignedDir = EpochStore.dataDirName("assigned", n)
-    val quantized = annMetaQuantized(meta)
-    val standing = EpochStore.readTable(spark, curDir, "assigned")
+    val quantized = cur.header.bool("quantized")
+    val standing = EpochStore.readTable(spark, cur, "assigned")
     // retraining needs float vectors; quantized epochs dequantize on read
     // but KEEP their original codes in the rewrite (requantizing would be
     // an identity round-trip paid for nothing)
@@ -1884,7 +1860,7 @@ object Similarity {
       else standing
     val centroids =
       if (retrain) trainCentroids(withVec, "vec", "id", nlist, trainFraction)
-      else readAnnCentroids(spark, curDir)
+      else readAnnCentroids(spark, cur)
     val storageCols =
       if (quantized) Seq(col("id"), col("qvec"), col("scale"))
       else Seq(col("id"), col("vec"))
@@ -1893,25 +1869,22 @@ object Similarity {
         val idx = IvfIndex(centroids, null)
         withVec.select(idx.nearestCell(col("vec")).as("cell") +: storageCols: _*)
       } else standing
-    // the assigned rewrite (then its read-back bloom + EXACT cell counts —
-    // compaction is where the salt guard's estimates get trued up, like
-    // the bloom) overlaps the small tables
-    EpochStore.inParallel(
-      () => {
-        compacted.write.mode("overwrite").parquet(s"$path/data/$assignedDir")
-        val written = spark.read.parquet(s"$path/data/$assignedDir")
-        // right-size a fresh id bloom from the compacted id set
-        val annIds = written.select("id")
-        val bloomItems = EpochStore.idBloomItems(annIds.count())
-        EpochStore.writeIdBloom(spark, dir,
-          EpochStore.buildIdBloom(annIds, "id", bloomItems, EpochStore.IdBloomFpp),
-          bloomItems, EpochStore.IdBloomFpp)
-        val counts = written.groupBy("cell").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        writeAnnEpochSmallTables(spark, dir, centroids, nlist, quantized, counts)
-      })
-    EpochStore.writeManifest(spark, dir, Seq("assigned" -> assignedDir))
-    EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+    // the assigned rewrite, then its read-back bloom and EXACT cell counts
+    // (compaction is where the salt guard's estimates get trued up, like
+    // the bloom)
+    compacted.write.mode("overwrite").parquet(s"$path/data/$assignedDir")
+    // right-size a fresh id bloom from the compacted id set
+    val bloom = EpochStore.writeFreshIdBloomOf(
+      spark, dir, s"$path/data/$assignedDir", compacted.schema)
+    val counts = spark.read.schema(compacted.schema).parquet(s"$path/data/$assignedDir")
+      .groupBy("cell").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val cents = annCentroidsTable(spark, centroids, counts)
+    cents.write.mode("overwrite").parquet(s"$dir/centroids")
+    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(AnnIndex,
+      annParams(centroids, nlist, quantized), Seq("assigned" -> assignedDir),
+      Map("assigned" -> compacted.schema, "centroids" -> cents.schema), Some(bloom)))
+    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
   }
@@ -1931,10 +1904,10 @@ object Similarity {
       k: Int,
       nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    val (dir, meta) = resolveAnnIndex(spark, path)
+    val ep = resolveAnnIndex(spark, path)
     val idx = IvfIndex(
-      readAnnCentroids(spark, dir),
-      readAssignedVecs(spark, dir, annMetaQuantized(meta)).select(
+      readAnnCentroids(spark, ep),
+      readAssignedVecs(spark, ep).select(
         col("cell"), col("id").as("neighbor_id"), col("vec").as("cv")))
     ivfProbe(idx, queries, vecCol, idCol, k, nprobe)
   }

@@ -1104,26 +1104,17 @@ object TextOps {
   // naturally idempotent, so a replayed batch must no-op and a PARTIAL
   // overlap must fail loudly instead of double-counting.
 
-  /** On-disk format version of the token-frequency index. */
-  val TokenFrequencyIndexFormatVersion: Int = 1
+  /** On-disk format version of the token-frequency index (v2: the
+    * [[EpochStore]] epoch header).
+    */
+  val TokenFrequencyIndexFormatVersion: Int = 2
 
-  private def writeTfMeta(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    import spark.implicits._
-    Seq(Tuple1(TokenFrequencyIndexFormatVersion)).toDF("format_version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+  private[graft] val TokenFrequencyIndex = EpochStore.IndexKind(
+    "token-frequency", TokenFrequencyIndexFormatVersion, "writeTokenFrequencyIndex")
 
   private[graft] def resolveTokenFrequencyIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val dir = EpochStore.epochDir(spark, path)
-    val v = spark.read.parquet(s"$dir/meta").head().getAs[Int]("format_version")
-    require(v == TokenFrequencyIndexFormatVersion,
-      s"token-frequency index at $path has on-disk format version $v but " +
-      s"this build reads version $TokenFrequencyIndexFormatVersion — " +
-      "rebuild it with writeTokenFrequencyIndex")
-    dir
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
+    EpochStore.resolve(spark, path, TokenFrequencyIndex)
 
   /** Canonical batch id frame / null-id replay guard — the shared
     * counter-lifecycle helpers ([[EpochStore.counterBatchIds]] /
@@ -1139,9 +1130,9 @@ object TextOps {
     EpochStore.requireCounterIdsNotNull(df, idCol, op)
 
   private def tfTotalsAt(
-      spark: org.apache.spark.sql.SparkSession, dir: String)
+      spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch)
       : org.apache.spark.sql.DataFrame =
-    EpochStore.readTable(spark, dir, "tf")
+    EpochStore.readTable(spark, ep, "tf")
       .groupBy(col("token")).agg(sum(col("n")).as("n"))
 
   /** The live epoch's standing corpus token totals, `(token, n)` — the
@@ -1171,8 +1162,7 @@ object TextOps {
     val spark = corpus.sparkSession
     requireTfIdsNotNull(corpus, idCol, "writeTokenFrequencyIndex")
     EpochStore.withLease(spark, path) {
-    val cur = EpochStore.currentEpoch(spark, path)
-    if (cur.isEmpty) EpochStore.resetKeepingLease(spark, path)
+    val cur = EpochStore.buildBase(spark, path)
     val n = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
@@ -1184,19 +1174,16 @@ object TextOps {
     // below observes any of them) — see writeClassifierIndex
     val batchIds = tfBatchIds(corpus, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tf = termFrequencies(corpus, textCol)
+    var bloom: EpochStore.IdBloom = null
     try EpochStore.inParallel(
-      () => termFrequencies(corpus, textCol)
-        .write.mode("overwrite").parquet(s"$path/data/$dTf"),
+      () => tf.write.mode("overwrite").parquet(s"$path/data/$dTf"),
       () => batchIds.write.mode("overwrite").parquet(s"$path/data/$dIds"),
-      () => {
-        val items = EpochStore.idBloomItems(batchIds.count())
-        EpochStore.writeIdBloom(spark, dir,
-          EpochStore.buildIdBloom(batchIds, "id", items, EpochStore.IdBloomFpp),
-          items, EpochStore.IdBloomFpp)
-      })
+      () => bloom = EpochStore.writeFreshIdBloom(spark, dir, batchIds, batchIds.count()))
     finally batchIds.unpersist(blocking = false)
-    writeTfMeta(spark, dir)
-    EpochStore.writeManifest(spark, dir, Seq("tf" -> dTf, "ids" -> dIds))
+    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(TokenFrequencyIndex,
+      Map.empty, Seq("tf" -> dTf, "ids" -> dIds),
+      Map("tf" -> tf.schema, "ids" -> batchIds.schema), Some(bloom)))
     EpochStore.commitEpoch(spark, path, epoch, cur)
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
@@ -1219,26 +1206,24 @@ object TextOps {
       textCol: String,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val spark = newDocs.sparkSession
     requireTfIdsNotNull(newDocs, idCol, "appendTokenFrequencyIndex")
     EpochStore.withLease(spark, path) {
-    val curDir = resolveTokenFrequencyIndex(spark, path)
-    val curEpoch = new HPath(curDir).getName
+    val cur = resolveTokenFrequencyIndex(spark, path)
     // persisted once: guard + ids delta write + bloom merge re-read it
     // (see appendClassifierIndex — same counter-lifecycle shape)
     val batchIds = tfBatchIds(newDocs, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
     val (overlap, total) =
-      EpochStore.counterGuardCounts(spark, curDir, batchIds)
+      EpochStore.counterGuardCounts(spark, cur, batchIds)
     if (total > 0L && overlap < total) {
       require(overlap == 0L,
         s"appendTokenFrequencyIndex: $overlap of $total batch ids are " +
         s"already committed in the index at $path — folding this batch " +
         "would double-count their tokens. Split the batch into the new " +
         "ids and re-append; a FULL replay (all ids committed) is a no-op")
-      val n = EpochStore.epochNumber(curEpoch) + 1L
+      val n = cur.number + 1L
       val epoch = EpochStore.epochName(n)
       val dir = s"$path/$epoch"
       EpochStore.deleteDir(spark, dir)
@@ -1250,16 +1235,11 @@ object TextOps {
         () => termFrequencies(newDocs, textCol)
           .write.mode("overwrite").parquet(s"$path/data/$dTf"),
         () => batchIds.write.mode("overwrite").parquet(s"$path/data/$dIds"),
-        () => {
-          val (items, fpp, bloom) = EpochStore.appendedIdBloom(
-            spark, curDir, batchIds,
-            EpochStore.readTable(spark, curDir, "ids"), "id")
-          EpochStore.writeIdBloom(spark, dir, bloom, items, fpp)
-        })
-      writeTfMeta(spark, dir)
-      EpochStore.writeManifest(spark, dir,
-        EpochStore.readManifest(spark, curDir) ++ Seq("tf" -> dTf, "ids" -> dIds))
-      EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+        () => EpochStore.writeIdBloom(spark, dir,
+          EpochStore.appendedIdBloom(spark, cur, batchIds, "id")))
+      EpochStore.writeHeader(spark, dir, cur.header.copy(
+        manifest = cur.header.manifest ++ Seq("tf" -> dTf, "ids" -> dIds)))
+      EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
       EpochStore.gc(spark, path, epoch, retainEpochs)
     } // else: empty batch or full replay — live epoch untouched
     } finally batchIds.unpersist(blocking = false)
@@ -1274,30 +1254,25 @@ object TextOps {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     EpochStore.withLease(spark, path) {
-    val curDir = resolveTokenFrequencyIndex(spark, path)
-    val curEpoch = new HPath(curDir).getName
-    val n = EpochStore.epochNumber(curEpoch) + 1L
+    val cur = resolveTokenFrequencyIndex(spark, path)
+    val n = cur.number + 1L
     val epoch = EpochStore.epochName(n)
     val dir = s"$path/$epoch"
     EpochStore.deleteDir(spark, dir)
     val dTf = EpochStore.dataDirName("tf", n)
     val dIds = EpochStore.dataDirName("ids", n)
     EpochStore.inParallel(
-      () => tfTotalsAt(spark, curDir)
+      () => tfTotalsAt(spark, cur)
         .write.mode("overwrite").parquet(s"$path/data/$dTf"),
       // append-guard disjointness makes the union already distinct
-      () => EpochStore.readTable(spark, curDir, "ids")
+      () => EpochStore.readTable(spark, cur, "ids")
         .write.mode("overwrite").parquet(s"$path/data/$dIds"))
-    val idsDf = spark.read.parquet(s"$path/data/$dIds")
-    val items = EpochStore.idBloomItems(idsDf.count())
-    EpochStore.writeIdBloom(spark, dir,
-      EpochStore.buildIdBloom(idsDf, "id", items, EpochStore.IdBloomFpp),
-      items, EpochStore.IdBloomFpp)
-    writeTfMeta(spark, dir)
-    EpochStore.writeManifest(spark, dir, Seq("tf" -> dTf, "ids" -> dIds))
-    EpochStore.commitEpoch(spark, path, epoch, Some(curEpoch))
+    val bloom = EpochStore.writeFreshIdBloomOf(
+      spark, dir, s"$path/data/$dIds", cur.header.schemas("ids"))
+    EpochStore.writeHeader(spark, dir, cur.header.copy(
+      manifest = Seq("tf" -> dTf, "ids" -> dIds), bloom = Some(bloom)))
+    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
     EpochStore.gc(spark, path, epoch, retainEpochs)
     }
   }

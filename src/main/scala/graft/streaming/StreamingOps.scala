@@ -221,10 +221,10 @@ object StreamingOps {
       threshold: Double = 0.5): DataFrame = {
     import graft.ops.{Dedup, TextOps}
     val spark = newStream.sparkSession
-    val (dir, meta) = Dedup.resolveIndex(spark, path)
-    val k = meta.getAs[Int]("k")
-    val numHashes = meta.getAs[Int]("num_hashes")
-    val bands = meta.getAs[Int]("bands")
+    val ep = Dedup.resolveIndex(spark, path)
+    val k = ep.header.int("k")
+    val numHashes = ep.header.int("num_hashes")
+    val bands = ep.header.int("bands")
     val streamSide = newStream.select(
       col(idCol).as("new_id"),
       graft.functions.native
@@ -234,9 +234,9 @@ object StreamingOps {
         .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs_a"))
       .select(col("new_id"), col("hs_a"),
         posexplode(col("bh")).as(Seq("band", "bhash")))
-    val buckets = Dedup.indexBuckets(spark, dir)
+    val buckets = Dedup.indexBuckets(spark, ep)
       .withColumnRenamed("id", "existing_id")
-    val sets = Dedup.indexSets(spark, dir)
+    val sets = Dedup.indexSets(spark, ep)
       .select(col("id").as("existing_id"), col("hs").as("hs_b"))
     streamSide.join(buckets, Seq("band", "bhash"))
       .join(sets, Seq("existing_id"))
@@ -278,9 +278,9 @@ object StreamingOps {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         import graft.ops.Dedup
         val spark = batch.sparkSession
-        val (dir, _) = Dedup.resolveIndex(spark, path)
         val fresh = batch.dropDuplicates(idCol)
-          .join(Dedup.indexSets(spark, dir).select(col("id").as(idCol)),
+          .join(Dedup.indexSets(spark, Dedup.resolveIndex(spark, path))
+            .select(col("id").as(idCol)),
             Seq(idCol), "left_anti")
         if (!fresh.isEmpty)
           Dedup.appendDedupIndex(fresh, textCol, idCol, path, retainEpochs)
@@ -309,9 +309,8 @@ object StreamingOps {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         import graft.ops.{EpochStore, Similarity}
         val spark = batch.sparkSession
-        val (dir, _) = Similarity.resolveAnnIndex(spark, path)
         val fresh = batch.dropDuplicates(idCol)
-          .join(EpochStore.readTable(spark, dir, "assigned")
+          .join(EpochStore.readTable(spark, Similarity.resolveAnnIndex(spark, path), "assigned")
             .select(col("id").as(idCol)), Seq(idCol), "left_anti")
         if (!fresh.isEmpty)
           Similarity.appendAnnIndex(fresh, vecCol, idCol, path, retainEpochs)
@@ -454,9 +453,8 @@ object StreamingOps {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         import graft.ops.{Decontam, EpochStore}
         val spark = batch.sparkSession
-        val (dir, _) = Decontam.resolveFingerprintIndex(spark, path)
         val fresh = batch.dropDuplicates(idCol)
-          .join(EpochStore.readTable(spark, dir, "fsizes")
+          .join(EpochStore.readTable(spark, Decontam.resolveFingerprintIndex(spark, path), "fsizes")
             .select(col("id").as(idCol)), Seq(idCol), "left_anti")
         if (!fresh.isEmpty)
           Decontam.appendFingerprintIndex(fresh, idCol, textCol, path, retainEpochs)
@@ -513,11 +511,11 @@ object StreamingOps {
     import graft.ops.{Decontam, EpochStore}
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     val spark = newStream.sparkSession
-    val (dir, meta) = Decontam.resolveFingerprintIndex(spark, path)
+    val ep = Decontam.resolveFingerprintIndex(spark, path)
     val bytes = Decontam.gramKeyBloom(
-      EpochStore.readTable(spark, dir, "postings").select(col("__g")).distinct())(fpp)
+      EpochStore.readTable(spark, ep, "postings").select(col("__g")).distinct())(fpp)
     fpScreenColumns(newStream, textCol,
-      meta.getAs[Int]("n"), meta.getAs[Int]("w"), minShared, bytes)
+      ep.header.int("n"), ep.header.int("w"), minShared, bytes)
   }
 
   /** [[screenFingerprintsStream]] with LIVE index-growth visibility — the
@@ -548,11 +546,11 @@ object StreamingOps {
         import graft.ops.{Decontam, EpochStore}
         val spark = batch.sparkSession
         if (cached.isEmpty || batchId % refreshEvery == 0) {
-          val (dir, meta) = Decontam.resolveFingerprintIndex(spark, path)
-          if (!cached.exists(_._1 == dir))
-            cached = Some((dir, meta.getAs[Int]("n"), meta.getAs[Int]("w"),
+          val ep = Decontam.resolveFingerprintIndex(spark, path)
+          if (!cached.exists(_._1 == ep.dir))
+            cached = Some((ep.dir, ep.header.int("n"), ep.header.int("w"),
               Decontam.gramKeyBloom(
-                EpochStore.readTable(spark, dir, "postings")
+                EpochStore.readTable(spark, ep, "postings")
                   .select(col("__g")).distinct())(fpp)))
         }
         val (_, n, w, bytes) = cached.get
@@ -1076,9 +1074,9 @@ object StreamingOps {
       fpp: Double = 1e-6): DataFrame = {
     import graft.ops.{Decontam, Dedup}
     val spark = newStream.sparkSession
-    val dir = Dedup.resolveParagraphIndex(spark, path)
     val bytes = Decontam.gramKeyBloom(
-      Dedup.paragraphIndexHashes(spark, dir).withColumnRenamed("h", "__g"))(fpp)
+      Dedup.paragraphIndexHashes(spark, Dedup.resolveParagraphIndex(spark, path))
+        .withColumnRenamed("h", "__g"))(fpp)
     val kept = filter(split(col(textCol), Dedup.ParaSep),
       p => !Decontam.bloomMightContainKey(bytes, md5(p.cast("binary"))))
     newStream.withColumn("cleaned",
@@ -1113,10 +1111,10 @@ object StreamingOps {
         import graft.ops.{Decontam, Dedup}
         val spark = batch.sparkSession
         if (cached.isEmpty || batchId % refreshEvery == 0) {
-          val dir = Dedup.resolveParagraphIndex(spark, path)
-          if (!cached.exists(_._1 == dir))
-            cached = Some((dir, Decontam.gramKeyBloom(
-              Dedup.paragraphIndexHashes(spark, dir)
+          val ep = Dedup.resolveParagraphIndex(spark, path)
+          if (!cached.exists(_._1 == ep.dir))
+            cached = Some((ep.dir, Decontam.gramKeyBloom(
+              Dedup.paragraphIndexHashes(spark, ep)
                 .withColumnRenamed("h", "__g"))(fpp)))
         }
         val bytes = cached.get._2

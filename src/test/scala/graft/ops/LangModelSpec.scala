@@ -308,20 +308,20 @@ class LangModelSpec extends SparkSpec {
       Row(1L, "a a b", true), Row(2L, "a c", false))
     val idx = Files.createTempDirectory("graft-guardcnt").toString + "/idx"
     LangModel.writeClassifierIndex(a, "doc_id", "text", "pos", idx)
-    val epochDir = s"$idx/${EpochStore.currentEpoch(spark, idx).get}"
+    val ep = LangModel.resolveClassifierIndex(spark, idx)
     def batch(xs: Long*) = EpochStore.counterBatchIds(
       frame(struct("doc_id" -> LongType), xs.map(Row(_)): _*), "doc_id")
     // disjoint ids: overlap exactly 0 whether the bloom clears or not
-    assert(EpochStore.counterGuardCounts(spark, epochDir, batch(7L, 8L))
+    assert(EpochStore.counterGuardCounts(spark, ep, batch(7L, 8L))
       == ((0L, 2L)))
     // full replay: every id already committed
-    assert(EpochStore.counterGuardCounts(spark, epochDir, batch(1L, 2L))
+    assert(EpochStore.counterGuardCounts(spark, ep, batch(1L, 2L))
       == ((2L, 2L)))
     // partial overlap, with a duplicated raw row — total counts DISTINCT ids
-    assert(EpochStore.counterGuardCounts(spark, epochDir, batch(2L, 9L, 9L))
+    assert(EpochStore.counterGuardCounts(spark, ep, batch(2L, 9L, 9L))
       == ((1L, 2L)))
     // empty batch: no work, (0, 0)
-    assert(EpochStore.counterGuardCounts(spark, epochDir, batch())
+    assert(EpochStore.counterGuardCounts(spark, ep, batch())
       == ((0L, 0L)))
   }
 

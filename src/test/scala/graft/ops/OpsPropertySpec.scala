@@ -445,9 +445,9 @@ object OpsPropertySpec extends Properties("graft.ops") {
       val rebuilt = java.nio.file.Files.createTempDirectory("graft-prop-reb").toString
       Dedup.writeDedupIndex(a.unionByName(b), "text", "doc_id", rebuilt, maxBucketSize = 2)
       def tables(p: String) = {
-        val dir = Dedup.epochDir(spark, p)
-        Seq(Dedup.indexBuckets(spark, dir), Dedup.indexSets(spark, dir),
-          Dedup.indexDropped(spark, dir)).map(_.collect().map(_.toSeq).toSet)
+        val ep = Dedup.resolveIndex(spark, p)
+        Seq(Dedup.indexBuckets(spark, ep), Dedup.indexSets(spark, ep),
+          Dedup.indexDropped(spark, ep)).map(_.collect().map(_.toSeq).toSet)
       }
       tables(appended) == tables(rebuilt)
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
 
 /** LLM-pipeline operators: dedup / similarity / text / multimodal. */
 class OpsSpec extends SparkSpec {
@@ -2960,7 +2960,7 @@ class OpsSpec extends SparkSpec {
     assert(Dedup.minhashPairsAgainst(
       docs(), existing, "text", "doc_id").count() == 0)
     // the persisted-index probe gives the identical pair set, with the
-    // banding parameters coming from the index's own meta table
+    // banding parameters coming from the index's own epoch header
     val idx = java.nio.file.Files.createTempDirectory("graft-dedup-idx").toString
     Dedup.writeDedupIndex(existing, "text", "doc_id", idx)
     val viaIndex = Dedup.minhashPairsAgainstIndex(
@@ -2970,13 +2970,13 @@ class OpsSpec extends SparkSpec {
   }
 
   private def readIndexTables(path: String) = {
-    val dir = Dedup.epochDir(spark, path)
+    val ep = Dedup.resolveIndex(spark, path)
     def triples(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.get(0), r.get(1), r.get(2))).toSet
-    (triples(Dedup.indexBuckets(spark, dir)),
-      Dedup.indexSets(spark, dir)
+    (triples(Dedup.indexBuckets(spark, ep)),
+      Dedup.indexSets(spark, ep)
         .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet,
-      triples(Dedup.indexDropped(spark, dir)))
+      triples(Dedup.indexDropped(spark, ep)))
   }
 
   test("appendDedupIndex equals a full rebuild on the union corpus") {
@@ -3014,15 +3014,14 @@ class OpsSpec extends SparkSpec {
       .filterNot(_.startsWith(".")) // local-FS .crc checksum siblings
     assert(leftovers ==
       Set("current", "data", "epoch-000000001", "epoch-000000002"), leftovers)
-    assert(new java.io.File(Dedup.epochDir(spark, appended)).list().toSet ==
-      Set("manifest", "dropped", "meta", "idbloom"))
+    assert(new java.io.File(Dedup.epochDir(spark, appended)).list().toSet
+      .filterNot(_.startsWith(".")) == Set("header", "dropped", "idbloom.deflate"))
     // the delta contract: the append wrote ONLY its delta dirs; the
     // standing data is referenced by the new manifest, not copied
     assert(new java.io.File(s"$appended/data").list().toSet == Set(
       "buckets-000000001", "sets-000000001",
       "buckets-000000002", "sets-000000002"))
-    assert(graft.ops.EpochStore.readManifest(
-      spark, Dedup.epochDir(spark, appended)).toSet == Set(
+    assert(Dedup.resolveIndex(spark, appended).header.manifest.toSet == Set(
         "buckets" -> "buckets-000000001", "sets" -> "sets-000000001",
         "buckets" -> "buckets-000000002", "sets" -> "sets-000000002"))
     assert(fileState(setsV1) == setsV1Before,
@@ -3104,7 +3103,7 @@ class OpsSpec extends SparkSpec {
     val base = (1 to 40).map(i => s"token$i").mkString(" ")
     val idx = java.nio.file.Files.createTempDirectory("graft-idx-rebuild").toString
     Dedup.writeDedupIndex(docs(1L -> base), "text", "doc_id", idx)
-    val dir1 = Dedup.epochDir(spark, idx)
+    val ep1 = Dedup.resolveIndex(spark, idx)
     // rebuild with a different corpus: epoch 2, atomically committed — the
     // old epoch (and its data files) stay readable for in-flight readers
     Dedup.writeDedupIndex(
@@ -3114,7 +3113,7 @@ class OpsSpec extends SparkSpec {
       docs(30L -> base), "text", "doc_id", idx, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((30L, 2L)), "probe must see ONLY the rebuilt corpus")
-    assert(Dedup.indexSets(spark, dir1).collect().map(_.getLong(0)).toSet ==
+    assert(Dedup.indexSets(spark, ep1).collect().map(_.getLong(0)).toSet ==
       Set(1L), "a reader that resolved the old epoch keeps working")
     // the concurrent-writer tripwire: committing an epoch derived from a
     // stale base fails loudly instead of silently dropping rows
@@ -3212,14 +3211,14 @@ class OpsSpec extends SparkSpec {
     val base = (1 to 40).map(i => s"token$i").mkString(" ")
     val idx = java.nio.file.Files.createTempDirectory("graft-idx-bloom").toString
     Dedup.writeDedupIndex(docs(1L -> base), "text", "doc_id", idx)
-    val dir1 = Dedup.epochDir(spark, idx)
-    assert(EpochStore.readIdBloom(spark, dir1).isDefined,
+    val ep1 = Dedup.resolveIndex(spark, idx)
+    assert(ep1.header.bloom.isDefined && EpochStore.readIdBloom(spark, ep1).nonEmpty,
       "a fresh build must carry an id bloom")
     // the guard decision: a disjoint batch is CLEARED by the bloom (no
     // standing id data touched at all); an overlapping batch falls back
-    assert(!EpochStore.idGuardNeedsExact(spark, dir1, docs(2L -> base), "doc_id"),
+    assert(!EpochStore.idGuardNeedsExact(spark, ep1, docs(2L -> base), "doc_id"),
       "a clean batch must skip the exact semi-join")
-    assert(EpochStore.idGuardNeedsExact(spark, dir1, docs(1L -> base), "doc_id"),
+    assert(EpochStore.idGuardNeedsExact(spark, ep1, docs(1L -> base), "doc_id"),
       "a duplicate id must force the exact check (no false negatives)")
     // lifecycle behavior unchanged: clean appends commit, dups reject loudly
     Dedup.appendDedupIndex(
@@ -3229,41 +3228,193 @@ class OpsSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("already present"))
     // the merged successor bloom covers BOTH generations of ids
-    val dir2 = Dedup.epochDir(spark, idx)
-    assert(EpochStore.idGuardNeedsExact(spark, dir2, docs(1L -> base), "doc_id"))
-    assert(EpochStore.idGuardNeedsExact(spark, dir2, docs(2L -> base), "doc_id"))
-    assert(!EpochStore.idGuardNeedsExact(spark, dir2, docs(77L -> base), "doc_id"))
-    // a pre-bloom epoch (simulated by deleting the file) falls back to the
-    // exact check, and the NEXT append upgrades the index with a full bloom
-    EpochStore.deleteDir(spark, s"$dir2/idbloom")
-    assert(EpochStore.idGuardNeedsExact(spark, dir2, docs(50L -> base), "doc_id"),
-      "no bloom ⇒ conservative exact check")
-    Dedup.appendDedupIndex(docs(3L -> (base + " extra")), "text", "doc_id", idx)
-    val dir3 = Dedup.epochDir(spark, idx)
-    assert(EpochStore.readIdBloom(spark, dir3).isDefined,
-      "the upgrade append must write a full bloom")
-    assert(EpochStore.idGuardNeedsExact(spark, dir3, docs(1L -> base), "doc_id") &&
-      EpochStore.idGuardNeedsExact(spark, dir3, docs(3L -> base), "doc_id"),
-      "the upgraded bloom must cover every committed generation")
-    assert(!EpochStore.idGuardNeedsExact(spark, dir3, docs(78L -> base), "doc_id"))
+    val ep2 = Dedup.resolveIndex(spark, idx)
+    assert(EpochStore.idGuardNeedsExact(spark, ep2, docs(1L -> base), "doc_id"))
+    assert(EpochStore.idGuardNeedsExact(spark, ep2, docs(2L -> base), "doc_id"))
+    assert(!EpochStore.idGuardNeedsExact(spark, ep2, docs(77L -> base), "doc_id"))
     // compaction right-sizes a fresh bloom; coverage unchanged
     Dedup.compactDedupIndex(spark, idx)
-    val dirC = Dedup.epochDir(spark, idx)
-    assert(EpochStore.readIdBloom(spark, dirC).isDefined)
-    assert(EpochStore.idGuardNeedsExact(spark, dirC, docs(2L -> base), "doc_id"))
-    assert(!EpochStore.idGuardNeedsExact(spark, dirC, docs(79L -> base), "doc_id"))
+    val epC = Dedup.resolveIndex(spark, idx)
+    assert(epC.header.bloom.isDefined)
+    assert(EpochStore.idGuardNeedsExact(spark, epC, docs(2L -> base), "doc_id"))
+    assert(!EpochStore.idGuardNeedsExact(spark, epC, docs(79L -> base), "doc_id"))
     // the ANN lifecycle shares the guard
     val annIdx = java.nio.file.Files.createTempDirectory("graft-ann-bloom").toString
     val vecSt = struct("vec_id" -> LongType, "vec" -> ArrayType(FloatType))
     Similarity.writeAnnIndex(
       frame(vecSt, Row(1L, Seq(1f, 0f)), Row(2L, Seq(0f, 1f))),
       "vec", "vec_id", annIdx, nlist = 2)
-    val annDir = EpochStore.epochDir(spark, annIdx)
-    assert(EpochStore.readIdBloom(spark, annDir).isDefined)
-    assert(!EpochStore.idGuardNeedsExact(spark, annDir,
+    val annEp = Similarity.resolveAnnIndex(spark, annIdx)
+    assert(annEp.header.bloom.isDefined)
+    assert(!EpochStore.idGuardNeedsExact(spark, annEp,
       frame(vecSt, Row(9L, Seq(1f, 1f))), "vec_id"))
-    assert(EpochStore.idGuardNeedsExact(spark, annDir,
+    assert(EpochStore.idGuardNeedsExact(spark, annEp,
       frame(vecSt, Row(1L, Seq(1f, 1f))), "vec_id"))
+  }
+
+  /** Rewrite a committed index into the layout builds wrote before epoch
+    * headers: `manifest` and `meta` parquet tables, no header, no sidecar.
+    */
+  private def toPreHeaderLayout(idx: String): Unit = {
+    import spark.implicits._
+    val live = EpochStore.epochDir(spark, idx)
+    val h = EpochStore.readHeader(spark, live).get
+    h.manifest.toDF("table", "dir").coalesce(1).write.parquet(s"$live/manifest")
+    Seq(Tuple1(1)).toDF("format_version").coalesce(1).write.parquet(s"$live/meta")
+    val fs = EpochStore.hadoopFs(spark, live)
+    fs.delete(new org.apache.hadoop.fs.Path(live, EpochStore.HeaderFileName), false)
+    fs.delete(new org.apache.hadoop.fs.Path(live, EpochStore.IdBloomFileName), false)
+  }
+
+  test("pre-header index dirs: lifecycles fail with the rebuild message; a build resets them") {
+    val root = java.nio.file.Files.createTempDirectory("graft-preheader").toString
+    val corpus = docs(1L -> "alpha beta\n\ngamma delta", 2L -> "alpha beta")
+    val batch = docs(3L -> "alpha beta\n\nnew para")
+    def live(p: String) = new java.io.File(EpochStore.epochDir(spark, p)).list().toSet
+      .filterNot(_.startsWith("."))
+    // paragraph index: probe, append and compact all refuse the old layout
+    val para = s"$root/para"
+    Dedup.writeParagraphIndex(corpus, "text", para)
+    toPreHeaderLayout(para)
+    Seq[() => Any](
+      () => Dedup.dedupParagraphsAgainstIndex(batch, "doc_id", "text", para),
+      () => Dedup.appendParagraphIndex(batch, "text", para),
+      () => Dedup.compactParagraphIndex(spark, para)).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("pre-header") &&
+        e.getMessage.contains("rebuild it with writeParagraphIndex"), e.getMessage)
+    }
+    // token-frequency index (bloom-carrying): same three refusals
+    val tf = s"$root/tf"
+    TextOps.writeTokenFrequencyIndex(corpus, "doc_id", "text", tf)
+    toPreHeaderLayout(tf)
+    Seq[() => Any](
+      () => TextOps.frequencyScoreAgainstIndex(batch, "doc_id", "text", tf),
+      () => TextOps.appendTokenFrequencyIndex(batch, "doc_id", "text", tf),
+      () => TextOps.compactTokenFrequencyIndex(spark, tf)).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("rebuild it with writeTokenFrequencyIndex"), e.getMessage)
+    }
+    assert(EpochStore.currentEpoch(spark, tf).contains("epoch-000000001"))
+    // a build over the old layout resets it and starts over at epoch 1
+    Dedup.writeParagraphIndex(corpus, "text", para)
+    TextOps.writeTokenFrequencyIndex(corpus, "doc_id", "text", tf)
+    assert(live(para) == Set("header"))
+    assert(live(tf) == Set("header", EpochStore.IdBloomFileName))
+    assert(EpochStore.currentEpoch(spark, tf).contains("epoch-000000001"))
+    assert(new java.io.File(tf).list().toSet.filterNot(_.startsWith(".")) ==
+      Set("current", "data", "epoch-000000001"))
+    // …and the rebuilt indexes work end to end
+    TextOps.appendTokenFrequencyIndex(batch, "doc_id", "text", tf)
+    assert(TextOps.indexTokenFrequencies(spark, tf)
+      .where(col("token") === "alpha").head().getLong(1) == 3L)
+    assert(Dedup.dedupParagraphsAgainstIndex(batch, "doc_id", "text", para)
+      .select("cleaned").head().getString(0) == "new para")
+  }
+
+  test("a truncated or CRC-mismatched epoch header fails loudly on probe and append") {
+    val idx = java.nio.file.Files.createTempDirectory("graft-hdr-corrupt").toString
+    val corpus = docs(1L -> "alpha beta", 2L -> "beta gamma")
+    TextOps.writeTokenFrequencyIndex(corpus, "doc_id", "text", idx)
+    val fs = EpochStore.hadoopFs(spark, idx)
+    val hp = new org.apache.hadoop.fs.Path(EpochStore.epochDir(spark, idx),
+      EpochStore.HeaderFileName)
+    val good = { val in = fs.open(hp); try in.readAllBytes() finally in.close() }
+    // written through the FS API, so only the header's own checks can object
+    def put(bytes: Array[Byte]): Unit = {
+      val out = fs.create(hp, true)
+      try out.write(bytes) finally out.close()
+    }
+    val batch = docs(3L -> "gamma delta")
+    def probe() = TextOps.frequencyScoreAgainstIndex(batch, "doc_id", "text", idx).collect()
+    def append() = TextOps.appendTokenFrequencyIndex(batch, "doc_id", "text", idx)
+    val flipped = good.clone()
+    flipped(flipped.length - 3) = (flipped(flipped.length - 3) ^ 0x01).toByte
+    Seq(good.dropRight(7) -> "truncated", flipped -> "CRC32 mismatch",
+      Array.emptyByteArray -> "no header line").foreach { case (bad, why) =>
+      put(bad)
+      Seq[() => Any](() => probe(), () => append()).foreach { op =>
+        val e = intercept[IllegalStateException](op())
+        assert(e.getMessage.contains("corrupt") && e.getMessage.contains(why), e.getMessage)
+      }
+    }
+    assert(EpochStore.currentEpoch(spark, idx).contains("epoch-000000001"),
+      "a refused append must not commit")
+    put(good)
+    append()
+    assert(probe().length == 1)
+  }
+
+  test("epoch metadata costs no Spark jobs; a clean paragraph append stays within 6") {
+    val base = (1 to 40).map(i => s"token$i").mkString(" ")
+    val idx = java.nio.file.Files.createTempDirectory("graft-hdr-jobs").toString
+    Dedup.writeDedupIndex(docs(1L -> base, 2L -> (base + " x")), "text", "doc_id", idx)
+    Dedup.appendDedupIndex(docs(3L -> (base + " y")), "text", "doc_id", idx)
+    val (ep, resolveJobs) = JobCount.of(spark)(Dedup.resolveIndex(spark, idx))
+    assert(resolveJobs == 0, s"parsing the epoch header launched $resolveJobs jobs")
+    val (_, readJobs) = JobCount.of(spark) {
+      EpochStore.readTable(spark, ep, "sets")
+      Dedup.indexBuckets(spark, ep)
+    }
+    assert(readJobs == 0, s"building readTable DataFrames launched $readJobs jobs")
+    val (_, gcJobs) = JobCount.of(spark)(EpochStore.gc(spark, idx, ep.name, 2))
+    assert(gcJobs == 0, s"gc's reference scan launched $gcJobs jobs")
+    val para = java.nio.file.Files.createTempDirectory("graft-hdr-pjobs").toString
+    Dedup.writeParagraphIndex(docs(1L -> "a b\n\nc d", 2L -> "e f"), "text", para)
+    val (_, appendJobs) = JobCount.of(spark)(
+      Dedup.appendParagraphIndex(docs(3L -> "a b\n\ng h"), "text", para))
+    assert(EpochStore.currentEpoch(spark, para).contains("epoch-000000002"))
+    assert(appendJobs <= 6, s"a clean paragraph append launched $appendJobs jobs")
+  }
+
+  test("id-bloom sidecar: a 2^20-capacity bloom over ~1k ids stays under 64 KB on disk") {
+    val idx = java.nio.file.Files.createTempDirectory("graft-hdr-bloom").toString
+    TextOps.writeTokenFrequencyIndex(
+      spark.range(1000).select(col("id").as("doc_id"), lit("a b").as("text")),
+      "doc_id", "text", idx)
+    val ep = TextOps.resolveTokenFrequencyIndex(spark, idx)
+    assert(ep.header.bloom.contains(EpochStore.IdBloom(1L << 20, EpochStore.IdBloomFpp)))
+    val sidecar = new java.io.File(ep.dir, EpochStore.IdBloomFileName)
+    assert(sidecar.length() < 64L * 1024, s"sidecar is ${sidecar.length()} bytes")
+    assert(EpochStore.readIdBloom(spark, ep).length > 1000000,
+      "the sidecar must inflate to the full bit array")
+  }
+
+  test("counter replay guard: duplicated standing ids fail a partial replay loudly") {
+    val root = java.nio.file.Files.createTempDirectory("graft-dupids").toString
+    val labeled = frame(struct("doc_id" -> LongType, "text" -> StringType,
+      "pos" -> BooleanType),
+      Row(1L, "a b", true), Row(2L, "b c", false), Row(3L, "c d", true))
+    /** Corrupt the live epoch: its `ids` table lists every id twice. */
+    def duplicateIds(idx: String): Unit = {
+      val live = EpochStore.epochDir(spark, idx)
+      val h = EpochStore.readHeader(spark, live).get
+      val fs = EpochStore.hadoopFs(spark, idx)
+      val ids = h.manifest.collect { case ("ids", d) => d }.head
+      org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(s"$idx/data/$ids"),
+        fs, new org.apache.hadoop.fs.Path(s"$idx/data/ids-dup"), false,
+        spark.sparkContext.hadoopConfiguration)
+      EpochStore.writeHeader(spark, live, h.copy(manifest = h.manifest :+ ("ids" -> "ids-dup")))
+    }
+    // batch {3, 4}: id 3 matches two standing rows, so row-counted overlap
+    // equals the batch's distinct total — a full replay by the numbers,
+    // which would drop id 4 silently
+    val replay = labeled.where(col("doc_id") === 3L)
+      .unionByName(frame(labeled.schema, Row(4L, "d e", false)))
+    val tf = s"$root/tf"
+    TextOps.writeTokenFrequencyIndex(labeled, "doc_id", "text", tf)
+    duplicateIds(tf)
+    val tfErr = intercept[IllegalArgumentException](
+      TextOps.appendTokenFrequencyIndex(replay, "doc_id", "text", tf))
+    assert(tfErr.getMessage.contains("duplicate ids"), tfErr.getMessage)
+    assert(EpochStore.currentEpoch(spark, tf).contains("epoch-000000001"))
+    val cls = s"$root/cls"
+    LangModel.writeClassifierIndex(labeled, "doc_id", "text", "pos", cls)
+    duplicateIds(cls)
+    val clsErr = intercept[IllegalArgumentException](
+      LangModel.appendClassifierIndex(replay, "doc_id", "text", "pos", cls))
+    assert(clsErr.getMessage.contains("duplicate ids"), clsErr.getMessage)
+    assert(EpochStore.currentEpoch(spark, cls).contains("epoch-000000001"))
   }
 
   test("index commit is atomic: uncommitted epochs are invisible, dup ids rejected") {
@@ -3300,19 +3451,19 @@ class OpsSpec extends SparkSpec {
     val corpus = docs(1L -> (1 to 40).map(i => s"token$i").mkString(" "))
     val idx = java.nio.file.Files.createTempDirectory("graft-idx-ver").toString
     Dedup.writeDedupIndex(corpus, "text", "doc_id", idx)
-    frame(struct("k" -> IntegerType, "num_hashes" -> IntegerType,
-      "bands" -> IntegerType, "max_bucket_size" -> IntegerType,
-      "format_version" -> IntegerType),
-      Row(3, 64, 32, 4096, 99))
-      .write.mode("overwrite").parquet(s"${Dedup.epochDir(spark, idx)}/meta")
+    val live = Dedup.epochDir(spark, idx)
+    EpochStore.writeHeader(spark, live,
+      EpochStore.readHeader(spark, live).get.copy(formatVersion = 99))
     val probeErr = intercept[IllegalArgumentException] {
       Dedup.minhashPairsAgainstIndex(corpus, "text", "doc_id", idx)
     }
-    assert(probeErr.getMessage.contains("format version 99"))
+    assert(probeErr.getMessage.contains("format version 99") &&
+      probeErr.getMessage.contains("rebuild it with writeDedupIndex"))
     val appendErr = intercept[IllegalArgumentException] {
       Dedup.appendDedupIndex(corpus, "text", "doc_id", idx)
     }
-    assert(appendErr.getMessage.contains("format version 99"))
+    assert(appendErr.getMessage.contains("format version 99") &&
+      appendErr.getMessage.contains("rebuild it with writeDedupIndex"))
   }
 
   test("keepBestPerCluster keeps the top score per cluster, ties to min id") {
@@ -3771,8 +3922,7 @@ class OpsSpec extends SparkSpec {
     Decontam.writeFingerprintIndex(
       corpus1.unionByName(corpus2), "doc_id", "text", rebuilt, n = 5, w = 4)
     def table(p: String, t: String) = {
-      val (d, _) = Decontam.resolveFingerprintIndex(spark, p)
-      EpochStore.readTable(spark, d, t).collect()
+      EpochStore.readTable(spark, Decontam.resolveFingerprintIndex(spark, p), t).collect()
         .map(_.toSeq.toList).sortBy(_.toString).toSeq
     }
     assert(table(dir, "postings") == table(rebuilt, "postings"))
@@ -3788,17 +3938,14 @@ class OpsSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("disjoint ids"))
     // a future on-disk format is rejected loudly, like the other indexes
-    val (liveDir, _) = Decontam.resolveFingerprintIndex(spark, dir)
-    import spark.implicits._
-    Seq((5, 4, 99)).toDF("n", "w", "format_version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$liveDir/meta")
+    val live = Decontam.resolveFingerprintIndex(spark, dir)
+    EpochStore.writeHeader(spark, live.dir, live.header.copy(formatVersion = 99))
     val vx = intercept[IllegalArgumentException] {
       Decontam.winnowingPairsAgainstIndex(batch, "doc_id", "text", dir)
     }
-    assert(vx.getMessage.contains("format version 99"))
-    Seq((5, 4, Decontam.FingerprintIndexFormatVersion))
-      .toDF("n", "w", "format_version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$liveDir/meta")
+    assert(vx.getMessage.contains("format version 99") &&
+      vx.getMessage.contains("rebuild it with writeFingerprintIndex"))
+    EpochStore.writeHeader(spark, live.dir, live.header)
     // w = 1 degenerates to the full-gram postings index: probe shared
     // counts over containment denominators reproduce containmentPairsAgainst
     val dirW1 = s"$root/fpidx_w1"

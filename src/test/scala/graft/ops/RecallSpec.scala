@@ -123,12 +123,10 @@ class RecallSpec extends SparkSpec {
       k = 5, nprobe = 8)) == bruteForce,
       "sample-trained index must stay exact at full probe")
     // compaction merges the two assigned dirs into one; results unchanged
-    assert(EpochStore.readManifest(
-      spark, EpochStore.epochDir(spark, idxPath)).size == 2,
+    assert(Similarity.resolveAnnIndex(spark, idxPath).header.manifest.size == 2,
       "build + append must leave two assigned data dirs to compact")
     Similarity.compactAnnIndex(spark, idxPath)
-    val manifest = EpochStore.readManifest(
-      spark, EpochStore.epochDir(spark, idxPath))
+    val manifest = Similarity.resolveAnnIndex(spark, idxPath).header.manifest
     assert(manifest.size == 1 && manifest.head._1 == "assigned",
       s"compaction must leave ONE assigned data dir, got $manifest")
     assert(neighborSets(Similarity.annTopKAgainstIndex(
@@ -142,17 +140,15 @@ class RecallSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("already present"))
     // format-version drift fails loudly on probe
-    frame(struct("nlist" -> org.apache.spark.sql.types.IntegerType,
-      "dim" -> org.apache.spark.sql.types.IntegerType,
-      "format_version" -> org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.Row(8, 16, 99))
-      .write.mode("overwrite")
-      .parquet(s"${EpochStore.epochDir(spark, idxPath)}/meta")
+    val live = EpochStore.epochDir(spark, idxPath)
+    EpochStore.writeHeader(spark, live,
+      EpochStore.readHeader(spark, live).get.copy(formatVersion = 99))
     val verr = intercept[IllegalArgumentException] {
       Similarity.annTopKAgainstIndex(
         emb.where(col("vec_id") < 10), "embedding", "vec_id", idxPath, k = 5)
     }
-    assert(verr.getMessage.contains("format version 99"))
+    assert(verr.getMessage.contains("format version 99") &&
+      verr.getMessage.contains("rebuild it with writeAnnIndex"))
   }
 
   test("compactAnnIndex(retrain) refreshes the quantizer; probes stay exact at full probe") {
@@ -173,8 +169,7 @@ class RecallSpec extends SparkSpec {
     // retraining over the union must actually move the drift-y quantizer
     assert(centroids() != centroidsBefore,
       "retrain must replace the slice-trained centroids")
-    val manifest = EpochStore.readManifest(
-      spark, EpochStore.epochDir(spark, idxPath))
+    val manifest = Similarity.resolveAnnIndex(spark, idxPath).header.manifest
     assert(manifest.size == 1 && manifest.head._1 == "assigned",
       s"retraining compaction still compacts to ONE data dir, got $manifest")
     // probe correctness is quantizer-independent at nprobe = nlist …
@@ -220,9 +215,9 @@ class RecallSpec extends SparkSpec {
     val part = emb.where(col("vec_id") % 10 =!= 5)
     Similarity.writeAnnIndex(part, "embedding", "vec_id", idxQ, nlist = 8, quantize = true)
     // on disk: codes + scale, no float vector column
-    val (dir0, meta0) = Similarity.resolveAnnIndex(spark, idxQ)
-    assert(meta0.getAs[Boolean]("quantized"))
-    val cols = EpochStore.readTable(spark, dir0, "assigned").columns.toSet
+    val ep0 = Similarity.resolveAnnIndex(spark, idxQ)
+    assert(ep0.header.bool("quantized"))
+    val cols = EpochStore.readTable(spark, ep0, "assigned").columns.toSet
     assert(cols == Set("cell", "id", "qvec", "scale"), s"unexpected storage schema $cols")
     // a frozen-quantizer append stores codes too, transparently
     Similarity.appendAnnIndex(
@@ -248,9 +243,9 @@ class RecallSpec extends SparkSpec {
     assert(r >= 0.9, s"quantized-index recall vs float collapsed: $r")
     // retraining compaction keeps codes and probe equality
     Similarity.compactAnnIndex(spark, idxQ, retrain = true)
-    val (dir1, meta1) = Similarity.resolveAnnIndex(spark, idxQ)
-    assert(meta1.getAs[Boolean]("quantized"))
-    assert(EpochStore.readTable(spark, dir1, "assigned").columns.toSet ==
+    val ep1 = Similarity.resolveAnnIndex(spark, idxQ)
+    assert(ep1.header.bool("quantized"))
+    assert(EpochStore.readTable(spark, ep1, "assigned").columns.toSet ==
       Set("cell", "id", "qvec", "scale"))
     assert(rows(Similarity.annTopKAgainstIndex(
       queries, "embedding", "vec_id", idxQ, k = 5, nprobe = 8)) == rows(expect))

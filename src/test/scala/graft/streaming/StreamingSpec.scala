@@ -387,9 +387,9 @@ class StreamingSpec extends SparkSpec {
     Dedup.appendDedupIndex(
       frame(docSt, Row(1L, nearDup), Row(2L, extra)), "text", "doc_id", batched)
     def tables(p: String) = {
-      val d = Dedup.epochDir(spark, p)
-      Seq(Dedup.indexBuckets(spark, d), Dedup.indexSets(spark, d),
-        Dedup.indexDropped(spark, d)).map(_.collect().map(_.toSeq).toSet)
+      val ep = Dedup.resolveIndex(spark, p)
+      Seq(Dedup.indexBuckets(spark, ep), Dedup.indexSets(spark, ep),
+        Dedup.indexDropped(spark, ep)).map(_.collect().map(_.toSeq).toSet)
     }
     assert(tables(streamed) == tables(batched),
       "stream-appended index must equal the batch-appended one")
@@ -433,7 +433,7 @@ class StreamingSpec extends SparkSpec {
       frame(vecSt, Row(1L, v(0.9f, 0.1f, 0f, 0f)), Row(2L, v(0f, 0.2f, 0.9f, 0f))),
       "embedding", "vec_id", batched)
     def assigned(p: String) = EpochStore.readTable(
-      spark, EpochStore.epochDir(spark, p), "assigned")
+      spark, Similarity.resolveAnnIndex(spark, p), "assigned")
       .collect().map(_.toSeq).toSet
     assert(assigned(streamed) == assigned(batched),
       "stream-appended ANN index must equal the batch-appended one")
@@ -623,7 +623,7 @@ class StreamingSpec extends SparkSpec {
     Decontam.appendFingerprintIndex(
       frame(docSt, d1, d2), "doc_id", "text", batched)
     def table(p: String, t: String) = EpochStore.readTable(
-      spark, EpochStore.epochDir(spark, p), t)
+      spark, Decontam.resolveFingerprintIndex(spark, p), t)
       .collect().map(_.toSeq).toSet
     assert(table(streamed, "postings") == table(batched, "postings"),
       "stream-grown fingerprint index must equal the batch-appended one")
