@@ -375,10 +375,7 @@ object SparkEntry {
     * .HtmlStopwords]] so its block SURVIVES extraction — a casualty must
     * die at its own stage, not at the block classifier.
     */
-  // private[graft], not private: the measurement probes (ProbeExtract /
-  // ProbeStageA) drive this exact fixture, so their numbers can never
-  // silently diverge from the benched corpus
-  private[graft] def crawlDocs(s: SparkSession, d: String) = {
+  private def crawlDocs(s: SparkSession, d: String) = {
     val canon = col("doc_id") -
       when(col("doc_id") % 10 === 3, lit(3L)).otherwise(lit(0L))
     val inner =

@@ -190,8 +190,6 @@ object HtmlUtil {
           if (name.charAt(0) == c && matchesCI(s, j, name)) r = j + name.length
           n += 1
         }
-        // "header"/"footer"… vs h[1-6]: distinct second chars, no overlap
-        if (r < 0 && c == 'h' && matchesCI(s, j, "header")) r = j + 6
       }
     }
     if (r < 0 || r >= s.length) return -1
@@ -319,8 +317,17 @@ object HtmlUtil {
     n
   }
 
-  private val Stopwords: Array[String] = Array(
+  /** Stopword list for the block classifier (jusText's stopword-density
+    * signal; a tiny high-frequency English set — swap per language). The
+    * one copy: [[graft.ops.TextOps.HtmlStopwords]] is this list.
+    */
+  private[graft] val Stopwords: Array[String] = Array(
     "the", "of", "and", "a", "to", "in", "is", "it", "that", "for")
+
+  /** Longest stopword: [[isStopword]] gathers at most this many letters. */
+  private val MaxStopwordLength = Stopwords.map(_.length).max
+  require(MaxStopwordLength <= 8,
+    s"every stopword must fit isStopword's 8-char buffer; longest is $MaxStopwordLength")
 
   /** Is `regexp_replace(lower(word), "[^a-z]", "")` a stopword? The word
     * is s[from, to). All-ASCII words take the table path; any non-ASCII
@@ -336,7 +343,7 @@ object HtmlUtil {
       if (c >= 0x80) return isStopwordSlow(s.substring(from, to))
       val lc = lowerAscii(c)
       if (lc >= 'a' && lc <= 'z') {
-        if (n == 8) return false // longest stopword is 4 chars
+        if (n == MaxStopwordLength) return false
         buf(n) = lc
         n += 1
       }
@@ -353,7 +360,7 @@ object HtmlUtil {
     while (i < lowered.length) {
       val c = lowered.charAt(i)
       if (c >= 'a' && c <= 'z') {
-        if (n == 8) return false
+        if (n == MaxStopwordLength) return false
         buf(n) = c
         n += 1
       }
@@ -363,7 +370,7 @@ object HtmlUtil {
   }
 
   private def stopwordLookup(buf: Array[Char], n: Int): Boolean = {
-    if (n == 0 || n > 4) return false
+    if (n == 0) return false
     var w = 0
     while (w < Stopwords.length) {
       val sw = Stopwords(w)

@@ -470,8 +470,9 @@ object Decontam {
     */
   val FingerprintIndexFormatVersion: Int = 2
 
-  private[graft] val FingerprintIndex = EpochStore.IndexKind(
-    "fingerprint", FingerprintIndexFormatVersion, "writeFingerprintIndex")
+  private[graft] val FingerprintIndex = EpochStore.EpochIndex(
+    EpochStore.IndexKind("fingerprint", FingerprintIndexFormatVersion, "writeFingerprintIndex"),
+    tables = Seq("postings", "fsizes"), idTable = Some("fsizes"))
 
   private def fpPostings(
       df: DataFrame, idCol: String, textCol: String, n: Int, w: Int): DataFrame =
@@ -480,11 +481,11 @@ object Decontam {
 
   private[graft] def resolveFingerprintIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
-    EpochStore.resolve(spark, path, FingerprintIndex)
+    FingerprintIndex.resolve(spark, path)
 
-  /** Persist the standing WINNOWING-FINGERPRINT index — the fourth index
-    * lifecycle on the shared [[EpochStore]] delta-epoch layout (next to
-    * LSH dedup, ANN, and paragraph hashes): `postings` = (id, 16-hex
+  /** Persist the standing WINNOWING-FINGERPRINT index on the shared
+    * [[EpochStore]] delta-epoch layout (next to LSH dedup, ANN, and
+    * paragraph hashes): `postings` = (id, 16-hex
     * fingerprint) rows, `fsizes` = per-doc fingerprint counts, and the epoch
     * header holding (n, w) so probes can never run with mismatched winnowing
     * parameters. A daily job probes arrivals for partial overlap against
@@ -509,36 +510,15 @@ object Decontam {
       path: String,
       n: Int = 8,
       w: Int = 4,
-      retainEpochs: Int = 2): Unit = {
-    val spark = corpus.sparkSession
-    EpochStore.withLease(spark, path) {
-    val cur = EpochStore.buildBase(spark, path)
-    val en = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
-    val epoch = EpochStore.epochName(en)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val postingsDir = EpochStore.dataDirName("postings", en)
-    val sizesDir = EpochStore.dataDirName("fsizes", en)
-    val posted = fpPostings(corpus, idCol, textCol, n, w)
-    val sizes = posted.groupBy(col("id")).agg(count(lit(1)).as("nf"))
-    var bloom: EpochStore.IdBloom = null
-    // postings and per-doc counts are independent writes — overlap them;
-    // `fsizes` holds one row per posted id, so its footers size the bloom
-    EpochStore.inParallel(
-      () => posted.write.mode("overwrite").parquet(s"$path/data/$postingsDir"),
-      () => {
-        sizes.write.mode("overwrite").parquet(s"$path/data/$sizesDir")
-        bloom = EpochStore.writeFreshIdBloomOf(
-          spark, dir, s"$path/data/$sizesDir", sizes.schema)
-      })
-    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(FingerprintIndex,
-      Map("n" -> n.toString, "w" -> w.toString),
-      Seq("postings" -> postingsDir, "fsizes" -> sizesDir),
-      Map("postings" -> posted.schema, "fsizes" -> sizes.schema), Some(bloom)))
-    EpochStore.commitEpoch(spark, path, epoch, cur)
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+      retainEpochs: Int = 2): Unit =
+    FingerprintIndex.build(corpus.sparkSession, path, retainEpochs) { out =>
+      val posted = fpPostings(corpus, idCol, textCol, n, w)
+      // postings and per-doc counts are independent writes — overlap them;
+      // `fsizes` holds one row per posted id, so its footers size the bloom
+      EpochStore.Arms.fresh(Map("n" -> n.toString, "w" -> w.toString))(
+        () => out.write("postings", posted),
+        () => out.write("fsizes", posted.groupBy(col("id")).agg(count(lit(1)).as("nf"))))
     }
-  }
 
   /** Fold new documents into the standing fingerprint index: ONLY the
     * batch's postings and counts are written (per-doc payloads carry no
@@ -554,73 +534,28 @@ object Decontam {
       idCol: String,
       textCol: String,
       path: String,
-      retainEpochs: Int = 2): Unit = {
-    val spark = newDocs.sparkSession
-    EpochStore.withLease(spark, path) {
-    val cur = resolveFingerprintIndex(spark, path)
-    val n = cur.header.int("n")
-    val w = cur.header.int("w")
-    if (EpochStore.idGuardNeedsExact(spark, cur, newDocs, idCol)) {
-      val dupIds = EpochStore.readTable(spark, cur, "fsizes").select("id")
-        .join(newDocs.select(col(idCol).as("id")), Seq("id"), "left_semi")
-        .limit(3).collect().map(_.get(0))
-      require(dupIds.isEmpty,
-        s"appendFingerprintIndex: ids already present in the index at $path " +
-        s"(e.g. ${dupIds.mkString(", ")}) — append requires disjoint ids; " +
-        "re-appending a committed batch would double its postings")
+      retainEpochs: Int = 2): Unit =
+    FingerprintIndex.appendNew(newDocs, idCol, path, retainEpochs, "appendFingerprintIndex",
+      "double its postings") { (cur, out) =>
+      val posted = fpPostings(newDocs, idCol, textCol, cur.header.int("n"), cur.header.int("w"))
+      EpochStore.Arms(
+        () => out.write("postings", posted),
+        () => out.write("fsizes", posted.groupBy(col("id")).agg(count(lit(1)).as("nf"))))
     }
-    val en = cur.number + 1L
-    val epoch = EpochStore.epochName(en)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val postingsDir = EpochStore.dataDirName("postings", en)
-    val sizesDir = EpochStore.dataDirName("fsizes", en)
-    val posted = fpPostings(newDocs, idCol, textCol, n, w)
-    EpochStore.inParallel(
-      () => posted.write.mode("overwrite").parquet(s"$path/data/$postingsDir"),
-      () => posted.groupBy(col("id")).agg(count(lit(1)).as("nf"))
-        .write.mode("overwrite").parquet(s"$path/data/$sizesDir"),
-      () => EpochStore.writeIdBloom(spark, dir, EpochStore.appendedIdBloom(
-        spark, cur, newDocs.select(col(idCol).as("id")), "id")))
-    EpochStore.writeHeader(spark, dir, cur.header.copy(manifest = cur.header.manifest ++
-      Seq("postings" -> postingsDir, "fsizes" -> sizesDir)))
-    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-    EpochStore.gc(spark, path, epoch, retainEpochs)
-    }
-  }
 
   /** Merge the fingerprint index's delta history into one file set per
-    * table — same maintenance op as the other three lifecycles; a fresh
+    * table — the same maintenance op as every index's compact; a fresh
     * right-sized id bloom replaces the merged one.
     */
   def compactFingerprintIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      retainEpochs: Int = 2): Unit = {
-    EpochStore.withLease(spark, path) {
-    val cur = resolveFingerprintIndex(spark, path)
-    val en = cur.number + 1L
-    val epoch = EpochStore.epochName(en)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val postingsDir = EpochStore.dataDirName("postings", en)
-    val sizesDir = EpochStore.dataDirName("fsizes", en)
-    var bloom: EpochStore.IdBloom = null
-    EpochStore.inParallel(
-      () => EpochStore.readTable(spark, cur, "postings")
-        .write.mode("overwrite").parquet(s"$path/data/$postingsDir"),
-      () => {
-        EpochStore.readTable(spark, cur, "fsizes")
-          .write.mode("overwrite").parquet(s"$path/data/$sizesDir")
-        bloom = EpochStore.writeFreshIdBloomOf(
-          spark, dir, s"$path/data/$sizesDir", cur.header.schemas("fsizes"))
-      })
-    EpochStore.writeHeader(spark, dir, cur.header.copy(
-      manifest = Seq("postings" -> postingsDir, "fsizes" -> sizesDir), bloom = Some(bloom)))
-    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+      retainEpochs: Int = 2): Unit =
+    FingerprintIndex.compact(spark, path, retainEpochs) { (cur, out) =>
+      EpochStore.Arms(
+        () => out.write("postings", EpochStore.readTable(spark, cur, "postings")),
+        () => out.write("fsizes", EpochStore.readTable(spark, cur, "fsizes")))
     }
-  }
 
   /** [[winnowingPairsAgainst]] with the EXISTING side read from the
     * standing index — the daily partial-overlap job: no standing text is

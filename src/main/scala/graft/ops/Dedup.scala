@@ -234,8 +234,9 @@ object Dedup {
     */
   val ParagraphIndexFormatVersion: Int = 2
 
-  private[graft] val ParagraphIndex = EpochStore.IndexKind(
-    "paragraph", ParagraphIndexFormatVersion, "writeParagraphIndex")
+  private[graft] val ParagraphIndex = EpochStore.EpochIndex(
+    EpochStore.IndexKind("paragraph", ParagraphIndexFormatVersion, "writeParagraphIndex"),
+    tables = Seq("phashes"))
 
   /** Distinct paragraph hashes of a corpus — the whole index payload. */
   private def paraHashes(df: DataFrame, textCol: String): DataFrame =
@@ -244,7 +245,7 @@ object Dedup {
 
   private[graft] def resolveParagraphIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
-    EpochStore.resolve(spark, path, ParagraphIndex)
+    ParagraphIndex.resolve(spark, path)
 
   /** The live hash table (`h`) of a resolved epoch — pure delta union. */
   private[graft] def paragraphIndexHashes(
@@ -253,8 +254,8 @@ object Dedup {
 
   /** Persist the standing PARAGRAPH-hash index: the distinct md5 of every
     * blank-line paragraph in the corpus, on the shared [[EpochStore]]
-    * delta-epoch layout — the third index lifecycle next to the LSH dedup
-    * index and the ANN index. A daily job probes arrivals against it
+    * delta-epoch layout, next to the LSH dedup index and the ANN index.
+    * A daily job probes arrivals against it
     * ([[dedupParagraphsAgainstIndex]]) and folds them in
     * ([[appendParagraphIndex]]) without ever re-reading corpus text: at
     * 100 TB the index is one 16-byte column of distinct hashes.
@@ -265,23 +266,10 @@ object Dedup {
       corpus: DataFrame,
       textCol: String,
       path: String,
-      retainEpochs: Int = 2): Unit = {
-    val spark = corpus.sparkSession
-    EpochStore.withLease(spark, path) {
-    val cur = EpochStore.buildBase(spark, path)
-    val n = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val d = EpochStore.dataDirName("phashes", n)
-    val hashes = paraHashes(corpus, textCol)
-    hashes.write.mode("overwrite").parquet(s"$path/data/$d")
-    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(ParagraphIndex,
-      Map.empty, Seq("phashes" -> d), Map("phashes" -> hashes.schema), None))
-    EpochStore.commitEpoch(spark, path, epoch, cur)
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+      retainEpochs: Int = 2): Unit =
+    ParagraphIndex.build(corpus.sparkSession, path, retainEpochs) { out =>
+      EpochStore.Arms(() => out.write("phashes", paraHashes(corpus, textCol)))
     }
-  }
 
   /** Fold a batch of new documents into the standing paragraph index:
     * writes ONLY the hashes the index has never seen (one narrow anti-join
@@ -297,26 +285,13 @@ object Dedup {
       path: String,
       retainEpochs: Int = 2): Unit = {
     val spark = newDocs.sparkSession
-    EpochStore.withLease(spark, path) {
-    val cur = resolveParagraphIndex(spark, path)
-    val n = cur.number + 1L
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val d = EpochStore.dataDirName("phashes", n)
-    paraHashes(newDocs, textCol)
-      .join(paragraphIndexHashes(spark, cur), Seq("h"), "left_anti")
-      .write.mode("overwrite").parquet(s"$path/data/$d")
-    if (EpochStore.parquetRowCount(spark, s"$path/data/$d") == 0L) {
-      // nothing new — leave the live epoch untouched (idempotent replay)
-      EpochStore.deleteDir(spark, s"$path/data/$d")
-      EpochStore.deleteDir(spark, dir)
-    } else {
-      EpochStore.writeHeader(spark, dir, cur.header.copy(
-        manifest = cur.header.manifest :+ ("phashes" -> d)))
-      EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-      EpochStore.gc(spark, path, epoch, retainEpochs)
-    }
+    ParagraphIndex.append(spark, path, retainEpochs) { (cur, out) =>
+      EpochStore.Arms { () =>
+        out.write("phashes", paraHashes(newDocs, textCol)
+          .join(paragraphIndexHashes(spark, cur), Seq("h"), "left_anti"))
+        // nothing new — leave the live epoch untouched (idempotent replay)
+        if (EpochStore.parquetRowCount(spark, out.location("phashes")) == 0L) out.abort()
+      }
     }
   }
 
@@ -326,21 +301,10 @@ object Dedup {
   def compactParagraphIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      retainEpochs: Int = 2): Unit = {
-    EpochStore.withLease(spark, path) {
-    val cur = resolveParagraphIndex(spark, path)
-    val n = cur.number + 1L
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val d = EpochStore.dataDirName("phashes", n)
-    paragraphIndexHashes(spark, cur)
-      .write.mode("overwrite").parquet(s"$path/data/$d")
-    EpochStore.writeHeader(spark, dir, cur.header.copy(manifest = Seq("phashes" -> d)))
-    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+      retainEpochs: Int = 2): Unit =
+    ParagraphIndex.compact(spark, path, retainEpochs) { (cur, out) =>
+      EpochStore.Arms(() => out.write("phashes", paragraphIndexHashes(spark, cur)))
     }
-  }
 
   /** [[dedupParagraphs]] for DAILY ARRIVALS against the standing index:
     * drop every paragraph whose hash the index already holds, and (with
@@ -611,13 +575,9 @@ object Dedup {
     */
   val DedupIndexFormatVersion: Int = 5
 
-  private[graft] val DedupIndex = EpochStore.IndexKind(
-    "dedup", DedupIndexFormatVersion, "writeDedupIndex")
-
-  /** Directory of the live epoch — see [[EpochStore.epochDir]]. */
-  private[graft] def epochDir(
-      spark: org.apache.spark.sql.SparkSession, path: String): String =
-    EpochStore.epochDir(spark, path)
+  private[graft] val DedupIndex = EpochStore.EpochIndex(
+    EpochStore.IndexKind("dedup", DedupIndexFormatVersion, "writeDedupIndex"),
+    tables = Seq("buckets", "sets"), epochTables = Seq("dropped"), idTable = Some("sets"))
 
   /** Resolve the live epoch and check its header's kind and format
     * version — every index reader goes through this, so drifted layouts
@@ -625,7 +585,7 @@ object Dedup {
     */
   private[graft] def resolveIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
-    EpochStore.resolve(spark, path, DedupIndex)
+    DedupIndex.resolve(spark, path)
 
   /** The live `buckets` table of a resolved epoch: the union of the
     * manifest's data dirs (one multi-path scan) minus tombstoned buckets.
@@ -686,57 +646,33 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 32,
       maxBucketSize: Int = 4096,
-      retainEpochs: Int = 2): Unit = {
-    val spark = existing.sparkSession
-    EpochStore.withLease(spark, path) {
-    val cur = EpochStore.buildBase(spark, path)
-    val n = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir) // debris from a crashed prior attempt
-    // stage the bucket rows once WITH their window counts; the kept/dropped
-    // split derives from the staged parquet — one signature-kernel pass
-    // over the corpus text, not one per output table
-    val stage = s"$dir/stage"
-    val w = Window.partitionBy(col("band"), col("bhash"))
-    val staging = existing.select(
-      col(idCol).as("id"),
-      graft.functions.native
-        .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
-        .as("bh"))
-      .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id"))
-      .withColumn("n", count(lit(1)).over(w))
-    staging.write.mode("overwrite").parquet(stage)
-    val staged = spark.read.schema(staging.schema).parquet(stage)
-    val bucketsDir = EpochStore.dataDirName("buckets", n)
-    val setsDir = EpochStore.dataDirName("sets", n)
-    val buckets = staged.where(col("n") <= maxBucketSize).select("band", "bhash", "id")
-    val dropped = staged.where(col("n") > maxBucketSize)
-      .select("band", "bhash", "n").distinct()
-    val sets = existing.select(
-      col(idCol).as("id"),
-      graft.functions.native
-        .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs"))
-    // the three epoch tables derive independently (buckets/dropped from the
-    // staged parquet, sets from the corpus) — overlap their write jobs
-    EpochStore.inParallel(
-      () => buckets.write.mode("overwrite").parquet(s"$path/data/$bucketsDir"),
-      () => dropped.write.mode("overwrite").parquet(s"$dir/dropped"),
-      () => sets.write.mode("overwrite").parquet(s"$path/data/$setsDir"))
-    // id bloom for the O(1) append guard — built from the just-written
-    // sets file (footer-count sizing + one narrow id read)
-    val bloom = EpochStore.writeFreshIdBloomOf(spark, dir, s"$path/data/$setsDir", sets.schema)
-    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(DedupIndex,
-      Map("k" -> k.toString, "num_hashes" -> numHashes.toString,
-        "bands" -> bands.toString, "max_bucket_size" -> maxBucketSize.toString),
-      Seq("buckets" -> bucketsDir, "sets" -> setsDir),
-      Map("buckets" -> buckets.schema, "sets" -> sets.schema, "dropped" -> dropped.schema),
-      Some(bloom)))
-    EpochStore.deleteDir(spark, stage)
-    EpochStore.commitEpoch(spark, path, epoch, cur)
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+      retainEpochs: Int = 2): Unit =
+    DedupIndex.build(existing.sparkSession, path, retainEpochs) { out =>
+      // stage the bucket rows once WITH their window counts; the kept/dropped
+      // split derives from the staged parquet — one signature-kernel pass
+      // over the corpus text, not one per output table
+      val byBucket = Window.partitionBy(col("band"), col("bhash"))
+      val staged = out.stage(existing.select(
+        col(idCol).as("id"),
+        graft.functions.native
+          .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
+          .as("bh"))
+        .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id"))
+        .withColumn("n", count(lit(1)).over(byBucket)))
+      val sets = existing.select(
+        col(idCol).as("id"),
+        graft.functions.native
+          .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs"))
+      // the three epoch tables derive independently (buckets/dropped from the
+      // staged parquet, sets from the corpus) — overlap their write jobs
+      EpochStore.Arms.fresh(Map("k" -> k.toString, "num_hashes" -> numHashes.toString,
+        "bands" -> bands.toString, "max_bucket_size" -> maxBucketSize.toString))(
+        () => out.write("buckets",
+          staged.where(col("n") <= maxBucketSize).select("band", "bhash", "id")),
+        () => out.write("dropped",
+          staged.where(col("n") > maxBucketSize).select("band", "bhash", "n").distinct()),
+        () => out.write("sets", sets))
     }
-  }
 
   /** Fold a batch of new documents into a standing index ([[writeDedupIndex]])
     * WITHOUT re-hashing the corpus: only `newDocs` runs the signature
@@ -762,7 +698,7 @@ object Dedup {
     * readers that resolved it keep working) and older epochs are
     * garbage-collected.
     *
-    * Cost shape (v4 delta-epoch): the append writes ONLY its deltas — the
+    * Cost shape (v5 delta-epoch): the append writes ONLY its deltas — the
     * new docs' bucket rows and shingle sets — and the standing data dirs
     * are carried forward BY REFERENCE in the new epoch's manifest, never
     * copied (at 100 TB `sets` is the same order of magnitude as the corpus
@@ -788,90 +724,58 @@ object Dedup {
       path: String,
       retainEpochs: Int = 2): Unit = {
     val spark = newDocs.sparkSession
-    EpochStore.withLease(spark, path) {
-    val cur = resolveIndex(spark, path)
-    val k = cur.header.int("k")
-    val numHashes = cur.header.int("num_hashes")
-    val bands = cur.header.int("bands")
-    val maxBucketSize = cur.header.int("max_bucket_size")
-    // dup-id guard: the epoch's id bloom clears a clean batch without
-    // touching the standing `sets` id column at all; only a bloom hit (a
-    // real dup or an fpp false positive) pays the exact semi-join
-    if (EpochStore.idGuardNeedsExact(spark, cur, newDocs, idCol)) {
-      val dupIds = indexSets(spark, cur).select("id")
-        .join(newDocs.select(col(idCol).as("id")), Seq("id"), "left_semi")
-        .limit(3).collect().map(_.get(0))
-      require(dupIds.isEmpty,
-        s"appendDedupIndex: ids already present in the index at $path " +
-        s"(e.g. ${dupIds.mkString(", ")}) — append requires disjoint ids, " +
-        "the same contract as unioning the corpora; re-appending a committed " +
-        "batch would double-count bucket sizes and duplicate probe pairs")
-    }
-    val n = cur.number + 1L
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir) // debris from a crashed prior attempt
-    // stage the new side's bucket rows once — the delta file and every
-    // count below derive from the staged parquet, so the signature kernel
-    // runs exactly once over the new docs
-    val stage = s"$dir/stage"
-    val staging = newDocs.select(
-      col(idCol).as("id"),
-      graft.functions.native
-        .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
-        .as("bh"))
-      .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id"))
-    staging.write.mode("overwrite").parquet(stage)
-    val staged = spark.read.schema(staging.schema).parquet(stage)
-    val touched = staged.select("band", "bhash").distinct()
-    val tomb = indexDropped(spark, cur)
-    // prior live counts for TOUCHED buckets only — the broadcast semi-join
-    // prunes the standing scan; nothing untouched is counted or shuffled
-    val priorCounts = EpochStore.readTable(spark, cur, "buckets")
-      .join(broadcast(touched), Seq("band", "bhash"), "left_semi")
-      .groupBy("band", "bhash").agg(count(lit(1)).as("n_scan"))
-    // a tombstoned bucket's true total lives in its tombstone: stale
-    // physical rows it may have left in carried-forward files are read-
-    // filtered ([[indexBuckets]]), never counted
-    val totals = staged.groupBy("band", "bhash").agg(count(lit(1)).as("n_new"))
-      .join(priorCounts, Seq("band", "bhash"), "left")
-      .join(tomb.withColumnRenamed("n", "n_tomb"), Seq("band", "bhash"), "left")
-      .withColumn("n",
-        when(col("n_tomb").isNotNull, col("n_tomb") + col("n_new"))
-          .otherwise(coalesce(col("n_scan"), lit(0L)) + col("n_new")))
-    // tombstones: untouched carried unchanged; touched-and-tombstoned
-    // re-totaled; newly-oversize added (guard re-evaluated on union counts
-    // ⇒ oversize stays monotone under append, append ≡ rebuild)
-    val bucketsDir = EpochStore.dataDirName("buckets", n)
-    val setsDir = EpochStore.dataDirName("sets", n)
-    // three independent arms overlap: (a) tombstones then the delta bucket
-    // rows they gate, (b) the batch's shingle sets (the heavy kernel pass),
-    // (c) the successor id bloom (reads only the batch ids)
-    EpochStore.inParallel(
-      () => {
-        tomb.join(broadcast(touched), Seq("band", "bhash"), "left_anti")
-          .unionByName(
-            totals.where(col("n_tomb").isNotNull || col("n") > maxBucketSize)
-              .select("band", "bhash", "n"))
-          .write.mode("overwrite").parquet(s"$dir/dropped")
-        val dropped = spark.read.schema(tomb.schema).parquet(s"$dir/dropped")
-        staged.join(broadcast(dropped.select("band", "bhash")),
-          Seq("band", "bhash"), "left_anti")
-          .select("band", "bhash", "id")
-          .write.mode("overwrite").parquet(s"$path/data/$bucketsDir")
-      },
-      () => newDocs.select(
+    DedupIndex.appendNew(newDocs, idCol, path, retainEpochs, "appendDedupIndex",
+      "double-count bucket sizes and duplicate probe pairs") { (cur, out) =>
+      val k = cur.header.int("k")
+      val numHashes = cur.header.int("num_hashes")
+      val bands = cur.header.int("bands")
+      val maxBucketSize = cur.header.int("max_bucket_size")
+      // stage the new side's bucket rows once — the delta file and every
+      // count below derive from the staged parquet, so the signature kernel
+      // runs exactly once over the new docs
+      val staged = out.stage(newDocs.select(
         col(idCol).as("id"),
         graft.functions.native
-          .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs"))
-        .write.mode("overwrite").parquet(s"$path/data/$setsDir"),
-      () => EpochStore.writeIdBloom(spark, dir, EpochStore.appendedIdBloom(
-        spark, cur, newDocs.select(col(idCol).as("id")), "id")))
-    EpochStore.writeHeader(spark, dir, cur.header.copy(manifest =
-      cur.header.manifest ++ Seq("buckets" -> bucketsDir, "sets" -> setsDir)))
-    EpochStore.deleteDir(spark, stage)
-    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+          .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
+          .as("bh"))
+        .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id")))
+      val touched = staged.select("band", "bhash").distinct()
+      val tomb = indexDropped(spark, cur)
+      // prior live counts for TOUCHED buckets only — the broadcast semi-join
+      // prunes the standing scan; nothing untouched is counted or shuffled
+      val priorCounts = EpochStore.readTable(spark, cur, "buckets")
+        .join(broadcast(touched), Seq("band", "bhash"), "left_semi")
+        .groupBy("band", "bhash").agg(count(lit(1)).as("n_scan"))
+      // a tombstoned bucket's true total lives in its tombstone: stale
+      // physical rows it may have left in carried-forward files are read-
+      // filtered ([[indexBuckets]]), never counted
+      val totals = staged.groupBy("band", "bhash").agg(count(lit(1)).as("n_new"))
+        .join(priorCounts, Seq("band", "bhash"), "left")
+        .join(tomb.withColumnRenamed("n", "n_tomb"), Seq("band", "bhash"), "left")
+        .withColumn("n",
+          when(col("n_tomb").isNotNull, col("n_tomb") + col("n_new"))
+            .otherwise(coalesce(col("n_scan"), lit(0L)) + col("n_new")))
+      // tombstones: untouched carried unchanged; touched-and-tombstoned
+      // re-totaled; newly-oversize added (guard re-evaluated on union counts
+      // ⇒ oversize stays monotone under append, append ≡ rebuild).
+      // Two arms overlap (the template adds the id-bloom merge as a third):
+      // (a) tombstones then the delta bucket rows they gate, (b) the batch's
+      // shingle sets (the heavy kernel pass)
+      EpochStore.Arms(
+        () => {
+          out.write("dropped", tomb.join(broadcast(touched), Seq("band", "bhash"), "left_anti")
+            .unionByName(
+              totals.where(col("n_tomb").isNotNull || col("n") > maxBucketSize)
+                .select("band", "bhash", "n")))
+          val dropped = spark.read.schema(tomb.schema).parquet(out.location("dropped"))
+          out.write("buckets", staged.join(broadcast(dropped.select("band", "bhash")),
+            Seq("band", "bhash"), "left_anti")
+            .select("band", "bhash", "id"))
+        },
+        () => out.write("sets", newDocs.select(
+          col(idCol).as("id"),
+          graft.functions.native
+            .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs"))))
     }
   }
 
@@ -894,33 +798,16 @@ object Dedup {
   def compactDedupIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      retainEpochs: Int = 2): Unit = {
-    EpochStore.withLease(spark, path) {
-    val cur = resolveIndex(spark, path)
-    val n = cur.number + 1L
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val bucketsDir = EpochStore.dataDirName("buckets", n)
-    val setsDir = EpochStore.dataDirName("sets", n)
-    // the three table rewrites are independent — overlap their jobs
-    EpochStore.inParallel(
-      () => indexBuckets(spark, cur)
-        .write.mode("overwrite").parquet(s"$path/data/$bucketsDir"),
-      () => indexSets(spark, cur)
-        .write.mode("overwrite").parquet(s"$path/data/$setsDir"),
-      () => indexDropped(spark, cur)
-        .write.mode("overwrite").parquet(s"$dir/dropped"))
-    // right-size a fresh id bloom from the compacted sets (merged blooms
-    // keep build-time capacity; compaction is where capacity resets)
-    val bloom = EpochStore.writeFreshIdBloomOf(
-      spark, dir, s"$path/data/$setsDir", cur.header.schemas("sets"))
-    EpochStore.writeHeader(spark, dir, cur.header.copy(
-      manifest = Seq("buckets" -> bucketsDir, "sets" -> setsDir), bloom = Some(bloom)))
-    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+      retainEpochs: Int = 2): Unit =
+    // the three table rewrites are independent — overlap their jobs; the
+    // template right-sizes a fresh id bloom from the compacted sets (merged
+    // blooms keep build-time capacity; compaction is where capacity resets)
+    DedupIndex.compact(spark, path, retainEpochs) { (cur, out) =>
+      EpochStore.Arms(
+        () => out.write("buckets", indexBuckets(spark, cur)),
+        () => out.write("sets", indexSets(spark, cur)),
+        () => out.write("dropped", indexDropped(spark, cur)))
     }
-  }
 
   /** Probe a persisted index ([[writeDedupIndex]]) with new documents —
     * identical result to [[minhashPairsAgainst]] on the original corpus,

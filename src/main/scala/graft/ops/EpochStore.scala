@@ -2,9 +2,10 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Shared epoch machinery for the six persisted on-disk indexes (LSH dedup,
+/** The epoch store behind the six persisted on-disk indexes (LSH dedup,
   * paragraph hashes, ANN/IVF, winnowing fingerprints, token frequencies and
   * the classifier counters).
   *
@@ -21,6 +22,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *                                #   the six indexes; see [[IdBloomFileName]])
   *     ... per-index small tables (dropped/centroids), rewritten per epoch
   * }}}
+  *
+  * [[EpochIndex]] is the one place the commit protocol lives. An index
+  * declares only what is its own — its [[IndexKind]], its data tables, its
+  * per-epoch tables, the table carrying its ids — and each build, append
+  * and compact supplies only its write arms. The template runs every op
+  * the same way: writer lease, base resolution, epoch numbering and debris
+  * delete, the arms side by side ([[inParallel]]), the id bloom, the
+  * header, the pointer commit and gc.
   *
   * The header is written and read directly through the Hadoop FileSystem
   * API — resolving an epoch, building a table's DataFrame and gc's
@@ -137,11 +146,11 @@ private[graft] object EpochStore {
     override def initialValue(): Map[String, String] = Map.empty
   }
 
-  /** Run `body` under the writer lease — the wrapper every index lifecycle
-    * op (build / append / compact) uses. The lease is released on ANY
-    * exit: an uncommitted failure leaves only debris the next build's
-    * reset (or GC) clears. While the body runs, the fencing token is
-    * registered for [[commitEpoch]]'s pre-rename lease check.
+  /** Run `body` under the writer lease — the wrapper every [[EpochIndex]]
+    * op (build / append / compact) and the sized-shard log use. The lease
+    * is released on ANY exit: an uncommitted failure leaves only debris the
+    * next build's reset (or GC) clears. While the body runs, the fencing
+    * token is registered for [[commitEpoch]]'s pre-rename lease check.
     */
   def withLease[T](
       spark: SparkSession, path: String,
@@ -180,8 +189,7 @@ private[graft] object EpochStore {
     * lifecycles so the guard's shape has ONE definition.
     */
   def counterBatchIds(df: DataFrame, idCol: String): DataFrame =
-    df.select(org.apache.spark.sql.functions.col(idCol)
-      .cast("string").as("id")).distinct()
+    df.select(col(idCol).cast("string").as("id")).distinct()
 
   /** The counter-fold replay guard's two numbers — the batch's
     * distinct-id count and its overlap with the standing `ids` table —
@@ -232,7 +240,7 @@ private[graft] object EpochStore {
     */
   def requireCounterIdsNotNull(
       df: DataFrame, idCol: String, op: String): Unit =
-    require(df.where(org.apache.spark.sql.functions.col(idCol).isNull)
+    require(df.where(col(idCol).isNull)
       .limit(1).count() == 0L,
       s"$op: null ids in '$idCol' cannot be replay-guarded (a replayed " +
       "null-id batch would double-count its tokens) — assign ids first")
@@ -247,7 +255,7 @@ private[graft] object EpochStore {
     * its canonical string form so build and probe agree across epochs).
     */
   def buildIdBloom(ids: DataFrame, idCol: String, items: Long, fpp: Double): Array[Byte] = {
-    import org.apache.spark.sql.functions.{col, xxhash64}
+    import org.apache.spark.sql.functions.xxhash64
     // empty input (e.g. an empty append's delta) NPEs inside
     // stat.bloomFilter — an empty filter with the same geometry merges fine
     val bf =
@@ -273,29 +281,23 @@ private[graft] object EpochStore {
     * at the 2^20-item floor, tens of KB deflated); the zlib trailer's
     * Adler-32 makes a corrupted or truncated sidecar fail on read.
     */
-  def writeIdBloom(spark: SparkSession, epochDir: String, bytes: Array[Byte]): Unit = {
+  private def writeIdBloom(spark: SparkSession, epochDir: String, bytes: Array[Byte]): Unit = {
     val out = new java.util.zip.DeflaterOutputStream(
       hadoopFs(spark, epochDir).create(new HPath(epochDir, IdBloomFileName), true))
     try out.write(bytes) finally out.close()
   }
 
-  /** Build and persist a fresh id bloom over `ids` sized for `n` ids;
-    * returns the parameters the epoch header records.
+  /** Build and persist a fresh id bloom over the `id` column of a
+    * just-written parquet dir (read with its known schema, sized from its
+    * footers); returns the parameters the epoch header records.
     */
-  def writeFreshIdBloom(
-      spark: SparkSession, epochDir: String, ids: DataFrame, n: Long): IdBloom = {
-    val b = IdBloom(idBloomItems(n), IdBloomFpp)
-    writeIdBloom(spark, epochDir, buildIdBloom(ids, "id", b.items, b.fpp))
+  private def writeFreshIdBloom(
+      spark: SparkSession, epochDir: String, dataDir: String, schema: StructType): IdBloom = {
+    val b = IdBloom(idBloomItems(parquetRowCount(spark, dataDir)), IdBloomFpp)
+    writeIdBloom(spark, epochDir, buildIdBloom(
+      spark.read.schema(schema).parquet(dataDir).select("id"), "id", b.items, b.fpp))
     b
   }
-
-  /** [[writeFreshIdBloom]] over the `id` column of a just-written parquet
-    * dir: read with its known schema, sized from its footers.
-    */
-  def writeFreshIdBloomOf(
-      spark: SparkSession, epochDir: String, dataDir: String, schema: StructType): IdBloom =
-    writeFreshIdBloom(spark, epochDir, spark.read.schema(schema).parquet(dataDir).select("id"),
-      parquetRowCount(spark, dataDir))
 
   /** The serialized id bloom of a resolved epoch. */
   def readIdBloom(spark: SparkSession, ep: Epoch): Array[Byte] = {
@@ -313,7 +315,6 @@ private[graft] object EpochStore {
   def idGuardNeedsExact(
       spark: SparkSession, ep: Epoch,
       batch: DataFrame, idCol: String): Boolean = {
-    import org.apache.spark.sql.functions.col
     !batch.where(Decontam.bloomMightContainKey(
       readIdBloom(spark, ep), col(idCol).cast("string"))).isEmpty
   }
@@ -322,7 +323,7 @@ private[graft] object EpochStore {
     * into the standing bloom (same parameters ⇒ same bit geometry, so the
     * header's bloom parameters carry over unchanged).
     */
-  def appendedIdBloom(
+  private def appendedIdBloom(
       spark: SparkSession, cur: Epoch,
       batch: DataFrame, idCol: String): Array[Byte] = {
     val standing = readIdBloom(spark, cur)
@@ -399,9 +400,9 @@ private[graft] object EpochStore {
     } finally pool.shutdown()
   }
 
-  def epochName(n: Long): String = f"epoch-$n%09d"
+  private def epochName(n: Long): String = f"epoch-$n%09d"
   def epochNumber(name: String): Long = name.stripPrefix("epoch-").toLong
-  def dataDirName(table: String, n: Long): String = f"$table%s-$n%09d"
+  private def dataDirName(table: String, n: Long): String = f"$table%s-$n%09d"
 
   def hadoopFs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
@@ -617,7 +618,7 @@ private[graft] object EpochStore {
     * whose live epoch has no header (a pre-header layout), is hard-reset
     * first — keeping the caller's lease — and the build starts at epoch 1.
     */
-  def buildBase(spark: SparkSession, path: String): Option[String] = {
+  private def buildBase(spark: SparkSession, path: String): Option[String] = {
     val cur = currentEpoch(spark, path).filter(e =>
       hadoopFs(spark, path).exists(new HPath(s"$path/$e", HeaderFileName)))
     if (cur.isEmpty) resetKeepingLease(spark, path)
@@ -690,6 +691,204 @@ private[graft] object EpochStore {
     if (fs.exists(dataRoot)) {
       fs.listStatus(dataRoot).foreach { st =>
         if (!referenced.contains(st.getPath.getName)) fs.delete(st.getPath, true)
+      }
+    }
+  }
+
+  // ---- the lifecycle template: the one place the commit protocol lives ----
+
+  /** One op's write arms, run side by side ([[inParallel]]). `params`
+    * make the epoch header fresh: a build's header is always fresh, and so
+    * is the ANN compact's, whose retrain re-derives the quantizer. Without
+    * them an append carries its base's header with its delta added to the
+    * manifest, and a compact carries it with manifest and bloom replaced.
+    */
+  final class Arms private (val params: Option[Map[String, String]], val run: Seq[() => Unit])
+
+  object Arms {
+    def apply(run: (() => Unit)*): Arms = new Arms(None, run)
+    def fresh(params: Map[String, String])(run: (() => Unit)*): Arms = new Arms(Some(params), run)
+  }
+
+  /** The epoch one op is writing: where each declared table lands, what
+    * the arms wrote, and the fresh id bloom of a build or compact.
+    */
+  final class EpochWrites private[EpochStore] (
+      spark: SparkSession, path: String, index: EpochIndex, n: Long, freshBloom: Boolean) {
+    private[EpochStore] val dir: String = s"$path/${epochName(n)}"
+    private[EpochStore] val stageDir = s"$dir/stage"
+    private val written = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    @volatile private[EpochStore] var bloom: Option[IdBloom] = None
+    @volatile private[EpochStore] var aborted = false
+
+    /** A data table's fresh `data/` dir, or a per-epoch table's dir inside
+      * the epoch.
+      */
+    def location(table: String): String =
+      if (index.epochTables.contains(table)) s"$dir/$table"
+      else {
+        require(index.tables.contains(table),
+          s"${index.kind.name} index declares no table '$table'")
+        s"$path/data/${dataDirName(table, n)}"
+      }
+
+    /** Write `df` as this epoch's `table`. On build and compact the id
+      * table's write continues with a fresh id bloom, built from the
+      * written dir (footer-count sizing + one narrow id read).
+      */
+    def write(table: String, df: DataFrame): Unit = {
+      df.write.mode("overwrite").parquet(location(table))
+      written.put(table, df.schema)
+      if (freshBloom && index.idTable.contains(table))
+        bloom = Some(writeFreshIdBloom(spark, dir, location(table), df.schema))
+    }
+
+    /** `df` written once as scratch parquet inside the epoch and read back,
+      * so several arms derive from one evaluation; deleted before the
+      * header is written.
+      */
+    def stage(df: DataFrame): DataFrame = {
+      df.write.mode("overwrite").parquet(stageDir)
+      spark.read.schema(df.schema).parquet(stageDir)
+    }
+
+    /** Turn this op into a no-op: nothing is committed and its writes are
+      * deleted (an append with nothing new to fold).
+      */
+    def abort(): Unit = aborted = true
+
+    private[EpochStore] def manifest: Seq[(String, String)] =
+      index.tables.map(t => t -> dataDirName(t, n))
+
+    private[EpochStore] def schemas: Map[String, StructType] =
+      (index.tables ++ index.epochTables).map(t => t -> Option(written.get(t)).getOrElse(
+        throw new IllegalStateException(s"${index.kind.name} op wrote no table '$t'"))).toMap
+  }
+
+  /** One index family on the epoch layout. It declares its [[IndexKind]],
+    * its data tables (in manifest order), its small per-epoch tables, and
+    * the data table whose `id` column lists every committed id (`None`: no
+    * ids and no id bloom). Its ops supply only their write arms; the
+    * template owns the rest of every build, append and compact:
+    *
+    *   - the writer lease ([[withLease]]), taken before any other work;
+    *   - the base: [[buildBase]] on build, [[resolve]] on append and compact;
+    *   - numbering epoch N+1 and deleting a crashed attempt's debris there;
+    *   - the arms, side by side ([[inParallel]]);
+    *   - the id bloom: fresh from the written id table on build and compact,
+    *     the standing bloom merged with the batch ids on append;
+    *   - the header, then the pointer commit ([[commitEpoch]]) and [[gc]] —
+    *     or, for an aborted op, no commit and its writes deleted.
+    */
+  final case class EpochIndex(
+      kind: IndexKind,
+      tables: Seq[String],
+      epochTables: Seq[String] = Nil,
+      idTable: Option[String] = None) {
+
+    def resolve(spark: SparkSession, path: String): Epoch = EpochStore.resolve(spark, path, kind)
+
+    def build(spark: SparkSession, path: String, retainEpochs: Int)(
+        body: EpochWrites => Arms): Unit =
+      withLease(spark, path) {
+        val base = buildBase(spark, path)
+        lifecycle(spark, path, retainEpochs, base, None)(body) { (w, params) =>
+          EpochHeader(kind, params.getOrElse(Map.empty), w.manifest, w.schemas, w.bloom)
+        }
+      }
+
+    /** Append a batch whose ids (`ids`, an `id` column) the index merges
+      * into its standing bloom; an index without ids passes none.
+      */
+    def append(spark: SparkSession, path: String, retainEpochs: Int,
+        ids: Option[DataFrame] = None)(body: (Epoch, EpochWrites) => Arms): Unit = {
+      require(ids.isDefined == idTable.isDefined,
+        s"${kind.name} append: batch ids must be given exactly when the index keeps ids")
+      withLease(spark, path) {
+        val cur = resolve(spark, path)
+        lifecycle(spark, path, retainEpochs, Some(cur.name), ids.map(cur -> _))(body(cur, _)) {
+          (w, _) => cur.header.copy(manifest = cur.header.manifest ++ w.manifest)
+        }
+      }
+    }
+
+    /** Append a batch whose ids must all be new: the epoch's bloom clears a
+      * clean batch without reading the standing ids; only a hit (a true
+      * duplicate or a false positive) pays the exact semi-join against the
+      * id table, and a duplicate fails before any write. `harm` says what
+      * re-appending a committed batch would do.
+      */
+    def appendNew(batch: DataFrame, idCol: String, path: String, retainEpochs: Int,
+        op: String, harm: String)(body: (Epoch, EpochWrites) => Arms): Unit = {
+      val spark = batch.sparkSession
+      val ids = batch.select(col(idCol).as("id"))
+      append(spark, path, retainEpochs, Some(ids)) { (cur, w) =>
+        if (idGuardNeedsExact(spark, cur, batch, idCol)) {
+          val dupIds = readTable(spark, cur, idTable.get).select("id")
+            .join(ids, Seq("id"), "left_semi").limit(3).collect().map(_.get(0))
+          require(dupIds.isEmpty,
+            s"$op: ids already present in the index at $path " +
+            s"(e.g. ${dupIds.mkString(", ")}) — append requires disjoint ids; " +
+            s"re-appending a committed batch would $harm")
+        }
+        body(cur, w)
+      }
+    }
+
+    /** Append to a counter index, whose folds are not idempotent: a batch
+      * whose ids are all committed is a no-op (at-least-once schedulers
+      * replay safely), a partial overlap fails loudly. The batch's
+      * canonical ids ([[counterBatchIds]]) are persisted for the op — the
+      * guard, the id table's delta and the bloom merge all read them.
+      */
+    def appendCounted(batch: DataFrame, idCol: String, path: String, retainEpochs: Int,
+        op: String)(body: (EpochWrites, DataFrame) => Arms): Unit = {
+      val spark = batch.sparkSession
+      requireCounterIdsNotNull(batch, idCol, op)
+      val batchIds = counterBatchIds(batch, idCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try append(spark, path, retainEpochs, Some(batchIds)) { (cur, w) =>
+        val (overlap, total) = counterGuardCounts(spark, cur, batchIds)
+        require(overlap == 0L || overlap == total,
+          s"$op: $overlap of $total batch ids are already committed in the index " +
+          s"at $path — folding this batch would double-count their tokens. Split " +
+          "the batch into the new ids and re-append; a FULL replay (all ids " +
+          "committed) is a no-op")
+        if (overlap == total) w.abort() // an empty batch or a full replay
+        body(w, batchIds)
+      } finally batchIds.unpersist(blocking = false)
+    }
+
+    def compact(spark: SparkSession, path: String, retainEpochs: Int)(
+        body: (Epoch, EpochWrites) => Arms): Unit =
+      withLease(spark, path) {
+        val cur = resolve(spark, path)
+        lifecycle(spark, path, retainEpochs, Some(cur.name), None)(body(cur, _)) { (w, params) =>
+          params.fold(cur.header.copy(manifest = w.manifest, bloom = w.bloom))(p =>
+            EpochHeader(kind, p, w.manifest, w.schemas, w.bloom))
+        }
+      }
+
+    private def lifecycle(
+        spark: SparkSession, path: String, retainEpochs: Int, base: Option[String],
+        merge: Option[(Epoch, DataFrame)])(body: EpochWrites => Arms)(
+        header: (EpochWrites, Option[Map[String, String]]) => EpochHeader): Unit = {
+      val n = base.fold(1L)(epochNumber(_) + 1L)
+      val w = new EpochWrites(spark, path, this, n, freshBloom = merge.isEmpty)
+      deleteDir(spark, w.dir) // debris of a crashed prior attempt
+      val arms = body(w)
+      if (!w.aborted)
+        inParallel(arms.run ++ merge.map { case (cur, ids) =>
+          () => writeIdBloom(spark, w.dir, appendedIdBloom(spark, cur, ids, "id"))
+        }: _*)
+      if (w.aborted) {
+        tables.foreach(t => deleteDir(spark, w.location(t)))
+        deleteDir(spark, w.dir)
+      } else {
+        deleteDir(spark, w.stageDir)
+        writeHeader(spark, w.dir, header(w, arms.params))
+        commitEpoch(spark, path, epochName(n), base)
+        gc(spark, path, epochName(n), retainEpochs)
       }
     }
   }

@@ -597,8 +597,7 @@ object LangModel {
         sum(coalesce(col("__blp"), col("__flp"), lit(floorLp))).as("lp_sum"))
   }
 
-  // ---- persisted classifier index ([[EpochStore]] delta-epoch layout —
-  // the SEVENTH index lifecycle) ----
+  // ---- persisted classifier index ([[EpochStore]] delta-epoch layout) ----
   //
   // A production quality classifier is trained on labeled data that
   // ARRIVES: a curation team labels a batch a day, and retraining from
@@ -620,20 +619,13 @@ object LangModel {
     */
   val ClassifierIndexFormatVersion: Int = 2
 
-  private[graft] val ClassifierIndex = EpochStore.IndexKind(
-    "classifier", ClassifierIndexFormatVersion, "writeClassifierIndex")
+  private[graft] val ClassifierIndex = EpochStore.EpochIndex(
+    EpochStore.IndexKind("classifier", ClassifierIndexFormatVersion, "writeClassifierIndex"),
+    tables = Seq("cls", "docs", "ids"), idTable = Some("ids"))
 
   private[graft] def resolveClassifierIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
-    EpochStore.resolve(spark, path, ClassifierIndex)
-
-  // shared counter-lifecycle helpers — one definition for both counter
-  // indexes ([[EpochStore.counterBatchIds]] / requireCounterIdsNotNull)
-  private def clsBatchIds(df: DataFrame, idCol: String): DataFrame =
-    EpochStore.counterBatchIds(df, idCol)
-
-  private def requireIdsNotNull(df: DataFrame, idCol: String, op: String): Unit =
-    EpochStore.requireCounterIdsNotNull(df, idCol, op)
+    ClassifierIndex.resolve(spark, path)
 
   /** One batch's per-class DOCUMENT counts, `(dp, dn)` — single row.
     * Coalesced to 0 so an empty batch writes zeros, not nulls (the
@@ -664,8 +656,8 @@ object LangModel {
     * over the labeled corpus (at 100 TB the only pass over text) plus
     * the single-row doc counts, the narrow distinct-id table and its
     * bloom. Non-destructive over an existing index (epoch N+1 + atomic
-    * pointer commit), same single-writer lease contract as the other
-    * six lifecycles.
+    * pointer commit), same single-writer lease contract as every index
+    * lifecycle.
     */
   def writeClassifierIndex(
       labeled: DataFrame,
@@ -674,38 +666,12 @@ object LangModel {
       labelCol: String,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    val spark = labeled.sparkSession
-    requireIdsNotNull(labeled, idCol, "writeClassifierIndex")
-    EpochStore.withLease(spark, path) {
-    val cur = EpochStore.buildBase(spark, path)
-    val n = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val dCls = EpochStore.dataDirName("cls", n)
-    val dDocs = EpochStore.dataDirName("docs", n)
-    val dIds = EpochStore.dataDirName("ids", n)
-    // persisted once so the ids write and the bloom arm share one
-    // evaluation of the scan + distinct (see appendClassifierIndex);
-    // the bloom joins the parallel group — it is independent of the
-    // sibling writes and only the commit below observes any of them
-    val batchIds = clsBatchIds(labeled, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cls = labeledTokenCounts(labeled, textCol, labelCol)
-    val docs = labeledDocCounts(labeled, labelCol).coalesce(1)
-    var bloom: EpochStore.IdBloom = null
-    try EpochStore.inParallel(
-      () => cls.write.mode("overwrite").parquet(s"$path/data/$dCls"),
-      () => docs.write.mode("overwrite").parquet(s"$path/data/$dDocs"),
-      () => batchIds.write.mode("overwrite").parquet(s"$path/data/$dIds"),
-      () => bloom = EpochStore.writeFreshIdBloom(spark, dir, batchIds, batchIds.count()))
-    finally batchIds.unpersist(blocking = false)
-    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(ClassifierIndex,
-      Map.empty, Seq("cls" -> dCls, "docs" -> dDocs, "ids" -> dIds),
-      Map("cls" -> cls.schema, "docs" -> docs.schema, "ids" -> batchIds.schema),
-      Some(bloom)))
-    EpochStore.commitEpoch(spark, path, epoch, cur)
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+    EpochStore.requireCounterIdsNotNull(labeled, idCol, "writeClassifierIndex")
+    ClassifierIndex.build(labeled.sparkSession, path, retainEpochs) { out =>
+      EpochStore.Arms(
+        () => out.write("cls", labeledTokenCounts(labeled, textCol, labelCol)),
+        () => out.write("docs", labeledDocCounts(labeled, labelCol).coalesce(1)),
+        () => out.write("ids", EpochStore.counterBatchIds(labeled, idCol)))
     }
   }
 
@@ -724,51 +690,14 @@ object LangModel {
       textCol: String,
       labelCol: String,
       path: String,
-      retainEpochs: Int = 2): Unit = {
-    val spark = newLabeled.sparkSession
-    requireIdsNotNull(newLabeled, idCol, "appendClassifierIndex")
-    EpochStore.withLease(spark, path) {
-    val cur = resolveClassifierIndex(spark, path)
-    // persisted once: the replay guard, the ids delta write and the bloom
-    // merge below all re-read this frame — uncached, each use would re-run
-    // the batch scan + repartition + distinct (measured ~0.4 s apiece at
-    // sf0.1, 4 uses). Dropped before return.
-    val batchIds = clsBatchIds(newLabeled, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val (overlap, total) =
-      EpochStore.counterGuardCounts(spark, cur, batchIds)
-    if (total > 0L && overlap < total) {
-      require(overlap == 0L,
-        s"appendClassifierIndex: $overlap of $total batch ids are already " +
-        s"committed in the index at $path — folding this batch would " +
-        "double-count their tokens. Split the batch into the new ids and " +
-        "re-append; a FULL replay (all ids committed) is a no-op")
-      val n = cur.number + 1L
-      val epoch = EpochStore.epochName(n)
-      val dir = s"$path/$epoch"
-      EpochStore.deleteDir(spark, dir)
-      val dCls = EpochStore.dataDirName("cls", n)
-      val dDocs = EpochStore.dataDirName("docs", n)
-      val dIds = EpochStore.dataDirName("ids", n)
-      // the bloom merge is independent of the sibling delta writes (only
-      // the commit observes any of them), so it overlaps as a 4th arm
-      EpochStore.inParallel(
-        () => labeledTokenCounts(newLabeled, textCol, labelCol)
-          .write.mode("overwrite").parquet(s"$path/data/$dCls"),
-        () => labeledDocCounts(newLabeled, labelCol)
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/data/$dDocs"),
-        () => batchIds.write.mode("overwrite").parquet(s"$path/data/$dIds"),
-        () => EpochStore.writeIdBloom(spark, dir,
-          EpochStore.appendedIdBloom(spark, cur, batchIds, "id")))
-      EpochStore.writeHeader(spark, dir, cur.header.copy(manifest = cur.header.manifest ++
-        Seq("cls" -> dCls, "docs" -> dDocs, "ids" -> dIds)))
-      EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-      EpochStore.gc(spark, path, epoch, retainEpochs)
-    } // else: empty batch or full replay — live epoch untouched
-    } finally batchIds.unpersist(blocking = false)
+      retainEpochs: Int = 2): Unit =
+    ClassifierIndex.appendCounted(newLabeled, idCol, path, retainEpochs,
+      "appendClassifierIndex") { (out, batchIds) =>
+      EpochStore.Arms(
+        () => out.write("cls", labeledTokenCounts(newLabeled, textCol, labelCol)),
+        () => out.write("docs", labeledDocCounts(newLabeled, labelCol).coalesce(1)),
+        () => out.write("ids", batchIds))
     }
-  }
 
   /** Merge the accumulated counter deltas into ONE pre-summed dir per
     * table, with a right-sized fresh bloom — the same maintenance op as
@@ -778,33 +707,15 @@ object LangModel {
   def compactClassifierIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      retainEpochs: Int = 2): Unit = {
-    EpochStore.withLease(spark, path) {
-    val cur = resolveClassifierIndex(spark, path)
-    val n = cur.number + 1L
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val dCls = EpochStore.dataDirName("cls", n)
-    val dDocs = EpochStore.dataDirName("docs", n)
-    val dIds = EpochStore.dataDirName("ids", n)
-    EpochStore.inParallel(
-      () => clsCountsAt(spark, cur)
-        .write.mode("overwrite").parquet(s"$path/data/$dCls"),
-      () => EpochStore.readTable(spark, cur, "docs")
-        .agg(sum("dp").as("dp"), sum("dn").as("dn"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/data/$dDocs"),
-      // append-guard disjointness makes the union already distinct
-      () => EpochStore.readTable(spark, cur, "ids")
-        .write.mode("overwrite").parquet(s"$path/data/$dIds"))
-    val bloom = EpochStore.writeFreshIdBloomOf(
-      spark, dir, s"$path/data/$dIds", cur.header.schemas("ids"))
-    EpochStore.writeHeader(spark, dir, cur.header.copy(
-      manifest = Seq("cls" -> dCls, "docs" -> dDocs, "ids" -> dIds), bloom = Some(bloom)))
-    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+      retainEpochs: Int = 2): Unit =
+    ClassifierIndex.compact(spark, path, retainEpochs) { (cur, out) =>
+      EpochStore.Arms(
+        () => out.write("cls", clsCountsAt(spark, cur)),
+        () => out.write("docs", EpochStore.readTable(spark, cur, "docs")
+          .agg(sum("dp").as("dp"), sum("dn").as("dn")).coalesce(1)),
+        // append-guard disjointness makes the union already distinct
+        () => out.write("ids", EpochStore.readTable(spark, cur, "ids")))
     }
-  }
 
   /** The live epoch's standing per-class token counters, `(token, cp,
     * cn)` — the exact-integer histogram of every committed labeled

@@ -175,7 +175,7 @@ object Pipeline {
     * Before round 15 each of those consumers re-derived the chain from
     * the ledger independently — the elections and the gram probe ran
     * once PER consumer (~4.4 s of constructor-eager work at sf0.1,
-    * measured via `graft.ProbeStageA`; OPTIMIZATION_r15.md §10).
+    * OPTIMIZATION_r15.md §10).
     */
   private[graft] def curateFromLedger(
       ledger: DataFrame,

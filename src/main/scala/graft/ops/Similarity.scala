@@ -894,12 +894,13 @@ object Similarity {
     */
   val AnnIndexFormatVersion: Int = 2
 
-  private[graft] val AnnIndex = EpochStore.IndexKind(
-    "ANN", AnnIndexFormatVersion, "writeAnnIndex")
+  private[graft] val AnnIndex = EpochStore.EpochIndex(
+    EpochStore.IndexKind("ANN", AnnIndexFormatVersion, "writeAnnIndex"),
+    tables = Seq("assigned"), epochTables = Seq("centroids"), idTable = Some("assigned"))
 
   private[graft] def resolveAnnIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
-    EpochStore.resolve(spark, path, AnnIndex)
+    AnnIndex.resolve(spark, path)
 
   private def readAnnCentroids(
       spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch): Seq[(Int, Seq[Float])] =
@@ -1060,43 +1061,24 @@ object Similarity {
       trainFraction: Double = 1.0,
       quantize: Boolean = false): Unit = {
     val spark = corpus.sparkSession
-    EpochStore.withLease(spark, path) {
-    val (centroids, sampleCounts) =
-      trainCentroidsAndCounts(corpus, vecCol, idCol, nlist, trainFraction)
-    // estimated FULL populations (sample counts scaled back) — persisted
-    // with the centroids so probe-side joins can salt dense cells
-    val counts = sampleCounts.map { case (c, n) =>
-      c -> math.round(n / trainFraction)
-    }
-    val idx = IvfIndex(centroids, null)
-    val cur = EpochStore.buildBase(spark, path)
-    val n = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val assignedDir = EpochStore.dataDirName("assigned", n)
-    val assigned = assignedStorage(
-      corpus.select(
-        idx.nearestCell(col(vecCol)).as("cell"),
-        col(idCol).as("id"), col(vecCol).as("vec")),
-      quantize)
-    val cents = annCentroidsTable(spark, centroids, counts)
-    var bloom: EpochStore.IdBloom = null
-    // the corpus-sized assigned write (then its read-back bloom) overlaps
-    // the O(nlist) centroids write
-    EpochStore.inParallel(
-      () => {
-        assigned.write.mode("overwrite").parquet(s"$path/data/$assignedDir")
-        // id bloom for the O(1) append guard ([[EpochStore.idGuardNeedsExact]])
-        bloom = EpochStore.writeFreshIdBloomOf(
-          spark, dir, s"$path/data/$assignedDir", assigned.schema)
-      },
-      () => cents.write.mode("overwrite").parquet(s"$dir/centroids"))
-    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(AnnIndex,
-      annParams(centroids, nlist, quantize), Seq("assigned" -> assignedDir),
-      Map("assigned" -> assigned.schema, "centroids" -> cents.schema), Some(bloom)))
-    EpochStore.commitEpoch(spark, path, epoch, cur)
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+    AnnIndex.build(spark, path, retainEpochs) { out =>
+      val (centroids, sampleCounts) =
+        trainCentroidsAndCounts(corpus, vecCol, idCol, nlist, trainFraction)
+      // estimated FULL populations (sample counts scaled back) — persisted
+      // with the centroids so probe-side joins can salt dense cells
+      val counts = sampleCounts.map { case (c, n) =>
+        c -> math.round(n / trainFraction)
+      }
+      val idx = IvfIndex(centroids, null)
+      // the corpus-sized assigned write (then its read-back bloom) overlaps
+      // the O(nlist) centroids write
+      EpochStore.Arms.fresh(annParams(centroids, nlist, quantize))(
+        () => out.write("assigned", assignedStorage(
+          corpus.select(
+            idx.nearestCell(col(vecCol)).as("cell"),
+            col(idCol).as("id"), col(vecCol).as("vec")),
+          quantize)),
+        () => out.write("centroids", annCentroidsTable(spark, centroids, counts)))
     }
   }
 
@@ -1117,52 +1099,29 @@ object Similarity {
       path: String,
       retainEpochs: Int = 2): Unit = {
     val spark = newVecs.sparkSession
-    EpochStore.withLease(spark, path) {
-    val cur = resolveAnnIndex(spark, path)
-    val quantized = cur.header.bool("quantized") // storage scheme is the index's, not the caller's
-    val (centroids, standingCounts) = readAnnCentroidsWithCounts(spark, cur)
-    // dup-id guard: bloom clears clean batches without reading the
-    // standing `assigned` id column; hits fall back to the exact check
-    if (EpochStore.idGuardNeedsExact(spark, cur, newVecs, idCol)) {
-      val dupIds = EpochStore.readTable(spark, cur, "assigned").select("id")
-        .join(newVecs.select(col(idCol).as("id")), Seq("id"), "left_semi")
-        .limit(3).collect().map(_.get(0))
-      require(dupIds.isEmpty,
-        s"appendAnnIndex: ids already present in the index at $path " +
-        s"(e.g. ${dupIds.mkString(", ")}) — append requires disjoint ids; " +
-        "re-appending a committed batch would duplicate neighbors")
-    }
-    val n = cur.number + 1L
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val idx = IvfIndex(centroids, null)
-    val assignedDir = EpochStore.dataDirName("assigned", n)
-    // successor cell counts: standing + the batch's own (one tiny agg —
-    // nlist rows — over the batch's frozen-quantizer assignment)
-    val deltaCounts = newVecs
-      .select(idx.nearestCell(col(vecCol)).as("cell"))
-      .groupBy("cell").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val counts = (standingCounts.keySet ++ deltaCounts.keySet).map { c =>
-      c -> (standingCounts.getOrElse(c, 0L) + deltaCounts.getOrElse(c, 0L))
-    }.toMap
-    // delta write, successor bloom, and small tables are independent
-    EpochStore.inParallel(
-      () => assignedStorage(
-        newVecs.select(
-          idx.nearestCell(col(vecCol)).as("cell"),
-          col(idCol).as("id"), col(vecCol).as("vec")),
-        quantized)
-        .write.mode("overwrite").parquet(s"$path/data/$assignedDir"),
-      () => EpochStore.writeIdBloom(spark, dir, EpochStore.appendedIdBloom(
-        spark, cur, newVecs.select(col(idCol).as("id")), "id")),
-      () => annCentroidsTable(spark, centroids, counts)
-        .write.mode("overwrite").parquet(s"$dir/centroids"))
-    EpochStore.writeHeader(spark, dir, cur.header.copy(
-      manifest = cur.header.manifest :+ ("assigned" -> assignedDir)))
-    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+    AnnIndex.appendNew(newVecs, idCol, path, retainEpochs, "appendAnnIndex",
+      "duplicate neighbors") { (cur, out) =>
+      val quantized = cur.header.bool("quantized") // storage scheme is the index's, not the caller's
+      val (centroids, standingCounts) = readAnnCentroidsWithCounts(spark, cur)
+      val idx = IvfIndex(centroids, null)
+      // successor cell counts: standing + the batch's own (one tiny agg —
+      // nlist rows — over the batch's frozen-quantizer assignment)
+      val deltaCounts = newVecs
+        .select(idx.nearestCell(col(vecCol)).as("cell"))
+        .groupBy("cell").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val counts = (standingCounts.keySet ++ deltaCounts.keySet).map { c =>
+        c -> (standingCounts.getOrElse(c, 0L) + deltaCounts.getOrElse(c, 0L))
+      }.toMap
+      // delta write and small tables are independent (the template adds the
+      // successor bloom as a third arm)
+      EpochStore.Arms(
+        () => out.write("assigned", assignedStorage(
+          newVecs.select(
+            idx.nearestCell(col(vecCol)).as("cell"),
+            col(idCol).as("id"), col(vecCol).as("vec")),
+          quantized)),
+        () => out.write("centroids", annCentroidsTable(spark, centroids, counts)))
     }
   }
 
@@ -1841,53 +1800,39 @@ object Similarity {
       path: String,
       retainEpochs: Int = 2,
       retrain: Boolean = false,
-      trainFraction: Double = 1.0): Unit = {
-    EpochStore.withLease(spark, path) {
-    val cur = resolveAnnIndex(spark, path)
-    val nlist = cur.header.int("nlist")
-    val n = cur.number + 1L
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val assignedDir = EpochStore.dataDirName("assigned", n)
-    val quantized = cur.header.bool("quantized")
-    val standing = EpochStore.readTable(spark, cur, "assigned")
-    // retraining needs float vectors; quantized epochs dequantize on read
-    // but KEEP their original codes in the rewrite (requantizing would be
-    // an identity round-trip paid for nothing)
-    val withVec =
-      if (retrain && quantized) dequantizeInt8(standing, "qvec", "scale", "vec")
-      else standing
-    val centroids =
-      if (retrain) trainCentroids(withVec, "vec", "id", nlist, trainFraction)
-      else readAnnCentroids(spark, cur)
-    val storageCols =
-      if (quantized) Seq(col("id"), col("qvec"), col("scale"))
-      else Seq(col("id"), col("vec"))
-    val compacted =
-      if (retrain) {
-        val idx = IvfIndex(centroids, null)
-        withVec.select(idx.nearestCell(col("vec")).as("cell") +: storageCols: _*)
-      } else standing
-    // the assigned rewrite, then its read-back bloom and EXACT cell counts
-    // (compaction is where the salt guard's estimates get trued up, like
-    // the bloom)
-    compacted.write.mode("overwrite").parquet(s"$path/data/$assignedDir")
-    // right-size a fresh id bloom from the compacted id set
-    val bloom = EpochStore.writeFreshIdBloomOf(
-      spark, dir, s"$path/data/$assignedDir", compacted.schema)
-    val counts = spark.read.schema(compacted.schema).parquet(s"$path/data/$assignedDir")
-      .groupBy("cell").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val cents = annCentroidsTable(spark, centroids, counts)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(AnnIndex,
-      annParams(centroids, nlist, quantized), Seq("assigned" -> assignedDir),
-      Map("assigned" -> compacted.schema, "centroids" -> cents.schema), Some(bloom)))
-    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+      trainFraction: Double = 1.0): Unit =
+    AnnIndex.compact(spark, path, retainEpochs) { (cur, out) =>
+      val nlist = cur.header.int("nlist")
+      val quantized = cur.header.bool("quantized")
+      val standing = EpochStore.readTable(spark, cur, "assigned")
+      // retraining needs float vectors; quantized epochs dequantize on read
+      // but KEEP their original codes in the rewrite (requantizing would be
+      // an identity round-trip paid for nothing)
+      val withVec =
+        if (retrain && quantized) dequantizeInt8(standing, "qvec", "scale", "vec")
+        else standing
+      val centroids =
+        if (retrain) trainCentroids(withVec, "vec", "id", nlist, trainFraction)
+        else readAnnCentroids(spark, cur)
+      val storageCols =
+        if (quantized) Seq(col("id"), col("qvec"), col("scale"))
+        else Seq(col("id"), col("vec"))
+      val compacted =
+        if (retrain) {
+          val idx = IvfIndex(centroids, null)
+          withVec.select(idx.nearestCell(col("vec")).as("cell") +: storageCols: _*)
+        } else standing
+      // one arm: the assigned rewrite (and its fresh read-back bloom), then
+      // the EXACT cell counts of the written dir (compaction is where the
+      // salt guard's estimates get trued up, like the bloom), then centroids
+      EpochStore.Arms.fresh(annParams(centroids, nlist, quantized)) { () =>
+        out.write("assigned", compacted)
+        val counts = spark.read.schema(compacted.schema).parquet(out.location("assigned"))
+          .groupBy("cell").count().collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        out.write("centroids", annCentroidsTable(spark, centroids, counts))
+      }
     }
-  }
 
   /** Probe a persisted ANN index ([[writeAnnIndex]]) — identical plan shape
     * to [[ivfProbe]], with centroids read from the index (they become plan

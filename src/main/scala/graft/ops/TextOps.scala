@@ -1088,7 +1088,7 @@ object TextOps {
   }
 
   // ---- persisted token-frequency index ([[EpochStore]] delta-epoch
-  // layout — the SIXTH index lifecycle) ----
+  // layout) ----
   //
   // DSIR/quality scoring is the op most likely to run DAILY against a
   // growing corpus, and [[frequencyScore]]/[[contrastScore]] recompute the
@@ -1109,25 +1109,14 @@ object TextOps {
     */
   val TokenFrequencyIndexFormatVersion: Int = 2
 
-  private[graft] val TokenFrequencyIndex = EpochStore.IndexKind(
-    "token-frequency", TokenFrequencyIndexFormatVersion, "writeTokenFrequencyIndex")
+  private[graft] val TokenFrequencyIndex = EpochStore.EpochIndex(
+    EpochStore.IndexKind("token-frequency", TokenFrequencyIndexFormatVersion,
+      "writeTokenFrequencyIndex"),
+    tables = Seq("tf", "ids"), idTable = Some("ids"))
 
   private[graft] def resolveTokenFrequencyIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
-    EpochStore.resolve(spark, path, TokenFrequencyIndex)
-
-  /** Canonical batch id frame / null-id replay guard — the shared
-    * counter-lifecycle helpers ([[EpochStore.counterBatchIds]] /
-    * [[EpochStore.requireCounterIdsNotNull]]), aliased so call sites read
-    * at the module's altitude.
-    */
-  private def tfBatchIds(df: org.apache.spark.sql.DataFrame, idCol: String)
-      : org.apache.spark.sql.DataFrame =
-    EpochStore.counterBatchIds(df, idCol)
-
-  private def requireTfIdsNotNull(
-      df: org.apache.spark.sql.DataFrame, idCol: String, op: String): Unit =
-    EpochStore.requireCounterIdsNotNull(df, idCol, op)
+    TokenFrequencyIndex.resolve(spark, path)
 
   private def tfTotalsAt(
       spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch)
@@ -1151,7 +1140,7 @@ object TextOps {
     * at 100 TB the only pass over text) plus the narrow distinct-id
     * table and its bloom. Non-destructive over an existing index (epoch
     * N+1 + atomic pointer commit), same single-writer lease contract as
-    * the other five lifecycles.
+    * every index lifecycle.
     */
   def writeTokenFrequencyIndex(
       corpus: org.apache.spark.sql.DataFrame,
@@ -1159,33 +1148,11 @@ object TextOps {
       textCol: String,
       path: String,
       retainEpochs: Int = 2): Unit = {
-    val spark = corpus.sparkSession
-    requireTfIdsNotNull(corpus, idCol, "writeTokenFrequencyIndex")
-    EpochStore.withLease(spark, path) {
-    val cur = EpochStore.buildBase(spark, path)
-    val n = cur.map(EpochStore.epochNumber(_) + 1L).getOrElse(1L)
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val dTf = EpochStore.dataDirName("tf", n)
-    val dIds = EpochStore.dataDirName("ids", n)
-    // persisted once so the ids write and the bloom arm share one
-    // evaluation; the bloom overlaps the sibling writes (only the commit
-    // below observes any of them) — see writeClassifierIndex
-    val batchIds = tfBatchIds(corpus, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tf = termFrequencies(corpus, textCol)
-    var bloom: EpochStore.IdBloom = null
-    try EpochStore.inParallel(
-      () => tf.write.mode("overwrite").parquet(s"$path/data/$dTf"),
-      () => batchIds.write.mode("overwrite").parquet(s"$path/data/$dIds"),
-      () => bloom = EpochStore.writeFreshIdBloom(spark, dir, batchIds, batchIds.count()))
-    finally batchIds.unpersist(blocking = false)
-    EpochStore.writeHeader(spark, dir, EpochStore.EpochHeader(TokenFrequencyIndex,
-      Map.empty, Seq("tf" -> dTf, "ids" -> dIds),
-      Map("tf" -> tf.schema, "ids" -> batchIds.schema), Some(bloom)))
-    EpochStore.commitEpoch(spark, path, epoch, cur)
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+    EpochStore.requireCounterIdsNotNull(corpus, idCol, "writeTokenFrequencyIndex")
+    TokenFrequencyIndex.build(corpus.sparkSession, path, retainEpochs) { out =>
+      EpochStore.Arms(
+        () => out.write("tf", termFrequencies(corpus, textCol)),
+        () => out.write("ids", EpochStore.counterBatchIds(corpus, idCol)))
     }
   }
 
@@ -1205,46 +1172,13 @@ object TextOps {
       idCol: String,
       textCol: String,
       path: String,
-      retainEpochs: Int = 2): Unit = {
-    val spark = newDocs.sparkSession
-    requireTfIdsNotNull(newDocs, idCol, "appendTokenFrequencyIndex")
-    EpochStore.withLease(spark, path) {
-    val cur = resolveTokenFrequencyIndex(spark, path)
-    // persisted once: guard + ids delta write + bloom merge re-read it
-    // (see appendClassifierIndex — same counter-lifecycle shape)
-    val batchIds = tfBatchIds(newDocs, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val (overlap, total) =
-      EpochStore.counterGuardCounts(spark, cur, batchIds)
-    if (total > 0L && overlap < total) {
-      require(overlap == 0L,
-        s"appendTokenFrequencyIndex: $overlap of $total batch ids are " +
-        s"already committed in the index at $path — folding this batch " +
-        "would double-count their tokens. Split the batch into the new " +
-        "ids and re-append; a FULL replay (all ids committed) is a no-op")
-      val n = cur.number + 1L
-      val epoch = EpochStore.epochName(n)
-      val dir = s"$path/$epoch"
-      EpochStore.deleteDir(spark, dir)
-      val dTf = EpochStore.dataDirName("tf", n)
-      val dIds = EpochStore.dataDirName("ids", n)
-      // the bloom merge is independent of the sibling delta writes (only
-      // the commit observes any of them), so it overlaps as a 3rd arm
-      EpochStore.inParallel(
-        () => termFrequencies(newDocs, textCol)
-          .write.mode("overwrite").parquet(s"$path/data/$dTf"),
-        () => batchIds.write.mode("overwrite").parquet(s"$path/data/$dIds"),
-        () => EpochStore.writeIdBloom(spark, dir,
-          EpochStore.appendedIdBloom(spark, cur, batchIds, "id")))
-      EpochStore.writeHeader(spark, dir, cur.header.copy(
-        manifest = cur.header.manifest ++ Seq("tf" -> dTf, "ids" -> dIds)))
-      EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-      EpochStore.gc(spark, path, epoch, retainEpochs)
-    } // else: empty batch or full replay — live epoch untouched
-    } finally batchIds.unpersist(blocking = false)
+      retainEpochs: Int = 2): Unit =
+    TokenFrequencyIndex.appendCounted(newDocs, idCol, path, retainEpochs,
+      "appendTokenFrequencyIndex") { (out, batchIds) =>
+      EpochStore.Arms(
+        () => out.write("tf", termFrequencies(newDocs, textCol)),
+        () => out.write("ids", batchIds))
     }
-  }
 
   /** Merge the accumulated `tf` counter deltas into ONE pre-summed dir
     * (and the id deltas into one), with a right-sized fresh bloom — the
@@ -1253,29 +1187,13 @@ object TextOps {
   def compactTokenFrequencyIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      retainEpochs: Int = 2): Unit = {
-    EpochStore.withLease(spark, path) {
-    val cur = resolveTokenFrequencyIndex(spark, path)
-    val n = cur.number + 1L
-    val epoch = EpochStore.epochName(n)
-    val dir = s"$path/$epoch"
-    EpochStore.deleteDir(spark, dir)
-    val dTf = EpochStore.dataDirName("tf", n)
-    val dIds = EpochStore.dataDirName("ids", n)
-    EpochStore.inParallel(
-      () => tfTotalsAt(spark, cur)
-        .write.mode("overwrite").parquet(s"$path/data/$dTf"),
-      // append-guard disjointness makes the union already distinct
-      () => EpochStore.readTable(spark, cur, "ids")
-        .write.mode("overwrite").parquet(s"$path/data/$dIds"))
-    val bloom = EpochStore.writeFreshIdBloomOf(
-      spark, dir, s"$path/data/$dIds", cur.header.schemas("ids"))
-    EpochStore.writeHeader(spark, dir, cur.header.copy(
-      manifest = Seq("tf" -> dTf, "ids" -> dIds), bloom = Some(bloom)))
-    EpochStore.commitEpoch(spark, path, epoch, Some(cur.name))
-    EpochStore.gc(spark, path, epoch, retainEpochs)
+      retainEpochs: Int = 2): Unit =
+    TokenFrequencyIndex.compact(spark, path, retainEpochs) { (cur, out) =>
+      EpochStore.Arms(
+        () => out.write("tf", tfTotalsAt(spark, cur)),
+        // append-guard disjointness makes the union already distinct
+        () => out.write("ids", EpochStore.readTable(spark, cur, "ids")))
     }
-  }
 
   /** [[frequencyScore]] for DAILY ARRIVALS against the standing index:
     * each batch document scored by the COMMITTED corpus's token counts —
@@ -1501,10 +1419,11 @@ object TextOps {
   // reproducible in any engine.
 
   /** Stopword list for the block classifier (jusText's stopword-density
-    * signal; a tiny high-frequency English set — swap per language).
+    * signal; a tiny high-frequency English set — swap per language). Owned
+    * by the native kernel ([[graft.functions.HtmlUtil.Stopwords]]), so the
+    * expression form and the kernel share one list.
     */
-  val HtmlStopwords: Seq[String] =
-    Seq("the", "of", "and", "a", "to", "in", "is", "it", "that", "for")
+  val HtmlStopwords: Seq[String] = graft.functions.HtmlUtil.Stopwords.toSeq
 
   /** Block classifier thresholds: minimum whitespace-free chars for a
     * block to be prose (jusText `length_low` analogue, scaled for the

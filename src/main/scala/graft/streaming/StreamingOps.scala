@@ -274,16 +274,24 @@ object StreamingOps {
       idCol: String,
       path: String,
       retainEpochs: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    appendUnindexed(newStream, idCol, path, graft.ops.Dedup.DedupIndex)(
+      graft.ops.Dedup.appendDedupIndex(_, textCol, idCol, path, retainEpochs))
+
+  /** Each micro-batch deduped by id within itself and against the ids the
+    * live epoch's id table already holds, then folded by `append` unless
+    * nothing is left — the replay-safe sink of the streaming index appends.
+    */
+  private def appendUnindexed(
+      newStream: DataFrame, idCol: String, path: String, index: graft.ops.EpochStore.EpochIndex)(
+      append: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     newStream.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import graft.ops.Dedup
         val spark = batch.sparkSession
+        val indexed = graft.ops.EpochStore.readTable(
+          spark, index.resolve(spark, path), index.idTable.get)
         val fresh = batch.dropDuplicates(idCol)
-          .join(Dedup.indexSets(spark, Dedup.resolveIndex(spark, path))
-            .select(col("id").as(idCol)),
-            Seq(idCol), "left_anti")
-        if (!fresh.isEmpty)
-          Dedup.appendDedupIndex(fresh, textCol, idCol, path, retainEpochs)
+          .join(indexed.select(col("id").as(idCol)), Seq(idCol), "left_anti")
+        if (!fresh.isEmpty) append(fresh)
     }
 
   /** [[appendToIndex]]'s ANN twin: grow the standing
@@ -305,19 +313,11 @@ object StreamingOps {
       idCol: String,
       path: String,
       retainEpochs: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import graft.ops.{EpochStore, Similarity}
-        val spark = batch.sparkSession
-        val fresh = batch.dropDuplicates(idCol)
-          .join(EpochStore.readTable(spark, Similarity.resolveAnnIndex(spark, path), "assigned")
-            .select(col("id").as(idCol)), Seq(idCol), "left_anti")
-        if (!fresh.isEmpty)
-          Similarity.appendAnnIndex(fresh, vecCol, idCol, path, retainEpochs)
-    }
+    appendUnindexed(newStream, idCol, path, graft.ops.Similarity.AnnIndex)(
+      graft.ops.Similarity.appendAnnIndex(_, vecCol, idCol, path, retainEpochs))
 
   /** Exact incremental SemDeDup per micro-batch against the standing ANN
-    * index — the fifth lifecycle's LIVE form, closing the one gap the
+    * index — the ANN lifecycle's LIVE form, closing the one gap the
     * other lifecycles don't have: minhash has [[dedupAgainstIndex]],
     * fingerprints have [[screenFingerprintsStream]], paragraphs have
     * [[suppressKnownParagraphsStream]]; a long-running SEMANTIC near-dup
@@ -449,16 +449,8 @@ object StreamingOps {
       textCol: String,
       path: String,
       retainEpochs: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import graft.ops.{Decontam, EpochStore}
-        val spark = batch.sparkSession
-        val fresh = batch.dropDuplicates(idCol)
-          .join(EpochStore.readTable(spark, Decontam.resolveFingerprintIndex(spark, path), "fsizes")
-            .select(col("id").as(idCol)), Seq(idCol), "left_anti")
-        if (!fresh.isEmpty)
-          Decontam.appendFingerprintIndex(fresh, idCol, textCol, path, retainEpochs)
-    }
+    appendUnindexed(newStream, idCol, path, graft.ops.Decontam.FingerprintIndex)(
+      graft.ops.Decontam.appendFingerprintIndex(_, idCol, textCol, path, retainEpochs))
 
   /** Winnowed-fingerprint hit count + suspect flag against a fixed bloom —
     * the shared core of [[screenFingerprintsStream]] and
@@ -1033,7 +1025,7 @@ object StreamingOps {
 
   /** Fold each micro-batch of newly LABELED documents into the standing
     * classifier index ([[graft.ops.LangModel.writeClassifierIndex]]) —
-    * the seventh lifecycle's streaming form: the quality model keeps
+    * the classifier lifecycle's streaming form: the quality model keeps
     * learning as labels arrive, and the derived weights stay exactly the
     * from-scratch retrain on everything committed. Replay-safe by the
     * append's own id guard, same contract as

@@ -3014,7 +3014,7 @@ class OpsSpec extends SparkSpec {
       .filterNot(_.startsWith(".")) // local-FS .crc checksum siblings
     assert(leftovers ==
       Set("current", "data", "epoch-000000001", "epoch-000000002"), leftovers)
-    assert(new java.io.File(Dedup.epochDir(spark, appended)).list().toSet
+    assert(new java.io.File(EpochStore.epochDir(spark, appended)).list().toSet
       .filterNot(_.startsWith(".")) == Set("header", "dropped", "idbloom.deflate"))
     // the delta contract: the append wrote ONLY its delta dirs; the
     // standing data is referenced by the new manifest, not copied
@@ -3108,7 +3108,7 @@ class OpsSpec extends SparkSpec {
     // old epoch (and its data files) stay readable for in-flight readers
     Dedup.writeDedupIndex(
       docs(2L -> base.replace("token9", "tokenY")), "text", "doc_id", idx)
-    assert(Dedup.epochDir(spark, idx).endsWith("epoch-000000002"))
+    assert(EpochStore.epochDir(spark, idx).endsWith("epoch-000000002"))
     val pairs = Dedup.minhashPairsAgainstIndex(
       docs(30L -> base), "text", "doc_id", idx, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -3134,7 +3134,7 @@ class OpsSpec extends SparkSpec {
     // pointer unchanged, zero new data dirs, no staged debris
     val token = EpochStore.acquireLease(spark, idx)
     val dataBefore = new java.io.File(s"$idx/data").list().toSet
-    val epochBefore = Dedup.epochDir(spark, idx)
+    val epochBefore = EpochStore.epochDir(spark, idx)
     val loser = intercept[IllegalStateException] {
       Dedup.appendDedupIndex(
         docs(2L -> base.replace("token9", "tokenY")), "text", "doc_id", idx)
@@ -3142,7 +3142,7 @@ class OpsSpec extends SparkSpec {
     assert(loser.getMessage.contains("lease"))
     assert(new java.io.File(s"$idx/data").list().toSet == dataBefore,
       "the loser must not have written anything")
-    assert(Dedup.epochDir(spark, idx) == epochBefore)
+    assert(EpochStore.epochDir(spark, idx) == epochBefore)
     // every lifecycle kind shares the gate — a build on a leased ANN path
     // fails identically (before training, before any write)
     val annIdx = java.nio.file.Files.createTempDirectory("graft-ann-lease").toString
@@ -3158,14 +3158,14 @@ class OpsSpec extends SparkSpec {
     EpochStore.releaseLease(spark, idx, token)
     Dedup.appendDedupIndex(
       docs(2L -> base.replace("token9", "tokenY")), "text", "doc_id", idx)
-    assert(Dedup.epochDir(spark, idx).endsWith("epoch-000000002"))
+    assert(EpochStore.epochDir(spark, idx).endsWith("epoch-000000002"))
     // a crashed writer's lease goes stale by age and is taken over
     val t2 = EpochStore.acquireLease(spark, idx)
     val leaseFile = new java.io.File(s"$idx/${EpochStore.LeaseFileName}")
     assert(leaseFile.setLastModified(
       System.currentTimeMillis() - 10L * 60 * 60 * 1000))
     Dedup.appendDedupIndex(docs(3L -> base), "text", "doc_id", idx)
-    assert(Dedup.epochDir(spark, idx).endsWith("epoch-000000003"),
+    assert(EpochStore.epochDir(spark, idx).endsWith("epoch-000000003"),
       "the takeover append must commit")
     assert(!leaseFile.exists(), "the takeover writer releases ITS lease")
     // releasing a token that lost its lease to takeover is a no-op
@@ -3176,7 +3176,7 @@ class OpsSpec extends SparkSpec {
     val base = (1 to 40).map(i => s"token$i").mkString(" ")
     val idx = java.nio.file.Files.createTempDirectory("graft-idx-fence").toString
     Dedup.writeDedupIndex(docs(1L -> base), "text", "doc_id", idx)
-    val epochBefore = Dedup.epochDir(spark, idx)
+    val epochBefore = EpochStore.epochDir(spark, idx)
     assert(epochBefore.endsWith("epoch-000000001"))
     // simulate the non-atomic-create double-takeover: while OUR lifecycle
     // holds the lease, a second stale-lease claimant overwrites the lease
@@ -3195,7 +3195,7 @@ class OpsSpec extends SparkSpec {
       }
     }
     assert(e.getMessage.contains("taken over"))
-    assert(Dedup.epochDir(spark, idx) == epochBefore,
+    assert(EpochStore.epochDir(spark, idx) == epochBefore,
       "the fenced commit must not have moved the pointer")
     // our release leaves the new holder's lease untouched
     assert(new java.io.File(s"$idx/${EpochStore.LeaseFileName}").exists(),
@@ -3204,7 +3204,7 @@ class OpsSpec extends SparkSpec {
     // a lifecycle whose lease is NOT disturbed still commits normally
     Dedup.appendDedupIndex(
       docs(2L -> base.replace("token9", "tokenY")), "text", "doc_id", idx)
-    assert(Dedup.epochDir(spark, idx).endsWith("epoch-000000002"))
+    assert(EpochStore.epochDir(spark, idx).endsWith("epoch-000000002"))
   }
 
   test("id-bloom append guard: clean appends skip the exact id scan, dups still rejected") {
@@ -3451,7 +3451,7 @@ class OpsSpec extends SparkSpec {
     val corpus = docs(1L -> (1 to 40).map(i => s"token$i").mkString(" "))
     val idx = java.nio.file.Files.createTempDirectory("graft-idx-ver").toString
     Dedup.writeDedupIndex(corpus, "text", "doc_id", idx)
-    val live = Dedup.epochDir(spark, idx)
+    val live = EpochStore.epochDir(spark, idx)
     EpochStore.writeHeader(spark, live,
       EpochStore.readHeader(spark, live).get.copy(formatVersion = 99))
     val probeErr = intercept[IllegalArgumentException] {
