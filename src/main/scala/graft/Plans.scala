@@ -4,11 +4,17 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Writes PLANS.md: the formatted physical plan of each headline query at
-  * sf0.001, annotated with the scale property it demonstrates. The shapes
-  * asserted by PlanSpec are visible here in full — this is the
-  * `.explain("formatted")` review the build brief calls for, checked into
-  * the repo so a reviewer can read the plans without running Spark.
+/** The plan-dump tool: `.explain("formatted")` of named queries, checked
+  * into the repo so a reviewer can read plans without running Spark.
+  *
+  *   runMain graft.Plans <sfDir>
+  *     writes PLANS.md: the formatted physical plan of each headline query,
+  *     annotated with the scale property it demonstrates. PlanSpec asserts
+  *     these shapes on every test run.
+  *   runMain graft.Plans <outDir> <tag> <sfDir> <q1,q2,...>
+  *     writes one `<outDir>/<q>_<tag>.txt` per query: the optimization-round
+  *     evidence under `plans/rNN/` (`tag` = before/after), diffable against
+  *     the plan shape a change claims.
   */
 object Plans {
 
@@ -85,8 +91,37 @@ object Plans {
       "cumsum sits above a broadcast bucket-classification join, so no " +
       "band ever funnels through one task"))
 
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
+  def main(args: Array[String]): Unit = args match {
+    case Array(dir) =>
+      val notes = Headline.toMap
+      val sb = new StringBuilder
+      sb.append("# PLANS — physical plans of the headline queries\n\n")
+      sb.append(s"Generated by `graft.Plans` at $dir (plans are scale-factor\n")
+      sb.append("independent apart from AQE's runtime coalescing). Each section\n")
+      sb.append("names the scale property the plan demonstrates; PlanSpec asserts\n")
+      sb.append("these shapes on every test run.\n")
+      explain(dir, Headline.map(_._1)) { (name, plan) =>
+        sb.append(s"\n## $name\n\n${notes(name)}\n\n```\n$plan```\n")
+      }
+      Files.writeString(Paths.get("PLANS.md"), sb.toString)
+      println(s"wrote PLANS.md (${Headline.size} plans)")
+    case Array(outDir, tag, sfDir, nameCsv) =>
+      val names = nameCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      Files.createDirectories(Paths.get(outDir))
+      explain(sfDir, names) { (name, plan) =>
+        Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
+      }
+      println(s"wrote ${names.size} plans ($tag) to $outDir")
+    case _ =>
+      System.err.println("usage: runMain graft.Plans <sfDir>\n" +
+        "       runMain graft.Plans <outDir> <tag> <sfDir> <q1,q2,...>")
+      sys.exit(2)
+  }
+
+  /** Formatted physical plan of each named query at `sfDir`, in order, from
+    * one local session.
+    */
+  private def explain(sfDir: String, names: Seq[String])(emit: (String, String) => Unit): Unit = {
     val builder = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
@@ -94,21 +129,9 @@ object Plans {
     Sessions.config.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    val sb = new StringBuilder
-    sb.append("# PLANS — physical plans of the headline queries\n\n")
-    sb.append(s"Generated by `graft.Plans` at $dir (plans are scale-factor\n")
-    sb.append("independent apart from AQE's runtime coalescing). Each section\n")
-    sb.append("names the scale property the plan demonstrates; PlanSpec asserts\n")
-    sb.append("these shapes on every test run.\n")
-    Headline.foreach { case (name, note) =>
-      val df = SparkEntry.queries(name)(spark, dir)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n$note\n\n```\n$formatted```\n")
-    }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${Headline.size} plans)")
-    spark.stop()
+    try names.foreach { n =>
+      emit(n, SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+    } finally spark.stop()
   }
 }

@@ -7,11 +7,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The epoch store behind the six persisted on-disk indexes (LSH dedup,
   * paragraph hashes, ANN/IVF, winnowing fingerprints, token frequencies and
-  * the classifier counters).
+  * the classifier counters), and the metadata format of the sized-shard log
+  * ([[Sink.appendSizedShards]]).
   *
   * Layout (one index root `path`):
   * {{{
   *   <path>/current               # pointer file naming the live epoch dir
+  *   <path>/lease                 # the single-writer lease, while held
   *   <path>/data/<table>-NNNNNNNNN/   # immutable parquet data dirs, never rewritten
   *   <path>/epoch-NNNNNNNNN/
   *     header                     # ONE immutable file: index kind, format
@@ -21,6 +23,17 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     idbloom.deflate            # deflate-compressed id-bloom bits (five of
   *                                #   the six indexes; see [[IdBloomFileName]])
   *     ... per-index small tables (dropped/centroids), rewritten per epoch
+  * }}}
+  *
+  * The sized-shard log keeps its data at `<log>/shard=N/` and its metadata
+  * in the same two files, replaced atomically ([[writeFile]]) on each append:
+  * {{{
+  *   <log>/_log_meta/
+  *     header                     # kind sized_log: the running weight total,
+  *                                #   the log's schema, the id-bloom parameters
+  *     idbloom.deflate            # bloom over every id ever appended
+  *     lease                      # the single-writer lease, while held
+  *     compact/                   # compaction/deletion staging and journal
   * }}}
   *
   * [[EpochIndex]] is the one place the commit protocol lives. An index
@@ -279,12 +292,16 @@ private[graft] object EpochStore {
   /** Persist an epoch's id-bloom bits as the deflate-compressed sidecar.
     * The bits of a sparsely filled bloom are mostly zero words (1.26 MB raw
     * at the 2^20-item floor, tens of KB deflated); the zlib trailer's
-    * Adler-32 makes a corrupted or truncated sidecar fail on read.
+    * Adler-32 makes a corrupted or truncated sidecar fail on read. `replace`
+    * as for [[writeHeader]].
     */
-  private def writeIdBloom(spark: SparkSession, epochDir: String, bytes: Array[Byte]): Unit = {
-    val out = new java.util.zip.DeflaterOutputStream(
-      hadoopFs(spark, epochDir).create(new HPath(epochDir, IdBloomFileName), true))
+  def writeIdBloom(
+      spark: SparkSession, epochDir: String, bytes: Array[Byte],
+      replace: Boolean = false): Unit = {
+    val deflated = new java.io.ByteArrayOutputStream()
+    val out = new java.util.zip.DeflaterOutputStream(deflated)
     try out.write(bytes) finally out.close()
+    writeFile(spark, new HPath(epochDir, IdBloomFileName), deflated.toByteArray, replace)
   }
 
   /** Build and persist a fresh id bloom over the `id` column of a
@@ -299,13 +316,23 @@ private[graft] object EpochStore {
     b
   }
 
-  /** The serialized id bloom of a resolved epoch. */
+  /** The serialized id bloom of a resolved epoch. A missing, truncated or
+    * corrupted sidecar fails loudly: a bloom read wrong could clear a
+    * duplicate id.
+    */
   def readIdBloom(spark: SparkSession, ep: Epoch): Array[Byte] = {
     if (ep.header.bloom.isEmpty)
       throw new IllegalStateException(s"epoch at ${ep.dir} records no id bloom")
-    val in = new java.util.zip.InflaterInputStream(
-      hadoopFs(spark, ep.dir).open(new HPath(ep.dir, IdBloomFileName)))
-    try in.readAllBytes() finally in.close()
+    val p = new HPath(ep.dir, IdBloomFileName)
+    try {
+      val in = new java.util.zip.InflaterInputStream(hadoopFs(spark, ep.dir).open(p))
+      try in.readAllBytes() finally in.close()
+    } catch {
+      case e @ (_: java.util.zip.ZipException | _: java.io.EOFException |
+          _: java.io.FileNotFoundException | _: org.apache.hadoop.fs.ChecksumException) =>
+        throw new IllegalStateException(
+          s"id bloom $p is corrupt ($e) — the epoch cannot be read; rebuild it", e)
+    }
   }
 
   /** Does the duplicate-id guard need the exact semi-join for this batch?
@@ -433,10 +460,10 @@ private[graft] object EpochStore {
   }
 
   /** Atomically point `<path>/current` at `epoch` — the single commit point
-    * of build/append/compact. The pointer is staged to a sibling file and
-    * renamed over with `FileContext.rename(OVERWRITE)` (atomic on HDFS-like
-    * stores): a crash strictly before this line leaves the old epoch fully
-    * live, a crash after it the new one — there is no state in between.
+    * of build/append/compact. The pointer is replaced atomically
+    * ([[writeFile]]): a crash strictly before this line leaves the old
+    * epoch fully live, a crash after it the new one — there is no state in
+    * between.
     *
     * `expectCurrent` is the pointer value the writer resolved when it
     * STARTED (None = fresh build, pointer must not exist): if the live
@@ -447,7 +474,6 @@ private[graft] object EpochStore {
   def commitEpoch(
       spark: SparkSession, path: String, epoch: String,
       expectCurrent: Option[String]): Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options}
     val live = currentEpoch(spark, path)
     require(live == expectCurrent,
       s"concurrent writer detected on index at $path: the 'current' pointer " +
@@ -471,14 +497,30 @@ private[graft] object EpochStore {
         "the new holder's lease is left untouched. Re-run this batch " +
         "once the other writer finishes")
     }
-    val fs = hadoopFs(spark, path)
-    val tmp = new HPath(path, "current_tmp")
-    val out = fs.create(tmp, true)
-    try out.write(epoch.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(
-      fs.makeQualified(new HPath(path)).toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(fs.makeQualified(tmp),
-      fs.makeQualified(new HPath(path, "current")), Options.Rename.OVERWRITE)
+    writeFile(spark, new HPath(path, "current"), epoch.getBytes("UTF-8"), replace = true)
+  }
+
+  /** Write `bytes` as the whole of `file`. With `replace`, atomically: write
+    * them to the sibling `<name>_tmp`, then rename it over `file` with
+    * `FileContext.rename(OVERWRITE)` (atomic on HDFS-like stores). A crash
+    * then leaves either the old file or the new one, never a partial one;
+    * a crash before the rename leaves only a stale tmp, which the next
+    * replace overwrites. The epoch pointer, the sized-shard log's header,
+    * bloom and maintenance journal are replaced this way. Without
+    * `replace` the file is written in place: the files of an uncommitted
+    * epoch, which its pointer rename publishes (on a local FS the rename
+    * costs tens of ms, so the epoch files skip it).
+    */
+  private[ops] def writeFile(
+      spark: SparkSession, file: HPath, bytes: Array[Byte], replace: Boolean): Unit = {
+    import org.apache.hadoop.fs.{FileContext, Options}
+    val fs = hadoopFs(spark, file.toString)
+    val target = if (replace) new HPath(file.getParent, s"${file.getName}_tmp") else file
+    val out = fs.create(target, true)
+    try out.write(bytes) finally out.close()
+    if (replace)
+      FileContext.getFileContext(fs.makeQualified(file).toUri, spark.sparkContext.hadoopConfiguration)
+        .rename(fs.makeQualified(target), fs.makeQualified(file), Options.Rename.OVERWRITE)
   }
 
   // ---- the epoch header ----
@@ -506,6 +548,7 @@ private[graft] object EpochStore {
       schemas: Map[String, StructType],
       bloom: Option[IdBloom]) {
     def int(key: String): Int = param(key).toInt
+    def long(key: String): Long = param(key).toLong
     def bool(key: String): Boolean = param(key).toBoolean
     private def param(key: String): String = params.getOrElse(key,
       throw new IllegalStateException(s"epoch header records no parameter '$key'"))
@@ -553,8 +596,8 @@ private[graft] object EpochStore {
   private def decodeHeader(file: HPath, bytes: Array[Byte]): EpochHeader = {
     import scala.jdk.CollectionConverters._
     def corrupt(why: String): Nothing = throw new IllegalStateException(
-      s"epoch header $file is corrupt ($why) — the epoch cannot be read; " +
-      "rebuild the index")
+      s"header $file is corrupt ($why) — it cannot be read; rebuild the " +
+      "index or log it belongs to")
     val nl = bytes.indexOf('\n'.toByte)
     if (nl < 0) corrupt("no header line")
     val f = new String(bytes, 0, nl, "UTF-8").split(" ")
@@ -578,13 +621,14 @@ private[graft] object EpochStore {
       Option(root.get("id_bloom")).map(b => IdBloom(b.get("items").asLong(), b.get("fpp").asDouble())))
   }
 
-  /** Write the header of the (uncommitted) epoch at `epochDir` — the last
-    * file a lifecycle writes before [[commitEpoch]].
+  /** Write the header in `epochDir`: an uncommitted epoch's, as the last
+    * file its lifecycle writes before [[commitEpoch]], or, with `replace`,
+    * the sized-shard log's `_log_meta` one ([[writeFile]]).
     */
-  def writeHeader(spark: SparkSession, epochDir: String, h: EpochHeader): Unit = {
-    val out = hadoopFs(spark, epochDir).create(new HPath(epochDir, HeaderFileName), true)
-    try out.write(encodeHeader(h)) finally out.close()
-  }
+  def writeHeader(
+      spark: SparkSession, epochDir: String, h: EpochHeader,
+      replace: Boolean = false): Unit =
+    writeFile(spark, new HPath(epochDir, HeaderFileName), encodeHeader(h), replace)
 
   /** The parsed header of the epoch at `epochDir`; None when it has none
     * (a pre-header layout, or an attempt that crashed before writing it).
@@ -599,20 +643,29 @@ private[graft] object EpochStore {
     * another format version — or by a build before epoch headers — fails
     * loudly instead of probing a drifted layout.
     */
-  def resolve(spark: SparkSession, path: String, kind: IndexKind): Epoch = {
-    val dir = epochDir(spark, path)
-    val h = readHeader(spark, dir).getOrElse(throw new IllegalArgumentException(
-      s"${kind.name} index at $path has a pre-header on-disk layout (no epoch " +
+  def resolve(spark: SparkSession, path: String, kind: IndexKind): Epoch =
+    resolveAt(spark, path, epochDir(spark, path), kind)
+
+  /** [[resolve]] of the header in `dir` of the store at `path` — an index's
+    * live epoch, or the sized-shard log's `_log_meta`.
+    */
+  def resolveAt(spark: SparkSession, path: String, dir: String, kind: IndexKind): Epoch =
+    findHeader(spark, path, dir, kind).getOrElse(throw new IllegalArgumentException(
+      s"${kind.name} store at $path has a pre-header on-disk layout (no " +
       s"header) but this build reads format version ${kind.formatVersion} — " +
       s"rebuild it with ${kind.rebuildWith}"))
-    require(h.kind == kind.name,
-      s"index at $path is a ${h.kind} index, not a ${kind.name} index")
-    require(h.formatVersion == kind.formatVersion,
-      s"${kind.name} index at $path has on-disk format version ${h.formatVersion} " +
-      s"but this build reads version ${kind.formatVersion} — rebuild it with " +
-      kind.rebuildWith)
-    Epoch(dir, h)
-  }
+
+  /** The checked header in `dir`, or None when it has none. */
+  def findHeader(spark: SparkSession, path: String, dir: String, kind: IndexKind): Option[Epoch] =
+    readHeader(spark, dir).map { h =>
+      require(h.kind == kind.name,
+        s"store at $path is a ${h.kind} store, not a ${kind.name} store")
+      require(h.formatVersion == kind.formatVersion,
+        s"${kind.name} store at $path has on-disk format version ${h.formatVersion} " +
+        s"but this build reads version ${kind.formatVersion} — rebuild it with " +
+        kind.rebuildWith)
+      Epoch(dir, h)
+    }
 
   /** The committed epoch a BUILD supersedes. A path with no pointer, or
     * whose live epoch has no header (a pre-header layout), is hard-reset
@@ -625,7 +678,7 @@ private[graft] object EpochStore {
     cur
   }
 
-  private def schemaOf(ep: Epoch, table: String): StructType =
+  def schemaOf(ep: Epoch, table: String): StructType =
     ep.header.schemas.getOrElse(table, throw new IllegalStateException(
       s"epoch header at ${ep.dir} records no schema for table '$table'"))
 

@@ -1,7 +1,9 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Output side of the pipeline: write a corpus as hash-sharded parquet a
   * downstream training job (or the next pipeline stage) can consume with
@@ -131,7 +133,6 @@ object Sink {
     require(!df.columns.contains("shard"),
       "input already has a 'shard' column — rename it first")
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types._
     val spark = df.sparkSession
     val hashOf = md5(col(idCol).cast("string").cast("binary"))
     val bucketOf = substring(hashOf, 1, bucketHexLen)
@@ -183,15 +184,20 @@ object Sink {
   /** [[writeShards]] at SIZE-balanced layout: shard by
     * [[sizedShardAssignment]] of `weightCol` (≈ `targetWeight` weight per
     * shard directory), one file per shard, id-sorted within. Same
-    * empty-corpus and existing-path guards as [[writeShards]].
+    * empty-corpus and existing-path guards as [[writeShards]]; in-batch
+    * duplicate ids fail before anything is written.
     *
-    * Also writes the log META sidecar (`_log_meta/state` — hidden from
-    * the parquet reader by the `_` prefix): the running weight total, the
-    * read-back column names, and an id bloom over every committed id, so
-    * [[appendSizedShards]] is O(batch) instead of re-scanning the
-    * standing corpus on every append. Meta is written AFTER the data
-    * (build order): a crash between the two leaves a corpus without meta,
-    * which the next append upgrades by one documented O(corpus) rederive.
+    * Also starts the log's METADATA under `_log_meta` (hidden from the
+    * parquet reader by the `_` prefix), in the [[EpochStore]] header
+    * format: a CRC-checked header recording the running weight total, the
+    * log's schema and the id-bloom parameters, and the deflated bloom over
+    * every committed id. So [[appendSizedShards]] is O(batch) instead of
+    * re-scanning the standing corpus, and every store read uses the
+    * recorded schema instead of inferring one. The commit order is bloom,
+    * header, data — the append's order too. The path must be absent
+    * (`overwrite` deletes it first), so data without a header only comes
+    * from an older build or a deletion behind the log's back; append,
+    * compact and delete then fail loudly until the log is rebuilt.
     */
   def writeSizedShards(
       df: DataFrame,
@@ -200,65 +206,87 @@ object Sink {
       weightCol: String,
       targetWeight: Long,
       overwrite: Boolean = false): Unit = {
-    require(!df.isEmpty,
+    val spark = df.sparkSession
+    val fs = EpochStore.hadoopFs(spark, path)
+    require(overwrite || !fs.exists(new HPath(path)),
+      s"writeSizedShards: $path already exists — pass overwrite = true to replace it")
+    // the path is deleted before the data is written: a corpus read from
+    // it would be gone by then
+    val root = fs.makeQualified(new HPath(path)).toUri.toString + "/"
+    require(!overwrite || !df.inputFiles.exists(_.startsWith(root)),
+      s"writeSizedShards: cannot overwrite $path while reading from it — write to a new path")
+    val assigned = sizedShardAssignment(df, idCol, weightCol, targetWeight)
+    val (total, n) = batchTotal(df, idCol, weightCol, "writeSizedShards")
+    require(n > 0L,
       s"writeSizedShards: refusing to write an empty corpus to $path — " +
         "the resulting directory would have no readable schema")
-    sizedShardAssignment(df, idCol, weightCol, targetWeight)
+    if (overwrite) EpochStore.deleteDir(spark, path)
+    val bloom = EpochStore.IdBloom(EpochStore.idBloomItems(n), EpochStore.IdBloomFpp)
+    val schema = StructType(assigned.schema.map(_.copy(nullable = true)))
+    commitLogMeta(spark, path,
+      EpochStore.EpochHeader(LogKind, Map("total" -> total.toString), Nil,
+        Map(LogTable -> schema), Some(bloom)),
+      EpochStore.buildIdBloom(df.select(col(idCol)), idCol, bloom.items, bloom.fpp))
+    writeLogData(assigned, path, idCol)
+  }
+
+  // ---- sized-shard log metadata ----
+  //
+  // <path>/_log_meta holds an EpochStore header (kind sized_log: the
+  // running total as a parameter, the log's schema as table `log`, the
+  // id-bloom parameters) and its idbloom.deflate sidecar, both replaced
+  // atomically on every append. The bloom covers every id ever
+  // committed; it has no false negatives, so zero batch hits PROVES
+  // id-disjointness and a clean append touches NO standing data at all —
+  // the same O(1)-guard discipline as the EpochStore index lifecycles.
+
+  private val LogKind = EpochStore.IndexKind(
+    "sized_log", 1, "Sink.writeSizedShards(…, overwrite = true)")
+  private val LogTable = "log"
+
+  private def metaDir(path: String): String = s"$path/_log_meta"
+
+  /** The log's checked header; a log without one fails loudly. */
+  private def resolveLog(spark: SparkSession, path: String): EpochStore.Epoch =
+    EpochStore.resolveAt(spark, path, metaDir(path), LogKind)
+
+  /** The log's data (or just `dirs` of it), read with the recorded schema. */
+  private def readLog(
+      spark: SparkSession, path: String, log: EpochStore.Epoch,
+      dirs: Seq[String] = Nil): DataFrame =
+    spark.read.schema(EpochStore.schemaOf(log, LogTable)).option("basePath", path)
+      .parquet((if (dirs.isEmpty) Seq(path) else dirs): _*)
+
+  /** Bloom first, then header: a crash between them leaves a superset
+    * bloom beside the old total.
+    */
+  private def commitLogMeta(
+      spark: SparkSession, path: String, h: EpochStore.EpochHeader,
+      bloom: Array[Byte]): Unit = {
+    EpochStore.writeIdBloom(spark, metaDir(path), bloom, replace = true)
+    EpochStore.writeHeader(spark, metaDir(path), h, replace = true)
+  }
+
+  private def writeLogData(assigned: DataFrame, path: String, idCol: String): Unit =
+    assigned
       .repartition(col("shard"))
       .sortWithinPartitions(col("shard"), col(idCol))
-      .write
-      .mode(if (overwrite) "overwrite" else "errorifexists")
-      .partitionBy("shard")
-      .parquet(path)
-    val total = batchWeightTotal(df, weightCol)
-    val items = EpochStore.idBloomItems(df.count())
-    val bloom = EpochStore.buildIdBloom(
-      df.select(col(idCol)), idCol, items, EpochStore.IdBloomFpp)
-    writeLogMeta(df.sparkSession, path, total,
-      df.columns.toSeq :+ "shard", items, EpochStore.IdBloomFpp, bloom)
-  }
+      .write.mode("append").partitionBy("shard").parquet(path)
 
-  // ---- sized-shard log meta sidecar ----
-  //
-  // One parquet row under <path>/_log_meta/state: (total, columns,
-  // expected_items, fpp, bloom). The `_` prefix hides the dir from
-  // spark.read.parquet(path), so readers see only the shard layout. The
-  // bloom covers every id ever committed; it has no false negatives, so
-  // zero batch hits PROVES id-disjointness and a clean append touches NO
-  // standing data at all — the same O(1)-guard discipline as the seven
-  // EpochStore index lifecycles.
-
-  private def logMetaStateDir(path: String): String = s"$path/_log_meta/state"
-
-  private def writeLogMeta(
-      spark: SparkSession, path: String, total: Long, columns: Seq[String],
-      items: Long, fpp: Double, bloom: Array[Byte]): Unit = {
-    import spark.implicits._
-    Seq((total, columns, items, fpp, bloom))
-      .toDF("total", "columns", "expected_items", "fpp", "bloom")
-      .coalesce(1).write.mode("overwrite").parquet(logMetaStateDir(path))
-  }
-
-  /** (total, columns, items, fpp, bloom) of the log meta, or None on a
-    * corpus written before meta existed (or whose meta write crashed) —
-    * the append then falls back to deriving both from the standing data
-    * and upgrades the corpus with a fresh meta.
+  /** A batch's weight total and row count in one job. Duplicate ids fail
+    * here, before any metadata is committed: they have no deterministic
+    * placement (the assignment's own lag tripwire only fires during the
+    * data write).
     */
-  private def readLogMeta(
-      spark: SparkSession, path: String): Option[(Long, Seq[String], Long, Double, Array[Byte])] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = logMetaStateDir(path)
-    if (!EpochStore.hadoopFs(spark, p).exists(new HPath(p))) None
-    else {
-      val r = spark.read.parquet(p).head()
-      Some((r.getLong(0), r.getSeq[String](1), r.getLong(2),
-        r.getDouble(3), r.getAs[Array[Byte]](4)))
-    }
+  private def batchTotal(
+      df: DataFrame, idCol: String, weightCol: String, op: String): (Long, Long) = {
+    val r = df.agg(sum(coalesce(col(weightCol).cast("long"), lit(0L))),
+      count(lit(1)), countDistinct(col(idCol))).head()
+    require(r.getLong(1) == r.getLong(2),
+      s"$op: duplicate ids within the batch have no deterministic placement " +
+        "— deduplicate or re-key first")
+    (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
   }
-
-  private def batchWeightTotal(df: DataFrame, weightCol: String): Long =
-    df.agg(sum(coalesce(col(weightCol).cast("long"), lit(0L))))
-      .collect()(0).getLong(0)
 
   /** Log-APPEND to a [[writeSizedShards]] corpus: the batch continues the
     * standing cumsum exactly — every new row gets `shard =
@@ -272,24 +300,24 @@ object Sink {
     * order is arrival order, which is the point of a log.
     *
     * `checkIds = true` (default) fails loudly on any id collision — an id
-    * appended twice would silently duplicate training data. On a corpus
-    * with log meta the guard is the id BLOOM pre-screen: zero batch hits
-    * proves disjointness (no false negatives) and NO standing data is
-    * touched; only a hit (a true dup or an fpp false positive) pays the
-    * exact semi-join against the standing id column. Pass `false` only
-    * when the caller already guards ids (e.g. the batch went through a
-    * dedup index probe). The running total likewise comes from meta, so a
-    * CLEAN append is O(batch): meta (one row) + batch jobs + data write.
-    * A pre-meta corpus (or one whose meta write crashed) pays one
-    * documented O(corpus) rederive and is upgraded in place.
+    * appended twice would silently duplicate training data. The guard is
+    * the id BLOOM pre-screen: zero batch hits proves disjointness (no
+    * false negatives) and NO standing data is touched; only a hit (a true
+    * dup or an fpp false positive) pays the exact semi-join against the
+    * standing id column. Pass `false` only when the caller already guards
+    * ids (e.g. the batch went through a dedup index probe). The running
+    * total and the schema come from the header, so a CLEAN append is
+    * O(batch): two small metadata reads, batch jobs and the data write.
+    * A log without a header fails loudly ("rebuild it with …").
     *
     * Runs under the single-writer lease (`_log_meta/lease`): appends are
-    * a meta read-modify-write, so two concurrent appenders would both
-    * derive from the same total and overlap. Commit order is META FIRST,
-    * then data — a crash between the two overstates the total (the next
-    * append leaves a shard-number gap, explicitly allowed) and leaves the
-    * bloom a superset (extra exact-join fallbacks, never a missed dup);
-    * the reverse order could under-record committed ids and let a replay
+    * a metadata read-modify-write, so two concurrent appenders would both
+    * derive from the same total and overlap. Commit order is bloom, then
+    * header, then data, each metadata file replaced atomically — a crash
+    * between any two overstates the total (the next append leaves a
+    * shard-number gap, explicitly allowed) and leaves the bloom a
+    * superset (extra exact-join fallbacks, never a missed dup); the
+    * reverse order could under-record committed ids and let a replay
     * double-append silently. Re-running a batch whose data write crashed
     * re-counts its weight (another gap), never duplicates ids — the
     * exact join sees whatever portion committed and fails loudly on it.
@@ -304,82 +332,49 @@ object Sink {
     require(!df.isEmpty,
       s"appendSizedShards: empty batch for $path — nothing to append")
     val spark = df.sparkSession
-    EpochStore.withLease(spark, s"$path/_log_meta") {
-      def failDup(): Nothing = throw new IllegalArgumentException(
-        s"appendSizedShards: batch re-appends ids already in $path — " +
-          "deduplicate the batch (or pass checkIds = false if upstream " +
-          "already guards ids)")
-      def exactClash(standing: DataFrame): Boolean =
-        standing.select(col(idCol))
+    EpochStore.withLease(spark, metaDir(path)) {
+      val log = resolveLog(spark, path)
+      val cols = EpochStore.schemaOf(log, LogTable).fieldNames.toSet
+      require(cols.contains(idCol) && cols.contains(weightCol),
+        s"appendSizedShards: standing corpus at $path lacks " +
+          s"'$idCol'/'$weightCol' — was it written by writeSizedShards?")
+      // the batch must carry EXACTLY the standing payload columns: a
+      // narrower batch would leave files with divergent schemas in one
+      // shard dir, and a later compaction/deletion rewrite would silently
+      // drop the columns its file lacks
+      require(df.columns.toSet == cols - "shard",
+        s"appendSizedShards: batch columns ${df.columns.sorted.mkString(", ")} " +
+          s"differ from the standing log's ${(cols - "shard").toSeq.sorted.mkString(", ")} " +
+          "— a sized-shard log carries ONE schema; align the batch first")
+      val standingBloom = EpochStore.readIdBloom(spark, log)
+      if (checkIds &&
+        !df.where(Decontam.bloomMightContainKey(
+          standingBloom, col(idCol).cast("string"))).isEmpty &&
+        readLog(spark, path, log).select(col(idCol))
           .join(df.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
-          .limit(1).count() > 0L
-      val (standingTotal, items, fpp, standingBloom) = readLogMeta(spark, path) match {
-        case Some((total, cols, items, fpp, bloom)) =>
-          require(cols.contains(idCol) && cols.contains(weightCol),
-            s"appendSizedShards: standing corpus at $path lacks " +
-              s"'$idCol'/'$weightCol' — was it written by writeSizedShards?")
-          // the batch must carry EXACTLY the standing payload columns: a
-          // narrower batch would leave files with divergent schemas in
-          // one shard dir, and a later compaction/deletion rewrite (or
-          // any single-footer reader) would silently drop the columns
-          // its sampled file lacks
-          require(df.columns.toSet == cols.toSet - "shard",
-            s"appendSizedShards: batch columns ${df.columns.sorted.mkString(", ")} " +
-              s"differ from the standing log's ${(cols.toSet - "shard").toSeq.sorted.mkString(", ")} " +
-              "— a sized-shard log carries ONE schema; align the batch first")
-          if (checkIds) {
-            val hit = !df.where(Decontam.bloomMightContainKey(
-              bloom, col(idCol).cast("string"))).isEmpty
-            if (hit && exactClash(spark.read.parquet(path))) failDup()
-          }
-          (total, items, fpp, bloom)
-        case None =>
-          // pre-meta corpus (or crashed meta write): ONE O(corpus)
-          // rederive of total + bloom from the standing data, after which
-          // this corpus appends O(batch) like a fresh one
-          val standing = spark.read.parquet(path)
-          require(standing.columns.contains(idCol) &&
-            standing.columns.contains(weightCol),
-            s"appendSizedShards: standing corpus at $path lacks " +
-              s"'$idCol'/'$weightCol' — was it written by writeSizedShards?")
-          require(df.columns.toSet == standing.columns.toSet - "shard",
-            s"appendSizedShards: batch columns ${df.columns.sorted.mkString(", ")} " +
-              s"differ from the standing log's " +
-              s"${(standing.columns.toSet - "shard").toSeq.sorted.mkString(", ")} " +
-              "— a sized-shard log carries ONE schema; align the batch first")
-          if (checkIds && exactClash(standing)) failDup()
-          val ids = standing.select(col(idCol))
-          val items = EpochStore.idBloomItems(ids.count())
-          (batchWeightTotal(standing, weightCol), items,
-            EpochStore.IdBloomFpp,
-            EpochStore.buildIdBloom(ids, idCol, items, EpochStore.IdBloomFpp))
-      }
+          .limit(1).count() > 0L)
+        throw new IllegalArgumentException(
+          s"appendSizedShards: batch re-appends ids already in $path — " +
+            "deduplicate the batch (or pass checkIds = false if upstream " +
+            "already guards ids)")
       // assignment FIRST: its eager phase-0 collect validates null ids
-      // and negative weights, so an invalid batch fails before the meta
-      // commit below records anything durable. In-batch duplicate ids get
-      // the same pre-meta treatment (the assignment's own lag tripwire
-      // only fires during the data write, which is post-meta).
+      // and negative weights, so an invalid batch fails before the
+      // metadata commit below records anything durable
       val assigned = sizedShardAssignment(df, idCol, weightCol, targetWeight,
-        baseOffset = standingTotal)
-      val batchIds = df.select(col(idCol))
-      require(batchIds.count() == batchIds.distinct().count(),
-        s"appendSizedShards: duplicate ids within the batch have no " +
-          "deterministic placement — deduplicate or re-key first")
-      val mergedBloom = EpochStore.mergeIdBlooms(standingBloom,
-        EpochStore.buildIdBloom(batchIds, idCol, items, fpp))
-      writeLogMeta(spark, path,
-        standingTotal + batchWeightTotal(df, weightCol),
-        df.columns.toSeq :+ "shard", items, fpp, mergedBloom)
-      assigned
-        .repartition(col("shard"))
-        .sortWithinPartitions(col("shard"), col(idCol))
-        .write.mode("append").partitionBy("shard").parquet(path)
+        baseOffset = log.header.long("total"))
+      val (total, _) = batchTotal(df, idCol, weightCol, "appendSizedShards")
+      val b = log.header.bloom.get
+      commitLogMeta(spark, path,
+        log.header.copy(params = Map("total" -> (log.header.long("total") + total).toString)),
+        EpochStore.mergeIdBlooms(standingBloom,
+          EpochStore.buildIdBloom(df.select(col(idCol)), idCol, b.items, b.fpp)))
+      writeLogData(assigned, path, idCol)
     }
   }
 
   /** Integrity AUDIT of a [[writeSizedShards]]/[[appendSizedShards]] log:
     * recompute what the standing data actually holds and reconcile it
-    * against the `_log_meta` sidecar and the log's own invariants. At
+    * against the `_log_meta` header and the log's own invariants. At
     * 100 TB a corpus store accretes through many appends, streams, and
     * the occasional crash — this is the "fsck" that tells a training
     * job the store is still sound before an epoch reads it. One narrow
@@ -394,14 +389,16 @@ object Sink {
     *    = distinct duplicated ids; measured = surplus rows.
     *  - `null_ids` / `negative_weights` — rows the assignment would have
     *    rejected; their presence means files were written around the log.
-    *  - `meta_missing` — 1 when the `_log_meta` sidecar is absent (a
-    *    pre-meta corpus or a crashed meta write; the next append upgrades
-    *    it — informational, not corruption).
+    *  - `meta_missing` — 1 when the log has no `_log_meta/header`: it
+    *    was written by an older build, or its metadata was deleted behind
+    *    its back. The audit then infers the schema from the data and
+    *    skips `meta_total` and `bloom_misses`; append, compact and delete
+    *    refuse such a log until it is rebuilt with writeSizedShards.
     *  - `meta_total` — violations = max(0, data total − meta total).
-    *    The commit order is meta FIRST, so the meta total may exceed the
-    *    data total (a crash gap, allowed and not counted); DATA exceeding
-    *    META is impossible through the API and means a behind-the-back
-    *    write. measured = the data total.
+    *    The commit order is metadata FIRST, so the meta total may exceed
+    *    the data total (a crash gap, allowed and not counted); DATA
+    *    exceeding META is impossible through the API and means a
+    *    behind-the-back write. measured = the data total.
     *  - `bloom_misses` (`bloomCheck = true` and meta present) — standing
     *    ids the meta id-bloom says were NEVER committed. The bloom has no
     *    false negatives over ids committed through the API, so every miss
@@ -430,17 +427,16 @@ object Sink {
       idCol: String,
       weightCol: String,
       bloomCheck: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.types._
-    val meta = readLogMeta(spark, path)
-    val standing = spark.read.parquet(path)
+    val meta = EpochStore.findHeader(spark, path, metaDir(path), LogKind)
+    val standing = meta.fold(spark.read.parquet(path))(readLog(spark, path, _))
       .select(col(idCol).as("__id"),
         coalesce(col(weightCol).cast("long"), lit(0L)).as("__w"),
         col(weightCol).cast("long").as("__wraw"))
-    val bloomMiss: Option[Column] = meta.collect {
-      case (_, _, _, _, bloom) if bloomCheck =>
-        coalesce(sum(when(col("__id").isNotNull &&
-          !Decontam.bloomMightContainKey(bloom, col("__id").cast("string")),
-          1L).otherwise(0L)), lit(0L))
+    val bloomMiss: Option[Column] = meta.filter(_ => bloomCheck).map { log =>
+      coalesce(sum(when(col("__id").isNotNull &&
+        !Decontam.bloomMightContainKey(EpochStore.readIdBloom(spark, log),
+          col("__id").cast("string")),
+        1L).otherwise(0L)), lit(0L))
     }
     val baseAggs = Seq(
       count(lit(1)).as("rows"),
@@ -459,14 +455,15 @@ object Sink {
       .agg(count(lit(1)).as("dups"), sum(col("__c") - 1L).as("surplus"))
       .head()
     val journalPending = EpochStore.hadoopFs(spark, path).exists(
-      new org.apache.hadoop.fs.Path(compactJournalFile(path)))
+      new HPath(compactJournalFile(path)))
     val report = Seq(
       ("dup_ids", d.getLong(0), if (d.isNullAt(1)) 0L else d.getLong(1)),
       ("journal_pending", if (journalPending) 1L else 0L, 0L),
       ("meta_missing", if (meta.isEmpty) 1L else 0L, 0L),
       ("negative_weights", a.getLong(3), a.getLong(3)),
       ("null_ids", a.getLong(2), a.getLong(2))) ++
-      meta.map { case (total, _, _, _, _) =>
+      meta.map { log =>
+        val total = log.header.long("total")
         ("meta_total", math.max(0L, dataTotal - total), dataTotal)
       } ++
       bloomMiss.map(_ => ("bloom_misses", a.getLong(4), rows))
@@ -490,13 +487,12 @@ object Sink {
   // commits through a journal so a crash at any point converges on
   // re-run without ever losing a row.
 
-  private def compactDir(path: String): String = s"$path/_log_meta/compact"
+  private def compactDir(path: String): String = s"${metaDir(path)}/compact"
   private def compactJournalFile(path: String): String =
     s"${compactDir(path)}/journal"
 
   private def listDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+      fs: org.apache.hadoop.fs.FileSystem, dir: HPath): Seq[HPath] =
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq
       .filter(s => s.isFile && {
@@ -525,7 +521,6 @@ object Sink {
     */
   private def applyCompactionJournal(
       spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = EpochStore.hadoopFs(spark, path)
     val journal = new HPath(compactJournalFile(path))
     if (!fs.exists(journal)) return
@@ -569,8 +564,8 @@ object Sink {
     * [[deleteFromSizedShards]]: for each named shard dir, journal every
     * staged file under `_log_meta/compact/data/<dir>` as a move into the
     * live dir plus every current live data file as a delete, write the
-    * journal WHOLE to a tmp name, atomically rename it into place (a
-    * half-written journal can never be replayed), then replay it. The
+    * journal atomically ([[EpochStore.writeFile]] — a half-written
+    * journal can never be replayed), then replay it. The
     * caller stages first; `requireStaged` guards the compaction case
     * where an affected dir with nothing staged would mean a lost write.
     */
@@ -579,7 +574,6 @@ object Sink {
       path: String,
       shardDirNames: Seq[String],
       requireStaged: Boolean): Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
     val fs = EpochStore.hadoopFs(spark, path)
     val stagingData = s"${compactDir(path)}/data"
     val entries = shardDirNames.flatMap { dn =>
@@ -591,16 +585,8 @@ object Sink {
       staged.map(s => s"mv\t$s\t$shardDir/${s.getName}") ++
         listDataFiles(fs, shardDir).map(f => s"del\t$f")
     }
-    val tmp = new HPath(s"${compactDir(path)}/journal_tmp")
-    val out = fs.create(tmp, true)
-    try out.write((entries.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    FileContext.getFileContext(
-      fs.makeQualified(new HPath(path)).toUri,
-      spark.sparkContext.hadoopConfiguration)
-      .rename(fs.makeQualified(tmp),
-        fs.makeQualified(new HPath(compactJournalFile(path))),
-        Options.Rename.OVERWRITE)
+    EpochStore.writeFile(spark, new HPath(compactJournalFile(path)),
+      (entries.mkString("\n") + "\n").getBytes("UTF-8"), replace = true)
     applyCompactionJournal(spark, path)
   }
 
@@ -648,9 +634,8 @@ object Sink {
     require(maxFilesPerShard >= 1,
       s"maxFilesPerShard must be >= 1, got $maxFilesPerShard")
     requireJournalSafePath(path)
-    import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.spark.sql.types._
-    EpochStore.withLease(spark, s"$path/_log_meta") {
+    EpochStore.withLease(spark, metaDir(path)) {
+      val log = resolveLog(spark, path)
       // converge any crashed earlier compaction before measuring
       applyCompactionJournal(spark, path)
       val fs = EpochStore.hadoopFs(spark, path)
@@ -667,13 +652,7 @@ object Sink {
       if (dirty.nonEmpty) {
         val stagingData = s"${compactDir(path)}/data"
         EpochStore.deleteDir(spark, stagingData)
-        // mergeSchema: files within a shard can carry different payload
-        // columns across appends — a single-footer read would silently
-        // drop the columns the sampled file lacks from every rewritten
-        // row (appendSizedShards also guards this at write time; the
-        // merge covers logs written before that guard)
-        spark.read.option("basePath", path).option("mergeSchema", "true")
-          .parquet(dirty.map(_.toString): _*)
+        readLog(spark, path, log, dirty.map(_.toString))
           .repartition(col("shard"))
           .sortWithinPartitions(col("shard"), col(idCol))
           .write.mode("overwrite").partitionBy("shard").parquet(stagingData)
@@ -736,7 +715,6 @@ object Sink {
       idCol: String,
       ids: DataFrame): DataFrame = {
     requireJournalSafePath(path)
-    import org.apache.spark.sql.types._
     val reportSchema = StructType(Seq(
       StructField("shard", LongType, nullable = false),
       StructField("rows_before", LongType, nullable = false),
@@ -745,14 +723,15 @@ object Sink {
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows.map(t =>
           org.apache.spark.sql.Row(t._1, t._2, t._3)), 1), reportSchema)
-    EpochStore.withLease(spark, s"$path/_log_meta") {
+    EpochStore.withLease(spark, metaDir(path)) {
+      val log = resolveLog(spark, path)
       applyCompactionJournal(spark, path)
       val doomed = ids.select(col(idCol)).where(col(idCol).isNotNull)
         .distinct()
       // ONE narrow (id, shard) detection scan marks doomed rows and
       // counts both totals per shard (the doomed set is a maintenance
       // batch — AQE broadcasts it when small)
-      val standing = spark.read.parquet(path)
+      val standing = readLog(spark, path, log)
       require(standing.columns.contains(idCol),
         s"deleteFromSizedShards: standing corpus at $path lacks '$idCol'")
       val counts = standing.select(col(idCol), col("shard").cast("long"))
@@ -763,27 +742,24 @@ object Sink {
         .where(col("__d") > 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       if (counts.isEmpty) report(Seq.empty)
-      else deleteAffected(spark, path, idCol, doomed, counts, report)
+      else deleteAffected(spark, path, log, idCol, doomed, counts, report)
     }
   }
 
   private def deleteAffected(
       spark: SparkSession,
       path: String,
+      log: EpochStore.Epoch,
       idCol: String,
       doomed: DataFrame,
       counts: Array[(Long, Long, Long)],
       report: Seq[(Long, Long, Long)] => DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = EpochStore.hadoopFs(spark, path)
     val affected = counts.map(_._1).toSeq.sorted
     val dirs = affected.map(sh => s"$path/shard=$sh")
     val stagingData = s"${compactDir(path)}/data"
     EpochStore.deleteDir(spark, stagingData)
-    // mergeSchema: same cross-append column-drift guard as compaction
-    val survivors = spark.read.option("basePath", path)
-      .option("mergeSchema", "true")
-      .parquet(dirs: _*)
+    val survivors = readLog(spark, path, log, dirs)
       .join(doomed, Seq(idCol), "left_anti")
     // a delete can empty every affected shard — then there is nothing
     // to stage and the journal is pure deletion
@@ -794,20 +770,19 @@ object Sink {
         .write.mode("overwrite").partitionBy("shard").parquet(stagingData)
     swapStagedShards(spark, path, affected.map(sh => s"shard=$sh"),
       requireStaged = false)
-    // TOTAL takedown: if no data file remains in ANY shard, the log
-    // would become schema-less (spark.read could no longer infer it and
-    // every consumer — including the fsck — would fail). Seed ONE empty
-    // file carrying the payload schema into the first affected dir so a
+    // TOTAL takedown: if no data file remains in ANY shard, a plain
+    // spark.read.parquet of the log could no longer infer its schema and
+    // every consumer outside the store would fail. Seed ONE empty file
+    // carrying the payload schema into the first affected dir so a
     // legal-but-empty log stays readable.
     val anyData = fs.listStatus(new HPath(path)).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("shard="))
       .exists(d => listDataFiles(fs, d.getPath).nonEmpty)
     if (!anyData) {
-      val seedTmp = s"$path/_log_meta/seed_tmp"
+      val seedTmp = s"${metaDir(path)}/seed_tmp"
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          survivors.schema.filterNot(_.name == "shard")))
+        StructType(survivors.schema.filterNot(_.name == "shard")))
         .coalesce(1).write.mode("overwrite").parquet(seedTmp)
       listDataFiles(fs, new HPath(seedTmp)).headOption.foreach { f =>
         fs.rename(f, new HPath(s"$path/shard=${affected.head}/${f.getName}"))

@@ -1921,39 +1921,89 @@ class OpsSpec extends SparkSpec {
     assert(e2.getMessage.contains("duplicate ids within the batch"))
   }
 
-  test("appendSizedShards: pre-meta corpus upgrades in place") {
+  test("appendSizedShards: a headerless log fails loudly; verify reports meta_missing") {
     val st = struct("id" -> LongType, "w" -> LongType)
     val a = frame(st, (1L to 20L).map(i => Row(i, 7L)): _*)
     val b = frame(st, (21L to 30L).map(i => Row(i, 9L)): _*)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sizedpre").toString + "/corpus"
     Sink.writeSizedShards(a, dir, "id", "w", targetWeight = 50L)
-    // simulate a pre-meta corpus (or a crashed meta write)
+    // a log written by an older build, or whose metadata was deleted
+    // behind its back: data but no header
     def rmrf(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rmrf)
       f.delete(); ()
     }
     rmrf(new java.io.File(dir, "_log_meta"))
-    // the append pays the documented O(corpus) rederive — and must land
-    // on the SAME layout as the meta'd path (baseOffset 140 from data)
-    Sink.appendSizedShards(b, dir, "id", "w", targetWeight = 50L)
-    assert(new java.io.File(dir, "_log_meta/state").exists())
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def hex(i: Long) =
-      md.digest(i.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    var cum = 140L
-    val expectB = (21L to 30L).map(i => i -> 9L)
-      .sortBy { case (i, _) => (hex(i), i) }
-      .map { case (i, w) => val s = cum / 50L; cum += w; i -> s }.toMap
-    val after = spark.read.parquet(dir)
-      .select(col("id"), col("shard").cast("long")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    expectB.foreach { case (i, s) => assert(after(i) == s) }
-    // replay guard works on the upgraded corpus too (now through meta)
-    val e = intercept[IllegalArgumentException] {
-      Sink.appendSizedShards(b.limit(1), dir, "id", "w", 50L)
+    Seq[() => Any](
+      () => Sink.appendSizedShards(b, dir, "id", "w", targetWeight = 50L),
+      () => Sink.compactSizedShards(spark, dir, "id"),
+      () => Sink.deleteFromSizedShards(spark, dir, "id", a.select("id"))).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("rebuild it with Sink.writeSizedShards"), e.getMessage)
     }
-    assert(e.getMessage.contains("re-appends"))
+    assert(spark.read.parquet(dir).count() == 20L)
+    // the audit still reads it (schema inferred) and flags the missing
+    // metadata; the checks that need it are left out
+    val audit = Sink.verifySizedLog(spark, dir, "id", "w")
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(audit("meta_missing") == (1L, 0L) && audit("dup_ids") == (0L, 0L) &&
+      !audit.contains("meta_total") && !audit.contains("bloom_misses"), audit.toString)
+    // writing over the path without overwrite is refused; a rebuild
+    // restores an appendable log
+    val e = intercept[IllegalArgumentException](
+      Sink.writeSizedShards(a, dir, "id", "w", targetWeight = 50L))
+    assert(e.getMessage.contains("already exists"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](Sink.writeSizedShards(
+      spark.read.parquet(dir).drop("shard"), dir, "id", "w", targetWeight = 50L, overwrite = true))
+    assert(e2.getMessage.contains("while reading from it"), e2.getMessage)
+    assert(spark.read.parquet(dir).count() == 20L)
+    Sink.writeSizedShards(a, dir, "id", "w", targetWeight = 50L, overwrite = true)
+    Sink.appendSizedShards(b, dir, "id", "w", targetWeight = 50L)
+    assert(spark.read.parquet(dir).count() == 30L)
+  }
+
+  test("appendSizedShards: a clean append launches no schema-inference or metadata job") {
+    val st = struct("id" -> LongType, "w" -> LongType)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_sizedjobs").toString + "/corpus"
+    Sink.writeSizedShards(frame(st, (1L to 20L).map(i => Row(i, 7L)): _*),
+      dir, "id", "w", targetWeight = 50L)
+    val b = frame(st, (21L to 30L).map(i => Row(i, 9L)): _*)
+    val (_, jobs) = JobCount.of(spark)(Sink.appendSizedShards(b, dir, "id", "w", 50L))
+    // the batch's own jobs only (AQE runs each shuffle stage as a job of
+    // its own): empty check, bloom probe, assignment sums, total and
+    // duplicate check, the delta bloom and the data write. The header and
+    // bloom are read and replaced through the FS, and no read infers a
+    // schema.
+    assert(jobs <= 14, s"a clean sized-shard append launched $jobs jobs")
+  }
+
+  test("appendSizedShards: an interrupted metadata replace leaves the log appendable") {
+    val st = struct("id" -> LongType, "w" -> LongType)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_sizedtmp").toString + "/corpus"
+    Sink.writeSizedShards(frame(st, (1L to 20L).map(i => Row(i, 7L)): _*),
+      dir, "id", "w", targetWeight = 50L)                           // 140
+    // the debris a crash mid-replace leaves: partial tmp copies of the
+    // header and the bloom beside the committed ones
+    val meta = new java.io.File(dir, "_log_meta")
+    Seq(EpochStore.HeaderFileName, EpochStore.IdBloomFileName).foreach { n =>
+      val whole = java.nio.file.Files.readAllBytes(new java.io.File(meta, n).toPath)
+      java.nio.file.Files.write(new java.io.File(meta, s"${n}_tmp").toPath,
+        whole.take(whole.length / 2))
+    }
+    Sink.appendSizedShards(frame(st, (21L to 30L).map(i => Row(i, 9L)): _*),
+      dir, "id", "w", targetWeight = 50L)                           // +90
+    def audit() = Sink.verifySizedLog(spark, dir, "id", "w")
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val a1 = audit()
+    assert(a1("meta_total") == (0L, 230L) && a1("bloom_misses") == (0L, 30L) &&
+      a1("meta_missing") == (0L, 0L), a1.toString)
+    Sink.compactSizedShards(spark, dir, "id")
+    Sink.appendSizedShards(frame(st, Row(31L, 5L)), dir, "id", "w", targetWeight = 50L)
+    assert(audit()("meta_total") == (0L, 235L))
+    assert(spark.read.parquet(dir).count() == 31L)
   }
 
   test("verifySizedLog: clean log zeroes; planted dup and behind-the-back write caught") {
@@ -3313,36 +3363,70 @@ class OpsSpec extends SparkSpec {
   }
 
   test("a truncated or CRC-mismatched epoch header fails loudly on probe and append") {
+    type HPath = org.apache.hadoop.fs.Path
     val idx = java.nio.file.Files.createTempDirectory("graft-hdr-corrupt").toString
     val corpus = docs(1L -> "alpha beta", 2L -> "beta gamma")
     TextOps.writeTokenFrequencyIndex(corpus, "doc_id", "text", idx)
     val fs = EpochStore.hadoopFs(spark, idx)
-    val hp = new org.apache.hadoop.fs.Path(EpochStore.epochDir(spark, idx),
-      EpochStore.HeaderFileName)
-    val good = { val in = fs.open(hp); try in.readAllBytes() finally in.close() }
-    // written through the FS API, so only the header's own checks can object
-    def put(bytes: Array[Byte]): Unit = {
-      val out = fs.create(hp, true)
+    def read(p: HPath) = { val in = fs.open(p); try in.readAllBytes() finally in.close() }
+    // written through the FS API, so only the file's own checks can object
+    def write(p: HPath, bytes: Array[Byte]): Unit = {
+      val out = fs.create(p, true)
       try out.write(bytes) finally out.close()
+    }
+    def flip(b: Array[Byte], i: Int) = { val c = b.clone(); c(i) = (c(i) ^ 0x01).toByte; c }
+    val headerDamage = (ok: Array[Byte]) => Seq(ok.dropRight(7) -> "truncated",
+      flip(ok, ok.length - 3) -> "CRC32 mismatch", Array.emptyByteArray -> "no header line")
+    val bloomDamage = (ok: Array[Byte]) =>
+      Seq(ok.dropRight(7) -> "id bloom", flip(ok, ok.length / 2) -> "id bloom")
+    /** Each op fails loudly, naming the damage, while `p` holds each
+      * damaged copy of itself; `p` is restored afterwards.
+      */
+    def refused(p: HPath, damage: Array[Byte] => Seq[(Array[Byte], String)])(
+        ops: (() => Any)*): Unit = {
+      val ok = read(p)
+      damage(ok).foreach { case (bad, why) =>
+        write(p, bad)
+        ops.foreach { op =>
+          val e = intercept[IllegalStateException](op())
+          assert(e.getMessage.contains("corrupt") && e.getMessage.contains(why), e.getMessage)
+        }
+      }
+      write(p, ok)
     }
     val batch = docs(3L -> "gamma delta")
     def probe() = TextOps.frequencyScoreAgainstIndex(batch, "doc_id", "text", idx).collect()
-    def append() = TextOps.appendTokenFrequencyIndex(batch, "doc_id", "text", idx)
-    val flipped = good.clone()
-    flipped(flipped.length - 3) = (flipped(flipped.length - 3) ^ 0x01).toByte
-    Seq(good.dropRight(7) -> "truncated", flipped -> "CRC32 mismatch",
-      Array.emptyByteArray -> "no header line").foreach { case (bad, why) =>
-      put(bad)
-      Seq[() => Any](() => probe(), () => append()).foreach { op =>
-        val e = intercept[IllegalStateException](op())
-        assert(e.getMessage.contains("corrupt") && e.getMessage.contains(why), e.getMessage)
-      }
-    }
+    def append(b: org.apache.spark.sql.DataFrame = batch) =
+      TextOps.appendTokenFrequencyIndex(b, "doc_id", "text", idx)
+    def live(file: String) = new HPath(EpochStore.epochDir(spark, idx), file)
+    refused(live(EpochStore.HeaderFileName), headerDamage)(() => probe(), () => append())
     assert(EpochStore.currentEpoch(spark, idx).contains("epoch-000000001"),
       "a refused append must not commit")
-    put(good)
     append()
     assert(probe().length == 1)
+    // a bloomed index's id-bloom sidecar
+    refused(live(EpochStore.IdBloomFileName), bloomDamage)(() => append(docs(4L -> "delta eps")))
+    assert(EpochStore.currentEpoch(spark, idx).contains("epoch-000000002"))
+    // a manifest entry whose data dir is gone
+    val tfDir = new java.io.File(s"$idx/data/tf-000000001")
+    val moved = new java.io.File(s"$idx/tf-moved")
+    assert(tfDir.renameTo(moved))
+    val missing = intercept[Exception](probe())
+    assert(missing.getMessage.contains("tf-000000001"), missing.getMessage)
+    assert(moved.renameTo(tfDir))
+    assert(probe().length == 1)
+    // the sized-shard log's header and bloom
+    val st = struct("id" -> LongType, "w" -> LongType)
+    val log = s"$idx-log"
+    Sink.writeSizedShards(frame(st, (1L to 20L).map(i => Row(i, 7L)): _*), log, "id", "w", 50L)
+    def logAppend() =
+      Sink.appendSizedShards(frame(st, (21L to 25L).map(i => Row(i, 9L)): _*), log, "id", "w", 50L)
+    refused(new HPath(s"$log/_log_meta", EpochStore.HeaderFileName), headerDamage)(
+      () => logAppend(), () => Sink.verifySizedLog(spark, log, "id", "w"))
+    refused(new HPath(s"$log/_log_meta", EpochStore.IdBloomFileName), bloomDamage)(
+      () => logAppend())
+    logAppend()
+    assert(spark.read.parquet(log).count() == 25L)
   }
 
   test("epoch metadata costs no Spark jobs; a clean paragraph append stays within 6") {
