@@ -1,16 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Sessions.config.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY=q43_ann_ivf,q42_ngram_jaccard → time just those
+    // (a local iteration aid; unset, every query runs)
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val queryMap = SparkEntry.selected(only)
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Warm the JVM (codegen, shuffle machinery, parquet footers) outside the
     // timed region so q01 doesn't absorb session startup.
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -19,7 +16,7 @@ object Bench {
     // A query that throws must fail the bench visibly — swallowing it would
     // record a broken query as a fast one.
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
         case e: Throwable =>
@@ -32,14 +29,6 @@ object Bench {
     // run-to-run variance and a single sample can triple a heavy query's
     // number; a second sample for anything over 1 s bounds the noise at
     // ~40 s extra wall time while leaving the sub-second majority alone.
-    // SPARK_GRAFT_ONLY=q43_ann_ivf,q42_ngram_jaccard → time just those
-    // (local iteration aid; the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queryMap = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
     // Load-aware record (round 15): two rounds running, the official
     // BENCH json was captured under heavy ambient load and showed
     // heavies 4-13x their settled envelopes. (a) stamp /proc/loadavg
@@ -130,10 +119,7 @@ object Bench {
     val toptake: Option[(Int, Double, Double)] =
       if (only.nonEmpty) None
       else try {
-        import org.apache.spark.sql.functions.col
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .withColumn("n_tok",
-            ops.TextOps.tokenCount(col("text")).cast("long"))
+        val docs = SparkEntry.tokenCounted(Tables(spark, sfDir, "documents"))
         val (_, stats) = ops.Sampling.takeTopFractionWithStats(
           docs, "source", "doc_id", "n_tok", 0.25, nBuckets = 8)
         Some((stats.size,
@@ -147,12 +133,10 @@ object Bench {
       s""","toptake":{"strata":$n,"max_tie_share":$tie,"max_boundary_share":$bnd}"""
     }.getOrElse("")
     // Full-precision record (long names + phase breakdown) goes to a FILE;
-    // stdout gets a COMPACT single line as the very last output. The
-    // consumer records only the last 2000 characters of stdout, so the
-    // final line must fit entirely inside that window with every query
-    // present — short qNN keys and centisecond precision keep ~125 queries
-    // near 1.6 kB (full-length names with nanosecond doubles passed 5 kB
-    // and could never parse from the tail).
+    // stdout gets two compact lines, the summary last. The consumer
+    // records only the last 2000 characters of stdout and parses the
+    // final line, so no keyed per-query map is printed: at 194 queries
+    // one passes 2000 chars and clips its own head.
     val gateFull = gate64.map(g => s""""gate64":$g,""").getOrElse("")
     val loadJson =
       s""","load":{"before":$loadBefore,"after":$loadAfter}""" +
@@ -164,27 +148,20 @@ object Bench {
            .mkString(""","loaded":[""", ",", "]"))
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec",$gateFull"queries":$qs$breakdownJson$failedJson$toptakeJson$loadJson,"sf":"$sfDir"}"""
-    val fullPath = s"/tmp/graft_bench_full_${new java.io.File(sfDir).getName}.json"
+    val fullPath = SparkEntry.scratchDir("bench_full", sfDir) + ".json"
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), fullJson)
     catch { case e: Throwable => System.err.println(s"bench: full JSON write failed: $e") }
     System.err.println(s"bench: full-precision JSON at $fullPath")
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", v)
+    // short qNN keys are unique: InventorySpec pins one query per number
     def short(name: String): String = name.split("_")(0)
-    // the qNN compaction assumes one query per number — fail loudly if a
-    // second query ever lands under an existing number (duplicate JSON
-    // keys would silently drop a timing at the parser)
-    require(results.keys.map(short).toSet.size == results.size,
-      "compact bench keys collide: two queries share a qNN prefix")
-    val qsCompact = results
-      .map { case (k, v) => "\"" + short(k) + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    // failures compact to deduplicated qNN prefixes for the same reason
-    // the timings do: full names could push the line past the consumer's
-    // tail window exactly when it carries failure information (full names
-    // are already on stderr, one line per failure). Breakdown-PHASE
-    // failures keep their full name ("q97_build") — compacting them to
-    // the parent's qNN would make a failed phase indistinguishable from a
-    // failed query, and phase names are already qNN-short.
+    // failures compact to deduplicated qNN prefixes: full names could
+    // push the line past the consumer's tail window exactly when it
+    // carries failure information (full names are already on stderr, one
+    // line per failure). Breakdown-PHASE failures keep their full name
+    // ("q97_build") — compacting them to the parent's qNN would make a
+    // failed phase indistinguishable from a failed query, and phase names
+    // are already qNN-short.
     val phaseNames = SparkEntry.benchBreakdown.map(_._2).toSet
     val failedCompact =
       if (failed.isEmpty) ""
@@ -205,29 +182,22 @@ object Bench {
         (if (loadedNames.isEmpty) ""
          else loadedNames.map(n => "\"" + short(n) + "\"").distinct
            .mkString(""","loaded":[""", ",", "]"))
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$gateCompact"queries":$qsCompact$failedCompact$toptakeCompact$loadCompact,"sf":"${new java.io.File(sfDir).getName}"}""")
     // Per-query seconds as a VALUES-ONLY array in ascending-qNN order —
     // the only per-query encoding that fits a 194-query sweep inside the
     // consumer's 2000-char stdout tail (a keyed map costs ~12 chars per
-    // query ≈ 2.3 kB and clips its own head, which is exactly why the
-    // round-14/15 per-query PERF comparison came back empty). ~5 chars
-    // per query ≈ 1.1 kB leaves this line AND the final summary line
-    // complete inside the window; position i pairs with the i-th query
-    // number in ascending order (names are stable across rounds, and the
-    // full keyed map is two lines up plus in the /tmp full-precision
-    // record).
+    // query ≈ 2.3 kB and clips its own head). ~5 chars per query ≈ 1.1 kB
+    // leaves this line AND the final summary line complete inside the
+    // window; position i pairs with the i-th query number in ascending
+    // order (names are stable across rounds, and the full keyed map is in
+    // the /tmp full-precision record).
     val byNumber = results.toSeq.sortBy { case (k, _) =>
       k.split("_")(0).drop(1).toIntOption.getOrElse(Int.MaxValue)
     }
     println(s"""{"metric":"queries_by_number","unit":"sec","order":"ascending qNN","n":${byNumber.size},"t":[${byNumber.map(p => fmt(p._2)).mkString(",")}]}""")
-    // The consumer keeps only the last 2000 chars of stdout and parses a
-    // complete JSON line out of that window. At 169 queries even the
-    // compact per-query line passes 2000 chars and loses its HEAD
-    // (metric/value/gate64) to the clip — round 12's record came back
-    // "parsed": null. So the VERY LAST line is a fixed-size summary with
-    // NO per-query map: total + gate64 + telemetry + the 8 slowest
-    // queries (bounded, ~300 chars at any query count). Per-query data
-    // lives in the compact line above and the full-precision /tmp file.
+    // The VERY LAST line is a fixed-size summary with NO per-query map:
+    // total + gate64 + telemetry + the 8 slowest queries (bounded, ~300
+    // chars at any query count). Per-query data lives in the values line
+    // above and the full-precision /tmp file.
     val slowest = results.toSeq.sortBy(-_._2).take(8)
       .map { case (k, v) => "\"" + short(k) + "\":" + fmt(v) }
       .mkString("{", ",", "}")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal corpus generator: replicate a driver testdata dir
@@ -32,14 +32,7 @@ object GenScale {
     val Array(inDir, outDir, factorStr) = args
     val factor = factorStr.toInt
     require(factor >= 2, s"factor must be >= 2, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Sessions.config.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def read(name: String) = spark.read.parquet(s"$inDir/$name.parquet")
     def write(df: DataFrame, name: String, parts: Int): Unit =

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** The plan-dump tool: `.explain("formatted")` of named queries, checked
   * into the repo so a reviewer can read plans without running Spark.
   *
@@ -122,12 +120,7 @@ object Plans {
     * one local session.
     */
   private def explain(sfDir: String, names: Seq[String])(emit: (String, String) => Unit): Unit = {
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-    Sessions.config.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     try names.foreach { n =>
       emit(n, SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(

@@ -33,78 +33,19 @@ object SparkEntry {
   private def rel(s: SparkSession, dir: String, name: String): Relation =
     Relation(Tables(s, dir, name))
 
-  /** q62 materializes its Spark-extracted feature vectors here so the
-    * DuckDB oracle can rank the SAME vectors (feature extraction itself
-    * is not SQL-expressible). Absolute path: the oracle runs in a separate
-    * process with its own cwd. SUFFIXED with the sf-dir basename so a
-    * bench run at sf0.1 cannot overwrite the features a correctness
-    * compare at sf0.01 is about to read — the static oracle SQL names the
-    * sf0.01 dir, the scale the driver runs correctness at (a Verify at
-    * any other sf fails the q62 compare VISIBLY instead of silently
-    * ranking another run's vectors).
+  /** A query's scratch dir, `/tmp/graft_<tag>_<sf>`: where an index,
+    * shard log or model lives, or where a query materializes tables (q62's
+    * Spark-extracted feature vectors, a classifier's quantized weights) so
+    * the DuckDB oracle reads the SAME values. Absolute path: the oracle
+    * runs in a separate process with its own cwd. SUFFIXED with the sf-dir
+    * basename so a bench run at sf0.1 cannot overwrite the tables a
+    * correctness compare at sf0.01 is about to read — the static oracle
+    * SQL names the sf0.01 dirs, the scale correctness is checked at
+    * (a Verify at any other sf fails those compares VISIBLY instead of
+    * silently reading another run's tables).
     */
-  private def q62FeatureDir(sfDir: String) =
-    s"/tmp/graft_q62_features_${new java.io.File(sfDir).getName}"
-
-  private def q87FeatureDir(sfDir: String) =
-    s"/tmp/graft_q87_features_${new java.io.File(sfDir).getName}"
-
-  private def q97IndexDir(sfDir: String) =
-    s"/tmp/graft_q97_index_${new java.io.File(sfDir).getName}"
-
-  private def q99IndexDir(sfDir: String) =
-    s"/tmp/graft_q99_annindex_${new java.io.File(sfDir).getName}"
-
-  private def q100IndexDir(sfDir: String) =
-    s"/tmp/graft_q100_annindex_${new java.io.File(sfDir).getName}"
-
-  private def q105ShardDir(sfDir: String) =
-    s"/tmp/graft_q105_shards_${new java.io.File(sfDir).getName}"
-
-  private def q119IndexDir(sfDir: String) =
-    s"/tmp/graft_q119_annindex_${new java.io.File(sfDir).getName}"
-
-  private def q122IndexDir(sfDir: String) =
-    s"/tmp/graft_q122_fpindex_${new java.io.File(sfDir).getName}"
-
-  private def q125IndexDir(sfDir: String) =
-    s"/tmp/graft_q125_annindex_${new java.io.File(sfDir).getName}"
-
-  private def q127IndexDir(sfDir: String) =
-    s"/tmp/graft_q127_annindex_${new java.io.File(sfDir).getName}"
-
-  private def q108IndexDir(sfDir: String) =
-    s"/tmp/graft_q108_paraindex_${new java.io.File(sfDir).getName}"
-
-  private def q141IndexDir(sfDir: String) =
-    s"/tmp/graft_q141_tfindex_${new java.io.File(sfDir).getName}"
-
-  private def q142ShardDir(sfDir: String) =
-    s"/tmp/graft_q142_epochshards_${new java.io.File(sfDir).getName}"
-
-  private def q162ShardDir(sfDir: String) =
-    s"/tmp/graft_q162_sizedshards_${new java.io.File(sfDir).getName}"
-
-  private def q192ShardDir(sfDir: String) =
-    s"/tmp/graft_q192_logverify_${new java.io.File(sfDir).getName}"
-
-  private def q193ShardDir(sfDir: String) =
-    s"/tmp/graft_q193_logcompact_${new java.io.File(sfDir).getName}"
-
-  private def q194ShardDir(sfDir: String) =
-    s"/tmp/graft_q194_logdelete_${new java.io.File(sfDir).getName}"
-
-  private def q143ModelDir(sfDir: String) =
-    s"/tmp/graft_q143_nb_${new java.io.File(sfDir).getName}"
-
-  private def q189ModelDir(sfDir: String) =
-    s"/tmp/graft_q189_nb_${new java.io.File(sfDir).getName}"
-
-  private def q190ModelDir(sfDir: String) =
-    s"/tmp/graft_q190_nb_${new java.io.File(sfDir).getName}"
-
-  private def q191ModelDir(sfDir: String) =
-    s"/tmp/graft_q191_nb_${new java.io.File(sfDir).getName}"
+  private[graft] def scratchDir(tag: String, sfDir: String): String =
+    s"/tmp/graft_${tag}_${new java.io.File(sfDir).getName}"
 
   /** Shared q189/q190/q191 scored frame: q143's integer NB scores against
     * the query's own materialized model, plus the lang-derived truth —
@@ -164,30 +105,6 @@ object SparkEntry {
       losses, "step", "domain", "proxy_micro", "ref_micro")
   }
 
-  private def q144LmDir(sfDir: String) =
-    s"/tmp/graft_q144_lm_${new java.io.File(sfDir).getName}"
-
-  private def q145ModelDir(sfDir: String) =
-    s"/tmp/graft_q145_nb_${new java.io.File(sfDir).getName}"
-
-  private def q146IndexDir(sfDir: String) =
-    s"/tmp/graft_q146_clsindex_${new java.io.File(sfDir).getName}"
-
-  private def q147ModelDir(sfDir: String) =
-    s"/tmp/graft_q147_mc_${new java.io.File(sfDir).getName}"
-
-  private def q148ModelDir(sfDir: String) =
-    s"/tmp/graft_q148_mc_${new java.io.File(sfDir).getName}"
-
-  private def q151LmDir(sfDir: String) =
-    s"/tmp/graft_q151_lm_${new java.io.File(sfDir).getName}"
-
-  private def q152ModelDir(sfDir: String) =
-    s"/tmp/graft_q152_nb_${new java.io.File(sfDir).getName}"
-
-  private def q153ModelDir(sfDir: String) =
-    s"/tmp/graft_q153_mc_${new java.io.File(sfDir).getName}"
-
   /** q154's blocklist: single- and multi-token phrases over the synthetic
     * vocabulary, chosen so sf0.01 hits range from rare (1 doc) to common
     * (hundreds) — the sorted-normalized form the oracle's VALUES list
@@ -223,35 +140,44 @@ object SparkEntry {
   private val q160Weights: Map[String, Long] =
     (0 until 20).map(i => s"src$i" -> (if (i == 0) 20L else 1L)).toMap
 
-  /** Train the binary NB quality classifier on the %3 held-in slice,
-    * materialize weights + meta under `out` (the q62/q143 discipline —
-    * DuckDB must integer-sum the IDENTICAL quantized values), and return
-    * the re-read weights plus the (oovWeight, prior) constants. Shared by
-    * q143/q145/q146-adjacent blocks so the materialization layout has one
-    * definition.
+  /** Model tables materialized under a query's scratch dir `out` — the
+    * q62 discipline: DuckDB must integer-sum the IDENTICAL quantized
+    * values. A train phase writes them; the score phase re-reads them,
+    * so the queries and their bench breakdown rows share one layout.
+    * Binary NB: `weights` + one-row `meta(oov_weight, prior)`.
     */
-  private def binaryNbMaterialized(
-      s: SparkSession, d: String, out: String): (DataFrame, Long, Long) = {
-    val docs = Tables(s, d, "documents")
-    val model = graft.ops.LangModel.trainTokenClassifier(
-      docs.where(col("doc_id") % 3 =!= 0)
-        .withColumn("pos", col("lang") === "en"),
-      "text", "pos")
+  private def writeNb(s: SparkSession, model: graft.ops.LangModel.TokenClassifier,
+      out: String): Unit = {
     model.weights.write.mode("overwrite").parquet(s"$out/weights")
     import s.implicits._
     Seq((model.oovWeight, model.prior)).toDF("oov_weight", "prior")
       .coalesce(1).write.mode("overwrite").parquet(s"$out/meta")
+  }
+
+  private def readNb(s: SparkSession, out: String): (DataFrame, Long, Long) = {
     val meta = s.read.parquet(s"$out/meta").head()
     (s.read.parquet(s"$out/weights"),
       meta.getAs[Long]("oov_weight"), meta.getAs[Long]("prior"))
   }
 
-  /** Train the bigram LM on the %3 held-in slice, materialize its tables
-    * under `out` (same discipline), and return them re-read plus the
-    * floor constant. Shared by q144/q151.
+  /** The binary NB quality classifier (positives = 'en') trained on the
+    * %3 held-in slice, written under `out`.
     */
-  private def bigramLmMaterialized(
-      s: SparkSession, d: String, out: String): (DataFrame, DataFrame, Long) = {
+  private def trainNb(s: SparkSession, d: String, out: String): Unit =
+    writeNb(s, graft.ops.LangModel.trainTokenClassifier(
+      labeledDocs(Tables(s, d, "documents").where(col("doc_id") % 3 =!= 0)),
+      "text", "pos"), out)
+
+  private def binaryNbMaterialized(
+      s: SparkSession, d: String, out: String): (DataFrame, Long, Long) = {
+    trainNb(s, d, out)
+    readNb(s, out)
+  }
+
+  /** The bigram LM trained on the %3 held-in slice, written under `out`:
+    * `bigrams`, `fallback` and one-row `meta(floor_lp)`.
+    */
+  private def trainLm(s: SparkSession, d: String, out: String): Unit = {
     val lm = graft.ops.LangModel.trainBigramLm(
       Tables(s, d, "documents").where(col("doc_id") % 3 =!= 0), "text")
     lm.bigrams.write.mode("overwrite").parquet(s"$out/bigrams")
@@ -259,26 +185,29 @@ object SparkEntry {
     import s.implicits._
     Seq(lm.floorLp).toDF("floor_lp")
       .coalesce(1).write.mode("overwrite").parquet(s"$out/meta")
+  }
+
+  private def readLm(s: SparkSession, out: String): (DataFrame, DataFrame, Long) =
     (s.read.parquet(s"$out/bigrams"), s.read.parquet(s"$out/fallback"),
       s.read.parquet(s"$out/meta").head().getAs[Long]("floor_lp"))
-  }
 
-  /** Train the multiclass NB on the held-in slice, materialize the model
-    * tables under `out` (the q143 discipline — DuckDB must integer-sum
-    * the IDENTICAL quantized values), and return them re-read.
-    */
-  private def multiclassMaterialized(
-      s: SparkSession, d: String, out: String): (DataFrame, DataFrame) = {
-    val docs = Tables(s, d, "documents")
-    val model = graft.ops.LangModel.trainMulticlassClassifier(
-      docs.where(col("doc_id") % 3 =!= 0), "text", "lang")
+  /** Multiclass NB: `weights` + `class_meta`. */
+  private def writeMulticlass(
+      model: graft.ops.LangModel.MulticlassClassifier, out: String): Unit = {
     model.weights.write.mode("overwrite").parquet(s"$out/weights")
     model.classMeta.coalesce(1).write.mode("overwrite").parquet(s"$out/class_meta")
-    (s.read.parquet(s"$out/weights"), s.read.parquet(s"$out/class_meta"))
   }
 
-  private def q172ModelDir(sfDir: String) =
-    s"/tmp/graft_q172_mc_${new java.io.File(sfDir).getName}"
+  private def readMulticlass(s: SparkSession, out: String): (DataFrame, DataFrame) =
+    (s.read.parquet(s"$out/weights"), s.read.parquet(s"$out/class_meta"))
+
+  /** The multiclass NB (class = lang) trained on the %3 held-in slice. */
+  private def multiclassMaterialized(
+      s: SparkSession, d: String, out: String): (DataFrame, DataFrame) = {
+    writeMulticlass(graft.ops.LangModel.trainMulticlassClassifier(
+      Tables(s, d, "documents").where(col("doc_id") % 3 =!= 0), "text", "lang"), out)
+    readMulticlass(s, out)
+  }
 
   /** Mixed-script corpus for the char-n-gram language-ID (q172): every
     * doc gets a per-lang script tail — zh a WHITESPACE-FREE CJK run
@@ -298,15 +227,6 @@ object SparkEntry {
           .otherwise(lit(" the quick brown fox jumps over the lazy dog")))
         .as("t"))
 
-  private def charNgramMaterialized(
-      s: SparkSession, d: String, out: String): (DataFrame, DataFrame) = {
-    val model = graft.ops.LangModel.trainMulticlassClassifierChars(
-      scriptAugDocs(s, d).where(col("doc_id") % 3 =!= 0), "t", "lang", n = 3)
-    model.weights.write.mode("overwrite").parquet(s"$out/weights")
-    model.classMeta.coalesce(1).write.mode("overwrite").parquet(s"$out/class_meta")
-    (s.read.parquet(s"$out/weights"), s.read.parquet(s"$out/class_meta"))
-  }
-
   /** q107's paragraph-augmented corpus (a corpus-wide shared paragraph +
     * a %7 class paragraph), shared by q107 and the q108 index lifecycle.
     */
@@ -317,6 +237,28 @@ object SparkEntry {
         col("text"), lit("\n\n"),
         lit("shared boilerplate paragraph"), lit("\n\n"),
         concat(lit("para-"), (col("doc_id") % 7).cast("string"))).as("t"))
+
+  /** q35's minhash LSH pair set (3-shingles, 64 hashes, 32 bands,
+    * jaccard ≥ 0.5), which the cluster queries q61, q79 and q88 close over.
+    */
+  private def minhashDocPairs(s: SparkSession, d: String): DataFrame =
+    graft.ops.Dedup.minhashPairs(docsParallel(s, d), "text", "doc_id",
+      k = 3, numHashes = 64, bands = 32, threshold = 0.5)
+
+  /** q158's near-twin pairs over a [[docsWithParagraphs]] corpus: docs
+    * sharing a suffix paragraph pair to its minimum id. The window keys on
+    * md5(paragraph), so the exchange carries 32-byte digests instead of
+    * paragraph text — the discipline every production op in Dedup applies
+    * before a shuffle.
+    */
+  private def suffixPairs(aug: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    aug.withColumn("__f", element_at(split(col("t"), "\n\n"), -1))
+      .withColumn("__m",
+        min(col("doc_id")).over(Window.partitionBy(md5(col("__f")))))
+      .where(col("doc_id") =!= col("__m"))
+      .select(col("__m").as("id_a"), col("doc_id").as("id_b"))
+  }
 
   /** Deterministically synthesized raw-HTML corpus for the extraction
     * queries (q170/q171): every page carries head noise (comment,
@@ -636,236 +578,6 @@ object SparkEntry {
        |$tail""".stripMargin
   }
 
-  /** Bench-only phase breakdown of the index-lifecycle queries (q97, q99):
-    * each lifecycle stage timed on its own, so the per-job scheduling
-    * floor of the build/append writes (11 sequential parquet writes +
-    * renames in q97) can't mask a regression in the probe — the phase a
-    * daily production job actually runs hot. Phases are ordered and
-    * mutate the same /tmp index dirs as their parent query: build is a
-    * full rebuild (commits a fresh epoch whose manifest references only
-    * its own data dirs), so the following append's ids are disjoint
-    * again no matter what earlier runs committed. Not part of the
-    * correctness surface — Bench emits these under a separate
-    * "breakdown" key, outside the "queries" totals.
-    */
-  /** q186's trained centroids, carried from the train phase to the assign
-    * phase of the bench breakdown (phases run in order in one JVM — the
-    * same statefulness the index-lifecycle phases keep in /tmp dirs).
-    */
-  @volatile private var q186Cents: Seq[(Long, Seq[Long])] = Nil
-
-  /** q182's stage frames, carried from the ledger phase to the later
-    * breakdown phases (the q186Cents discipline): the ledger phase pays
-    * the one regex-heavy materialization; the later phases derive from
-    * it, so their rows are CUMULATIVE from the ledger — a stage's own
-    * cost is the delta to the previous row (see
-    * [[graft.ops.Pipeline.curateStages]]).
-    */
-  @volatile private var q182Stages: Option[graft.ops.Pipeline.CurateStages] = None
-
-  def benchBreakdown: Seq[(String, String, (SparkSession, String) => Unit)] = Seq(
-    ("q97_dedup_index_append", "q97_build", (s: SparkSession, d: String) =>
-      graft.ops.Dedup.writeDedupIndex(
-        docsParallel(s, d)
-          .where(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5),
-        "text", "doc_id", q97IndexDir(d))),
-    ("q97_dedup_index_append", "q97_append", (s: SparkSession, d: String) =>
-      graft.ops.Dedup.appendDedupIndex(
-        docsParallel(s, d).where(col("doc_id") % 10 === 5),
-        "text", "doc_id", q97IndexDir(d))),
-    ("q97_dedup_index_append", "q97_probe", (s: SparkSession, d: String) => {
-      graft.ops.Dedup.minhashPairsAgainstIndex(
-        docsParallel(s, d).where(col("doc_id") % 10 === 0),
-        "text", "doc_id", q97IndexDir(d), threshold = 0.5).count()
-      ()
-    }),
-    ("q99_ann_index", "q99_build", (s: SparkSession, d: String) =>
-      graft.ops.Similarity.writeAnnIndex(
-        Tables(s, d, "embeddings").where(col("vec_id") % 10 =!= 5),
-        "embedding", "vec_id", q99IndexDir(d), nlist = 8)),
-    ("q99_ann_index", "q99_append", (s: SparkSession, d: String) =>
-      graft.ops.Similarity.appendAnnIndex(
-        Tables(s, d, "embeddings").where(col("vec_id") % 10 === 5),
-        "embedding", "vec_id", q99IndexDir(d))),
-    ("q99_ann_index", "q99_probe", (s: SparkSession, d: String) => {
-      graft.ops.Similarity.annTopKAgainstIndex(
-        Tables(s, d, "embeddings").where(col("vec_id") < 10),
-        "embedding", "vec_id", q99IndexDir(d), k = 5, nprobe = 8).count()
-      ()
-    }),
-    ("q186_kmeans", "q186_train", (s: SparkSession, d: String) => {
-      q186Cents = graft.ops.Similarity.integerKMeansCentroids(
-        embParallel(s, d), "embedding", "vec_id", k = 8, rounds = 3)
-      ()
-    }),
-    ("q182_pipeline_e2e", "q182_ledger", (s: SparkSession, d: String) => {
-      // the stage-A materialization: domain verdict + URL canon + HTML
-      // extraction + screen chain + token count, ONE regex pass
-      import s.implicits._
-      q182Stages = Some(graft.ops.Pipeline.curateStages(
-        crawlDocs(s, d), "doc_id", "url", "source", "html",
-        q182EvalRows.toDF("text"), "text", q182Config))
-      ()
-    }),
-    ("q182_pipeline_e2e", "q182_dedup", (s: SparkSession, d: String) => {
-      q182Stages.get.postDedup.count(); ()
-    }),
-    ("q182_pipeline_e2e", "q182_decontam", (s: SparkSession, d: String) => {
-      q182Stages.get.postDecontam.count(); ()
-    }),
-    ("q182_pipeline_e2e", "q182_mix", (s: SparkSession, d: String) => {
-      q182Stages.get.kept.count(); ()
-    }),
-    ("q182_pipeline_e2e", "q182_shard", (s: SparkSession, d: String) => {
-      q182Stages.get.sharded.count(); ()
-    }),
-    ("q182_pipeline_e2e", "q182_attach", (s: SparkSession, d: String) => {
-      q182Stages.get.diagnosis.count(); ()
-    }),
-    ("q186_kmeans", "q186_assign", (s: SparkSession, d: String) => {
-      // the daily phase: route the corpus through the FROZEN centroid
-      // table (the aggregate forces the assignment column to evaluate —
-      // a bare count would let the optimizer prune the projection away)
-      embParallel(s, d).select(
-          graft.ops.Similarity.kMeansAssignColumn(col("embedding"),
-            q186Cents).as("a"))
-        .agg(max(col("a")("dist"))).collect()
-      ()
-    }),
-    ("q108_paragraph_index", "q108_build", (s: SparkSession, d: String) =>
-      graft.ops.Dedup.writeParagraphIndex(
-        docsWithParagraphs(s, d).where(col("doc_id") % 3 === 1), "t", q108IndexDir(d))),
-    ("q108_paragraph_index", "q108_append", (s: SparkSession, d: String) =>
-      graft.ops.Dedup.appendParagraphIndex(
-        docsWithParagraphs(s, d).where(col("doc_id") % 3 === 2), "t", q108IndexDir(d))),
-    ("q108_paragraph_index", "q108_probe", (s: SparkSession, d: String) => {
-      graft.ops.Dedup.dedupParagraphsAgainstIndex(
-        docsWithParagraphs(s, d).where(col("doc_id") % 3 === 0),
-        "doc_id", "t", q108IndexDir(d)).count()
-      ()
-    }),
-    ("q141_tf_index_lifecycle", "q141_build", (s: SparkSession, d: String) =>
-      graft.ops.TextOps.writeTokenFrequencyIndex(
-        docsParallel(s, d).where(col("doc_id") % 3 === 1),
-        "doc_id", "text", q141IndexDir(d))),
-    ("q141_tf_index_lifecycle", "q141_append", (s: SparkSession, d: String) =>
-      graft.ops.TextOps.appendTokenFrequencyIndex(
-        docsParallel(s, d).where(col("doc_id") % 3 === 2),
-        "doc_id", "text", q141IndexDir(d))),
-    ("q141_tf_index_lifecycle", "q141_probe", (s: SparkSession, d: String) => {
-      graft.ops.TextOps.frequencyScoreAgainstIndex(
-        docsParallel(s, d).where(col("doc_id") % 3 === 0),
-        "doc_id", "text", q141IndexDir(d), rareBelow = 3L).count()
-      ()
-    }),
-    ("q146_cls_index_lifecycle", "q146_build", (s: SparkSession, d: String) =>
-      graft.ops.LangModel.writeClassifierIndex(
-        docsParallel(s, d).withColumn("pos", col("lang") === "en")
-          .where(col("doc_id") % 3 === 1),
-        "doc_id", "text", "pos", q146IndexDir(d))),
-    ("q146_cls_index_lifecycle", "q146_append", (s: SparkSession, d: String) =>
-      graft.ops.LangModel.appendClassifierIndex(
-        docsParallel(s, d).withColumn("pos", col("lang") === "en")
-          .where(col("doc_id") % 3 === 2),
-        "doc_id", "text", "pos", q146IndexDir(d))),
-    ("q146_cls_index_lifecycle", "q146_probe", (s: SparkSession, d: String) => {
-      graft.ops.LangModel.scoreAgainstClassifierIndex(
-        docsParallel(s, d).where(col("doc_id") % 3 === 0),
-        "doc_id", "text", q146IndexDir(d)).count()
-      ()
-    }),
-    ("q122_fp_index", "q122_build", (s: SparkSession, d: String) =>
-      graft.ops.Decontam.writeFingerprintIndex(
-        Tables(s, d, "documents").where(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("text")),
-        "doc_id", "text", q122IndexDir(d), n = 5, w = 4)),
-    ("q122_fp_index", "q122_append", (s: SparkSession, d: String) =>
-      graft.ops.Decontam.appendFingerprintIndex(
-        Tables(s, d, "documents").where(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("text")),
-        "doc_id", "text", q122IndexDir(d))),
-    ("q122_fp_index", "q122_probe", (s: SparkSession, d: String) => {
-      val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-      val deriv = docs
-        .where(col("doc_id") % 11 === 0 && col("text").isNotNull)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          array_join(slice(graft.ops.TextOps.wsTokens(col("text")), 1, 30), " ")
-            .as("text"))
-      graft.ops.Decontam.winnowingPairsAgainstIndex(
-        deriv, "doc_id", "text", q122IndexDir(d),
-        minShared = 2, maxDf = 50).count()
-      ()
-    }),
-    ("q119_hard_negatives_ivf", "q119_build", (s: SparkSession, d: String) =>
-      graft.ops.Similarity.writeAnnIndex(
-        embParallel(s, d), "embedding", "vec_id", q119IndexDir(d), nlist = 8)),
-    ("q119_hard_negatives_ivf", "q119_probe", (s: SparkSession, d: String) => {
-      graft.ops.Similarity.hardNegativesAgainstIndex(
-        embParallel(s, d).where(col("vec_id") % 17 === 0), "embedding", "vec_id",
-        q119IndexDir(d), k = 5, maxCosine = 0.8, minCosine = 0.1, nprobe = 8).count()
-      ()
-    }),
-    ("q127_semantic_kb_against", "q127_probe", (s: SparkSession, d: String) => {
-      graft.ops.Similarity.semanticDedupKeepBestAgainstIndex(
-        embParallel(s, d).where(col("vec_id") % 10 === 0)
-          .withColumn("score", pmod(col("vec_id") * 13, lit(97))),
-        "embedding", "vec_id", "score", q127IndexDir(d),
-        minCosine = 0.35, nprobe = 8).count()
-      ()
-    }),
-    ("q125_semantic_against", "q125_build", (s: SparkSession, d: String) =>
-      graft.ops.Similarity.writeAnnIndex(
-        embParallel(s, d).where(col("vec_id") % 10 =!= 0),
-        "embedding", "vec_id", q125IndexDir(d), nlist = 8)),
-    ("q125_semantic_against", "q125_probe", (s: SparkSession, d: String) => {
-      graft.ops.Similarity.semanticDedupAgainstIndex(
-        embParallel(s, d).where(col("vec_id") % 10 === 0), "embedding", "vec_id",
-        q125IndexDir(d), minCosine = 0.35, nprobe = 8).count()
-      ()
-    }),
-    // Learned-filter family train/score split: the parent queries bundle
-    // training + model-table writes with scoring, so a probe regression
-    // in the hot path — the SCORE a production pipeline re-runs on every
-    // batch — could hide inside the train/write floor (the q97
-    // build/probe discipline). The score phases re-read the model tables
-    // the train phase materialized under the query's own /tmp dir.
-    ("q143_nb_quality_classifier", "q143_train", (s: SparkSession, d: String) => {
-      binaryNbMaterialized(s, d, q143ModelDir(d))
-      ()
-    }),
-    ("q143_nb_quality_classifier", "q143_score", (s: SparkSession, d: String) => {
-      val meta = s.read.parquet(s"${q143ModelDir(d)}/meta").head()
-      graft.ops.LangModel.scoreTokenWeights(
-        Tables(s, d, "documents"), "doc_id", "text",
-        s.read.parquet(s"${q143ModelDir(d)}/weights"),
-        meta.getAs[Long]("oov_weight"), meta.getAs[Long]("prior")).count()
-      ()
-    }),
-    ("q144_bigram_lm_score", "q144_train", (s: SparkSession, d: String) => {
-      bigramLmMaterialized(s, d, q144LmDir(d))
-      ()
-    }),
-    ("q144_bigram_lm_score", "q144_score", (s: SparkSession, d: String) => {
-      graft.ops.LangModel.scoreBigramTables(
-        Tables(s, d, "documents"), "doc_id", "text",
-        s.read.parquet(s"${q144LmDir(d)}/bigrams"),
-        s.read.parquet(s"${q144LmDir(d)}/fallback"),
-        s.read.parquet(s"${q144LmDir(d)}/meta").head()
-          .getAs[Long]("floor_lp")).count()
-      ()
-    }),
-    ("q172_charngram_langid", "q172_train", (s: SparkSession, d: String) => {
-      charNgramMaterialized(s, d, q172ModelDir(d))
-      ()
-    }),
-    ("q172_charngram_langid", "q172_score", (s: SparkSession, d: String) => {
-      graft.ops.LangModel.predictClassCharsTables(
-        scriptAugDocs(s, d), "doc_id", "t", 3,
-        s.read.parquet(s"${q172ModelDir(d)}/weights"),
-        s.read.parquet(s"${q172ModelDir(d)}/class_meta")).count()
-      ()
-    }))
-
   /** documents with the cluster's parallelism. The test parquet is ONE small
     * file → one input split, which serializes the signature kernels of the
     * pair-dedup queries onto a single core; a 100 TB corpus arrives in
@@ -883,6 +595,345 @@ object SparkEntry {
   private def embParallel(s: SparkSession, dir: String) =
     Tables(s, dir, "embeddings")
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
+
+  /** documents narrowed to (doc_id, text). */
+  private def idText(s: SparkSession, d: String) =
+    Tables(s, d, "documents").select(col("doc_id"), col("text"))
+
+  /** `docs` plus `n_tok`, the whitespace token count the token-budget,
+    * shard and sampling queries weigh rows by.
+    */
+  private[graft] def tokenCounted(docs: DataFrame): DataFrame =
+    docs.withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+
+  /** `docs` plus `pos`, the binary NB label: the 'en' slice (q146's index
+    * and every [[trainNb]] model).
+    */
+  private def labeledDocs(docs: DataFrame): DataFrame =
+    docs.withColumn("pos", col("lang") === "en")
+
+  /** q117's planted derivative batch: every %11 doc's 30-token prefix
+    * under id doc_id + 2000000 — a quote wholly contained in its source
+    * (containment 1.0, far past winnowing's w+n-1 guarantee).
+    */
+  private def derivatives(docs: DataFrame): DataFrame =
+    docs.where(col("doc_id") % 11 === 0 && col("text").isNotNull)
+      .select((col("doc_id") + 2000000L).as("doc_id"),
+        array_join(slice(graft.ops.TextOps.wsTokens(col("text")), 1, 30), " ")
+          .as("text"))
+
+  /** The C4 screens' line-augmented corpus (q164, q175, q179): `t` = the
+    * text plus the first `sentences` planted proper-sentence lines, a %5
+    * lorem-ipsum line, a %7 brace line, then `extra`.
+    */
+  private def c4Docs(s: SparkSession, d: String, sentences: Int, extra: Column*) = {
+    val planted = Seq(
+      "\nThis is a proper sentence with seven words.",
+      "\nHere is another proper sentence for the page.",
+      "\nA third proper sentence closes the page here.")
+      .take(sentences).map(lit(_)) ++ Seq(
+      when(col("doc_id") % 5 === 0,
+        lit("\nLorem ipsum dolor sit amet here today.")).otherwise(lit("")),
+      when(col("doc_id") % 7 === 0,
+        lit("\nThe config is { nested } here okay.")).otherwise(lit(""))) ++ extra
+    Tables(s, d, "documents").withColumn("t", concat(col("text") +: planted: _*))
+  }
+
+  /** The sized-shard log prologue of q162 and q192-q194: the
+    * (doc_id, n_tok) corpus and a fresh log of its `base` slice at the
+    * query's scratch dir. Returns the corpus, for the later batches, and
+    * the dir.
+    */
+  private def sizedLog(s: SparkSession, d: String, tag: String, base: Column,
+      targetWeight: Long = 6000L): (DataFrame, String) = {
+    val out = scratchDir(tag, d)
+    val docs = tokenCounted(Tables(s, d, "documents")).select("doc_id", "n_tok")
+    graft.ops.Sink.writeSizedShards(docs.where(base), out, "doc_id", "n_tok",
+      targetWeight = targetWeight, overwrite = true)
+    (docs, out)
+  }
+
+  /** Appends the `slice` of a [[sizedLog]] corpus to the log at `out`. */
+  private def appendLog(docs: DataFrame, out: String, slice: Column,
+      targetWeight: Long = 6000L, checkIds: Boolean = true): Unit =
+    graft.ops.Sink.appendSizedShards(docs.where(slice), out, "doc_id", "n_tok",
+      targetWeight = targetWeight, checkIds = checkIds)
+
+  /** A sized-shard log read back from its files, (doc_id, shard) by id. */
+  private def logShards(s: SparkSession, out: String): DataFrame =
+    s.read.parquet(out)
+      .select(col("doc_id"), col("shard").cast("long").as("shard"))
+      .orderBy(col("doc_id"))
+
+  // Lifecycle phases. Each lifecycle query runs its phases in order, and
+  // its benchBreakdown rows run the same defs one at a time. Build and
+  // append phases mutate the query's scratch dir; a build is a full
+  // rebuild (a fresh epoch whose manifest references only its own data
+  // dirs), so the following append's ids are disjoint again no matter
+  // what earlier runs committed.
+
+  // q97: build on most of the corpus, fold the %10==5 slice in, probe
+  // with the %10==0 arrivals
+  private def q97Build(s: SparkSession, d: String): Unit =
+    graft.ops.Dedup.writeDedupIndex(
+      docsParallel(s, d).where(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5),
+      "text", "doc_id", scratchDir("q97_index", d))
+
+  private def q97Append(s: SparkSession, d: String): Unit =
+    graft.ops.Dedup.appendDedupIndex(
+      docsParallel(s, d).where(col("doc_id") % 10 === 5),
+      "text", "doc_id", scratchDir("q97_index", d))
+
+  private def q97Probe(s: SparkSession, d: String): DataFrame =
+    graft.ops.Dedup.minhashPairsAgainstIndex(
+      docsParallel(s, d).where(col("doc_id") % 10 === 0),
+      "text", "doc_id", scratchDir("q97_index", d), threshold = 0.5)
+
+  // q99: train on the corpus minus the %10==5 slice, append that slice,
+  // probe with the first ten vectors
+  private def q99Build(s: SparkSession, d: String): Unit =
+    graft.ops.Similarity.writeAnnIndex(
+      Tables(s, d, "embeddings").where(col("vec_id") % 10 =!= 5),
+      "embedding", "vec_id", scratchDir("q99_annindex", d), nlist = 8)
+
+  private def q99Append(s: SparkSession, d: String): Unit =
+    graft.ops.Similarity.appendAnnIndex(
+      Tables(s, d, "embeddings").where(col("vec_id") % 10 === 5),
+      "embedding", "vec_id", scratchDir("q99_annindex", d))
+
+  private def q99Probe(s: SparkSession, d: String): DataFrame =
+    graft.ops.Similarity.annTopKAgainstIndex(
+      Tables(s, d, "embeddings").where(col("vec_id") < 10),
+      "embedding", "vec_id", scratchDir("q99_annindex", d), k = 5, nprobe = 8)
+
+  // q108, q141, q146: build on %3==1, append %3==2, probe with %3==0
+  private def q108Build(s: SparkSession, d: String): Unit =
+    graft.ops.Dedup.writeParagraphIndex(
+      docsWithParagraphs(s, d).where(col("doc_id") % 3 === 1), "t",
+      scratchDir("q108_paraindex", d))
+
+  private def q108Append(s: SparkSession, d: String): Unit =
+    graft.ops.Dedup.appendParagraphIndex(
+      docsWithParagraphs(s, d).where(col("doc_id") % 3 === 2), "t",
+      scratchDir("q108_paraindex", d))
+
+  private def q108Probe(s: SparkSession, d: String): DataFrame =
+    graft.ops.Dedup.dedupParagraphsAgainstIndex(
+      docsWithParagraphs(s, d).where(col("doc_id") % 3 === 0), "doc_id", "t",
+      scratchDir("q108_paraindex", d))
+
+  private def q141Build(s: SparkSession, d: String): Unit =
+    graft.ops.TextOps.writeTokenFrequencyIndex(
+      docsParallel(s, d).where(col("doc_id") % 3 === 1), "doc_id", "text",
+      scratchDir("q141_tfindex", d))
+
+  private def q141Append(s: SparkSession, d: String): Unit =
+    graft.ops.TextOps.appendTokenFrequencyIndex(
+      docsParallel(s, d).where(col("doc_id") % 3 === 2), "doc_id", "text",
+      scratchDir("q141_tfindex", d))
+
+  private def q141Probe(s: SparkSession, d: String): DataFrame =
+    graft.ops.TextOps.frequencyScoreAgainstIndex(
+      docsParallel(s, d).where(col("doc_id") % 3 === 0), "doc_id", "text",
+      scratchDir("q141_tfindex", d), rareBelow = 3L)
+
+  private def q146Build(s: SparkSession, d: String): Unit =
+    graft.ops.LangModel.writeClassifierIndex(
+      labeledDocs(docsParallel(s, d)).where(col("doc_id") % 3 === 1),
+      "doc_id", "text", "pos", scratchDir("q146_clsindex", d))
+
+  private def q146Append(s: SparkSession, d: String): Unit =
+    graft.ops.LangModel.appendClassifierIndex(
+      labeledDocs(docsParallel(s, d)).where(col("doc_id") % 3 === 2),
+      "doc_id", "text", "pos", scratchDir("q146_clsindex", d))
+
+  /** The library's one-call probe of the q146 index; the query itself
+    * derives the model explicitly so its standing counters hash too.
+    */
+  private def q146Probe(s: SparkSession, d: String): DataFrame =
+    graft.ops.LangModel.scoreAgainstClassifierIndex(
+      docsParallel(s, d).where(col("doc_id") % 3 === 0), "doc_id", "text",
+      scratchDir("q146_clsindex", d))
+
+  // q122: postings of the even docs, append the odd docs, probe with the
+  // q117 derivatives
+  private def q122Build(s: SparkSession, d: String): Unit =
+    graft.ops.Decontam.writeFingerprintIndex(
+      idText(s, d).where(col("doc_id") % 2 === 0), "doc_id", "text",
+      scratchDir("q122_fpindex", d), n = 5, w = 4)
+
+  private def q122Append(s: SparkSession, d: String): Unit =
+    graft.ops.Decontam.appendFingerprintIndex(
+      idText(s, d).where(col("doc_id") % 2 === 1), "doc_id", "text",
+      scratchDir("q122_fpindex", d))
+
+  private def q122Probe(s: SparkSession, d: String): DataFrame =
+    graft.ops.Decontam.winnowingPairsAgainstIndex(
+      derivatives(idText(s, d)), "doc_id", "text", scratchDir("q122_fpindex", d),
+      minShared = 2, maxDf = 50)
+
+  // q119: index the whole corpus, mine hard negatives for the %17 queries
+  private def q119Build(s: SparkSession, d: String): Unit =
+    graft.ops.Similarity.writeAnnIndex(
+      embParallel(s, d), "embedding", "vec_id", scratchDir("q119_annindex", d),
+      nlist = 8)
+
+  private def q119Probe(s: SparkSession, d: String): DataFrame =
+    graft.ops.Similarity.hardNegativesAgainstIndex(
+      embParallel(s, d).where(col("vec_id") % 17 === 0), "embedding", "vec_id",
+      scratchDir("q119_annindex", d), k = 5, maxCosine = 0.8, minCosine = 0.1,
+      nprobe = 8)
+
+  // q125, q127: index the standing corpus (%10 != 0); today's %10 == 0
+  // batch probes it
+  private def standingAnn(s: SparkSession, d: String, tag: String): Unit =
+    graft.ops.Similarity.writeAnnIndex(
+      embParallel(s, d).where(col("vec_id") % 10 =!= 0), "embedding", "vec_id",
+      scratchDir(tag, d), nlist = 8)
+
+  private def q125Probe(s: SparkSession, d: String): DataFrame =
+    graft.ops.Similarity.semanticDedupAgainstIndex(
+      embParallel(s, d).where(col("vec_id") % 10 === 0), "embedding", "vec_id",
+      scratchDir("q125_annindex", d), minCosine = 0.35, nprobe = 8)
+
+  private def q127Probe(s: SparkSession, d: String): DataFrame =
+    graft.ops.Similarity.semanticDedupKeepBestAgainstIndex(
+      embParallel(s, d).where(col("vec_id") % 10 === 0)
+        .withColumn("score", pmod(col("vec_id") * 13, lit(97))),
+      "embedding", "vec_id", "score", scratchDir("q127_annindex", d),
+      minCosine = 0.35, nprobe = 8)
+
+  // q143, q144, q172: train and materialize the model, then score from
+  // the re-read tables
+  private def q143Train(s: SparkSession, d: String): Unit =
+    trainNb(s, d, scratchDir("q143_nb", d))
+
+  private def q143Score(s: SparkSession, d: String): DataFrame = {
+    val (w, oov, prior) = readNb(s, scratchDir("q143_nb", d))
+    graft.ops.LangModel.scoreTokenWeights(
+      Tables(s, d, "documents"), "doc_id", "text", w, oov, prior)
+  }
+
+  private def q144Train(s: SparkSession, d: String): Unit =
+    trainLm(s, d, scratchDir("q144_lm", d))
+
+  private def q144Score(s: SparkSession, d: String): DataFrame = {
+    val (bigrams, fallback, floor) = readLm(s, scratchDir("q144_lm", d))
+    graft.ops.LangModel.scoreBigramTables(
+      Tables(s, d, "documents"), "doc_id", "text", bigrams, fallback, floor)
+  }
+
+  private def q172Train(s: SparkSession, d: String): Unit =
+    writeMulticlass(graft.ops.LangModel.trainMulticlassClassifierChars(
+      scriptAugDocs(s, d).where(col("doc_id") % 3 =!= 0), "t", "lang", n = 3),
+      scratchDir("q172_mc", d))
+
+  private def q172Score(s: SparkSession, d: String): DataFrame = {
+    val (w, m) = readMulticlass(s, scratchDir("q172_mc", d))
+    graft.ops.LangModel.predictClassCharsTables(
+      scriptAugDocs(s, d), "doc_id", "t", 3, w, m)
+  }
+
+  /** q182's curation stages. Constructing them pays the stage-A ledger
+    * materialization; `diagnosis` is what [[graft.ops.Pipeline.curate]]
+    * returns.
+    */
+  private def q182Stages(s: SparkSession, d: String): graft.ops.Pipeline.CurateStages = {
+    import s.implicits._
+    graft.ops.Pipeline.curateStages(
+      crawlDocs(s, d), "doc_id", "url", "source", "html",
+      q182EvalRows.toDF("text"), "text", q182Config)
+  }
+
+  /** q186's trained centroids, carried from the train phase to the assign
+    * phase of the bench breakdown (phases run in order in one JVM — the
+    * same statefulness the index-lifecycle phases keep in /tmp dirs).
+    */
+  @volatile private var q186Cents: Seq[(Long, Seq[Long])] = Nil
+
+  /** q182's stage frames, carried from the ledger phase to the later
+    * breakdown phases (the q186Cents discipline): the ledger phase pays
+    * the one regex-heavy materialization; the later phases derive from
+    * it, so their rows are CUMULATIVE from the ledger — a stage's own
+    * cost is the delta to the previous row (see
+    * [[graft.ops.Pipeline.curateStages]]).
+    */
+  @volatile private var q182Staged: Option[graft.ops.Pipeline.CurateStages] = None
+
+  /** One breakdown row: `run` is called for its effect, and a frame it
+    * returns (a probe's or a score's result) is forced with `count()`.
+    */
+  private def phase(parent: String, name: String)(run: (SparkSession, String) => Any)
+      : (String, String, (SparkSession, String) => Unit) =
+    (parent, name, (s: SparkSession, d: String) => run(s, d) match {
+      case df: org.apache.spark.sql.Dataset[_] => df.count(); ()
+      case _ => ()
+    })
+
+  /** Bench-only phase breakdown of the lifecycle queries: each stage timed
+    * on its own, so the per-job scheduling floor of the build/append
+    * writes can't mask a regression in the probe — the phase a daily
+    * production job actually runs hot — and a learned filter's SCORE,
+    * which a production pipeline re-runs on every batch, can't hide
+    * inside its train/write floor. Rows run in order against the same
+    * scratch dirs as their parent query. q182 and q186 split library
+    * internals instead (curateStages; centroids, then assignment). Not
+    * part of the correctness surface — Bench emits these under a
+    * separate "breakdown" key, outside the "queries" totals.
+    */
+  def benchBreakdown: Seq[(String, String, (SparkSession, String) => Unit)] = Seq(
+    phase("q97_dedup_index_append", "q97_build")(q97Build),
+    phase("q97_dedup_index_append", "q97_append")(q97Append),
+    phase("q97_dedup_index_append", "q97_probe")(q97Probe),
+    phase("q99_ann_index", "q99_build")(q99Build),
+    phase("q99_ann_index", "q99_append")(q99Append),
+    phase("q99_ann_index", "q99_probe")(q99Probe),
+    phase("q186_kmeans", "q186_train") { (s, d) =>
+      q186Cents = graft.ops.Similarity.integerKMeansCentroids(
+        embParallel(s, d), "embedding", "vec_id", k = 8, rounds = 3)
+    },
+    // the stage-A materialization: domain verdict + URL canon + HTML
+    // extraction + screen chain + token count, ONE regex pass
+    phase("q182_pipeline_e2e", "q182_ledger") { (s, d) =>
+      q182Staged = Some(q182Stages(s, d))
+    },
+    phase("q182_pipeline_e2e", "q182_dedup")((_, _) => q182Staged.get.postDedup),
+    phase("q182_pipeline_e2e", "q182_decontam")((_, _) => q182Staged.get.postDecontam),
+    phase("q182_pipeline_e2e", "q182_mix")((_, _) => q182Staged.get.kept),
+    phase("q182_pipeline_e2e", "q182_shard")((_, _) => q182Staged.get.sharded),
+    phase("q182_pipeline_e2e", "q182_attach")((_, _) => q182Staged.get.diagnosis),
+    // the daily phase: route the corpus through the FROZEN centroid table
+    // (the aggregate forces the assignment column to evaluate — a bare
+    // count would let the optimizer prune the projection away)
+    phase("q186_kmeans", "q186_assign") { (s, d) =>
+      embParallel(s, d).select(
+          graft.ops.Similarity.kMeansAssignColumn(col("embedding"),
+            q186Cents).as("a"))
+        .agg(max(col("a")("dist"))).collect()
+    },
+    phase("q108_paragraph_index", "q108_build")(q108Build),
+    phase("q108_paragraph_index", "q108_append")(q108Append),
+    phase("q108_paragraph_index", "q108_probe")(q108Probe),
+    phase("q141_tf_index_lifecycle", "q141_build")(q141Build),
+    phase("q141_tf_index_lifecycle", "q141_append")(q141Append),
+    phase("q141_tf_index_lifecycle", "q141_probe")(q141Probe),
+    phase("q146_cls_index_lifecycle", "q146_build")(q146Build),
+    phase("q146_cls_index_lifecycle", "q146_append")(q146Append),
+    phase("q146_cls_index_lifecycle", "q146_probe")(q146Probe),
+    phase("q122_fp_index", "q122_build")(q122Build),
+    phase("q122_fp_index", "q122_append")(q122Append),
+    phase("q122_fp_index", "q122_probe")(q122Probe),
+    phase("q119_hard_negatives_ivf", "q119_build")(q119Build),
+    phase("q119_hard_negatives_ivf", "q119_probe")(q119Probe),
+    phase("q127_semantic_kb_against", "q127_probe")(q127Probe),
+    phase("q125_semantic_against", "q125_build")(standingAnn(_, _, "q125_annindex")),
+    phase("q125_semantic_against", "q125_probe")(q125Probe),
+    phase("q143_nb_quality_classifier", "q143_train")(q143Train),
+    phase("q143_nb_quality_classifier", "q143_score")(q143Score),
+    phase("q144_bigram_lm_score", "q144_train")(q144Train),
+    phase("q144_bigram_lm_score", "q144_score")(q144Score),
+    phase("q172_charngram_langid", "q172_train")(q172Train),
+    phase("q172_charngram_langid", "q172_score")(q172Score))
 
   // Decimal-safe money sum: exact, order-independent, schema-stable.
   // Final cast to double (see class doc: decimal outputs are a driver-side
@@ -915,6 +966,21 @@ object SparkEntry {
       .order("l_returnflag")
       .toDF
   }
+
+  /** The queries Bench and Verify run: all of them, or only the comma-separated
+    * names of `only` (the `SPARK_GRAFT_ONLY` local-iteration filter),
+    * in inventory order. A name that is not a query fails loudly instead
+    * of silently running nothing.
+    */
+  def selected(only: Option[String]): Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(queries) { csv =>
+      val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- queries.keySet
+      require(names.nonEmpty, s"SPARK_GRAFT_ONLY='$csv' names no query")
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      queries.filter { case (name, _) => names(name) }
+    }
 
   /** Operator inventory (SURVEY §2). Key → (spark, sfDir) => DataFrame. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = ListMap(
@@ -1214,10 +1280,7 @@ object SparkEntry {
     // MinHash+LSH near-dup pairs, exact-jaccard verified (not SQL-expressible
     // → rows-only check; determinism comes from fixed hash seeds)
     "q35_minhash_pairs" -> ((s, d) =>
-      graft.ops.Dedup.minhashPairs(
-        docsParallel(s, d), "text", "doc_id",
-        k = 3, numHashes = 64, bands = 32, threshold = 0.5)
-        .orderBy(col("id_a"), col("id_b"))),
+      minhashDocPairs(s, d).orderBy(col("id_a"), col("id_b"))),
 
     // 64-bit SimHash signatures (rows-only)
     "q36_simhash" -> ((s, d) =>
@@ -1360,17 +1423,9 @@ object SparkEntry {
     // q90's semantics — its exact cross-side jaccard oracle applies
     // verbatim (same complete-recall argument at this fixture scale)
     "q97_dedup_index_append" -> ((s, d) => {
-      val docs = docsParallel(s, d)
-      val idx = q97IndexDir(d)
-      graft.ops.Dedup.writeDedupIndex(
-        docs.where(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5),
-        "text", "doc_id", idx)
-      graft.ops.Dedup.appendDedupIndex(
-        docs.where(col("doc_id") % 10 === 5), "text", "doc_id", idx)
-      graft.ops.Dedup.minhashPairsAgainstIndex(
-        docs.where(col("doc_id") % 10 === 0), "text", "doc_id", idx,
-        threshold = 0.5)
-        .orderBy(col("new_id"), col("existing_id"))
+      q97Build(s, d)
+      q97Append(s, d)
+      q97Probe(s, d).orderBy(col("new_id"), col("existing_id"))
     }),
 
     // persisted-IVF lifecycle end-to-end (build → append → probe): train
@@ -1379,17 +1434,9 @@ object SparkEntry {
     // probing EVERY cell is exact, so q37's DuckDB cosine oracle applies
     // verbatim regardless of what the quantizer learned
     "q99_ann_index" -> ((s, d) => {
-      val emb = Tables(s, d, "embeddings")
-      val idx = q99IndexDir(d)
-      graft.ops.Similarity.writeAnnIndex(
-        emb.where(col("vec_id") % 10 =!= 5), "embedding", "vec_id", idx,
-        nlist = 8)
-      graft.ops.Similarity.appendAnnIndex(
-        emb.where(col("vec_id") % 10 === 5), "embedding", "vec_id", idx)
-      graft.ops.Similarity.annTopKAgainstIndex(
-        emb.where(col("vec_id") < 10), "embedding", "vec_id", idx,
-        k = 5, nprobe = 8)
-        .orderBy(col("query_id"), col("rank"))
+      q99Build(s, d)
+      q99Append(s, d)
+      q99Probe(s, d).orderBy(col("query_id"), col("rank"))
     }),
 
     // stateless index range probe (the streaming-capable shape: no window,
@@ -1398,7 +1445,7 @@ object SparkEntry {
     // q81's exact cosine-floor oracle applies against the union corpus
     "q100_ann_range" -> ((s, d) => {
       val emb = Tables(s, d, "embeddings")
-      val idx = q100IndexDir(d)
+      val idx = scratchDir("q100_annindex", d)
       graft.ops.Similarity.writeAnnIndex(
         emb.where(col("vec_id") % 10 =!= 3), "embedding", "vec_id", idx,
         nlist = 8, trainFraction = 0.5)
@@ -1436,8 +1483,7 @@ object SparkEntry {
     // (each of the 20 sources holds ≥1 100 tokens), so the window cutoff
     // and the crossing-row rule are actually exercised
     "q103_token_budget" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(Tables(s, d, "documents"))
       graft.ops.Sampling.takeTokenBudget(
         docs, "source", "doc_id", "n_tok", budget = 600L)
         .select(col("doc_id"), col("source"), col("n_tok"))
@@ -1527,8 +1573,7 @@ object SparkEntry {
     // sub-boundary sub-bucket is windowed — token counts tie HEAVILY
     // here, so the run/tie path is the one actually exercised
     "q129_top_fraction" -> ((s, d) => {
-      val docs = docsParallel(s, d)
-        .withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(docsParallel(s, d))
       graft.ops.Sampling.takeTopFraction(
         docs, "source", "doc_id", "n_tok", fraction = 0.25, nBuckets = 8)
         .select(col("doc_id"), col("source"), col("n_tok"))
@@ -1541,8 +1586,7 @@ object SparkEntry {
     // md5 content order), crossing row kept — q129's run/tie machinery
     // consuming token WEIGHTS instead of row counts
     "q130_top_token_budget" -> ((s, d) => {
-      val docs = docsParallel(s, d)
-        .withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(docsParallel(s, d))
       graft.ops.Sampling.takeTopTokenBudget(
         docs, "source", "doc_id", "n_tok", "n_tok", budget = 700L, nBuckets = 8)
         .select(col("doc_id"), col("source"), col("n_tok"))
@@ -1567,10 +1611,8 @@ object SparkEntry {
     // mid-query (the q62 discipline) so DuckDB scores with the IDENTICAL
     // integers — scoring is pure integer join-and-sum, ulp-proof
     "q143_nb_quality_classifier" -> ((s, d) => {
-      val (w, oov, prior) = binaryNbMaterialized(s, d, q143ModelDir(d))
-      graft.ops.LangModel.scoreTokenWeights(
-        Tables(s, d, "documents"), "doc_id", "text", w, oov, prior)
-        .orderBy(col("doc_id"))
+      q143Train(s, d)
+      q143Score(s, d).orderBy(col("doc_id"))
     }),
 
     // bigram-LM corpus-likelihood scoring (the exact-integer stand-in for
@@ -1580,10 +1622,8 @@ object SparkEntry {
     // train-time-quantized integer micro-nat logprobs, materialized
     // mid-query so both engines integer-sum identical values
     "q144_bigram_lm_score" -> ((s, d) => {
-      val (bigrams, fallback, floor) = bigramLmMaterialized(s, d, q144LmDir(d))
-      graft.ops.LangModel.scoreBigramTables(
-        Tables(s, d, "documents"), "doc_id", "text", bigrams, fallback, floor)
-        .orderBy(col("doc_id"))
+      q144Train(s, d)
+      q144Score(s, d).orderBy(col("doc_id"))
     }),
 
     // the composed CCNet selection: train the quality classifier, score
@@ -1593,7 +1633,7 @@ object SparkEntry {
     // pipeline with no global sort; the model dir is this query's own
     // (q143's discipline, separate dir — queries stay order-independent)
     "q145_classifier_top_quality" -> ((s, d) => {
-      val (w, oov, prior) = binaryNbMaterialized(s, d, q145ModelDir(d))
+      val (w, oov, prior) = binaryNbMaterialized(s, d, scratchDir("q145_nb", d))
       // the take evaluates its input once per phase (takeTopFraction
       // scaladoc) — materialize the expensive explode-join-agg scoring so
       // each phase reads the narrow (doc_id, score) result, not the corpus
@@ -1617,25 +1657,15 @@ object SparkEntry {
     // from the raw train slices — so append ≡ rebuild on the union corpus
     // is itself oracle-checked, token for token
     "q146_cls_index_lifecycle" -> ((s, d) => {
-      val docs = docsParallel(s, d)
-      val labeled = docs.withColumn("pos", col("lang") === "en")
-      val idx = q146IndexDir(d)
-      graft.ops.LangModel.writeClassifierIndex(
-        labeled.where(col("doc_id") % 3 === 1), "doc_id", "text", "pos", idx)
-      graft.ops.LangModel.appendClassifierIndex(
-        labeled.where(col("doc_id") % 3 === 2), "doc_id", "text", "pos", idx)
-      val model = graft.ops.LangModel.indexClassifier(s, idx)
+      q146Build(s, d)
+      q146Append(s, d)
+      val idx = scratchDir("q146_clsindex", d)
       val out = s"${idx}_model"
-      model.weights.write.mode("overwrite").parquet(s"$out/weights")
-      import s.implicits._
-      Seq((model.oovWeight, model.prior)).toDF("oov_weight", "prior")
-        .coalesce(1).write.mode("overwrite").parquet(s"$out/meta")
-      val w = s.read.parquet(s"$out/weights")
-      val meta = s.read.parquet(s"$out/meta").head()
-      val arrivals = docs.where(col("doc_id") % 3 === 0)
+      writeNb(s, graft.ops.LangModel.indexClassifier(s, idx), out)
+      val (w, oov, prior) = readNb(s, out)
+      val arrivals = docsParallel(s, d).where(col("doc_id") % 3 === 0)
       val scored = graft.ops.LangModel.scoreTokenWeights(
-        arrivals, "doc_id", "text", w,
-        meta.getAs[Long]("oov_weight"), meta.getAs[Long]("prior"))
+        arrivals, "doc_id", "text", w, oov, prior)
       val counts = graft.ops.LangModel.indexClassifierCounts(s, idx)
       val standing = arrivals
         .select(col("doc_id"),
@@ -1658,7 +1688,7 @@ object SparkEntry {
     // one row per document × class, pure integer arithmetic against the
     // mid-query-materialized long-format weight table
     "q147_multiclass_scores" -> ((s, d) => {
-      val (w, m) = multiclassMaterialized(s, d, q147ModelDir(d))
+      val (w, m) = multiclassMaterialized(s, d, scratchDir("q147_mc", d))
       graft.ops.LangModel.scoreMulticlassTables(
         Tables(s, d, "documents"), "doc_id", "text", w, m)
         .orderBy(col("doc_id"), col("cls"))
@@ -1668,7 +1698,7 @@ object SparkEntry {
     // best class in (score DESC, cls ASC) order — the per-doc ranking
     // window partitions by document, never globally
     "q148_predict_class" -> ((s, d) => {
-      val (w, m) = multiclassMaterialized(s, d, q148ModelDir(d))
+      val (w, m) = multiclassMaterialized(s, d, scratchDir("q148_mc", d))
       graft.ops.LangModel.predictClassTables(
         Tables(s, d, "documents"), "doc_id", "text", w, m)
         .orderBy(col("doc_id"))
@@ -1681,10 +1711,8 @@ object SparkEntry {
     // windows are the script's signature. Exact integer scoring; the
     // oracle re-derives the trigrams code-point by code-point
     "q172_charngram_langid" -> ((s, d) => {
-      val (w, m) = charNgramMaterialized(s, d, q172ModelDir(d))
-      graft.ops.LangModel.predictClassCharsTables(
-        scriptAugDocs(s, d), "doc_id", "t", 3, w, m)
-        .orderBy(col("doc_id"))
+      q172Train(s, d)
+      q172Score(s, d).orderBy(col("doc_id"))
     }),
 
     // CCNet head/middle/tail (Wenzek et al. 2020): train the bigram LM on
@@ -1694,7 +1722,8 @@ object SparkEntry {
     // never sorts globally. Output keeps only integer columns; the float
     // avg only ORDERS (same IEEE division in both engines)
     "q151_ccnet_partition" -> ((s, d) => {
-      val (bigrams, fallback, floor) = bigramLmMaterialized(s, d, q151LmDir(d))
+      trainLm(s, d, scratchDir("q151_lm", d))
+      val (bigrams, fallback, floor) = readLm(s, scratchDir("q151_lm", d))
       val scored = graft.ops.Materialize.eager(
         graft.ops.LangModel.scoreBigramTables(
           Tables(s, d, "documents"), "doc_id", "text",
@@ -1714,7 +1743,7 @@ object SparkEntry {
     // prior (there is a row to score) and null text scores null — both
     // branches under the hash
     "q152_nb_score_inline" -> ((s, d) => {
-      val (w, oov, prior) = binaryNbMaterialized(s, d, q152ModelDir(d))
+      val (w, oov, prior) = binaryNbMaterialized(s, d, scratchDir("q152_nb", d))
       val wm = graft.ops.LangModel.collectWeights(w)
       Tables(s, d, "documents")
         .select(col("doc_id"),
@@ -1728,7 +1757,7 @@ object SparkEntry {
     // bare prior (argmax = max-prior class, cls-asc ties), null text
     // predicts null — all three branches under the hash
     "q153_predict_inline" -> ((s, d) => {
-      val (w, m) = multiclassMaterialized(s, d, q153ModelDir(d))
+      val (w, m) = multiclassMaterialized(s, d, scratchDir("q153_mc", d))
       val wm = graft.ops.LangModel.collectMulticlassWeights(w)
       val classes = m.collect().toSeq.map(r => (r.getString(0),
         wm.getOrElse(r.getString(0), Map.empty[String, Long]),
@@ -1763,9 +1792,7 @@ object SparkEntry {
     // prefix + per-group windows; the whole stage-major permutation
     // hashes against one naive window rank
     "q155_curriculum_order" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok",
-          graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(Tables(s, d, "documents"))
         .withColumn("stage",
           least(lit(2L), expr("n_tok div 12")))
       graft.ops.Sampling.curriculumShuffle(
@@ -1793,9 +1820,7 @@ object SparkEntry {
     // from the weight-1 sources, each keeping its md5-order prefix until
     // its token quota with the crossing row kept
     "q157_waterfill_tokens" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok",
-          graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(Tables(s, d, "documents"))
       graft.ops.Sampling.takeWaterfillTokens(
         docs, "source", "doc_id", "n_tok", q157Weights, budget = 3000L)
         .select(col("doc_id"), col("source"), col("n_tok"))
@@ -1809,20 +1834,9 @@ object SparkEntry {
     // The oracle replays the construction (% 7 classes) + the rep-keyed
     // nibble rule
     "q158_leakage_safe_split" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val aug = docsWithParagraphs(s, d)
-      val fp = aug.withColumn("__f",
-        element_at(split(col("t"), "\n\n"), -1))
-      // window keyed on md5(__f), not the raw paragraph: the exchange
-      // carries 32-byte digests instead of full paragraph text — the same
-      // discipline every production op in Dedup applies before a shuffle
-      val pairs = fp
-        .withColumn("__m",
-          min(col("doc_id")).over(Window.partitionBy(md5(col("__f")))))
-        .where(col("doc_id") =!= col("__m"))
-        .select(col("__m").as("id_a"), col("doc_id").as("id_b"))
       graft.ops.Sampling.leakageSafeSplit(
-        aug.select("doc_id"), "doc_id", pairs)
+        aug.select("doc_id"), "doc_id", suffixPairs(aug))
         .select(col("doc_id"), col("rep"), col("split"))
         .orderBy(col("doc_id"))
     }),
@@ -1832,9 +1846,7 @@ object SparkEntry {
     // no global sort (PlanSpec-pinned); the whole layout hashes against
     // the naive window-cumsum floor rule
     "q159_sized_shards" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok",
-          graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(Tables(s, d, "documents"))
       graft.ops.Sink.sizedShardAssignment(
         docs, "doc_id", "n_tok", targetWeight = 500L)
         .select(col("doc_id"), col("n_tok"), col("shard"))
@@ -1872,20 +1884,10 @@ object SparkEntry {
     // cumsum exactly (tail shard fills first, standing files untouched),
     // read the whole layout back FROM the written files
     "q162_sized_shard_append" -> ((s, d) => {
-      val out = q162ShardDir(d)
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok",
-          graft.ops.TextOps.tokenCount(col("text")).cast("long"))
-        .select("doc_id", "n_tok")
-      graft.ops.Sink.writeSizedShards(
-        docs.where(col("doc_id") % 2 === 0), out, "doc_id", "n_tok",
-        targetWeight = 3000L, overwrite = true)
-      graft.ops.Sink.appendSizedShards(
-        docs.where(col("doc_id") % 2 === 1), out, "doc_id", "n_tok",
+      val (docs, out) = sizedLog(s, d, "q162_sizedshards", col("doc_id") % 2 === 0,
         targetWeight = 3000L)
-      s.read.parquet(out)
-        .select(col("doc_id"), col("shard").cast("long").as("shard"))
-        .orderBy(col("doc_id"))
+      appendLog(docs, out, col("doc_id") % 2 === 1, targetWeight = 3000L)
+      logShards(s, out)
     }),
 
     // the Gopher heuristic rule bundle (Rae et al. 2021 A1.1): all seven
@@ -1907,13 +1909,7 @@ object SparkEntry {
     // %5 docs plant "lorem ipsum", %7 docs plant a brace, and only %35
     // docs reach the 3-sentence floor — cleaned text + all verdicts hash
     "q164_c4_line_filter" -> ((s, d) => {
-      val aug = Tables(s, d, "documents").withColumn("t",
-        concat(col("text"),
-          lit("\nThis is a proper sentence with seven words."),
-          when(col("doc_id") % 5 === 0,
-            lit("\nLorem ipsum dolor sit amet here today.")).otherwise(lit("")),
-          when(col("doc_id") % 7 === 0,
-            lit("\nThe config is { nested } here okay.")).otherwise(lit(""))))
+      val aug = c4Docs(s, d, sentences = 1)
       val verdicts = graft.ops.TextOps.c4Columns(col("t"))
         .map { case (n, c) => c.as(n) }
       aug.select(
@@ -1928,12 +1924,7 @@ object SparkEntry {
     "q165_cross_source_matrix" -> ((s, d) => {
       val docs = Tables(s, d, "documents")
         .select(col("doc_id"), col("text"), col("source"))
-      val deriv = docs
-        .where(col("doc_id") % 11 === 0 && col("text").isNotNull)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          array_join(slice(graft.ops.TextOps.wsTokens(col("text")), 1, 30), " ")
-            .as("text"),
-          lit("derived").as("source"))
+      val deriv = derivatives(docs).withColumn("source", lit("derived"))
       val corpus = docs.unionByName(deriv)
       val pairs = graft.ops.Decontam.containmentPairs(
         corpus.select("doc_id", "text"), "doc_id", "text",
@@ -1949,16 +1940,8 @@ object SparkEntry {
     // endpoints); the oracle derives the same cells from the % 7
     // construction, so a single straddling pair would hash-mismatch
     "q166_split_leakage_audit" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val aug = docsWithParagraphs(s, d)
-      val fp = aug.withColumn("__f",
-        element_at(split(col("t"), "\n\n"), -1))
-      // md5 window key — same 16-byte-exchange discipline as q158
-      val pairs = fp
-        .withColumn("__m",
-          min(col("doc_id")).over(Window.partitionBy(md5(col("__f")))))
-        .where(col("doc_id") =!= col("__m"))
-        .select(col("__m").as("id_a"), col("doc_id").as("id_b"))
+      val pairs = suffixPairs(aug)
       val assigned = graft.ops.Sampling.leakageSafeSplit(
         aug.select("doc_id"), "doc_id", pairs)
       graft.ops.Dedup.crossSourceDupMatrix(
@@ -2081,15 +2064,7 @@ object SparkEntry {
     // monotone survival counts hash against the combined q168/q164/q160
     // oracle machinery
     "q175_curation_funnel" -> ((s, d) => {
-      val aug = Tables(s, d, "documents").withColumn("t",
-        concat(col("text"),
-          lit("\nThis is a proper sentence with seven words."),
-          lit("\nHere is another proper sentence for the page."),
-          lit("\nA third proper sentence closes the page here."),
-          when(col("doc_id") % 5 === 0,
-            lit("\nLorem ipsum dolor sit amet here today.")).otherwise(lit("")),
-          when(col("doc_id") % 7 === 0,
-            lit("\nThe config is { nested } here okay.")).otherwise(lit(""))))
+      val aug = c4Docs(s, d, sentences = 3)
       graft.ops.TextOps.curationFunnel(aug, "source", "t", q154Blocklist)
         .orderBy(col("source"))
     }),
@@ -2099,18 +2074,10 @@ object SparkEntry {
     // DUPLICATED paragraph pair so the new stage has real casualties —
     // dup_para_frac 1/3 > 0.30 trips the quick rule
     "q179_curation_funnel_full" -> ((s, d) => {
-      val aug = Tables(s, d, "documents").withColumn("t",
-        concat(col("text"),
-          lit("\nThis is a proper sentence with seven words."),
-          lit("\nHere is another proper sentence for the page."),
-          lit("\nA third proper sentence closes the page here."),
-          when(col("doc_id") % 5 === 0,
-            lit("\nLorem ipsum dolor sit amet here today.")).otherwise(lit("")),
-          when(col("doc_id") % 7 === 0,
-            lit("\nThe config is { nested } here okay.")).otherwise(lit("")),
-          when(col("doc_id") % 6 === 1,
-            lit("\n\nZq repeated paragraph.\n\nZq repeated paragraph."))
-            .otherwise(lit(""))))
+      val aug = c4Docs(s, d, sentences = 3,
+        when(col("doc_id") % 6 === 1,
+          lit("\n\nZq repeated paragraph.\n\nZq repeated paragraph."))
+          .otherwise(lit("")))
       graft.ops.TextOps.curationFunnelFull(aug, "source", "t", q154Blocklist)
         .orderBy(col("source"))
     }),
@@ -2165,9 +2132,7 @@ object SparkEntry {
     // two full copies while src1 takes a ~6.6k-token md5-order partial
     // with the crossing row kept
     "q181_unimax_tokens" -> ((s, d) => {
-      val docs = docsParallel(s, d)
-        .withColumn("n_tok",
-          graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(docsParallel(s, d))
         .withColumn("domain", substring(col("source"), 1, 4))
       graft.ops.Sampling.takeUniMaxTokens(docs, "domain", "doc_id", "n_tok",
         budget = 30000L, maxEpochs = 2L)
@@ -2248,14 +2213,8 @@ object SparkEntry {
     // token count + final shard — the whole chain hashes under a single
     // DuckDB replay built from the q171/q179/q167/q30/q71/q157/q159
     // oracle fragments.
-    "q182_pipeline_e2e" -> ((s, d) => {
-      import s.implicits._
-      val eval = q182EvalRows.toDF("text")
-      graft.ops.Pipeline.curate(
-        crawlDocs(s, d), "doc_id", "url", "source", "html",
-        eval, "text", q182Config)
-        .orderBy(col("doc_id"))
-    }),
+    "q182_pipeline_e2e" -> ((s, d) =>
+      q182Stages(s, d).diagnosis.orderBy(col("doc_id"))),
 
     // char-window exact-substring dedup (Lee et al. 2022 ExactSubstr at
     // character granularity): %8==2 docs share a planted CJK passage —
@@ -2301,7 +2260,7 @@ object SparkEntry {
     // 8 — integer arithmetic both engines reproduce), confusion counts +
     // ppm precision/recall/f1 from ONE 4·K-sum aggregate pass
     "q189_threshold_sweep" -> ((s, d) => {
-      val scored = sweepScored(s, d, q189ModelDir(d)).persist()
+      val scored = sweepScored(s, d, scratchDir("q189_nb", d)).persist()
       try {
         val ths = sweepLadder(scored)
         if (ths.isEmpty) emptySweepFrame(s)
@@ -2314,7 +2273,7 @@ object SparkEntry {
     // threshold keeps N tokens at such precision"): same ladder, every
     // confusion cell sums the doc's token count instead of 1
     "q191_token_sweep" -> ((s, d) => {
-      val scored = sweepScored(s, d, q191ModelDir(d)).persist()
+      val scored = sweepScored(s, d, scratchDir("q191_nb", d)).persist()
       try {
         val ths = sweepLadder(scored)
         if (ths.isEmpty) emptySweepFrame(s)
@@ -2336,17 +2295,8 @@ object SparkEntry {
     // is q162's surface. targetWeight 6000 keeps the per-dir write
     // floor — the query's real cost — at ~25 dirs.
     "q192_log_verify" -> ((s, d) => {
-      val out = q192ShardDir(d)
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok",
-          graft.ops.TextOps.tokenCount(col("text")).cast("long"))
-        .select("doc_id", "n_tok")
-      graft.ops.Sink.writeSizedShards(
-        docs.where(col("doc_id") % 2 === 0), out, "doc_id", "n_tok",
-        targetWeight = 6000L, overwrite = true)
-      graft.ops.Sink.appendSizedShards(
-        docs.where(col("doc_id") % 10 === 0), out, "doc_id", "n_tok",
-        targetWeight = 6000L, checkIds = false)
+      val (docs, out) = sizedLog(s, d, "q192_logverify", col("doc_id") % 2 === 0)
+      appendLog(docs, out, col("doc_id") % 10 === 0, checkIds = false)
       graft.ops.Sink.verifySizedLog(s, out, "doc_id", "n_tok",
         bloomCheck = false)
         .orderBy(col("check"))
@@ -2359,24 +2309,11 @@ object SparkEntry {
     // three-arm cumsum replay (file counts are physical and live in
     // OpsSpec, where crash-replay and untouched-shard pins also live)
     "q193_log_compact" -> ((s, d) => {
-      val out = q193ShardDir(d)
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok",
-          graft.ops.TextOps.tokenCount(col("text")).cast("long"))
-        .select("doc_id", "n_tok")
-      graft.ops.Sink.writeSizedShards(
-        docs.where(col("doc_id") % 3 === 0), out, "doc_id", "n_tok",
-        targetWeight = 6000L, overwrite = true)
-      graft.ops.Sink.appendSizedShards(
-        docs.where(col("doc_id") % 3 === 1), out, "doc_id", "n_tok",
-        targetWeight = 6000L)
-      graft.ops.Sink.appendSizedShards(
-        docs.where(col("doc_id") % 3 === 2), out, "doc_id", "n_tok",
-        targetWeight = 6000L)
+      val (docs, out) = sizedLog(s, d, "q193_logcompact", col("doc_id") % 3 === 0)
+      appendLog(docs, out, col("doc_id") % 3 === 1)
+      appendLog(docs, out, col("doc_id") % 3 === 2)
       graft.ops.Sink.compactSizedShards(s, out, "doc_id")
-      s.read.parquet(out)
-        .select(col("doc_id"), col("shard").cast("long").as("shard"))
-        .orderBy(col("doc_id"))
+      logShards(s, out)
     }),
 
     // targeted deletion from the sized-shard log (takedowns / erasure
@@ -2391,22 +2328,11 @@ object SparkEntry {
     // tail-only / superset invariants), so the oracle is pure batch
     // arithmetic; report counts and physical pins live in OpsSpec.
     "q194_log_delete" -> ((s, d) => {
-      val out = q194ShardDir(d)
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok",
-          graft.ops.TextOps.tokenCount(col("text")).cast("long"))
-        .select("doc_id", "n_tok")
-      graft.ops.Sink.writeSizedShards(
-        docs.where(col("doc_id") % 2 === 0), out, "doc_id", "n_tok",
-        targetWeight = 6000L, overwrite = true)
-      graft.ops.Sink.appendSizedShards(
-        docs.where(col("doc_id") % 2 === 1), out, "doc_id", "n_tok",
-        targetWeight = 6000L)
+      val (docs, out) = sizedLog(s, d, "q194_logdelete", col("doc_id") % 2 === 0)
+      appendLog(docs, out, col("doc_id") % 2 === 1)
       graft.ops.Sink.deleteFromSizedShards(
         s, out, "doc_id", docs.where(col("doc_id") % 449 === 0))
-      s.read.parquet(out)
-        .select(col("doc_id"), col("shard").cast("long").as("shard"))
-        .orderBy(col("doc_id"))
+      logShards(s, out)
     }),
 
     // the calibration round trip DEPLOYED (q189 → a live filter): sweep
@@ -2414,7 +2340,7 @@ object SparkEntry {
     // precision (max recall subject to the floor), keep score ≥ t — the
     // whole train→score→calibrate→filter chain under one hash
     "q190_calibrated_screen" -> ((s, d) => {
-      val scored = sweepScored(s, d, q190ModelDir(d))
+      val scored = sweepScored(s, d, scratchDir("q190_nb", d))
       val cached = scored.persist()
       // deploying on a corpus with nothing to calibrate is LOUD (empty
       // ladder fails thresholdSweep's guard), unlike the report queries
@@ -2502,7 +2428,7 @@ object SparkEntry {
     // q105 discipline). Every stage keys on a bounded column — the naive
     // orderBy(pos) global sort never appears (PlanSpec-pinned)
     "q142_epoch_order_shards" -> ((s, d) => {
-      val out = q142ShardDir(d)
+      val out = scratchDir("q142_epochshards", d)
       val bins = graft.ops.Packing.materializeEpochOrder(
         Tables(s, d, "documents"), "doc_id", "text",
         epoch = 7L, capacity = 256L, nGroups = 4)
@@ -2520,24 +2446,16 @@ object SparkEntry {
     // frequencyScore for the %3=0 arrivals against the COMMITTED totals
     // only. Exact integers end to end, so the whole lifecycle hashes
     "q141_tf_index_lifecycle" -> ((s, d) => {
-      val docs = docsParallel(s, d)
-      val idx = q141IndexDir(d)
-      graft.ops.TextOps.writeTokenFrequencyIndex(
-        docs.where(col("doc_id") % 3 === 1), "doc_id", "text", idx)
-      graft.ops.TextOps.appendTokenFrequencyIndex(
-        docs.where(col("doc_id") % 3 === 2), "doc_id", "text", idx)
-      graft.ops.TextOps.frequencyScoreAgainstIndex(
-        docs.where(col("doc_id") % 3 === 0), "doc_id", "text", idx,
-        rareBelow = 3L)
-        .orderBy(col("doc_id"))
+      q141Build(s, d)
+      q141Append(s, d)
+      q141Probe(s, d).orderBy(col("doc_id"))
     }),
 
     // GLOBAL quality filter: the best 20% of the WHOLE corpus by token
     // count in (score DESC, md5, id) order — takeTopFraction's exact rule
     // at one constant stratum, the two-phase take instead of a global sort
     "q139_take_global_top" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(Tables(s, d, "documents"))
       graft.ops.Sampling.takeGlobalTopFraction(
         docs, "doc_id", "n_tok", fraction = 0.2, nBuckets = 8)
         .select(col("doc_id"), col("n_tok"))
@@ -2548,8 +2466,7 @@ object SparkEntry {
     // docs until 1 500 running tokens, crossing row kept — q130's rule
     // with no stratum
     "q140_take_global_tokens_top" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(Tables(s, d, "documents"))
       graft.ops.Sampling.takeGlobalTokensTop(
         docs, "doc_id", "n_tok", "n_tok", budget = 1500L, nBuckets = 8)
         .select(col("doc_id"), col("n_tok"))
@@ -2559,8 +2476,7 @@ object SparkEntry {
     // global TOKEN-budget sample: the md5-order corpus prefix until 2 000
     // tokens, crossing row kept — q103's rule at one global stratum
     "q137_take_global_tokens" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(Tables(s, d, "documents"))
       graft.ops.Sampling.takeGlobalTokens(docs, "doc_id", "n_tok", budget = 2000L)
         .select(col("doc_id"), col("n_tok"))
         .orderBy(col("doc_id"))
@@ -2591,9 +2507,8 @@ object SparkEntry {
     // token count, heavy ties broken in md5 content order) instead of a
     // content-keyed sample — the quality-aware multilingual recipe
     "q134_temperature_quality" -> ((s, d) => {
-      val docs = docsParallel(s, d)
+      val docs = tokenCounted(docsParallel(s, d))
         .withColumn("domain", substring(col("source"), 1, 4))
-        .withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
       graft.ops.Sampling.temperatureMixTopQuality(
         docs, "domain", "doc_id", "n_tok", alpha = 0.5, targetRows = 300,
         nBuckets = 8)
@@ -2608,8 +2523,7 @@ object SparkEntry {
     // the md5 sub-bucket tie path — is the path the oracle hashes, not
     // the direct boundary window. Same exact-kept-set contract as q129.
     "q131_top_fraction_tiedense" -> ((s, d) => {
-      val docs = docsParallel(s, d)
-        .withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(docsParallel(s, d))
         .withColumn("q3", col("n_tok") % 3)
       graft.ops.Sampling.takeTopFraction(
         docs, "source", "doc_id", "q3", fraction = 0.4, nBuckets = 8,
@@ -2624,8 +2538,7 @@ object SparkEntry {
     // every source is ONE tie run and the md5 sub-bucket prefix decides
     // the cutoff
     "q132_top_budget_tiedense" -> ((s, d) => {
-      val docs = docsParallel(s, d)
-        .withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(docsParallel(s, d))
         .withColumn("good", (col("n_tok") % 2).cast("long"))
       graft.ops.Sampling.takeTopTokenBudget(
         docs, "source", "doc_id", "good", "n_tok", budget = 500L,
@@ -2642,8 +2555,7 @@ object SparkEntry {
     // kept set must be IDENTICAL to q103's (width only moves the boundary
     // window's size) — the shared oracle form hashes exactly that
     "q133_token_budget_degrade" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-        .withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
+      val docs = tokenCounted(Tables(s, d, "documents"))
       graft.ops.Sampling.takeTokenBudget(
         docs, "source", "doc_id", "n_tok", budget = 600L, bucketHexLen = 6,
         maxClassificationRows = 350)
@@ -2669,9 +2581,8 @@ object SparkEntry {
     // sqrt token shares set per-domain token quotas, membership is the
     // md5-content-order prefix until the quota — binding at every SF
     "q124_temperature_tokens" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
+      val docs = tokenCounted(Tables(s, d, "documents"))
         .withColumn("domain", substring(col("source"), 1, 4))
-        .withColumn("n_tok", graft.ops.TextOps.tokenCount(col("text")).cast("long"))
       graft.ops.Sampling.temperatureMixTokens(
         docs, "domain", "doc_id", "n_tok", alpha = 0.5, targetTokens = 10000L)
         .select(col("doc_id"), col("domain"), col("n_tok"))
@@ -2761,13 +2672,8 @@ object SparkEntry {
     // are exact ⇒ fully SQL-oracled (recursive-CTE closure with the
     // standing-anchor override)
     "q125_semantic_against" -> ((s, d) => {
-      val emb = embParallel(s, d)
-      val idx = q125IndexDir(d)
-      graft.ops.Similarity.writeAnnIndex(
-        emb.where(col("vec_id") % 10 =!= 0), "embedding", "vec_id", idx, nlist = 8)
-      graft.ops.Similarity.semanticDedupAgainstIndex(
-        emb.where(col("vec_id") % 10 === 0), "embedding", "vec_id", idx,
-        minCosine = 0.35, nprobe = 8)
+      standingAnn(s, d, "q125_annindex")
+      q125Probe(s, d)
         .select(col("id").as("vec_id"), col("rep"), col("kept"))
         .orderBy(col("vec_id"))
     }),
@@ -2779,14 +2685,8 @@ object SparkEntry {
     // components still keep nothing — standing wins regardless of score,
     // the first-writer-wins contract of every lifecycle
     "q127_semantic_kb_against" -> ((s, d) => {
-      val emb = embParallel(s, d)
-      val idx = q127IndexDir(d)
-      graft.ops.Similarity.writeAnnIndex(
-        emb.where(col("vec_id") % 10 =!= 0), "embedding", "vec_id", idx, nlist = 8)
-      graft.ops.Similarity.semanticDedupKeepBestAgainstIndex(
-        emb.where(col("vec_id") % 10 === 0)
-          .withColumn("score", pmod(col("vec_id") * 13, lit(97))),
-        "embedding", "vec_id", "score", idx, minCosine = 0.35, nprobe = 8)
+      standingAnn(s, d, "q127_annindex")
+      q127Probe(s, d)
         .select(col("id").as("vec_id"), col("rep"), col("kept"))
         .orderBy(col("vec_id"))
     }),
@@ -2798,14 +2698,9 @@ object SparkEntry {
     // first-occurrence within the probe batch; everything exact, so the
     // whole lifecycle is SQL-oracled
     "q108_paragraph_index" -> ((s, d) => {
-      val aug = docsWithParagraphs(s, d)
-      val idx = q108IndexDir(d)
-      graft.ops.Dedup.writeParagraphIndex(
-        aug.where(col("doc_id") % 3 === 1), "t", idx)
-      graft.ops.Dedup.appendParagraphIndex(
-        aug.where(col("doc_id") % 3 === 2), "t", idx)
-      graft.ops.Dedup.dedupParagraphsAgainstIndex(
-        aug.where(col("doc_id") % 3 === 0), "doc_id", "t", idx)
+      q108Build(s, d)
+      q108Append(s, d)
+      q108Probe(s, d)
         .select(col("doc_id"), col("cleaned"), col("n_paras"), col("n_kept_paras"))
         .orderBy(col("doc_id"))
     }),
@@ -2851,14 +2746,9 @@ object SparkEntry {
     // 1.0 for the pair while Jaccard would sit near |deriv|/|orig|.
     // maxDf = 50 exercises the boilerplate cap on both engines
     "q117_containment_pairs" -> ((s, d) => {
-      val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-      val deriv = docs
-        .where(col("doc_id") % 11 === 0 && col("text").isNotNull)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          array_join(slice(graft.ops.TextOps.wsTokens(col("text")), 1, 30), " ")
-            .as("text"))
+      val docs = idText(s, d)
       graft.ops.Decontam.containmentPairs(
-        docs.unionByName(deriv), "doc_id", "text",
+        docs.unionByName(derivatives(docs)), "doc_id", "text",
         n = 5, minContainment = 0.5, maxDf = 50)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -2869,14 +2759,9 @@ object SparkEntry {
     // ~2/(w+1) of the gram volume; per-doc selection is pure codegen in
     // the scan, value-level minima make the set engine-portable
     "q121_winnowing_pairs" -> ((s, d) => {
-      val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-      val deriv = docs
-        .where(col("doc_id") % 11 === 0 && col("text").isNotNull)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          array_join(slice(graft.ops.TextOps.wsTokens(col("text")), 1, 30), " ")
-            .as("text"))
+      val docs = idText(s, d)
       graft.ops.Decontam.winnowingPairs(
-        docs.unionByName(deriv), "doc_id", "text",
+        docs.unionByName(derivatives(docs)), "doc_id", "text",
         n = 5, w = 4, minShared = 2, maxDf = 50)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -2887,34 +2772,18 @@ object SparkEntry {
     // derivatives for partial overlap against the whole standing corpus —
     // all exact, so the lifecycle is fully SQL-oracled
     "q122_fp_index" -> ((s, d) => {
-      val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-      val idx = q122IndexDir(d)
-      graft.ops.Decontam.writeFingerprintIndex(
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text", idx, n = 5, w = 4)
-      graft.ops.Decontam.appendFingerprintIndex(
-        docs.where(col("doc_id") % 2 === 1), "doc_id", "text", idx)
-      val deriv = docs
-        .where(col("doc_id") % 11 === 0 && col("text").isNotNull)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          array_join(slice(graft.ops.TextOps.wsTokens(col("text")), 1, 30), " ")
-            .as("text"))
-      graft.ops.Decontam.winnowingPairsAgainstIndex(
-        deriv, "doc_id", "text", idx, minShared = 2, maxDf = 50)
-        .orderBy(col("new_id"), col("existing_id"))
+      q122Build(s, d)
+      q122Append(s, d)
+      q122Probe(s, d).orderBy(col("new_id"), col("existing_id"))
     }),
 
     // incremental containment: today's batch (the planted derivatives)
     // against the standing corpus — only cross-side pairs generated, df
     // cap over the union so batch ≡ rebuild; the daily-crawl twin of q117
     "q120_containment_against" -> ((s, d) => {
-      val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-      val deriv = docs
-        .where(col("doc_id") % 11 === 0 && col("text").isNotNull)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          array_join(slice(graft.ops.TextOps.wsTokens(col("text")), 1, 30), " ")
-            .as("text"))
+      val docs = idText(s, d)
       graft.ops.Decontam.containmentPairsAgainst(
-        deriv, docs, "doc_id", "text",
+        derivatives(docs), docs, "doc_id", "text",
         n = 5, minContainment = 0.5, maxDf = 50)
         .orderBy(col("new_id"), col("existing_id"))
     }),
@@ -2937,14 +2806,8 @@ object SparkEntry {
     // oracle verbatim, the q99/q114 trick. The in-band filter runs before
     // the ranking window, so the shuffle carries only in-band pairs
     "q119_hard_negatives_ivf" -> ((s, d) => {
-      val emb = embParallel(s, d)
-      val idx = q119IndexDir(d)
-      graft.ops.Similarity.writeAnnIndex(
-        emb, "embedding", "vec_id", idx, nlist = 8)
-      graft.ops.Similarity.hardNegativesAgainstIndex(
-        emb.where(col("vec_id") % 17 === 0), "embedding", "vec_id", idx,
-        k = 5, maxCosine = 0.8, minCosine = 0.1, nprobe = 8)
-        .orderBy(col("query_id"), col("rank"))
+      q119Build(s, d)
+      q119Probe(s, d).orderBy(col("query_id"), col("rank"))
     }),
 
     // sharded corpus sink: write documents as shard=NN parquet (md5-nibble
@@ -2954,9 +2817,9 @@ object SparkEntry {
     // lost nothing and the shard key is engine-portable
     "q105_shard_sink" -> ((s, d) => {
       graft.ops.Sink.writeShards(
-        Tables(s, d, "documents"), q105ShardDir(d), "doc_id",
+        Tables(s, d, "documents"), scratchDir("q105_shards", d), "doc_id",
         nShards = 16, filesPerShard = 2, overwrite = true)
-      graft.ops.Sink.shardManifest(s, q105ShardDir(d), sumCols = Seq("n_chars"))
+      graft.ops.Sink.shardManifest(s, scratchDir("q105_shards", d), sumCols = Seq("n_chars"))
         .orderBy(col("shard"))
     }),
 
@@ -3070,9 +2933,7 @@ object SparkEntry {
     // oracle = the q61 recursive-CTE closure + a QUALIFY pick
     "q88_dedup_keep_best" -> ((s, d) => {
       val docs = Tables(s, d, "documents")
-      val pairs = graft.ops.Dedup.minhashPairs(
-        docsParallel(s, d), "text", "doc_id",
-        k = 3, numHashes = 64, bands = 32, threshold = 0.5)
+      val pairs = minhashDocPairs(s, d)
       val clusters = graft.ops.Dedup.dedupClusters(docs, "doc_id", pairs)
       graft.ops.Dedup.keepBestPerCluster(
         docs, "doc_id", clusters, graft.ops.TextOps.tokenCount(col("text")))
@@ -3093,8 +2954,8 @@ object SparkEntry {
       val perFrame = graft.ops.Multimodal.featureExtract(s, frames, "doc_id", "payload", dim = 16)
         .where(col("error").isNull)
       graft.ops.Similarity.meanPoolEmbeddings(perFrame, "doc_id", "embedding")
-        .write.mode("overwrite").parquet(q87FeatureDir(d))
-      val feat = s.read.parquet(q87FeatureDir(d))
+        .write.mode("overwrite").parquet(scratchDir("q87_features", d))
+      val feat = s.read.parquet(scratchDir("q87_features", d))
       graft.ops.Similarity.bruteForceTopK(
         feat, feat.where(col("doc_id") < 5), "embedding", "doc_id", k = 3)
         .orderBy(col("query_id"), col("rank"))
@@ -3328,8 +3189,8 @@ object SparkEntry {
         s, graft.ops.Multimodal.synthesizePng(s, docs, "doc_id", "text", "payload"),
         "doc_id", "payload", dim = 16)
         .where(col("error").isNull).select("doc_id", "embedding")
-      emb.write.mode("overwrite").parquet(q62FeatureDir(d))
-      val feat = s.read.parquet(q62FeatureDir(d))
+      emb.write.mode("overwrite").parquet(scratchDir("q62_features", d))
+      val feat = s.read.parquet(scratchDir("q62_features", d))
       graft.ops.Similarity.bruteForceTopK(
         feat, feat.where(col("doc_id") < 5), "embedding", "doc_id", k = 3)
         .orderBy(col("query_id"), col("rank"))
@@ -3343,9 +3204,7 @@ object SparkEntry {
     // take the driver union-find fast path, exercised by q88/q115/q123
     "q61_dedup_clusters" -> ((s, d) => {
       val docs = Tables(s, d, "documents")
-      val pairs = graft.ops.Dedup.minhashPairs(
-        docsParallel(s, d), "text", "doc_id",
-        k = 3, numHashes = 64, bands = 32, threshold = 0.5)
+      val pairs = minhashDocPairs(s, d)
       graft.ops.Dedup.dedupClusters(docs, "doc_id", pairs, maxDriverEdges = 0)
         .select(col("id").as("doc_id"), col("rep"))
         .orderBy(col("doc_id"))
@@ -3372,7 +3231,7 @@ object SparkEntry {
     // dispatch's .json branch is what a user's path hits. Sf-suffixed dir
     // for the same run isolation as q62.
     "q80_jsonl_roundtrip" -> ((s, d) => {
-      val out = s"/tmp/graft_jsonl_roundtrip_${new java.io.File(d).getName}"
+      val out = scratchDir("jsonl_roundtrip", d)
       Tables(s, d, "nation")
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
         .coalesce(1).write.mode("overwrite").json(out)
@@ -3589,9 +3448,7 @@ object SparkEntry {
     // disabled here to keep the rounds themselves oracle-checked
     "q79_clusters_star" -> ((s, d) => {
       val docs = Tables(s, d, "documents")
-      val pairs = graft.ops.Dedup.minhashPairs(
-        docsParallel(s, d), "text", "doc_id",
-        k = 3, numHashes = 64, bands = 32, threshold = 0.5)
+      val pairs = minhashDocPairs(s, d)
       graft.ops.Dedup.dedupClustersStar(docs, "doc_id", pairs,
         maxDriverEdges = 0)
         .select(col("id").as("doc_id"), col("rep"))

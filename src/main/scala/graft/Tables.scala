@@ -53,4 +53,19 @@ object Sessions {
     "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
     // native kernels as SQL functions (simhash64, cosine_similarity, …)
     "spark.sql.extensions" -> "graft.GraftExtensions")
+
+  /** The session Bench, Verify, GenScale and Plans run on: `local[cpus]`
+    * with as many shuffle partitions, no UI, [[config]] applied, WARN
+    * logging.
+    */
+  def local(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.ui.enabled", "false")
+      .config(config)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

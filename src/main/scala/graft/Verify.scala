@@ -1,19 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Sessions.config.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // Write every column as parquet `optional` regardless of Spark-side
     // nullability inference: DuckDB's oracle output is always nullable, and
@@ -23,12 +16,7 @@ object Verify {
         df.schema.fields.map(_.copy(nullable = true)))
       spark.createDataFrame(df.rdd, st)
     }
-    // Local-iteration filter, mirroring Bench: unset (the driver's case)
-    // runs everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try nullable(fn(spark, sfDir)).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

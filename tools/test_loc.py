@@ -1,0 +1,55 @@
+"""Tests of the Scala line counter: python3 -m unittest discover tools"""
+import subprocess
+import unittest
+
+import loc
+
+# the tree the recorded line counts were measured on
+PARENT = "48d2fbcd340f6ddafbac72b5a802a31f4a40e735"
+
+
+def has_rev(rev):
+    return subprocess.run(["git", "-C", loc.ROOT, "cat-file", "-e", rev + "^{commit}"],
+                          capture_output=True).returncode == 0
+
+
+class CountTest(unittest.TestCase):
+
+    def test_comment_markers_inside_strings_are_code(self):
+        self.assertEqual(loc.count('val a = "http://x"\n'), 1)
+        self.assertEqual(loc.count('val a = "/* not a comment"\nval b = 1\n'), 2)
+        self.assertEqual(loc.count('val c = \'"\' // quote char\n// next\n'), 1)
+        self.assertEqual(loc.count('val q = "say \\"//\\" twice"\n'), 1)
+
+    def test_triple_quoted_string_counts_every_line(self):
+        text = 'val sql =\n  """SELECT 1\n    |// not a comment\n    |\n    |FROM t""""\nval x = 2\n'
+        # the blank line inside the literal is string content, so it counts
+        self.assertEqual(loc.count(text), 6)
+
+    def test_scaladoc_and_block_comments_do_not_count(self):
+        text = ("/** Scaladoc\n  * with `code`\n  */\n"
+                "object A {\n"
+                "  /* block /* nested */ still comment */\n"
+                "  val x = 1 /* trailing */\n"
+                "  /* spans\n  lines */ val y = 2\n"
+                "\n   \n"
+                "  // line comment\n"
+                "}\n")
+        self.assertEqual(loc.count(text), 4)
+
+    def test_blank_and_comment_only_file_is_zero(self):
+        self.assertEqual(loc.count("\n// a\n/* b */\n\n"), 0)
+
+
+@unittest.skipUnless(has_rev(PARENT), "parent revision not in this checkout")
+class ParentTreeTest(unittest.TestCase):
+
+    def test_parent_counts(self):
+        c = loc.counts(("src/main",), PARENT)
+        self.assertEqual(sum(c.values()), 16685)
+        self.assertEqual(c["src/main/scala/graft/ops/EpochStore.scala"], 535)
+        self.assertEqual(c["src/main/scala/graft/functions/HtmlKernel.scala"], 378)
+
+
+if __name__ == "__main__":
+    unittest.main()
