@@ -304,7 +304,7 @@ object Validator {
     *
     * `streamSafe = true` drops constraints containing aggregate
     * sub-expressions: inlining them requires running a separate batch job at
-    * plan time ([[inlineAggregates]]), which is impossible against an
+    * plan time ([[inlineAggregatesBatch]]), which is impossible against an
     * unbounded stream.
     */
   private[graft] def checkAggs(
@@ -406,21 +406,16 @@ object Validator {
     case _                                    => false
   }
 
-  /** Replace aggregate sub-expressions of a constraint with literal scalars
+  /** Replace aggregate sub-expressions of constraints with literal scalars
     * computed in a dedicated aggregate job, so the main pass stays a plain
     * row-level scan. This implements the reference's polars broadcast
     * semantics (`pl.col("fraction").sum() == 1` compared per row,
     * validators.py:269-293 + tests/test_validators.py:495-505) without a
     * single-partition global window — the scale-safe alternative flagged in
-    * SURVEY §7 hard-part 3.
-    */
-  private[graft] def inlineAggregates(df: DataFrame, constraint: Column): Column =
-    inlineAggregatesBatch(df, Seq(constraint)).head
-
-  /** Batch form: the aggregate sub-expressions of ALL constraints are
-    * deduplicated and computed in ONE scalar-aggregate job, then
-    * substituted back per constraint — N fraction-style constraints cost
-    * one extra scan, not N (the per-constraint form scanned once each).
+    * SURVEY §7 hard-part 3. The aggregate sub-expressions of ALL
+    * constraints are deduplicated and computed in ONE scalar-aggregate job,
+    * then substituted back per constraint — N fraction-style constraints
+    * cost one extra scan, not N.
     */
   private[graft] def inlineAggregatesBatch(
       df: DataFrame,

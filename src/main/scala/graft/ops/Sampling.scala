@@ -165,8 +165,7 @@ object Sampling {
       col(keyCol).asc) ++ tieCol.map(col(_).asc)
     val w = Window.partitionBy(col(stratumCol)).orderBy(order: _*)
     // collision-safe rank column — never overwrite a caller's column
-    val rk = Iterator.from(0).map(i => if (i == 0) "__rk" else s"__rk$i")
-      .find(!df.columns.contains(_)).get
+    val rk = freshColumn(df, "__rk")
     df.withColumn(rk, row_number().over(w))
       .where(col(rk) <= n)
       .drop(rk)
@@ -269,6 +268,8 @@ object Sampling {
       maxClassificationRows: Int = MaxClassificationRows): DataFrame = {
     require(bucketHexLen >= 1 && bucketHexLen <= 6,
       s"bucketHexLen must be in [1, 6], got $bucketHexLen")
+    requireUnreserved(df, "takeBudgets", Seq("__cs", "__cb", "__keep_all",
+      "__off", "__budget", "__bs", "__bk", "__in_boundary"))
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = df.sparkSession
@@ -322,32 +323,25 @@ object Sampling {
       }
     val slim = slimAt(hexLen)
 
-    // driver-side prefix in the window's own order (null bucket first,
-    // then hex asc — the bucket is the leading prefix of the md5 sort key,
-    // so bucket order refines row order exactly). A bucket whose whole
-    // prefix range ends strictly below the budget keeps every row (the
-    // keep test is `running-before-row < budget` and every before-row
-    // value in it is < its end sum); one that starts at-or-past the
-    // budget keeps none; the at-most-one straddling bucket per stratum
-    // goes through the exact windowed cumsum with its start as offset.
-    val clsRows = bucketSums
+    // driver-side prefix fold in the window's own order (null bucket
+    // first, then hex asc — the bucket is the leading prefix of the md5
+    // sort key, so bucket order refines row order exactly) with the one
+    // cutoff `budget`: a bucket wholly under it keeps every row, one
+    // wholly past it keeps none, and the at-most-one straddling bucket per
+    // stratum goes through the exact windowed cumsum with its start as
+    // offset.
+    val clsRows = bucketSums.toSeq
       .groupBy(r => if (r.isNullAt(0)) None else Some(r.get(0)))
       .iterator.flatMap { case (stratum, rows) =>
         val budget = budgetOf(stratum)
-        val ordered = rows.sortBy(r =>
-          (if (r.isNullAt(1)) "" else "" + r.getString(1)))
-        var before = 0L
-        ordered.flatMap { r =>
-          val sum = r.getLong(2)
-          val start = before
-          before += sum
-          if (budget <= 0L) None
-          else if (start + sum < budget)
-            Some(org.apache.spark.sql.Row(r.get(0), r.get(1), true, 0L, budget))
-          else if (start < budget)
-            Some(org.apache.spark.sql.Row(r.get(0), r.get(1), false, start, budget))
-          else None
-        }
+        prefixFold(rows.sortBy(r => if (r.isNullAt(1)) "" else r.getString(1))
+            .map(r => r -> r.getLong(2)), 0L, Seq(budget))
+          .collect {
+            case (r, Left(0)) =>
+              org.apache.spark.sql.Row(r.get(0), r.get(1), true, 0L, budget)
+            case (r, Right(start)) =>
+              org.apache.spark.sql.Row(r.get(0), r.get(1), false, start, budget)
+          }
       }.toSeq
     val sType = slim.schema("__s").dataType
     val cls = spark.createDataFrame(
@@ -730,10 +724,10 @@ object Sampling {
       maxBoundaryTaskRows: Long = MaxBoundaryTaskRows): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
     require(targetRows >= 1, s"targetRows must be >= 1, got $targetRows")
-    // quota arithmetic runs over takeTopCore's OWN phase-0 per-source
+    // quota arithmetic runs over the labeler's OWN phase-0 per-source
     // counts — a separate sourceSizes aggregate would be an identical
     // second pass over the input
-    takeTopCore(df, sourceCol, keyCol, scoreCol, lit(1L),
+    takeScoreTop(df, sourceCol, keyCol, scoreCol, lit(1L),
       counts => {
         val (weighted, z) = temperatureWeights(counts, alpha)
         weighted.map { case (s, c, w) =>
@@ -1020,41 +1014,47 @@ object Sampling {
     * content order every other take in this module uses (`keyCol` must
     * identify a row within its stratum — the usual total-order caveat).
     * The kept set is EXACT — identical to a per-stratum `row_number` over
-    * that order — but the plan never sorts a whole stratum in one task:
+    * that order — but the plan never sorts a whole stratum in one task.
+    *
+    * It is the one-cutoff use of the score-ordered prefix labeler behind
+    * every take in this family ([[takeTopTokenBudget]],
+    * [[temperatureMixTopQuality]], the `takeGlobal*Top*` forms and
+    * [[qualityPartition]]). The labeler gives each row the index of the
+    * first cutoff its stratum's running weight-before-row falls under
+    * (here one cutoff, the budget, and the rows labelled 0 are kept):
     *
     *   1. one aggregate computes per-stratum counts + approximate score
     *      quantiles (the bucket BOUNDARIES — their accuracy affects only
-    *      load balance, never the kept set);
+    *      load balance, never the labels). The bucket count SELF-SIZES:
+    *      when the largest stratum would average more than
+    *      `maxBoundaryTaskRows` rows per bucket, the quantiles are
+    *      recomputed once at a finer width (≤ 4096), so a continuous
+    *      score's boundary bucket fits one task up to ~4096 ×
+    *      maxBoundaryTaskRows (≈ 8B) rows per stratum;
     *   2. rows land in score-range buckets (a broadcast boundary join +
-    *      one codegen array fold — no per-stratum when-chains), and one
-    *      map-side-combining aggregate counts each (stratum, bucket);
-    *   3. the driver prefix-sums the tiny count table in descending
-    *      score-bucket order: buckets wholly above the cutoff keep every
-    *      row join-free, buckets below drop, and the ONE boundary bucket
-    *      per stratum resolves by a strategy chosen PER STRATUM from
-    *      phase-1's measured row counts: a bucket within
-    *      `maxBoundaryTaskRows` (default 2M ledger rows — every practical
-    *      continuous-score take: phase 0 SELF-SIZES the bucket count so a
-    *      giant stratum's buckets average ~maxBoundaryTaskRows, up to
-    *      4096 buckets ≈ 8B rows per stratum) runs the exact cumsum
-    *      window directly, zero extra jobs; an OVERSIZED bucket — a
-    *      tie-dense score collapsing the quantile boundaries — goes
-    *      through score-RUN classification instead: runs grouped by
-    *      exact score value keep or drop join-free (the prefix is a
-    *      window over DISTINCT scores, tiny precisely when ties are the
-    *      problem), and the at-most-one straddling TIE run per stratum
-    *      routes through [[takeBudgets]]' md5 sub-bucket machinery
-    *      (within a tied score the keep rule IS a content-order prefix),
-    *      so a binary quality flag — where the tie run is half the
-    *      stratum — never funnels a stratum into one window task, and a
-    *      tie-dense stratum no longer drags well-behaved strata through
-    *      its extra classification jobs;
-    *   4. membership attaches back through broadcast joins only — the
+    *      one codegen array fold), and one map-side-combining aggregate
+    *      yields each (stratum, bucket)'s weight and row count;
+    *   3. the driver folds that tiny table in descending score order:
+    *      a bucket no cutoff falls inside gets one label for all its rows
+    *      (a broadcast lookup, no window), and each straddled bucket
+    *      resolves by a strategy chosen from its measured row count —
+    *      within `maxBoundaryTaskRows` (default 2M ledger rows) the exact
+    *      cumsum window runs over it directly; an OVERSIZED one (a tie-dense
+    *      score collapsing the quantile boundaries) runs the same prefix
+    *      over its DISTINCT scores in a Spark window, and only the score
+    *      RUNS a cutoff falls inside come to the driver — within a tied
+    *      score the order is the md5 content order, so each splits into
+    *      md5 sub-buckets, folded on the driver, with the
+    *      straddled sub-buckets (~1/16³ of their run) taking the only
+    *      window. A binary quality flag, whose tie run is half the
+    *      stratum, never funnels a stratum into one task, and strata
+    *      choose their strategy independently;
+    *   4. labels attach back through broadcast lookups only — the
     *      caller's rows never shuffle.
     *
     * Rerun-deterministic even though the quantile sketch is not: the kept
     * set is a pure function of `(score, md5(key), key)` order and exact
-    * counts; boundaries only move rows between the join-free and windowed
+    * weights; boundaries only move rows between the join-free and windowed
     * paths. A stratum whose budget rounds to 0 is dropped entirely.
     *
     * Scores are compared AS DOUBLES: integral scores beyond ±2^53 (or
@@ -1062,23 +1062,25 @@ object Sampling {
     * content order — keep quality scores inside double range (every
     * practical count/ratio signal is).
     *
-    * The input is evaluated once per phase (stats, bucket counts, run
+    * The input is evaluated once per phase (stats, bucket weights, run
     * classification, and each attach arm) — persist an expensive
     * non-file-backed frame before calling, or the exact-kept-set
     * guarantee rests on the frame being deterministic.
     *
-    * STRATA-CARDINALITY contract (tightened in round 12): phase 0's
-    * stats rows each carry an (nBuckets−1)-double quantile array, so the
-    * strata cap is byte-honest — `max(1024, maxClassificationRows /
-    * nBuckets)` distinct strata (≈31k at the default 64 buckets, 1024 at
-    * 4096), not the flat `maxClassificationRows` of round 11. A
-    * higher-cardinality stratum column (e.g. raw URL domains) now fails
-    * loudly where it previously risked a tens-of-GB driver collect —
-    * aggregate to a coarser stratum, or raise `maxClassificationRows`
-    * deliberately if the driver heap is provisioned for it.
+    * STRATA-CARDINALITY contract: phase 0's stats rows each carry an
+    * (nBuckets−1)-double quantile array, so the strata cap is
+    * byte-honest — `max(1024, maxClassificationRows / nBuckets)`
+    * distinct strata (≈31k at the default 64 buckets, 1024 at 4096). A
+    * higher-cardinality stratum column (e.g. raw URL domains) fails
+    * loudly rather than risk a tens-of-GB driver collect — aggregate to a
+    * coarser stratum, or raise `maxClassificationRows` deliberately if
+    * the driver heap is provisioned for it. The straddled runs (at most
+    * one per stratum and cutoff) and their sub-bucket table are bounded
+    * by `maxClassificationRows` too.
     *
     * [[takeTopFractionWithStats]] additionally returns per-stratum
-    * boundary/tie skew telemetry.
+    * boundary/tie skew telemetry. Internal column names the plan joins
+    * onto the input (`__db`, `__cs`, …) are refused up front.
     */
   def takeTopFraction(
       df: DataFrame,
@@ -1108,7 +1110,7 @@ object Sampling {
       : (DataFrame, Seq[TopTakeStratumStats]) = {
     require(fraction > 0.0 && fraction <= 1.0,
       s"fraction must be in (0, 1], got $fraction")
-    takeTopCore(df, stratumCol, keyCol, scoreCol, lit(1L),
+    takeScoreTop(df, stratumCol, keyCol, scoreCol, lit(1L),
       counts => counts.map { case (s, c) =>
         s -> math.round(fraction * c)
       }.toMap,
@@ -1122,10 +1124,8 @@ object Sampling {
     * crossing row kept ([[takeTokenBudget]]'s rule at score order instead
     * of content order). Null token counts count as 0. Same exactness,
     * tie-order, plan, and evaluated-once-per-phase contract as
-    * [[takeTopFraction]]: identical to the naive per-stratum window, but
-    * no stratum is ever sorted whole — score-range buckets classify from
-    * exact TOKEN sums, the boundary bucket classifies per score RUN, and
-    * only the cutoff tie run's md5 sub-boundary sub-bucket is windowed.
+    * [[takeTopFraction]] — the same labeler with TOKEN weights: identical
+    * to the naive per-stratum window, but no stratum is ever sorted whole.
     */
   def takeTopTokenBudget(
       df: DataFrame,
@@ -1156,7 +1156,7 @@ object Sampling {
       maxBoundaryTaskRows: Long = MaxBoundaryTaskRows)
       : (DataFrame, Seq[TopTakeStratumStats]) = {
     require(budget >= 1, s"budget must be >= 1, got $budget")
-    takeTopCore(df, stratumCol, keyCol, scoreCol,
+    takeScoreTop(df, stratumCol, keyCol, scoreCol,
       coalesce(col(tokensCol).cast("long"), lit(0L)),
       counts => counts.map { case (s, _) => s -> budget }.toMap,
       nBuckets, maxClassificationRows, maxBoundaryTaskRows)
@@ -1195,105 +1195,131 @@ object Sampling {
       if (totalWeight <= 0L) 0.0 else tieWeight.toDouble / totalWeight
   }
 
-  /** Shared score-ordered two-phase core of [[takeTopFraction]] and
-    * [[takeTopTokenBudget]]: `tokens` is the per-row weight the budget
-    * consumes (`lit(1)` = row counting), `budgetsOf` maps the FULL
-    * per-stratum row-count table (phase 0's own aggregate — so quota
-    * arithmetic that needs every stratum's size, like the temperature
-    * mix, costs no second pass) to the per-stratum budget map. Keep
-    * rule: running-weight-before-row < budget in `(score DESC nulls
-    * last, md5(key), key)` order — for unit weights that is exactly
-    * "rank ≤ budget".
-    *
-    * Round-11 boundary handling: the round-10 form ran one `(score DESC,
-    * key)` window over the whole boundary bucket, which degenerates to a
-    * single-task full-stratum sort when the score is tie-dense (a binary
-    * quality flag collapses the quantile boundaries and one bucket IS the
-    * stratum). Now the boundary bucket classifies per score RUN — grouped
-    * by exact score value (map-side combining), prefixed by a window over
-    * DISTINCT scores — and only the at-most-one straddling TIE run per
-    * stratum does ordered work, via [[takeBudgets]]' md5 sub-bucket
-    * machinery (within a tied score the keep rule reduces to a
-    * content-order prefix, which is exactly the order md5 buckets
-    * refine).
-    *
-    * Round-12 refinements: (a) the direct-vs-run/tie choice is PER
-    * STRATUM (phase 1 measures every boundary bucket's row count), so
-    * one tie-dense stratum no longer routes every stratum through the
-    * two extra classification jobs; (b) phase 0 SELF-SIZES the bucket
-    * count — when the largest stratum would average more than
-    * `maxBoundaryTaskRows` rows per bucket, the quantiles are recomputed
-    * once at a finer width (≤ 4096) so a CONTINUOUS score's boundary
-    * bucket fits the direct window up to ~4096 × maxBoundaryTaskRows
-    * (≈ 8B rows) per stratum; (c) the phase-0 stats collect cap is
-    * byte-honest (scaled by the quantile-array width). Residual, stated
-    * honestly: a continuous-score stratum BEYOND ~8B rows still resolves
-    * exactly, but its distinct-score prefix window takes ~bucket-sized
-    * narrow-row input in one task. No task ever holds more than
-    * max(maxBoundaryTaskRows, distinct-scores-in-one-bucket,
-    * tie-region/16^3) ledger rows.
+  /** How many elements of the ascending array `sorted` are <= `x`: a
+    * score's bucket among quantile boundaries, and a running weight's
+    * label among cutoffs — one codegen array fold either way.
     */
-  /** The SELF-SIZING bucket rule shared by [[takeTopCore]] and
-    * [[qualityPartition]]: run `phase0` at the requested bucket count;
-    * if the largest stratum would average more than
-    * `maxBoundaryTaskRows` rows per bucket, re-run ONCE at a finer
-    * width (2× margin for sketch error, capped at 4096) so a
-    * CONTINUOUS score's boundary bucket fits the direct one-task
-    * window. Returns (effective bucket count, phase-0 result).
+  private def countAtOrBelow(x: Column, sorted: Column): Column =
+    aggregate(sorted, lit(0), (acc, b) => acc + when(x >= b, 1).otherwise(0))
+
+  /** Refuse a caller column that shares a name with an internal column
+    * an op materializes on or joins against the caller's frame — it would
+    * be silently clobbered or dropped.
     */
-  private def selfSizedPhase0[T](
-      phase0: Int => T,
-      maxStratumCount: T => Long,
-      nBuckets: Int,
-      maxBoundaryTaskRows: Long): (Int, T) = {
-    var nEff = nBuckets
-    var r = phase0(nEff)
-    val maxCnt = maxStratumCount(r)
-    if (nEff < 4096 && maxCnt / nEff > maxBoundaryTaskRows) {
-      nEff = math.min(4096L,
-        math.max(nEff.toLong, 2L * (maxCnt / maxBoundaryTaskRows + 1L))).toInt
-      r = phase0(nEff)
-    }
-    (nEff, r)
+  private def requireUnreserved(
+      df: DataFrame, op: String, reserved: Seq[String]): Unit = {
+    val clash = df.columns.filter(reserved.contains)
+    require(clash.isEmpty,
+      s"$op: input columns ${clash.mkString(", ")} collide with reserved " +
+      "internal names — rename them first")
   }
 
-  /** bucket(score) = number of quantile boundaries <= score
-    * (0 .. nBuckets-1); null scores sit below every bucket (-1); a null
-    * bounds array (empty stratum sketch) buckets everything to 0.
-    * Order-consistent with (score DESC): higher score ⇒ same-or-higher
-    * bucket. Shared by [[takeTopCore]] (bounds joined per stratum) and
-    * [[qualityPartition]] (bounds as one literal array).
-    */
-  private def bucketOfBounds(score: Column, bounds: Column): Column =
-    when(score.isNull, lit(-1)).otherwise(
-      aggregate(coalesce(bounds, array().cast("array<double>")),
-        lit(0), (acc, b) => acc + when(score >= b, 1).otherwise(0)))
+  /** `base`, else `base1`, `base2`, … — the first name `df` does not have. */
+  private def freshColumn(df: DataFrame, base: String): String =
+    Iterator.from(0).map(i => if (i == 0) base else s"$base$i")
+      .find(!df.columns.contains(_)).get
 
-  private def takeTopCore(
+  /** The driver-side prefix fold of the bucket and sub-bucket levels (the
+    * run level applies the same rule in a Spark window) and of
+    * [[takeBudgets]].
+    * `groups` are (group, weight) in row order; the running weight starts
+    * at `start`. A row's label is the number of `cutoffs` at or below its
+    * running weight-before-row — for ascending cutoffs, the index of the
+    * first one it falls under. A group whose rows all share a label
+    * (`label(s) == label(s + w)`: the label is monotone and every
+    * weight-before-row lies in `[s, s + w]`, zero weights included) folds
+    * to `Left(label)`; one a cutoff falls inside to `Right(s)`, its
+    * starting running weight, for the next level down to resolve.
+    */
+  private def prefixFold[G](
+      groups: Seq[(G, Long)],
+      start: Long,
+      cutoffs: Seq[Long]): Seq[(G, Either[Int, Long])] = {
+    def label(before: Long): Int = cutoffs.count(_ <= before)
+    var at = start
+    groups.map { case (g, w) =>
+      val s = at
+      at += w
+      val l = label(s)
+      g -> (if (l == label(s + w)) Left(l) else Right(s))
+    }
+  }
+
+  /** [[scoreLabels]] at one cutoff per stratum, keeping the rows under
+    * it: the take every score-ordered K=1 entry point shares.
+    * `budgetsOf` maps phase 0's per-stratum row counts to the budgets.
+    */
+  private def takeScoreTop(
       df: DataFrame,
       stratumCol: String,
       keyCol: String,
       scoreCol: String,
-      tokens: Column,
+      weight: Column,
       budgetsOf: Seq[(Option[Any], Long)] => Map[Option[Any], Long],
       nBuckets: Int,
       maxClassificationRows: Int,
       maxBoundaryTaskRows: Long): (DataFrame, Seq[TopTakeStratumStats]) = {
+    val (labeled, stats) = scoreLabels(df, stratumCol, keyCol, scoreCol,
+      weight, 1, budgetsOf(_).map { case (s, b) => s -> Seq(b) },
+      nBuckets, maxClassificationRows, maxBoundaryTaskRows, "top-by-score take")
+    (labeled.where(col(ScoreLabel) === 0).drop(ScoreLabel), stats)
+  }
+
+  /** The label column [[scoreLabels]] adds; every other name here is an
+    * internal column it joins onto the caller's frame and drops again.
+    */
+  private val ScoreLabel = "__label"
+  private val ScoreLabelInternals = Seq("__bs", "__bounds", "__db", "__cs",
+    "__cb", "__cl", "__rs", "__rv", "__rl", "__ss", "__sv", "__sb", "__sl",
+    "__ks", "__kk", "__kl")
+
+  /** The one score-ordered prefix labeler (see [[takeTopFraction]] for
+    * the plan and its contracts): adds [[ScoreLabel]], per row the number
+    * of its stratum's `k` ascending cutoffs at or below the stratum's
+    * running `weight` before the row, in `(score DESC nulls last,
+    * md5(key), key)` order — the index of the first cutoff the row falls
+    * under, `k` under none. `weight` is non-negative (`lit(1)` counts
+    * rows); `cutoffsOf` maps phase 0's per-stratum row counts to each
+    * stratum's cutoffs, so quota arithmetic that needs every stratum's
+    * size costs no second pass. A stratum it leaves out labels every row
+    * `k`. The stats are per stratum: total weight, the weight of the
+    * straddled buckets and of the straddled score runs. `op` names the
+    * caller in error messages.
+    */
+  private def scoreLabels(
+      df: DataFrame,
+      stratumCol: String,
+      keyCol: String,
+      scoreCol: String,
+      weight: Column,
+      k: Int,
+      cutoffsOf: Seq[(Option[Any], Long)] => Map[Option[Any], Seq[Long]],
+      nBuckets: Int,
+      maxClassificationRows: Int,
+      maxBoundaryTaskRows: Long,
+      op: String): (DataFrame, Seq[TopTakeStratumStats]) = {
+    requireUnreserved(df, op, ScoreLabel +: ScoreLabelInternals)
     require(nBuckets >= 2 && nBuckets <= 4096,
       s"nBuckets must be in [2, 4096], got $nBuckets")
     require(maxBoundaryTaskRows >= 1,
       s"maxBoundaryTaskRows must be >= 1, got $maxBoundaryTaskRows")
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = df.sparkSession
+    def stratumOf(r: Row): Option[Any] = if (r.isNullAt(0)) None else Some(r.get(0))
+    // driver-built lookup tables: one partition, broadcast wherever used
+    def table(rows: Seq[Row], fields: (String, DataType)*): DataFrame =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+        StructType(fields.map { case (n, t) => StructField(n, t, nullable = true) }))
+    val sType = df.select(col(stratumCol)).schema.head.dataType
 
     // phase 0: per-stratum counts + approx quantile boundaries
     // (ascending). The strata cap is BYTE-honest, not row-honest: each
     // stats row carries an (n-1)-double quantile array, so the cap scales
-    // down with the bucket count (at 4096 buckets a maxClassificationRows
-    // collect would be tens of GB) — floored so mixing-grade strata
+    // down with the bucket count — floored so mixing-grade strata
     // (10s–1000s) always fit.
-    def phase0(n: Int): Array[org.apache.spark.sql.Row] = {
+    def phase0(n: Int): Array[Row] = {
       val statCap = math.max(1024, maxClassificationRows / math.max(2, n))
       val probs = (1 until n).map(_.toDouble / n)
       val rows = df.groupBy(col(stratumCol).as("__s"))
@@ -1303,291 +1329,203 @@ object Sampling {
             lit(probs.toArray), lit(1000)).as("__bounds"))
         .limit(statCap + 1).collect()
       require(rows.length <= statCap,
-        s"top-by-score take: stratum '$stratumCol' exceeds $statCap " +
+        s"$op: stratum '$stratumCol' exceeds $statCap " +
         s"distinct values (the quantile-stats byte budget at $n buckets) " +
         "— aggregate to a coarser stratum first")
       rows
     }
-    // SELF-SIZING bucket count ([[selfSizedPhase0]]): paid only by giant
-    // strata — one extra aggregate against a corpus that large is noise,
-    // and it buys boundary buckets of ~maxBoundaryTaskRows up to
-    // 4096 × 2M ≈ 8B rows per stratum. Beyond that, a continuous-score
-    // stratum's boundary still resolves exactly via the run path, with
-    // the documented ~bucket-sized narrow-row distinct-score window as
-    // the residual cost. Tie-dense strata are unaffected: their runs
-    // collapse regardless of bucket width.
-    val (nEff, statRows) = selfSizedPhase0(phase0,
-      (rows: Array[org.apache.spark.sql.Row]) =>
-        if (rows.isEmpty) 0L else rows.iterator.map(_.getLong(1)).max,
-      nBuckets, maxBoundaryTaskRows)
-    val bSchema = StructType(Seq(
-      StructField("__bs", statRows.headOption.map(_.schema("__s").dataType)
-        .getOrElse(StringType), nullable = true),
-      StructField("__bounds", ArrayType(DoubleType), nullable = true)))
-    val boundsDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(statRows.toSeq.map(r =>
-        org.apache.spark.sql.Row(r.get(0), r.getSeq[Double](2))), 1), bSchema)
-    def bucketOf(score: Column): Column = bucketOfBounds(score, col("__bounds"))
+    // SELF-SIZING: when the largest stratum would average more than
+    // maxBoundaryTaskRows rows per bucket, re-run ONCE at a finer width
+    // (2× margin for sketch error, capped at 4096) so a CONTINUOUS score's
+    // boundary bucket fits the direct one-task window
+    val firstStats = phase0(nBuckets)
+    val maxCount = firstStats.iterator.map(_.getLong(1)).maxOption.getOrElse(0L)
+    val statRows =
+      if (nBuckets == 4096 || maxCount / nBuckets <= maxBoundaryTaskRows) firstStats
+      else phase0(math.min(4096L, math.max(nBuckets.toLong,
+        2L * (maxCount / maxBoundaryTaskRows + 1L))).toInt)
+    if (statRows.isEmpty) return (df.withColumn(ScoreLabel, lit(k)), Seq.empty)
+    val cutoffs = cutoffsOf(statRows.toSeq.map(r => stratumOf(r) -> r.getLong(1)))
+    def cutsOf(s: Option[Any]): Seq[Long] = cutoffs.getOrElse(s, Seq.fill(k)(0L))
+    val boundsDf = table(statRows.toSeq.map(r => Row(r.get(0), r.get(2))),
+      "__bs" -> sType, "__bounds" -> ArrayType(DoubleType))
+    // bucket(score) = number of quantile boundaries <= score; null scores
+    // sit below every bucket (-1); an all-null stratum buckets to 0
+    def bucketOf(score: Column): Column = when(score.isNull, lit(-1)).otherwise(
+      countAtOrBelow(score, coalesce(col("__bounds"), array().cast("array<double>"))))
 
     // phase 1: per-(stratum, bucket) weights AND row counts — strata ×
-    // nBuckets at most (the row count picks the boundary strategy below)
+    // nBuckets at most (the row count picks the straddled strategy)
     val slim = df.select(
       col(stratumCol).as("__s"), col(keyCol).as("__k"),
-      col(scoreCol).cast("double").as("__v"), tokens.as("__t"))
+      col(scoreCol).cast("double").as("__v"), weight.as("__t"))
       .join(broadcast(boundsDf), col("__s") <=> col("__bs"), "left")
       .withColumn("__b", bucketOf(col("__v")))
       .select(col("__s"), col("__k"), col("__v"), col("__t"), col("__b"))
-    val bucketCounts = slim.groupBy("__s", "__b")
+    val bucketRows = slim.groupBy("__s", "__b")
       .agg(sum("__t").as("__n"), count(lit(1)).as("__rc"))
       .limit(maxClassificationRows + 1).collect()
-    require(bucketCounts.length <= maxClassificationRows,
-      s"top-by-score take: stratum × bucket classification exceeds " +
+    require(bucketRows.length <= maxClassificationRows,
+      s"$op: stratum × bucket classification exceeds " +
       s"$maxClassificationRows rows — lower nBuckets or coarsen the stratum")
+    // bucket level: per stratum, DESCENDING bucket order (highest scores first)
+    val buckets = bucketRows.toSeq.groupBy(stratumOf).toSeq.flatMap { case (s, rows) =>
+      prefixFold(rows.sortBy(-_.getInt(1)).map(r => r -> r.getLong(2)), 0L, cutsOf(s))
+    }
+    val straddled = buckets.collect { case (r, Right(start)) => (r, start) }
+    val (direct, oversized) = straddled.partition(_._1.getLong(3) <= maxBoundaryTaskRows)
 
-    // driver prefix in DESCENDING bucket order (highest scores first).
-    // Keep rule is running-weight-BEFORE-row < budget (crossing row kept),
-    // so a bucket whose whole range ends strictly under the budget keeps
-    // all rows and the at-most-one straddling bucket per stratum goes
-    // through the score-run machinery with its start as offset. The fold
-    // also collects the per-stratum totals + boundary weights for the
-    // skew telemetry — free, it is the same classification data.
-    val budgets: Map[Option[Any], Long] = budgetsOf(statRows.toSeq.map { r =>
-      ((if (r.isNullAt(0)) None else Some(r.get(0))): Option[Any], r.getLong(1))
-    })
-    val statsAcc =
-      scala.collection.mutable.ArrayBuffer.empty[(Option[Any], Long, Long)]
-    val clsRows = bucketCounts
-      .groupBy(r => if (r.isNullAt(0)) None else Some(r.get(0)))
-      .iterator.flatMap { case (stratum, rows) =>
-        val budget = budgets.getOrElse(stratum, 0L)
-        val total = rows.iterator.map(_.getLong(2)).sum
-        var boundaryW = 0L
-        var before = 0L
-        val out = rows.sortBy(-_.getInt(1)).flatMap { r =>
-          val n = r.getLong(2)
-          val start = before
-          before += n
-          // STRICT keep-all bound (same as takeBudgets): a bucket ending
-          // exactly AT the budget must go through run classification —
-          // its positive-weight rows all pass cum-before < budget there,
-          // but a ZERO-weight row in a later bucket starting at the
-          // budget must not be admitted by a <= class test
-          if (budget <= 0L) None
-          else if (start + n < budget)
-            Some(org.apache.spark.sql.Row(
-              r.get(0), r.getInt(1), true, 0L, budget, true))
-          else if (start < budget) {
-            boundaryW = n
-            // boundary strategy, PER STRATUM from phase-1's measured row
-            // count: a boundary bucket that fits one task (every
-            // practical continuous-score take — ~1/nBuckets of its
-            // stratum, and self-sizing above keeps that near
-            // maxBoundaryTaskRows even for giant strata) windows DIRECTLY
-            // with zero extra driver jobs; an oversized bucket — the
-            // tie-dense degeneracy this machinery exists for — pays the
-            // run/tie path. Strata choose independently, so one
-            // tie-dense stratum no longer drags every well-behaved
-            // stratum through the two extra classification jobs.
-            Some(org.apache.spark.sql.Row(
-              r.get(0), r.getInt(1), false, start, budget,
-              r.getLong(3) <= maxBoundaryTaskRows))
-          } else None
-        }
-        statsAcc += ((stratum, total, boundaryW))
-        out
-      }.toSeq
-    val sType = slim.schema("__s").dataType
-    val cls = spark.createDataFrame(
-      spark.sparkContext.parallelize(clsRows, 1),
-      StructType(Seq(
-        StructField("__cs", sType, nullable = true),
-        StructField("__cb", IntegerType, nullable = false),
-        StructField("__keep_all", BooleanType, nullable = false),
-        StructField("__off", LongType, nullable = false),
-        StructField("__budget", LongType, nullable = false),
-        StructField("__direct", BooleanType, nullable = false))))
-    val hasDirect = clsRows.exists(r => !r.getBoolean(2) && r.getBoolean(5))
-    val hasRunTie = clsRows.exists(r => !r.getBoolean(2) && !r.getBoolean(5))
-    val hasBoundary = hasDirect || hasRunTie
-
-    // phase 2: score-RUN classification inside boundary buckets. One
-    // map-side-combining aggregate per (stratum, exact score value), then
-    // a running prefix over DISTINCT scores — the window input is the
-    // per-run table, not the ledger: tiny when the score is tie-dense
-    // (the case that used to degenerate), ~bucket-sized narrow rows when
-    // the score is continuous (in which case the bucket is ~1/nBuckets of
-    // the stratum and the old plan did the same work on wider rows).
-    val runCls = slim.join(
-        broadcast(cls.where(!col("__keep_all") && !col("__direct"))),
-        col("__s") <=> col("__cs") && col("__b") === col("__cb"))
-      .groupBy(col("__s"), col("__v"), col("__off"), col("__budget"))
-      .agg(sum(col("__t")).as("__sw"))
-      .withColumn("__bef",
-        col("__off") +
-          sum(col("__sw")).over(Window.partitionBy(col("__s"))
-            .orderBy(col("__v").desc_nulls_last)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)) -
-          col("__sw"))
-    // runs wholly under the budget keep every row join-free (strict, so a
-    // zero-weight row sitting exactly at the budget can never slip in)
-    val runsKeepAll = runCls
-      .where(col("__bef") + col("__sw") < col("__budget"))
-      .select(col("__s").as("__rs"), col("__v").as("__rv"),
-        lit(true).as("__runkeep"))
-    // the at-most-one straddling TIE run per stratum, collected with its
-    // remaining budget — ≤ 1 row per stratum, same strata bound as phase 0
-    val tieRows: Array[org.apache.spark.sql.Row] =
-      if (!hasRunTie) Array.empty
-      else runCls
-        .where(col("__bef") < col("__budget") &&
-          col("__bef") + col("__sw") >= col("__budget"))
-        .select(col("__s"), col("__v"),
-          (col("__budget") - col("__bef")).as("__tb"), col("__sw"))
-        .limit(maxClassificationRows + 1).collect()
-    require(tieRows.length <= maxClassificationRows,
-      s"top-by-score take: stratum '$stratumCol' exceeds " +
-      s"$maxClassificationRows tie-run rows — aggregate to a coarser " +
-      "stratum first")
-    def stratumOf(r: org.apache.spark.sql.Row): Option[Any] =
-      if (r.isNullAt(0)) None else Some(r.get(0))
-    val tieBudgets: Map[Option[Any], Long] =
-      tieRows.iterator.map(r => stratumOf(r) -> r.getLong(2)).toMap
-    val tieWeights: Map[Option[Any], Long] =
-      tieRows.iterator.map(r => stratumOf(r) -> r.getLong(3)).toMap
-
-    // attach: ONE pass over the caller's rows, broadcast lookups only —
-    // the categories are mutually exclusive by construction (a row is in
-    // a keep-all bucket, OR a keep-all score run of the boundary bucket,
-    // OR the tie run — score values never span buckets), so left joins +
-    // an OR filter preserve multiplicity exactly.
-    val dfScore = df(scoreCol).cast("double")
-    val base = df
-      .join(broadcast(boundsDf), df(stratumCol) <=> col("__bs"), "left")
-      .withColumn("__db", bucketOf(dfScore))
-      .join(broadcast(cls.where(col("__keep_all"))),
-        df(stratumCol) <=> col("__cs") && col("__db") === col("__cb"), "left")
-    var attached = base
-    val keepFlags = scala.collection.mutable.ArrayBuffer[Column](
-      coalesce(col("__keep_all"), lit(false)))
-    if (hasDirect) {
-      // direct boundary window (the phase-1 counts proved those strata's
-      // boundary buckets each fit one task): the exact cumsum over the
-      // whole boundary bucket in the full (score DESC nulls last, md5,
-      // key) order — identical kept set, no run/tie jobs for these strata
-      val wD = Window.partitionBy(col("__s"))
+    // the exact cumsum — the only ledger sort — inside groups a fold left
+    // straddled, each from its fold start (`__off`, with the stratum's
+    // `__cuts`); only rows under some cutoff come back, keyed for the attach
+    def windowLabels(ledger: DataFrame, group: Column*): DataFrame = {
+      val w = Window.partitionBy(group: _*)
         .orderBy(col("__v").desc_nulls_last,
           md5(col("__k").cast("string").cast("binary")).asc, col("__k").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val directKeys = slim.join(
-          broadcast(cls.where(!col("__keep_all") && col("__direct"))),
-          col("__s") <=> col("__cs") && col("__b") === col("__cb"))
-        .withColumn("__cum", sum(col("__t")).over(wD))
-        .where(col("__off") + col("__cum") - col("__t") < col("__budget"))
-        .select(col("__s").as("__dks"), col("__k").as("__dkk"),
-          lit(true).as("__in_direct"))
-      attached = attached.join(broadcast(directKeys),
-        df(stratumCol) <=> col("__dks") && df(keyCol) <=> col("__dkk"), "left")
-      keepFlags += coalesce(col("__in_direct"), lit(false))
+      ledger.withColumn("__cum", sum(col("__t")).over(w))
+        .withColumn("__kl",
+          countAtOrBelow(col("__off") + col("__cum") - col("__t"), col("__cuts")))
+        .where(col("__kl") < k)
+        .select(col("__s").as("__ks"), col("__k").as("__kk"), col("__kl"))
     }
-    if (hasRunTie) {
-        // run/tie path. The tie run reduces to a content-order prefix
-        // with the remaining budget — takeBudgets' md5 sub-bucket
-        // machinery inlined so the attach stays ONE pass: sub-bucket the
-        // tie ledger, classify per (stratum, sub-bucket) on the driver,
-        // and window ONLY the sub-boundary sub-bucket (~1/16^3 of the
-        // tie region, never the run).
-        val tieHexLen = 3
-        val tieDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(tieRows.toSeq.map(r =>
-            org.apache.spark.sql.Row(r.get(0), r.get(1))), 1),
-          StructType(Seq(
-            StructField("__zs", sType, nullable = true),
-            StructField("__zv", DoubleType, nullable = true))))
-        val tieLedger = slim
-          .join(broadcast(tieDf),
-            col("__s") <=> col("__zs") && col("__v") <=> col("__zv"))
-          .withColumn("__b2",
-            substring(md5(col("__k").cast("string").cast("binary")), 1, tieHexLen))
-        val cls2Rows: Seq[org.apache.spark.sql.Row] =
-          if (tieRows.isEmpty) Seq.empty
-          else {
-            val sums = tieLedger.groupBy("__s", "__zv", "__b2")
-              .agg(sum("__t").as("__sum"))
-              .limit(maxClassificationRows + 1).collect()
-            require(sums.length <= maxClassificationRows,
-              s"top-by-score take: tie-region sub-bucket classification " +
-              s"exceeds $maxClassificationRows rows — coarsen the stratum")
-            sums.groupBy(r => if (r.isNullAt(0)) None else Some(r.get(0)))
-              .iterator.flatMap { case (stratum, rows) =>
-                val budget = tieBudgets.getOrElse(stratum, 0L)
-                var before = 0L
-                // null sub-bucket (null key) first, then hex asc — the
-                // sub-bucket is the leading prefix of the (md5, key) order
-                rows.sortBy(r => (if (r.isNullAt(2)) "" else "" + r.getString(2)))
-                  .flatMap { r =>
-                    val n = r.getLong(3)
-                    val start = before
-                    before += n
-                    if (budget <= 0L) None
-                    else if (start + n < budget)
-                      Some(org.apache.spark.sql.Row(
-                        r.get(0), r.get(1), r.get(2), true, 0L, budget))
-                    else if (start < budget)
-                      Some(org.apache.spark.sql.Row(
-                        r.get(0), r.get(1), r.get(2), false, start, budget))
-                    else None
-                  }
-              }.toSeq
-          }
-        val cls2 = spark.createDataFrame(
-          spark.sparkContext.parallelize(cls2Rows, 1),
-          StructType(Seq(
-            StructField("__c2s", sType, nullable = true),
-            StructField("__c2v", DoubleType, nullable = true),
-            StructField("__c2b", StringType, nullable = true),
-            StructField("__keep2", BooleanType, nullable = false),
-            StructField("__off2", LongType, nullable = false),
-            StructField("__budget2", LongType, nullable = false))))
-        // the exact windowed cumsum — the ONLY ledger sort anywhere on
-        // this path — over the sub-boundary sub-bucket's rows, in the
-        // (md5, key) order the sub-buckets refine
-        val w2 = Window.partitionBy(col("__s"))
-          .orderBy(md5(col("__k").cast("string").cast("binary")).asc,
-            col("__k").asc)
+    val cutsType = ArrayType(LongType)
+    val windowed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // straddled buckets that fit one task window directly, zero extra jobs
+    if (direct.nonEmpty) {
+      val cls = table(direct.map { case (r, start) =>
+          Row(r.get(0), r.getInt(1), start, cutsOf(stratumOf(r))) },
+        "__cs" -> sType, "__cb" -> IntegerType, "__off" -> LongType, "__cuts" -> cutsType)
+      windowed += windowLabels(slim.join(broadcast(cls),
+        col("__s") <=> col("__cs") && col("__b") === col("__cb")), col("__s"), col("__b"))
+    }
+
+    // run level: an oversized straddled bucket's prefix over its DISTINCT
+    // scores (a score maps to one bucket, so (stratum, score) keys a run),
+    // scores DESC with nulls last, from the bucket's start — a Spark
+    // window over a table that is tiny exactly when ties are the problem.
+    // A run is uniform by the prefix fold's rule (the label at its start
+    // equals the label at its end); only the straddled runs, at most `k`
+    // per stratum, come to the driver, so the run table never does
+    val runs: Option[DataFrame] =
+      if (oversized.isEmpty) None
+      else Some {
+        val cls = table(oversized.map { case (r, start) =>
+            Row(r.get(0), r.getInt(1), start, cutsOf(stratumOf(r))) },
+          "__cs" -> sType, "__cb" -> IntegerType, "__off" -> LongType, "__cuts" -> cutsType)
+        val wR = Window.partitionBy(col("__s"), col("__b"))
+          .orderBy(col("__v").desc_nulls_last)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val tieBoundaryKeys = tieLedger
-          .join(broadcast(cls2.where(!col("__keep2"))),
-            col("__s") <=> col("__c2s") && col("__b2") <=> col("__c2b"))
-          .withColumn("__cum", sum(col("__t")).over(w2))
-          .where(col("__off2") + col("__cum") - col("__t") < col("__budget2"))
-          .select(col("__s").as("__ks"), col("__k").as("__kk"),
-            lit(true).as("__in_tie_boundary"))
-        val dfB2 = substring(
-          md5(df(keyCol).cast("string").cast("binary")), 1, tieHexLen)
-        attached = attached
-          .join(broadcast(runsKeepAll),
-            df(stratumCol) <=> col("__rs") && dfScore <=> col("__rv"), "left")
-          .join(broadcast(cls2.where(col("__keep2"))),
-            df(stratumCol) <=> col("__c2s") && dfScore <=> col("__c2v") &&
-              dfB2 <=> col("__c2b"), "left")
-          .join(broadcast(tieBoundaryKeys),
-            df(stratumCol) <=> col("__ks") && df(keyCol) <=> col("__kk"), "left")
-        keepFlags += coalesce(col("__runkeep"), lit(false))
-        keepFlags += coalesce(col("__keep2"), lit(false))
-        keepFlags += coalesce(col("__in_tie_boundary"), lit(false))
+        slim.join(broadcast(cls), col("__s") <=> col("__cs") && col("__b") === col("__cb"))
+          .groupBy(col("__s"), col("__b"), col("__v"))
+          .agg(sum(col("__t")).as("__sw"), first(col("__off")).as("__off"),
+            first(col("__cuts")).as("__cuts"))
+          .withColumn("__bef", col("__off") + sum(col("__sw")).over(wR) - col("__sw"))
+          .withColumn("__rl", countAtOrBelow(col("__bef"), col("__cuts")))
+          .withColumn("__straddled",
+            col("__rl") =!= countAtOrBelow(col("__bef") + col("__sw"), col("__cuts")))
       }
-    val withFlags = attached.where(keepFlags.reduce(_ || _))
-    val result = withFlags.drop(
-      "__bs", "__bounds", "__db", "__cs", "__cb", "__keep_all", "__off",
-      "__budget", "__direct", "__rs", "__rv", "__runkeep", "__c2s", "__c2v",
-      "__c2b", "__keep2", "__off2", "__budget2", "__ks", "__kk",
-      "__in_tie_boundary", "__dks", "__dkk", "__in_direct")
-    val stats = statsAcc.toSeq
-      .sortBy { case (s, _, _) => (s.nonEmpty, s.map(_.toString).getOrElse("")) }
-      .map { case (s, total, bw) =>
-        TopTakeStratumStats(s, total, bw, tieWeights.getOrElse(s, 0L))
+    val ties: Array[Row] = runs.fold(Array.empty[Row]) { rs =>
+      val rows = rs.where(col("__straddled"))
+        .select(col("__s"), col("__v"), col("__bef"), col("__sw"))
+        .limit(maxClassificationRows + 1).collect()
+      require(rows.length <= maxClassificationRows,
+        s"$op: stratum '$stratumCol' exceeds " +
+        s"$maxClassificationRows tie-run rows — aggregate to a coarser " +
+        "stratum first")
+      rows
+    }
+    val tieWeight: Map[Option[Any], Long] = ties.toSeq.groupBy(stratumOf)
+      .map { case (s, ts) => s -> ts.map(_.getLong(3)).sum }
+
+    // sub-bucket level: within a straddled tie run the order is the
+    // (md5, key) content order, so the run's md5-prefix sub-buckets fold
+    // from its start (null sub-bucket — null key — first, then hex asc).
+    // A straddled run has positive weight, so its start names it within
+    // its stratum — a key with total equality, unlike a NaN score
+    val tieHexLen = 3
+    def subBucketOf(key: Column): Column =
+      substring(md5(key.cast("string").cast("binary")), 1, tieHexLen)
+    val subs: Seq[(Row, Either[Int, Long])] =
+      if (ties.isEmpty) Seq.empty
+      else {
+        val tieLedger = slim
+          .join(broadcast(table(ties.toSeq.map(r => Row(r.get(0), r.get(1), r.getLong(2))),
+              "__zs" -> sType, "__zv" -> DoubleType, "__zo" -> LongType)),
+            col("__s") <=> col("__zs") && col("__v") <=> col("__zv"))
+          .withColumn("__b2", subBucketOf(col("__k")))
+        val subRows = tieLedger.groupBy("__s", "__v", "__b2", "__zo")
+          .agg(sum("__t").as("__sum"))
+          .limit(maxClassificationRows + 1).collect()
+        require(subRows.length <= maxClassificationRows,
+          s"$op: tie-region sub-bucket classification " +
+          s"exceeds $maxClassificationRows rows — coarsen the stratum")
+        val folded = subRows.toSeq.groupBy(r => (stratumOf(r), r.getLong(3))).toSeq
+          .flatMap { case ((s, start), rows) =>
+            prefixFold(rows.sortBy(r => Option(r.getString(2)).getOrElse(""))
+              .map(r => r -> r.getLong(4)), start, cutsOf(s))
+          }
+        val boundary = folded.collect { case (r, Right(start)) =>
+          Row(r.get(0), r.get(1), r.get(2), start, cutsOf(stratumOf(r)))
+        }
+        if (boundary.nonEmpty) {
+          val cls = table(boundary, "__cs" -> sType, "__cv" -> DoubleType,
+            "__cb" -> StringType, "__off" -> LongType, "__cuts" -> cutsType)
+          windowed += windowLabels(tieLedger.join(broadcast(cls),
+              col("__s") <=> col("__cs") && col("__v") <=> col("__cv") &&
+                col("__b2") <=> col("__cb")),
+            col("__s"), col("__v"), col("__b2"))
+        }
+        folded
       }
-    (result, stats)
+
+    // attach: ONE pass over the caller's rows, broadcast lookups only. The
+    // levels are mutually exclusive by construction (a row's bucket, run,
+    // sub-bucket or key is looked up at exactly one level), so left joins
+    // + a coalesce preserve multiplicity; a row no level labels is under
+    // no cutoff, label k. Rows labelled k are never looked up.
+    def uniform(level: Seq[(Row, Either[Int, Long])], cols: Int*): Seq[Row] =
+      level.collect { case (r, Left(l)) if l < k => Row(cols.map(r.get) :+ l: _*) }
+    val dfScore = df(scoreCol).cast("double")
+    var labeled = df
+    val labels = scala.collection.mutable.ArrayBuffer.empty[Column]
+    def attach(lookup: DataFrame, on: Column, label: String): Unit = {
+      labeled = labeled.join(broadcast(lookup), on, "left")
+      labels += col(label)
+    }
+    val uniformBuckets = uniform(buckets, 0, 1)
+    if (uniformBuckets.nonEmpty) {
+      labeled = labeled
+        .join(broadcast(boundsDf), df(stratumCol) <=> col("__bs"), "left")
+        .withColumn("__db", bucketOf(dfScore))
+      attach(table(uniformBuckets,
+          "__cs" -> sType, "__cb" -> IntegerType, "__cl" -> IntegerType),
+        df(stratumCol) <=> col("__cs") && col("__db") === col("__cb"), "__cl")
+    }
+    runs.foreach { rs =>
+      attach(rs.where(!col("__straddled") && col("__rl") < k)
+          .select(col("__s").as("__rs"), col("__v").as("__rv"), col("__rl")),
+        df(stratumCol) <=> col("__rs") && dfScore <=> col("__rv"), "__rl")
+    }
+    val uniformSubs = uniform(subs, 0, 1, 2)
+    if (uniformSubs.nonEmpty)
+      attach(table(uniformSubs, "__ss" -> sType, "__sv" -> DoubleType,
+          "__sb" -> StringType, "__sl" -> IntegerType),
+        df(stratumCol) <=> col("__ss") && dfScore <=> col("__sv") &&
+          subBucketOf(df(keyCol)) <=> col("__sb"), "__sl")
+    if (windowed.nonEmpty)
+      attach(windowed.reduce(_ unionByName _),
+        df(stratumCol) <=> col("__ks") && df(keyCol) <=> col("__kk"), "__kl")
+    val out = labeled.withColumn(ScoreLabel, coalesce(labels.toSeq :+ lit(k): _*))
+      .drop(ScoreLabelInternals: _*)
+    val stats = buckets.groupBy(b => stratumOf(b._1)).toSeq
+      .map { case (s, bs) =>
+        TopTakeStratumStats(s, bs.map(_._1.getLong(2)).sum,
+          bs.collect { case (r, Right(_)) => r.getLong(2) }.sum,
+          tieWeight.getOrElse(s, 0L))
+      }
+      .sortBy(st => (st.stratum.nonEmpty, st.stratum.map(_.toString).getOrElse("")))
+    (out, stats)
   }
 
   /** DSIR-style data selection (Xie et al. 2023, arXiv:2302.03169) as one
@@ -1690,7 +1628,7 @@ object Sampling {
     * under the driver cap) divides it again by 16.
     *
     * Null keys cannot hash to a position and are rejected loudly, and so
-    * are DUPLICATE keys (round 12): tied keys would take their
+    * are DUPLICATE keys: tied keys would take their
     * `row_number` from partition order — positions that silently change
     * across reruns/clusters — so a lag-equality tripwire inside the
     * per-bucket window (dups sort adjacent; same window, no extra cost)
@@ -1904,8 +1842,7 @@ object Sampling {
       n: Long,
       bucketHexLen: Int = 3): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val one = Iterator.from(0).map(i => if (i == 0) "__g" else s"__g$i")
-      .find(!df.columns.contains(_)).get
+    val one = freshColumn(df, "__g")
     takeBudgets(df.withColumn(one, lit(1)), one, keyCol, lit(1L),
       _ => n, bucketHexLen)
       .drop(one)
@@ -1924,8 +1861,7 @@ object Sampling {
       budget: Long,
       bucketHexLen: Int = 3): DataFrame = {
     require(budget >= 1, s"budget must be >= 1, got $budget")
-    val one = Iterator.from(0).map(i => if (i == 0) "__g" else s"__g$i")
-      .find(!df.columns.contains(_)).get
+    val one = freshColumn(df, "__g")
     takeBudgets(df.withColumn(one, lit(1)), one, keyCol,
       coalesce(col(tokensCol).cast("long"), lit(0L)), _ => budget,
       bucketHexLen)
@@ -1953,8 +1889,7 @@ object Sampling {
       nBuckets: Int = 64,
       maxClassificationRows: Int = MaxClassificationRows,
       maxBoundaryTaskRows: Long = MaxBoundaryTaskRows): DataFrame = {
-    val one = Iterator.from(0).map(i => if (i == 0) "__g" else s"__g$i")
-      .find(!df.columns.contains(_)).get
+    val one = freshColumn(df, "__g")
     takeTopFraction(df.withColumn(one, lit(1)), one, keyCol, scoreCol,
       fraction, nBuckets, maxClassificationRows, maxBoundaryTaskRows)
       .drop(one)
@@ -1976,8 +1911,7 @@ object Sampling {
       nBuckets: Int = 64,
       maxClassificationRows: Int = MaxClassificationRows,
       maxBoundaryTaskRows: Long = MaxBoundaryTaskRows): DataFrame = {
-    val one = Iterator.from(0).map(i => if (i == 0) "__g" else s"__g$i")
-      .find(!df.columns.contains(_)).get
+    val one = freshColumn(df, "__g")
     takeTopTokenBudget(df.withColumn(one, lit(1)), one, keyCol, scoreCol,
       tokensCol, budget, nBuckets, maxClassificationRows, maxBoundaryTaskRows)
       .drop(one)
@@ -1989,33 +1923,16 @@ object Sampling {
     * md5(key), key)` order — bucket 0 holds the best `round(f₁·n)` rows,
     * bucket i the rows between cutoffs i and i+1, bucket
     * `fractions.size` the tail. The label of a row at global rank r is
-    * `min { i : r ≤ round(fᵢ·n) }` (else the tail) — identical to
-    * membership in the nested [[takeGlobalTopFraction]] kept sets, but
-    * computed in ONE shared pass instead of one full two-phase take per
-    * cutoff (round-15: the K-cutoff form re-scanned the scored ledger
-    * per cutoff; phase-0 stats and phase-1 bucket counts are
-    * cutoff-independent, so all K boundaries now resolve against the
-    * same classification):
-    *
-    *   1. ONE stats aggregate (count + self-sized approximate score
-    *      quantiles — [[takeTopFraction]] step 1 at a single global
-    *      stratum) and ONE per-bucket count aggregate;
-    *   2. the driver prefix-sums the ≤ 4096-row bucket table once in
-    *      descending score order and labels every bucket not straddled
-    *      by any cutoff — those rows get their label from a broadcast
-    *      literal array, join-free per cutoff;
-    *   3. the ≤ K straddled buckets resolve per row: a bucket within
-    *      `maxBoundaryTaskRows` windows directly (ALL straddled buckets
-    *      in one window pass, partitioned by bucket); an oversized one —
-    *      the tie-dense degeneracy — classifies per exact-score RUN
-    *      (uniform runs label join-free), and only the ≤ K straddled
-    *      TIE runs route through the md5 sub-bucket machinery, where
-    *      uniform sub-buckets label join-free and the ≤ K sub-boundary
-    *      sub-buckets (~1/16³ of their tie run) take the only ledger
-    *      windows on the path;
-    *   4. labels attach back through broadcast lookups only — the
-    *      caller's rows never shuffle, and the number of input scans is
-    *      CONSTANT in the cutoff count (PlanSpec-pinned).
+    * `min { i : r ≤ round(fᵢ·n) }` (else the tail) — membership in the
+    * nested [[takeGlobalTopFraction]] kept sets, computed in ONE labeling
+    * pass: this is [[takeTopFraction]]'s score-ordered prefix labeler at
+    * one constant stratum, unit weights and the K cutoffs `round(fᵢ·n)`.
+    * Phase-0 stats and phase-1 bucket weights are cutoff-independent, so
+    * all K cutoffs resolve against the same classification: buckets, score
+    * runs and md5 sub-buckets no cutoff falls inside label by a broadcast
+    * lookup with no window, and all straddled buckets (and straddled
+    * sub-buckets) share one window pass each — the number of input scans
+    * is CONSTANT in the cutoff count (PlanSpec-pinned).
     *
     * Exactness, determinism, self-sizing, and the tie-order contract are
     * [[takeTopFraction]]'s verbatim (the per-level uniform/straddled
@@ -2032,211 +1949,19 @@ object Sampling {
       nBuckets: Int = 64,
       bucketCol: String = "bucket",
       maxBoundaryTaskRows: Long = MaxBoundaryTaskRows): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types._
     require(fractions.nonEmpty, "qualityPartition needs at least one cutoff")
     require(fractions.forall(f => f > 0.0 && f < 1.0) &&
       fractions.sliding(2).forall(s => s.size < 2 || s(0) < s(1)),
       s"cutoff fractions must be strictly increasing within (0, 1): $fractions")
     require(!df.columns.contains(bucketCol),
       s"qualityPartition: input already has a '$bucketCol' column")
-    // every internal column materialized on or joined against the
-    // CALLER's frame in the attach phase — a caller column with one of
-    // these names would be silently clobbered by withColumn or dropped
-    // at the end
-    val reserved = Seq("__db", "__base", "__dk", "__dl", "__uv", "__ul",
-      "__c2v", "__c2b", "__sl", "__wk", "__wl")
-    val clash = df.columns.filter(reserved.contains)
-    require(clash.isEmpty,
-      s"qualityPartition: input columns ${clash.mkString(", ")} collide " +
-      "with reserved internal names — rename them first")
-    require(nBuckets >= 2 && nBuckets <= 4096,
-      s"nBuckets must be in [2, 4096], got $nBuckets")
-    require(maxBoundaryTaskRows >= 1,
-      s"maxBoundaryTaskRows must be >= 1, got $maxBoundaryTaskRows")
-    val spark = df.sparkSession
-    val tail = fractions.size
-
-    // phase 0: ONE count + quantile aggregate, self-sized exactly like
-    // takeTopCore (a single global stratum, so the stats row is one row)
-    def phase0(n: Int): (Long, Seq[Double]) = {
-      val probs = (1 until n).map(_.toDouble / n)
-      val r = df.agg(
-        count(lit(1)).as("__c"),
-        percentile_approx(col(scoreCol).cast("double"),
-          lit(probs.toArray), lit(1000)).as("__bounds")).head()
-      (r.getLong(0), if (r.isNullAt(1)) Seq.empty[Double] else r.getSeq[Double](1).toSeq)
-    }
-    val (nEff, (total, bounds)) = selfSizedPhase0(phase0,
-      (t: (Long, Seq[Double])) => t._1, nBuckets, maxBoundaryTaskRows)
-    if (total == 0L)
-      return df.withColumn(bucketCol, lit(tail).cast("int"))
-    val budgets: Seq[Long] = fractions.map(f => math.round(f * total))
-    // label of global rank r; rows of a range (start, end] share it iff
-    // no budget falls strictly inside (start, end)
-    def labelAt(rank: Long): Int = {
-      val i = budgets.indexWhere(rank <= _)
-      if (i < 0) tail else i
-    }
-    def isStraddled(start: Long, end: Long): Boolean =
-      budgets.exists(b => b > start && b < end)
-    def labelOfRank(rank: Column): Column =
-      budgets.zipWithIndex.foldRight(lit(tail): Column) {
-        case ((b, i), rest) => when(rank <= b, lit(i)).otherwise(rest)
-      }
-
-    // bounds ride the plan as ONE literal array (a single global stratum
-    // needs no boundary join); ≤ 4095 doubles
-    def bucketOf(score: Column): Column =
-      bucketOfBounds(score, typedLit(bounds))
-    val mdKey: Column => Column = k => md5(k.cast("string").cast("binary"))
-    val slim = df.select(col(keyCol).as("__k"),
-        col(scoreCol).cast("double").as("__v"))
-      .withColumn("__b", bucketOf(col("__v")))
-
-    // phase 1: ONE per-bucket count aggregate (≤ nEff+1 rows), then the
-    // single driver prefix that classifies every bucket for ALL cutoffs
-    val bucketCounts: Seq[(Int, Long)] = slim.groupBy("__b")
-      .agg(count(lit(1)).as("__n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq
-    final case class BucketCls(
-        bucket: Int, start: Long, uniform: Option[Int], direct: Boolean)
-    var before = 0L
-    val cls = bucketCounts.sortBy(-_._1).map { case (b, n) =>
-      val start = before
-      before += n
-      if (!isStraddled(start, start + n))
-        BucketCls(b, start, Some(labelAt(start + n)), direct = false)
-      else BucketCls(b, start, None, direct = n <= maxBoundaryTaskRows)
-    }
-    val byBucket: Map[Int, BucketCls] = cls.map(c => c.bucket -> c).toMap
-    // literal lookup tables indexed by bucket id (-1 .. nEff-1 → 1-based
-    // element_at at id+2): uniform label (null = resolve finer) + start
-    val labelArr: Seq[Option[Int]] =
-      (-1 until nEff).map(id => byBucket.get(id).flatMap(_.uniform))
-    val startArr: Seq[Long] =
-      (-1 until nEff).map(id => byBucket.get(id).map(_.start).getOrElse(0L))
-    def bucketStart(b: Column): Column =
-      element_at(typedLit(startArr), b + lit(2))
-
-    val joins = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, Column => Column, String)]
-    // straddled buckets that fit one task: ONE window pass over all of
-    // them (partitioned per bucket), exact global rank = bucket start +
-    // within-bucket cumcount in the full (score DESC nulls last, md5,
-    // key) order
-    val directBuckets = cls.filter(c => c.uniform.isEmpty && c.direct).map(_.bucket)
-    if (directBuckets.nonEmpty) {
-      val wD = Window.partitionBy(col("__b"))
-        .orderBy(col("__v").desc_nulls_last, mdKey(col("__k")).asc, col("__k").asc)
-      val labeled = slim.where(col("__b").isin(directBuckets: _*))
-        .withColumn("__r",
-          bucketStart(col("__b")) + row_number().over(wD).cast("long"))
-        .select(col("__k").as("__dk"), labelOfRank(col("__r")).as("__dl"))
-      joins += ((labeled, k => k <=> col("__dk"), "__dl"))
-    }
-    // oversized straddled buckets — the tie-dense path: classify per
-    // exact-score run; uniform runs label join-free by score value (a
-    // score maps to exactly one bucket, so the value alone is the key)
-    val runBuckets = cls.filter(c => c.uniform.isEmpty && !c.direct).map(_.bucket)
-    if (runBuckets.nonEmpty) {
-      val runLedger = slim.where(col("__b").isin(runBuckets: _*))
-      val wR = Window.partitionBy(col("__b")).orderBy(col("__v").desc_nulls_last)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val runCls = runLedger.groupBy(col("__b"), col("__v"))
-        .agg(count(lit(1)).as("__n"))
-        .withColumn("__end", bucketStart(col("__b")) + sum(col("__n")).over(wR))
-        .withColumn("__start", col("__end") - col("__n"))
-      val runStraddled = budgets
-        .map(b => lit(b) > col("__start") && lit(b) < col("__end"))
-        .reduce(_ || _)
-      joins += ((
-        runCls.where(!runStraddled)
-          .select(col("__v").as("__uv"), labelOfRank(col("__end")).as("__ul")),
-        (_: Column) => col(scoreCol).cast("double") <=> col("__uv"), "__ul"))
-      // the ≤ K straddled TIE runs: within a tied score the rank order
-      // is the (md5, key) content order, so takeBudgets' md5 sub-bucket
-      // machinery applies — classify sub-buckets on the driver, window
-      // only the ≤ K sub-boundary sub-buckets
-      val tieRuns = runCls.where(runStraddled)
-        .select(col("__v"), col("__start")).collect()
-      if (tieRuns.nonEmpty) {
-        val tieDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(tieRuns.toSeq.map(r =>
-            org.apache.spark.sql.Row(r.get(0), r.getLong(1))), 1),
-          StructType(Seq(
-            StructField("__zv", DoubleType, nullable = true),
-            StructField("__zs", LongType, nullable = false))))
-        val tieHexLen = 3
-        val tieLedger = runLedger
-          .join(broadcast(tieDf), col("__v") <=> col("__zv"))
-          .withColumn("__b2", substring(mdKey(col("__k")), 1, tieHexLen))
-        val subCounts = tieLedger
-          .groupBy(col("__zv"), col("__zs"), col("__b2"))
-          .agg(count(lit(1)).as("__n")).collect()
-        final case class SubCls(
-            v: Any, b2: String, start: Long, uniform: Option[Int])
-        val subCls: Seq[SubCls] = subCounts
-          .groupBy(r => Option(r.get(0))).iterator.flatMap { case (_, rows) =>
-            var at = rows.head.getLong(1)
-            // null sub-bucket (null key) first, then hex asc — the
-            // leading prefix of the (md5, key) order
-            rows.sortBy(r => Option(r.getString(2)).getOrElse(""))
-              .map { r =>
-                val n = r.getLong(3)
-                val s = at
-                at += n
-                SubCls(r.get(0), r.getString(2), s,
-                  if (!isStraddled(s, s + n)) Some(labelAt(s + n)) else None)
-              }
-          }.toSeq
-        val subSchema = StructType(Seq(
-          StructField("__c2v", DoubleType, nullable = true),
-          StructField("__c2b", StringType, nullable = true),
-          StructField("__c2s", LongType, nullable = false),
-          StructField("__c2l", IntegerType, nullable = true)))
-        def subFrame(rows: Seq[SubCls]) = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.map(c =>
-            org.apache.spark.sql.Row(c.v, c.b2, c.start,
-              c.uniform.map(Integer.valueOf).orNull)), 1), subSchema)
-        val uniformSubs = subCls.filter(_.uniform.nonEmpty)
-        if (uniformSubs.nonEmpty) {
-          val sb2 = substring(mdKey(col(keyCol)), 1, tieHexLen)
-          joins += ((
-            subFrame(uniformSubs).select(col("__c2v"), col("__c2b"),
-              col("__c2l").as("__sl")),
-            (_: Column) => col(scoreCol).cast("double") <=> col("__c2v") &&
-              sb2 <=> col("__c2b"), "__sl"))
-        }
-        val boundarySubs = subCls.filter(_.uniform.isEmpty)
-        if (boundarySubs.nonEmpty) {
-          val w2 = Window.partitionBy(col("__zv"), col("__b2"))
-            .orderBy(mdKey(col("__k")).asc, col("__k").asc)
-          val labeled = tieLedger.join(
-              broadcast(subFrame(boundarySubs)),
-              col("__zv") <=> col("__c2v") && col("__b2") <=> col("__c2b"))
-            .withColumn("__r",
-              col("__c2s") + row_number().over(w2).cast("long"))
-            .select(col("__k").as("__wk"), labelOfRank(col("__r")).as("__wl"))
-          joins += ((labeled, k => k <=> col("__wk"), "__wl"))
-        }
-      }
-    }
-
-    // attach: the uniform-bucket label is a literal array lookup; every
-    // finer level is a broadcast join. Levels are mutually exclusive by
-    // construction, so coalesce order is immaterial.
-    val base = df
-      .withColumn("__db", bucketOf(col(scoreCol).cast("double")))
-      .withColumn("__base", element_at(typedLit(labelArr), col("__db") + lit(2)))
-    val attached = joins.foldLeft(base) { case (acc, (tbl, cond, _)) =>
-      acc.join(broadcast(tbl), cond(acc(keyCol)), "left")
-    }
-    val label = coalesce(
-      (joins.toSeq.map { case (_, _, c) => col(c) } :+ col("__base")): _*)
-    attached
-      .withColumn(bucketCol, label.cast("int"))
-      .drop("__db", "__base", "__dk", "__dl", "__uv", "__ul",
-        "__c2v", "__c2b", "__sl", "__wk", "__wl")
+    val one = freshColumn(df, "__g")
+    scoreLabels(df.withColumn(one, lit(1)), one, keyCol, scoreCol, lit(1L),
+      fractions.size,
+      _.map { case (s, n) => s -> fractions.map(f => math.round(f * n)) }.toMap,
+      nBuckets, MaxClassificationRows, maxBoundaryTaskRows, "qualityPartition")._1
+      .drop(one)
+      .withColumnRenamed(ScoreLabel, bucketCol)
   }
 
   /** Weighted corpus mix: union of sources, each downsampled to its weight

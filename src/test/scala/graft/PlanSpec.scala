@@ -729,11 +729,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("qualityPartition scans the scored ledger a constant number of times across cutoffs") {
-    // round-15 single-pass rewrite: phase-0 stats + phase-1 bucket counts
-    // are cutoff-independent and all K boundaries resolve against ONE
-    // classification, so the RETURNED plan's input-scan count must not
-    // grow with the cutoff count (the K-marker-join form scanned the
-    // ledger once per cutoff)
+    // phase-0 stats + phase-1 bucket weights are cutoff-independent and
+    // all K cutoffs resolve against ONE classification, so the RETURNED
+    // plan's input-scan count must not grow with the cutoff count (a
+    // take per cutoff would scan the ledger once per cutoff)
     def scans(k: Seq[Double]): Int = {
       val out = graft.ops.Sampling.qualityPartition(
         Tables(spark, dir, "documents")

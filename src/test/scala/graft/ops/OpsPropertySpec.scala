@@ -928,22 +928,27 @@ object OpsPropertySpec extends Properties("graft.ops") {
 
   property("takeTopFraction ≡ the naive per-stratum window prefix on random shapes") =
     forAll(
-      Gen.choose(1, 30).flatMap(k => Gen.listOfN(k, Gen.choose(0, 6))),
+      Gen.choose(1, 30).flatMap(k => Gen.listOfN(k, Gen.choose(0, 7))),
       Gen.choose(1, 100).map(_ / 100.0), Gen.choose(1, 3), Gen.oneOf(2, 4, 16),
       // 1 forces the run/tie path on every boundary bucket; the default
       // direct-windows these tiny shapes — both must agree with naive
-      Gen.oneOf(1L, Sampling.MaxBoundaryTaskRows)) {
-      (scores, fraction, nStrata, nBuckets, mbtr) =>
+      Gen.oneOf(1L, Sampling.MaxBoundaryTaskRows),
+      // per-row token weights for the token-budget twin: 0..3, 4 → null
+      Gen.listOfN(30, Gen.choose(0, 4))) {
+      (scores, fraction, nStrata, nBuckets, mbtr, tokens) =>
         import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.functions.{col, md5, row_number}
+        import org.apache.spark.sql.functions.{coalesce, col, lit, md5, row_number, sum}
         val st = StructType(Seq(
           StructField("id", LongType, nullable = false),
           StructField("src", StringType, nullable = false),
-          StructField("score", LongType, nullable = true)))
-        // scores 0..6 over ≤30 rows guarantee heavy ties; score 6 → null
-        val rows = scores.zipWithIndex.map { case (v, i) =>
+          StructField("score", DoubleType, nullable = true),
+          StructField("n_tok", LongType, nullable = true)))
+        // scores 0..5 over ≤30 rows guarantee heavy ties; 6 → null, and
+        // 7 → NaN, which Spark sorts above every score
+        val rows = scores.zip(tokens).zipWithIndex.map { case ((v, t), i) =>
           Row((i + 1).toLong, s"s${i % nStrata}",
-            if (v == 6) null else v.toLong)
+            if (v == 6) null else if (v == 7) Double.NaN else v.toDouble,
+            if (t == 4) null else t.toLong)
         }
         val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), st)
         val got = Sampling.takeTopFraction(
@@ -959,21 +964,40 @@ object OpsPropertySpec extends Properties("graft.ops") {
           .collect()
           .filter(r => r.getInt(r.fieldIndex("__rn")) <= budgets(r.getString(1)))
           .map(_.getLong(0)).toSet
-        got == expected
+        // the weighted twin on the same frame: running token weight before
+        // the row < budget (crossing row kept), nulls count as 0 tokens
+        // one budget for every stratum: a fraction of the smallest
+        // stratum's tokens, so the cutoff lands inside strata
+        val toks = coalesce(col("n_tok"), lit(0L))
+        val budget = math.max(1L, math.round(fraction * rows
+          .groupBy(_.getString(1)).values
+          .map(_.map(r => if (r.isNullAt(3)) 0L else r.getLong(3)).sum).min))
+        val gotT = Sampling.takeTopTokenBudget(
+          df, "src", "id", "score", "n_tok", budget, nBuckets,
+          maxBoundaryTaskRows = mbtr)
+          .select("id").collect().map(_.getLong(0)).toSet
+        val expectedT = df
+          .withColumn("__cum", sum(toks).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .where(col("__cum") - toks < budget)
+          .select("id").collect().map(_.getLong(0)).toSet
+        got == expected && gotT == expectedT
     }
 
   property("qualityPartition ≡ naive global-rank bucketing on random shapes") =
     forAll(
-      Gen.choose(1, 30).flatMap(k => Gen.listOfN(k, Gen.choose(0, 6))),
+      Gen.choose(1, 30).flatMap(k => Gen.listOfN(k, Gen.choose(0, 7))),
       Gen.oneOf(Seq(0.5), Seq(1.0 / 3, 2.0 / 3), Seq(0.2, 0.5, 0.9)),
       Gen.oneOf(2, 4, 16)) { (scores, fractions, nBuckets) =>
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.functions.{col, md5, row_number}
         val st = StructType(Seq(
           StructField("id", LongType, nullable = false),
-          StructField("score", LongType, nullable = true)))
+          StructField("score", DoubleType, nullable = true)))
+        // 6 → null, 7 → NaN (sorted above every score)
         val rows = scores.zipWithIndex.map { case (v, i) =>
-          Row((i + 1).toLong, if (v == 6) null else v.toLong)
+          Row((i + 1).toLong,
+            if (v == 6) null else if (v == 7) Double.NaN else v.toDouble)
         }
         val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), st)
         val got = Sampling.qualityPartition(

@@ -2326,6 +2326,18 @@ class OpsSpec extends SparkSpec {
     assert(gotT == expT && gotT.nonEmpty && gotT.size < 60)
   }
 
+  test("score-ordered and md5-ordered takes refuse caller columns named like their internals") {
+    val st = struct("id" -> LongType, "src" -> StringType, "score" -> LongType,
+      "__db" -> LongType, "__off" -> LongType)
+    val df = frame(st, (1L to 8L).map(i => Row(i, "s", i % 3, i, i)): _*)
+    val top = intercept[IllegalArgumentException](Sampling.takeTopFraction(
+      df.drop("__off"), "src", "id", "score", 0.5))
+    assert(top.getMessage.contains("__db"), top.getMessage)
+    val budget = intercept[IllegalArgumentException](Sampling.takeTokenBudget(
+      df.drop("__db"), "src", "id", "score", 4L))
+    assert(budget.getMessage.contains("__off"), budget.getMessage)
+  }
+
   test("temperatureMixTopQuality: sqrt-share quotas filled with the best-scored rows") {
     // a: 8 rows (score = id), b: 2 rows; alpha = 0.5, target 6 → weights
     // √8/√2, quotas round(6·2/3) = 4 and round(6·1/3) = 2 — a keeps its
@@ -2342,10 +2354,10 @@ class OpsSpec extends SparkSpec {
 
   test("takeTopFraction: a CONSTANT score never funnels a stratum into one window task") {
     // one stratum, 120 rows, ONE score value — the tie-dense worst case.
-    // The round-10 plan put all 120 rows through a single
+    // A single boundary window would put all 120 rows through one
     // Window.partitionBy(stratum) task; the score-run machinery must
     // instead window only the md5 sub-boundary sub-bucket (~1 row at
-    // 4096 sub-buckets) plus the 1-row distinct-score prefix window.
+    // 4096 sub-buckets).
     val st = struct("id" -> LongType, "src" -> StringType, "score" -> LongType)
     val rows = (1L to 120L).map(i => Row(i, "only", 7L))
     val df = frame(st, rows: _*)
@@ -2367,9 +2379,8 @@ class OpsSpec extends SparkSpec {
     // WindowExec in the final adaptive plan, read the ROW COUNT of the
     // shuffle stage feeding it (WindowExec itself only meters spill) —
     // no window may have consumed anything close to the 120-row stratum.
-    // The round-10 plan fed the boundary window all 120 rows; the
-    // run/tie machinery feeds it the md5 sub-boundary sub-bucket (~1 row
-    // at 4096 sub-buckets).
+    // The run/tie machinery feeds it the md5 sub-boundary sub-bucket
+    // (~1 row at 4096 sub-buckets).
     out.collect()
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{
@@ -2392,13 +2403,11 @@ class OpsSpec extends SparkSpec {
   }
 
   test("takeTopFraction: a giant CONTINUOUS-score stratum self-sizes its buckets under maxBoundaryTaskRows") {
-    // one stratum, 600 rows, all-distinct scores — the round-11 residual:
-    // at the requested nBuckets = 2 the boundary bucket would be ~300
-    // rows (> maxBoundaryTaskRows = 40), and because the score is
-    // continuous the run table is row-sized, so the run path's
-    // distinct-score window would ALSO take ~300 rows in one task.
-    // Phase 0 must instead re-quantile at a finer width so the boundary
-    // bucket fits the direct window.
+    // one stratum, 600 rows, all-distinct scores: at the requested
+    // nBuckets = 2 the boundary bucket would be ~300 rows
+    // (> maxBoundaryTaskRows = 40), and because the score is continuous
+    // the run table is row-sized. Phase 0 must instead re-quantile at a
+    // finer width so the boundary bucket fits the direct window.
     val st = struct("id" -> LongType, "src" -> StringType, "score" -> DoubleType)
     val rows = (1L to 600L).map(i => Row(i, "g", i.toDouble))
     val df = frame(st, rows: _*)
@@ -2435,8 +2444,8 @@ class OpsSpec extends SparkSpec {
     // stratum t: 100 rows at ONE score (tie-dense — boundary bucket is
     // the stratum, must take the run/tie path); stratum c: 100 distinct
     // scores (continuous — its boundary bucket fits the direct window
-    // after self-sizing). Before round 12 the strategy was a global flag:
-    // t's oversized bucket would have dragged c through the run/tie jobs.
+    // after self-sizing). t's oversized bucket must not drag c through
+    // the run/tie jobs.
     val st = struct("id" -> LongType, "src" -> StringType, "score" -> DoubleType)
     val rows = (1L to 100L).map(i => Row(i, "t", 5.0)) ++
       (101L to 200L).map(i => Row(i, "c", (i - 100).toDouble))
@@ -3375,21 +3384,24 @@ class OpsSpec extends SparkSpec {
       try out.write(bytes) finally out.close()
     }
     def flip(b: Array[Byte], i: Int) = { val c = b.clone(); c(i) = (c(i) ^ 0x01).toByte; c }
-    val headerDamage = (ok: Array[Byte]) => Seq(ok.dropRight(7) -> "truncated",
+    def corrupt(damage: (Array[Byte], String)*) =
+      damage.map { case (bad, why) => bad -> Seq("corrupt", why) }
+    val headerDamage = (ok: Array[Byte]) => corrupt(ok.dropRight(7) -> "truncated",
       flip(ok, ok.length - 3) -> "CRC32 mismatch", Array.emptyByteArray -> "no header line")
     val bloomDamage = (ok: Array[Byte]) =>
-      Seq(ok.dropRight(7) -> "id bloom", flip(ok, ok.length / 2) -> "id bloom")
-    /** Each op fails loudly, naming the damage, while `p` holds each
-      * damaged copy of itself; `p` is restored afterwards.
+      corrupt(ok.dropRight(7) -> "id bloom", flip(ok, ok.length / 2) -> "id bloom")
+    /** Each op fails loudly, its message naming every word of the damage,
+      * while `p` holds each damaged copy of itself; `p` is restored
+      * afterwards.
       */
-    def refused(p: HPath, damage: Array[Byte] => Seq[(Array[Byte], String)])(
+    def refused(p: HPath, damage: Array[Byte] => Seq[(Array[Byte], Seq[String])])(
         ops: (() => Any)*): Unit = {
       val ok = read(p)
-      damage(ok).foreach { case (bad, why) =>
+      damage(ok).foreach { case (bad, words) =>
         write(p, bad)
         ops.foreach { op =>
           val e = intercept[IllegalStateException](op())
-          assert(e.getMessage.contains("corrupt") && e.getMessage.contains(why), e.getMessage)
+          assert(words.forall(e.getMessage.contains), e.getMessage)
         }
       }
       write(p, ok)
@@ -3400,6 +3412,16 @@ class OpsSpec extends SparkSpec {
       TextOps.appendTokenFrequencyIndex(b, "doc_id", "text", idx)
     def live(file: String) = new HPath(EpochStore.epochDir(spark, idx), file)
     refused(live(EpochStore.HeaderFileName), headerDamage)(() => probe(), () => append())
+    // a well-formed header whose manifest names a table its schema map lacks
+    val schemaLess = (_: Array[Byte]) => {
+      val h = EpochStore.readHeader(spark, EpochStore.epochDir(spark, idx)).get
+      val dir = java.nio.file.Files.createTempDirectory("graft-hdr-schemaless").toString
+      EpochStore.writeHeader(spark, dir, h.copy(schemas = h.schemas - "tf"))
+      assert(h.manifest.exists(_._1 == "tf"))
+      Seq(read(new HPath(dir, EpochStore.HeaderFileName)) ->
+        Seq("records no schema for table 'tf'"))
+    }
+    refused(live(EpochStore.HeaderFileName), schemaLess)(() => probe())
     assert(EpochStore.currentEpoch(spark, idx).contains("epoch-000000001"),
       "a refused append must not commit")
     append()
