@@ -75,95 +75,38 @@ object Validator {
             s"${f.dataType.simpleString}.",
           ErrorTypes.ColumnDType)
     }
-    // Data checks only make sense on type-compatible columns.
-    val checkable = present.filter(f => typeAccepted(dfTypes(f.name), f.validTypes))
-
-    // ---- single-pass aggregate plan -------------------------------------
-    // Each entry: (field, kind, agg column). Kinds drive error rendering.
-    val aggs = Seq.newBuilder[(FieldSpec, String, Column)]
-
-    checkable.foreach { f =>
-      val c = col(f.name)
-      if (!f.nullable)
-        aggs += ((f, "nulls",
-          sum(when(c.isNull, 1L).otherwise(0L))))
-      dfTypes(f.name) match {
-        case ArrayType(_, _) =>
-          val wanted = f.dataType match {
-            case ArrayType(_, containsNull) => containsNull
-            case _                          => true
-          }
-          if (!wanted)
-            // nulls *inside* array cells, without explode (higher-order fn):
-            aggs += ((f, "inner_nulls",
-              sum(coalesce(size(filter(c, x => x.isNull)), lit(0)).cast(LongType))))
-        case _ => ()
-      }
-      f.enumValues.foreach { vals =>
-        // count-only in the single pass: a collect_set here would
-        // accumulate EVERY out-of-domain distinct value in one (non-
-        // spillable) aggregation buffer — an entirely-miscast high-
-        // cardinality column at scale bloats it unboundedly. Example
-        // values are fetched by a second, capped query only when the
-        // count is non-zero (the error path).
-        aggs += ((f, "enum",
-          sum(when(c.isNotNull && !c.isin(vals: _*), 1L).otherwise(0L))))
-      }
-      boundsViolation(f).foreach { pred =>
-        aggs += ((f, "bounds", sum(when(pred, 1L).otherwise(0L))))
-      }
-    }
-    // Aggregate-valued constraint sub-expressions across ALL fields are
-    // inlined in ONE extra scalar job (not one per constraint).
-    val boundConstraints = checkable.flatMap(f =>
-      f.constraints.map(raw => f -> bindPlaceholder(raw, f.name)))
-    inlineAggregatesBatch(df, boundConstraints.map(_._2))
-      .zip(boundConstraints).foreach { case (evaluable, (f, _)) =>
-        aggs += ((f, "constraint",
-          sum(when(!coalesce(evaluable, lit(true)), 1L).otherwise(0L))))
-      }
-
-    val plan = aggs.result()
+    // ---- single-pass aggregate plan over the row checks -----------------
+    // aggregate-valued constraints inline in ONE extra scalar job first
+    val plan = rowChecks(df, schema, inlineAggregates = true)
     if (plan.nonEmpty) {
-      val named = plan.zipWithIndex.map { case ((_, _, a), i) => a.as(s"_v$i") }
+      val named = plan.zipWithIndex.map { case (c, i) => sum(c.count).as(s"_v$i") }
       val row: Row = df.agg(named.head, named.tail: _*).head()
-      plan.zipWithIndex.foreach { case ((f, kind, _), i) =>
-        kind match {
+      plan.zipWithIndex.foreach { case (RowCheck(f, kind, violated, _), i) =>
+        val n = if (row.isNullAt(i)) 0L else row.getLong(i)
+        if (n > 0) errors += (kind match {
           case "enum" =>
-            val n = if (row.isNullAt(i)) 0L else row.getLong(i)
-            if (n > 0) {
-              // error path only: fetch the ≤EnumReportCap smallest distinct
-              // offenders in a second, bounded query — the single-pass agg
-              // carries just the count
-              val c = col(f.name)
-              val vals = f.enumValues.get
-              val bad = df
-                .where(c.isNotNull && !c.isin(vals: _*))
-                .select(c.cast(StringType).as("v")).distinct()
-                .orderBy(col("v")).limit(EnumReportCap)
-                .collect().map(_.getString(0)).toSeq
-              errors += ErrorDetail(
-                f.name,
-                s"Rows with invalid values: {${bad.map(v => s"'$v'").mkString(", ")}}.",
-                ErrorTypes.RowValue)
-            }
-          case other =>
-            val n = if (row.isNullAt(i)) 0L else row.getLong(i)
-            if (n > 0) {
-              val (msg, tpe) = other match {
-                case "nulls" =>
-                  (s"${plural(n, "missing value")}", ErrorTypes.MissingValues)
-                case "inner_nulls" =>
-                  (s"${plural(n, "missing value")} in list.", ErrorTypes.MissingValues)
-                case "bounds" =>
-                  (s"${plural(n, "row")} with out of bound values.", ErrorTypes.RowValue)
-                case _ =>
-                  (s"${plural(n, "row")} does not match custom constraints.",
-                    ErrorTypes.RowValue)
-              }
-              errors += ErrorDetail(f.name, msg, tpe)
-            }
-        }
+            // error path only: fetch the ≤EnumReportCap smallest distinct
+            // offenders in a second, bounded query — the single-pass agg
+            // carries just the count
+            val bad = df.where(violated)
+              .select(col(f.name).cast(StringType).as("v")).distinct()
+              .orderBy(col("v")).limit(EnumReportCap)
+              .collect().map(_.getString(0)).toSeq
+            ErrorDetail(f.name,
+              s"Rows with invalid values: {${bad.map(v => s"'$v'").mkString(", ")}}.",
+              ErrorTypes.RowValue)
+          case "nulls" =>
+            ErrorDetail(f.name, plural(n, "missing value"), ErrorTypes.MissingValues)
+          case "inner_nulls" =>
+            ErrorDetail(f.name, s"${plural(n, "missing value")} in list.",
+              ErrorTypes.MissingValues)
+          case "bounds" =>
+            ErrorDetail(f.name, s"${plural(n, "row")} with out of bound values.",
+              ErrorTypes.RowValue)
+          case _ =>
+            ErrorDetail(f.name, s"${plural(n, "row")} does not match custom constraints.",
+              ErrorTypes.RowValue)
+        })
       }
     }
 
@@ -171,7 +114,7 @@ object Validator {
     // same native-value pair builder as [[uniqueReportDF]] (a lossy string
     // rendering must not conflate distinct binary/decimal values in one
     // path and not the other).
-    val uniqueCols = checkable.filter(_.unique).map(_.name)
+    val uniqueCols = checkable(df, schema).filter(_.unique).map(_.name)
     if (uniqueCols.nonEmpty && df.columns.nonEmpty) {
       val dupCounts = uniqueDupCounts(df, uniqueCols)
         .collect()
@@ -198,6 +141,10 @@ object Validator {
   def reportDF(df: DataFrame, schema: Schema): DataFrame = {
     val all = checkAggs(df, schema, streamSafe = false)
     require(all.nonEmpty, "reportDF: schema declares no aggregate-checkable constraints")
+    report(df, all)
+  }
+
+  private def report(df: DataFrame, all: Seq[(String, String, Column)]): DataFrame = {
     val named = all.zipWithIndex.map { case ((_, _, a), i) =>
       coalesce(a, lit(0L)).as(s"_v$i")
     }
@@ -242,13 +189,14 @@ object Validator {
     * aggregate scan, plus one shuffle iff unique columns exist.
     */
   def fullReportDF(df: DataFrame, schema: Schema): DataFrame = {
-    val hasAgg = checkAggs(df, schema, streamSafe = false).nonEmpty
+    // built once: an aggregate-valued constraint costs its scalar job here
+    val checks = checkAggs(df, schema, streamSafe = false)
     val hasUnique = schema.fields.exists(f =>
       f.unique && df.columns.contains(f.name))
-    require(hasAgg || hasUnique,
+    require(checks.nonEmpty || hasUnique,
       "fullReportDF: schema declares no checkable constraints")
     val parts =
-      (if (hasAgg) Seq(reportDF(df, schema)) else Nil) ++
+      (if (checks.nonEmpty) Seq(report(df, checks)) else Nil) ++
       (if (hasUnique) Seq(uniqueReportDF(df, schema)) else Nil)
     parts.reduce(_ unionByName _).orderBy(col("loc"), col("chk"))
   }
@@ -298,9 +246,64 @@ object Validator {
       .groupBy(col("loc")).agg(sum(col("cnt")).as("dups"))
   }
 
-  /** Per-(column, check) violation-count aggregates for the row-level checks
-    * (nulls / enum-domain / bounds / constraints) — shared by [[reportDF]]
-    * and streaming validation ([[graft.streaming.StreamingOps]]).
+  /** One row-level check of a field: `violated` flags a failing row and
+    * `count` is what the validation aggregate sums for the row — the flag
+    * as 0/1, or V4's number of nulls inside the array cell.
+    */
+  private case class RowCheck(field: FieldSpec, kind: String, violated: Column, count: Column)
+
+  private def flag(f: FieldSpec, kind: String, violated: Column): RowCheck =
+    RowCheck(f, kind, violated, when(violated, 1L).otherwise(0L))
+
+  /** Fields whose column is present with an accepted dtype — data checks
+    * only make sense on these (a mismatch is V5's error instead).
+    */
+  private def checkable(df: DataFrame, schema: Schema): Seq[FieldSpec] = {
+    val dfTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    schema.fields.filter(f => dfTypes.get(f.name).exists(typeAccepted(_, f.validTypes)))
+  }
+
+  /** THE row-level check list: V3 (nulls), V4 (nulls inside arrays), V6
+    * (enum domain), V8 (bounds / pattern / length) per checkable field in
+    * schema order, then every field's V9 constraints. [[findErrors]],
+    * [[checkAggs]] and [[graft.streaming.StreamingOps.validRows]] all read
+    * it. Aggregate-valued constraints are inlined as literals by ONE
+    * scalar job ([[inlineAggregatesBatch]]) when `inlineAggregates`, and
+    * skipped otherwise (a stream cannot run that job).
+    */
+  private def rowChecks(
+      df: DataFrame, schema: Schema, inlineAggregates: Boolean): Seq[RowCheck] = {
+    val fields = checkable(df, schema)
+    val perField = fields.flatMap { f =>
+      val c = col(f.name)
+      val innerNullsBanned = (df.schema(f.name).dataType, f.dataType) match {
+        case (ArrayType(_, _), ArrayType(_, containsNull)) => !containsNull
+        case _                                           => false
+      }
+      // the enum check only counts in the single pass: a collect_set would
+      // hold EVERY out-of-domain distinct value in one non-spillable
+      // aggregation buffer; findErrors fetches capped examples on error
+      (if (f.nullable) None else Some(flag(f, "nulls", c.isNull))) ++
+        // nulls *inside* array cells, without explode (higher-order fn)
+        (if (innerNullsBanned) Some(RowCheck(f, "inner_nulls",
+          coalesce(exists(c, _.isNull), lit(false)),
+          coalesce(size(filter(c, x => x.isNull)), lit(0)).cast(LongType)))
+        else None) ++
+        f.enumValues.map(vals => flag(f, "enum", c.isNotNull && !c.isin(vals: _*))) ++
+        boundsViolation(f).map(flag(f, "bounds", _))
+    }
+    val constraints = fields.flatMap(f =>
+      f.constraints.map(raw => f -> bindPlaceholder(raw, f.name)))
+      .filter { case (_, bound) => inlineAggregates || !hasAggregate(bound) }
+    val evaluable = inlineAggregatesBatch(df, constraints.map(_._2))
+    perField ++ evaluable.zip(constraints).map { case (e, (f, _)) =>
+      flag(f, "constraint", !coalesce(e, lit(true)))
+    }
+  }
+
+  /** Per-(column, check) violation-count aggregates of [[rowChecks]] —
+    * shared by [[reportDF]], [[fullReportDF]] and streaming validation
+    * ([[graft.streaming.StreamingOps.observeValidation]]).
     *
     * `streamSafe = true` drops constraints containing aggregate
     * sub-expressions: inlining them requires running a separate batch job at
@@ -310,35 +313,19 @@ object Validator {
   private[graft] def checkAggs(
       df: DataFrame,
       schema: Schema,
-      streamSafe: Boolean): Seq[(String, String, Column)] = {
-    val dfTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val checks = Seq.newBuilder[(String, String, Column)]
-    val fields = schema.fields.filter(f => dfTypes.contains(f.name))
-    fields.foreach { f =>
-      val c = col(f.name)
-      if (!f.nullable)
-        checks += ((f.name, "nulls", sum(when(c.isNull, 1L).otherwise(0L))))
-      f.enumValues.foreach { vals =>
-        checks += ((f.name, "enum",
-          sum(when(c.isNotNull && !c.isin(vals: _*), 1L).otherwise(0L))))
-      }
-      boundsViolation(f).foreach { pred =>
-        checks += ((f.name, "bounds", sum(when(pred, 1L).otherwise(0L))))
-      }
-    }
-    // constraints last: aggregate-valued ones inline in ONE extra job
-    val constraints = fields.flatMap(f =>
-      f.constraints.map(raw => f.name -> bindPlaceholder(raw, f.name)))
-      .filterNot { case (_, bound) => streamSafe && hasAggregate(bound) }
-    inlineAggregatesBatch(df, constraints.map(_._2))
-      .zip(constraints).foreach { case (evaluable, (name, _)) =>
-        checks += ((name, "constraint",
-          sum(when(!coalesce(evaluable, lit(true)), 1L).otherwise(0L))))
-      }
-    checks.result()
+      streamSafe: Boolean): Seq[(String, String, Column)] =
+    rowChecks(df, schema, inlineAggregates = !streamSafe)
+      .map(c => (c.field.name, c.kind, sum(c.count)))
+
+  /** True on a row passing every row-level check of [[rowChecks]], the
+    * aggregate-valued constraints skipped (they need a batch job).
+    */
+  private[graft] def passesRowChecks(df: DataFrame, schema: Schema): Column = {
+    val checks = rowChecks(df, schema, inlineAggregates = false)
+    if (checks.isEmpty) lit(true) else checks.map(!_.violated).reduce(_ && _)
   }
 
-  private[graft] def hasAggregate(c: Column): Boolean = {
+  private def hasAggregate(c: Column): Boolean = {
     var found = false
     def visit(x: Expression): Unit =
       if (isAggregate(x)) found = true else x.children.foreach(visit)
@@ -363,7 +350,7 @@ object Validator {
     * when it is non-null and fails ANY bound (validators.py:234-267, incl. the
     * `col == 0` escape for multiple_of at :241).
     */
-  private[graft] def boundsViolation(f: FieldSpec): Option[Column] = {
+  private def boundsViolation(f: FieldSpec): Option[Column] = {
     val c = col(f.name)
     val conds = Seq.newBuilder[Column]
     f.bounds.gt.foreach(v => conds += (c > lit(v)))
@@ -383,7 +370,7 @@ object Validator {
   /** Rewrite the reference's `_` self-column placeholder
     * (validators.py:276-280) to the actual column name.
     */
-  private[graft] def bindPlaceholder(constraint: Column, name: String): Column = {
+  private def bindPlaceholder(constraint: Column, name: String): Column = {
     val e = GraftBridge.expression(constraint)
     val rewritten = e.transform {
       case UnresolvedAttribute(Seq("_")) => UnresolvedAttribute(Seq(name))
@@ -417,7 +404,7 @@ object Validator {
     * then substituted back per constraint — N fraction-style constraints
     * cost one extra scan, not N.
     */
-  private[graft] def inlineAggregatesBatch(
+  private def inlineAggregatesBatch(
       df: DataFrame,
       constraints: Seq[Column]): Seq[Column] = {
     if (constraints.isEmpty) return Seq.empty

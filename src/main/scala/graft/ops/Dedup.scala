@@ -391,17 +391,30 @@ object Dedup {
     // long-mixing. The HOF composition (minhashSignature ∘ bandHashes)
     // has the same banding semantics over a different (per-seed string
     // hash) family, and pays interpreted lambda evaluation per element.
-    val sigs = df.select(
-      col(idCol).as("id"),
-      graft.functions.native
-        .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
-        .as("bh"))
-    val withHs = df.select(
-      col(idCol).as("id"),
-      graft.functions.native
-        .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs"))
-    lshVerifiedPairs(sigs, withHs, threshold)
+    val side = minhashSide(df, textCol, idCol, k, numHashes, bands)
+    lshVerifiedPairs(side, side, threshold)
   }
+
+  /** THE MinHash projection of a document frame: `idCol` as `id`, the fused
+    * band hashes `bh` and the hashed shingle set `hs` of its raw tokens —
+    * one definition of the banding that every pair op, index table and
+    * probe shares, so their buckets always collide compatibly. A consumer
+    * selecting one of `bh`/`hs` prunes the other kernel from the plan.
+    */
+  private def minhashSide(
+      df: DataFrame, textCol: String, idCol: String, k: Int, numHashes: Int, bands: Int,
+      id: String = "id", hs: String = "hs"): DataFrame = {
+    val tokens = TextOps.rawTokens(col(textCol))
+    df.select(col(idCol).as(id),
+      graft.functions.native.minhashBandHashes(tokens, k, numHashes, bands).as("bh"),
+      graft.functions.native.hashedShingleSet(tokens, k).as(hs))
+  }
+
+  /** `buckets` (band, bhash, …) rows with their bucket's size `n` — the
+    * oversize guard's count, a window over the bucket key (no self-join).
+    */
+  private def withBucketSize(buckets: DataFrame): DataFrame =
+    buckets.withColumn("n", count(lit(1)).over(Window.partitionBy(col("band"), col("bhash"))))
 
   /** Character n-gram near-duplicate pairs: MinHash LSH over the `n`-char
     * grams of whitespace-normalized lowercase text, verified with exact
@@ -469,9 +482,7 @@ object Dedup {
     // aggregation buffer (the non-spillable OOM risk this replaces). The
     // groupBy after the filter reuses the window's hash partitioning:
     // still ONE exchange total (PlanSpec asserts).
-    val perBucket = Window.partitionBy(col("band"), col("bhash"))
-    val grouped = buckets
-      .withColumn("n", count(lit(1)).over(perBucket))
+    val grouped = withBucketSize(buckets)
       .where(col("n") >= 2 && col("n") <= maxBucketSize)
       .groupBy(col("band"), col("bhash"))
       .agg(array_sort(collect_list(col("id"))).as("ids"))
@@ -530,32 +541,16 @@ object Dedup {
       bands: Int = 32,
       threshold: Double = 0.5,
       maxBucketSize: Int = 4096): DataFrame = {
-    def sigsOf(df: DataFrame) = df.select(
-      col(idCol).as("id"),
-      graft.functions.native
-        .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
-        .as("bh"))
-    def hsOf(df: DataFrame) = df.select(
-      col(idCol).as("id"),
-      graft.functions.native
-        .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs"))
-    val bucketsNew = sigsOf(newDocs)
-      .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id").as("new_id"))
-    val w = Window.partitionBy(col("band"), col("bhash"))
-    val bucketsExisting = sigsOf(existing)
-      .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id").as("existing_id"))
-      .withColumn("n", count(lit(1)).over(w))
+    // the corpus side derives exactly the persisted index's tables: the
+    // oversize-guarded buckets of writeDedupIndex, and the shingle sets
+    val buckets = withBucketSize(
+      minhashSide(existing, textCol, idCol, k, numHashes, bands, id = "existing_id")
+        .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("existing_id")))
       .where(col("n") <= maxBucketSize)
       .drop("n")
-    bucketsNew.join(bucketsExisting, Seq("band", "bhash"))
-      .select("new_id", "existing_id")
-      .dropDuplicates("new_id", "existing_id")
-      .join(hsOf(newDocs).select(col("id").as("new_id"), col("hs").as("hs_a")), Seq("new_id"))
-      .join(hsOf(existing).select(col("id").as("existing_id"), col("hs").as("hs_b")), Seq("existing_id"))
-      .withColumn("jaccard",
-        graft.functions.native.jaccardSorted(col("hs_a"), col("hs_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("new_id"), col("existing_id"), col("jaccard"))
+    val sets = minhashSide(existing, textCol, idCol, k, numHashes, bands,
+      id = "existing_id", hs = "hs_b").select("existing_id", "hs_b")
+    probePairs(newDocs, textCol, idCol, k, numHashes, bands, buckets, sets, threshold)
   }
 
   /** On-disk format version of the persisted dedup index. Bumped whenever
@@ -651,18 +646,9 @@ object Dedup {
       // stage the bucket rows once WITH their window counts; the kept/dropped
       // split derives from the staged parquet — one signature-kernel pass
       // over the corpus text, not one per output table
-      val byBucket = Window.partitionBy(col("band"), col("bhash"))
-      val staged = out.stage(existing.select(
-        col(idCol).as("id"),
-        graft.functions.native
-          .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
-          .as("bh"))
-        .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id"))
-        .withColumn("n", count(lit(1)).over(byBucket)))
-      val sets = existing.select(
-        col(idCol).as("id"),
-        graft.functions.native
-          .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs"))
+      val side = minhashSide(existing, textCol, idCol, k, numHashes, bands)
+      val staged = out.stage(withBucketSize(
+        side.select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id"))))
       // the three epoch tables derive independently (buckets/dropped from the
       // staged parquet, sets from the corpus) — overlap their write jobs
       EpochStore.Arms.fresh(Map("k" -> k.toString, "num_hashes" -> numHashes.toString,
@@ -671,7 +657,7 @@ object Dedup {
           staged.where(col("n") <= maxBucketSize).select("band", "bhash", "id")),
         () => out.write("dropped",
           staged.where(col("n") > maxBucketSize).select("band", "bhash", "n").distinct()),
-        () => out.write("sets", sets))
+        () => out.write("sets", side.select("id", "hs")))
     }
 
   /** Fold a batch of new documents into a standing index ([[writeDedupIndex]])
@@ -733,12 +719,9 @@ object Dedup {
       // stage the new side's bucket rows once — the delta file and every
       // count below derive from the staged parquet, so the signature kernel
       // runs exactly once over the new docs
-      val staged = out.stage(newDocs.select(
-        col(idCol).as("id"),
-        graft.functions.native
-          .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
-          .as("bh"))
-        .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id")))
+      val side = minhashSide(newDocs, textCol, idCol, k, numHashes, bands)
+      val staged = out.stage(
+        side.select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id")))
       val touched = staged.select("band", "bhash").distinct()
       val tomb = indexDropped(spark, cur)
       // prior live counts for TOUCHED buckets only — the broadcast semi-join
@@ -772,10 +755,7 @@ object Dedup {
             Seq("band", "bhash"), "left_anti")
             .select("band", "bhash", "id"))
         },
-        () => out.write("sets", newDocs.select(
-          col(idCol).as("id"),
-          graft.functions.native
-            .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs"))))
+        () => out.write("sets", side.select("id", "hs")))
     }
   }
 
@@ -826,20 +806,29 @@ object Dedup {
     val k = ep.header.int("k")
     val numHashes = ep.header.int("num_hashes")
     val bands = ep.header.int("bands")
-    val newSide = newDocs.select(
-      col(idCol).as("new_id"),
-      graft.functions.native
-        .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
-        .as("bh"),
-      graft.functions.native
-        .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs_a"))
-      .select(col("new_id"), col("hs_a"),
-        posexplode(col("bh")).as(Seq("band", "bhash")))
     val buckets = indexBuckets(spark, ep)
       .withColumnRenamed("id", "existing_id")
     val sets = indexSets(spark, ep)
       .select(col("id").as("existing_id"), col("hs").as("hs_b"))
-    newSide.join(buckets, Seq("band", "bhash"))
+    probePairs(newDocs, textCol, idCol, ep.header.int("k"), ep.header.int("num_hashes"),
+      ep.header.int("bands"), buckets, sets, threshold)
+  }
+
+  /** The probe plan of both `…Against` ops: the new side is hashed ONCE and
+    * carries its shingle set `hs_a` through the band explode, its buckets
+    * join the standing `buckets` (band, bhash, existing_id), the candidate
+    * pairs dedup, and only then the standing `sets` (existing_id, hs_b)
+    * join for the exact Jaccard. Stream-safe: with a streaming `newDocs`
+    * both joins are stream-static and stateless; the one state is the
+    * `dropDuplicates` of candidate pairs (the same pair surfaces via several
+    * bands, across micro-batches).
+    */
+  private def probePairs(
+      newDocs: DataFrame, textCol: String, idCol: String, k: Int, numHashes: Int,
+      bands: Int, buckets: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
+    minhashSide(newDocs, textCol, idCol, k, numHashes, bands, id = "new_id", hs = "hs_a")
+      .select(col("new_id"), col("hs_a"), posexplode(col("bh")).as(Seq("band", "bhash")))
+      .join(buckets, Seq("band", "bhash"))
       // hs_a is identical on every row of a new_id, so the arbitrary-row
       // keep of dropDuplicates is still deterministic content
       .select(col("new_id"), col("existing_id"), col("hs_a"))
@@ -849,7 +838,6 @@ object Dedup {
         graft.functions.native.jaccardSorted(col("hs_a"), col("hs_b")))
       .where(col("jaccard") >= threshold)
       .select(col("new_id"), col("existing_id"), col("jaccard"))
-  }
 
   /** Near-duplicate pairs by SimHash: 64-bit signatures banded into equal
     * chunks — by pigeonhole, any pair within hamming distance `chunks - 1`

@@ -2,11 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 import graft.core.{Schema, Validator}
+import graft.ops.{Decontam, Dedup, EpochStore, LangModel, Materialize, Pipeline, Sampling,
+  Similarity, Sink, TextOps}
 
 /** One event of the sessionization input (a projection of the `events`
   * table: TESTDATA.md schema event_id/ts/user_id/event_type/value/props).
@@ -36,6 +38,12 @@ case class SessionState(events: List[(Long, Double)])
   * Scale notes: every operator here is incremental — state is keyed and
   * bounded by the watermark, aggregation is partial map-side, and validation
   * piggybacks on `CollectMetrics` (zero extra scans of the stream).
+  *
+  * A streaming twin of a batch operator IS that operator applied to the
+  * stream, or to each micro-batch through one of three private shapes:
+  * fold each non-empty batch (`foldBatches`), stage each batch and
+  * snapshot every N (`snapshotBatches`), or reload a cached bloom every N
+  * batches and screen with it (`refreshingScreen`).
   */
 object StreamingOps {
 
@@ -60,37 +68,21 @@ object StreamingOps {
     df.observe(name, metrics.head, metrics.tail: _*)
   }
 
-  /** Rows from a validated stream that PASS all row-level checks (nulls,
-    * enum domain, bounds/pattern/length, non-aggregate custom constraints
-    * — the same check set [[Validator.checkAggs]] counts with
-    * `streamSafe = true`, so this filter and [[observeValidation]] agree
-    * on every row); failing rows go to the (optional) dead-letter path
-    * instead of poisoning downstream aggregates. A pure filter — no
-    * state, no shuffle. Aggregate-valued constraints are skipped (they
-    * need a cross-batch scalar; use the batch Validator).
+  /** Rows from a validated stream that PASS all row-level checks — the
+    * one check list of [[graft.core.Validator]] (nulls, nulls inside
+    * arrays, enum domain, bounds/pattern/length, non-aggregate custom
+    * constraints, over columns of an accepted dtype), so this filter,
+    * [[observeValidation]] and `Validator.validate` agree on every row;
+    * failing rows go to the (optional) dead-letter path instead of
+    * poisoning downstream aggregates. A pure filter — no state, no
+    * shuffle. Aggregate-valued constraints are skipped (they need a
+    * cross-batch scalar; use the batch Validator).
     */
   def validRows(df: DataFrame, schema: Schema): DataFrame =
-    df.where(rowPredicate(df, schema))
+    df.where(Validator.passesRowChecks(df, schema))
 
   def invalidRows(df: DataFrame, schema: Schema): DataFrame =
-    df.where(!rowPredicate(df, schema))
-
-  private def rowPredicate(df: DataFrame, schema: Schema): Column = {
-    val dfCols = df.columns.toSet
-    val conds = schema.fields.filter(f => dfCols.contains(f.name)).flatMap { f =>
-      val c = col(f.name)
-      val nullOk =
-        if (f.nullable) Seq.empty else Seq(c.isNotNull)
-      val enumOk = f.enumValues.toSeq.map(vs => c.isNull || c.isin(vs: _*))
-      val boundsOk = Validator.boundsViolation(f).toSeq.map(viol => !viol)
-      val constraintsOk = f.constraints
-        .map(raw => Validator.bindPlaceholder(raw, f.name))
-        .filterNot(Validator.hasAggregate)
-        .map(b => coalesce(b, lit(true)))
-      nullOk ++ enumOk ++ boundsOk ++ constraintsOk
-    }
-    if (conds.isEmpty) lit(true) else conds.reduce(_ && _)
-  }
+    df.where(!Validator.passesRowChecks(df, schema))
 
   /** Watermarked tumbling-window aggregation: the canonical
     * `readStream.groupBy(window(...)).agg(...)` plan. `aggs` are
@@ -126,31 +118,18 @@ object StreamingOps {
     df.withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
 
-  /** Stream-stream inner join bounded in event time: left rows match right
-    * rows with the same `key` whose `rightTs` lies in
-    * `[leftTs - maxLagMs, leftTs]` (e.g. a click joined to the purchases it
-    * preceded within the lag window). Both sides are watermarked and the
-    * time-range condition bounds the join state — Spark drops buffered rows
-    * once the watermark passes `ts + maxLagMs`, so state is O(rate × lag),
-    * never O(stream). Works identically on batch frames (the same plan
-    * minus state).
-    *
-    * Column names apart from `key` must be disjoint between the sides (the
-    * join preserves both frames' columns).
-    */
   /** Streaming incremental dedup: a LIVE document stream checked against a
-    * STATIC standing corpus (the index) — the streaming twin of
-    * `Dedup.minhashPairsAgainst`. The stream side computes band hashes and
-    * hashed shingle sets in one projection and carries the shingle set
-    * through the band explode, so candidate generation + verification is a
-    * single STATELESS stream-static inner join on (band, bucket hash) —
-    * no watermark needed for the join itself. The only state is the final
-    * `dropDuplicates` (the same pair can surface via several bands, across
-    * micro-batches); key it with a watermark upstream if the stream is
-    * unbounded, or leave it exact for bounded replays. The static side —
-    * exploded buckets + shingle sets, oversize-guarded — is exactly the
-    * persisted dedup index; `persist()` it before passing when serving
-    * many micro-batches.
+    * STATIC standing corpus — [[graft.ops.Dedup.minhashPairsAgainst]]
+    * applied to the stream. Its probe plan is stream-safe: the stream side
+    * is hashed once and carries its shingle set through the band explode,
+    * and both joins against the static corpus side are stateless. The
+    * only state is the `dropDuplicates` of candidate pairs (the same pair
+    * can surface via several bands, across micro-batches); key it with a
+    * watermark upstream if the stream is unbounded, or leave it exact for
+    * bounded replays. The static side — oversize-guarded buckets plus
+    * shingle sets — is exactly the persisted dedup index; `persist()` the
+    * corpus before passing when serving many micro-batches, or probe the
+    * index itself with [[dedupAgainstIndex]].
     */
   def dedupAgainstCorpus(
       newStream: DataFrame,
@@ -161,49 +140,22 @@ object StreamingOps {
       numHashes: Int = 64,
       bands: Int = 32,
       threshold: Double = 0.5,
-      maxBucketSize: Int = 4096): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.ops.TextOps
-    val streamSide = newStream.select(
-      col(idCol).as("new_id"),
-      graft.functions.native
-        .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
-        .as("bh"),
-      graft.functions.native
-        .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs_a"))
-      .select(col("new_id"), col("hs_a"),
-        posexplode(col("bh")).as(Seq("band", "bhash")))
-    val w = Window.partitionBy(col("band"), col("bhash"))
-    val existingSide = existing.select(
-      col(idCol).as("existing_id"),
-      graft.functions.native
-        .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
-        .as("bh"),
-      graft.functions.native
-        .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs_b"))
-      .select(col("existing_id"), col("hs_b"),
-        posexplode(col("bh")).as(Seq("band", "bhash")))
-      .withColumn("n", count(lit(1)).over(w))
-      .where(col("n") <= maxBucketSize)
-      .drop("n")
-    streamSide.join(existingSide, Seq("band", "bhash"))
-      .withColumn("jaccard",
-        graft.functions.native.jaccardSorted(col("hs_a"), col("hs_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("new_id"), col("existing_id"), col("jaccard"))
-      .dropDuplicates("new_id", "existing_id")
-  }
+      maxBucketSize: Int = 4096): DataFrame =
+    Dedup.minhashPairsAgainst(
+      newStream, existing, textCol, idCol, k, numHashes, bands, threshold, maxBucketSize)
 
   /** [[dedupAgainstCorpus]] probing a PERSISTED index
     * ([[graft.ops.Dedup.writeDedupIndex]] /
     * [[graft.ops.Dedup.appendDedupIndex]]) instead of re-hashing a corpus
-    * frame — the production shape: a live crawl stream probing the
+    * frame — [[graft.ops.Dedup.minhashPairsAgainstIndex]] applied to the
+    * stream, the production shape: a live crawl stream probing the
     * standing index, whose existing side is two narrow parquet reads
     * (buckets + hashed sets), never the corpus text. Banding parameters
-    * come FROM the index meta (format version checked), so the stream
-    * side always hashes compatibly, including after appends. The
-    * stream-static joins are stateless; only the final `dropDuplicates`
-    * holds state (same caveat as [[dedupAgainstCorpus]]).
+    * come FROM the index header (format version checked), so the stream
+    * side always hashes compatibly, including after appends. Same shared
+    * probe plan as [[dedupAgainstCorpus]]: the stream-static joins are
+    * stateless, and the one state is the `dropDuplicates` of candidate
+    * pairs, held before the sets join and the Jaccard filter.
     *
     * The epoch is resolved ONCE, at query construction: the running query
     * keeps reading that epoch's files — appends retain predecessors for
@@ -218,34 +170,8 @@ object StreamingOps {
       textCol: String,
       idCol: String,
       path: String,
-      threshold: Double = 0.5): DataFrame = {
-    import graft.ops.{Dedup, TextOps}
-    val spark = newStream.sparkSession
-    val ep = Dedup.resolveIndex(spark, path)
-    val k = ep.header.int("k")
-    val numHashes = ep.header.int("num_hashes")
-    val bands = ep.header.int("bands")
-    val streamSide = newStream.select(
-      col(idCol).as("new_id"),
-      graft.functions.native
-        .minhashBandHashes(TextOps.rawTokens(col(textCol)), k, numHashes, bands)
-        .as("bh"),
-      graft.functions.native
-        .hashedShingleSet(TextOps.rawTokens(col(textCol)), k).as("hs_a"))
-      .select(col("new_id"), col("hs_a"),
-        posexplode(col("bh")).as(Seq("band", "bhash")))
-    val buckets = Dedup.indexBuckets(spark, ep)
-      .withColumnRenamed("id", "existing_id")
-    val sets = Dedup.indexSets(spark, ep)
-      .select(col("id").as("existing_id"), col("hs").as("hs_b"))
-    streamSide.join(buckets, Seq("band", "bhash"))
-      .join(sets, Seq("existing_id"))
-      .withColumn("jaccard",
-        graft.functions.native.jaccardSorted(col("hs_a"), col("hs_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("new_id"), col("existing_id"), col("jaccard"))
-      .dropDuplicates("new_id", "existing_id")
-  }
+      threshold: Double = 0.5): DataFrame =
+    Dedup.minhashPairsAgainstIndex(newStream, textCol, idCol, path, threshold)
 
   /** Grow the standing dedup index FROM the live stream — the third corner
     * of the streaming triangle ([[dedupAgainstIndex]] probes it, batch
@@ -273,26 +199,78 @@ object StreamingOps {
       textCol: String,
       idCol: String,
       path: String,
-      retainEpochs: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    appendUnindexed(newStream, idCol, path, graft.ops.Dedup.DedupIndex)(
-      graft.ops.Dedup.appendDedupIndex(_, textCol, idCol, path, retainEpochs))
+      retainEpochs: Int = 2): DataStreamWriter[Row] =
+    appendUnindexed(newStream, idCol, path, Dedup.DedupIndex)(
+      Dedup.appendDedupIndex(_, textCol, idCol, path, retainEpochs))
 
   /** Each micro-batch deduped by id within itself and against the ids the
     * live epoch's id table already holds, then folded by `append` unless
     * nothing is left — the replay-safe sink of the streaming index appends.
     */
   private def appendUnindexed(
-      newStream: DataFrame, idCol: String, path: String, index: graft.ops.EpochStore.EpochIndex)(
-      append: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val indexed = graft.ops.EpochStore.readTable(
-          spark, index.resolve(spark, path), index.idTable.get)
-        val fresh = batch.dropDuplicates(idCol)
-          .join(indexed.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-        if (!fresh.isEmpty) append(fresh)
+      newStream: DataFrame, idCol: String, path: String, index: EpochStore.EpochIndex)(
+      append: DataFrame => Unit): DataStreamWriter[Row] =
+    foldBatches(newStream) { (batch, _) =>
+      val spark = batch.sparkSession
+      val indexed = EpochStore.readTable(spark, index.resolve(spark, path), index.idTable.get)
+      val fresh = batch.dropDuplicates(idCol)
+        .join(indexed.select(col("id").as(idCol)), Seq(idCol), "left_anti")
+      if (!fresh.isEmpty) append(fresh)
     }
+
+  /** Micro-batch shape (a): `fold` each NON-EMPTY micro-batch, with its
+    * batch id. `foreachBatch` runs batches sequentially, so a fold that
+    * holds an index's single-writer lease never races the next batch.
+    */
+  private def foldBatches(stream: DataFrame)(
+      fold: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      if (!batch.isEmpty) fold(batch.toDF(), batchId)
+    }
+
+  /** Micro-batch shape (b): stage each non-empty micro-batch verbatim to
+    * the `stagingPath` parquet corpus, and every `every` batches (ids 0,
+    * every, 2·every, …) run `snapshot` over everything staged so far — a
+    * no-op until something has staged.
+    */
+  private def snapshotBatches(stream: DataFrame, stagingPath: String, every: Int)(
+      snapshot: DataFrame => Unit): DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      if (!batch.isEmpty) batch.write.mode("append").parquet(stagingPath)
+      if (batchId % every == 0) staged(batch.sparkSession, stagingPath).foreach(snapshot)
+    }
+
+  /** The rows staged at `path`, if anything has staged yet. */
+  private def staged(spark: SparkSession, path: String): Option[DataFrame] =
+    if (EpochStore.hadoopFs(spark, path).exists(new org.apache.hadoop.fs.Path(path)))
+      Some(spark.read.parquet(path))
+    else None
+
+  /** Micro-batch shape (c): `load` the screen's value on the first batch
+    * and again every `every` batches (ids 0, every, …), then hand `write`
+    * each batch screened with the current value. `load` sees the value it
+    * replaces, so an index loader can keep it when the epoch has not
+    * moved. Batches run sequentially, so the cache needs no
+    * synchronization.
+    */
+  private def refreshingScreen[T](
+      stream: DataFrame, every: Int, load: (SparkSession, Option[T]) => T)(
+      screen: (DataFrame, T) => DataFrame, write: DataFrame => Unit): DataStreamWriter[Row] = {
+    require(every >= 1, s"refreshEvery must be >= 1, got $every")
+    var cached: Option[T] = None
+    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      if (cached.isEmpty || batchId % every == 0) cached = Some(load(batch.sparkSession, cached))
+      write(screen(batch.toDF(), cached.get))
+    }
+  }
+
+  /** `prev` if it was built for epoch `ep`, else `ep`'s freshly built value
+    * — an index loader rebuilds only when the live epoch moved (pointer
+    * reads are O(1); a rebuild scans index data).
+    */
+  private def perEpoch[T](ep: EpochStore.Epoch, prev: Option[(String, T)])(
+      build: => T): (String, T) =
+    prev.filter(_._1 == ep.dir).getOrElse(ep.dir -> build)
 
   /** [[appendToIndex]]'s ANN twin: grow the standing
     * [[graft.ops.Similarity.writeAnnIndex]] index from a live vector
@@ -312,9 +290,9 @@ object StreamingOps {
       vecCol: String,
       idCol: String,
       path: String,
-      retainEpochs: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    appendUnindexed(newStream, idCol, path, graft.ops.Similarity.AnnIndex)(
-      graft.ops.Similarity.appendAnnIndex(_, vecCol, idCol, path, retainEpochs))
+      retainEpochs: Int = 2): DataStreamWriter[Row] =
+    appendUnindexed(newStream, idCol, path, Similarity.AnnIndex)(
+      Similarity.appendAnnIndex(_, vecCol, idCol, path, retainEpochs))
 
   /** Exact incremental SemDeDup per micro-batch against the standing ANN
     * index — the ANN lifecycle's LIVE form, closing the one gap the
@@ -360,8 +338,8 @@ object StreamingOps {
       nprobe: Int = 4,
       withinBatch: Boolean = true,
       scoreCol: Option[String] = None)(
-      write: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    semanticForeachBatch(newStream, vecCol, idCol, path, minCosine, nprobe,
+      write: DataFrame => Unit): DataStreamWriter[Row] =
+    semanticDedupBatches(newStream, vecCol, idCol, path, minCosine, nprobe,
       withinBatch, scoreCol, grow = false, retainEpochs = 2)(write)
 
   /** [[dedupSemanticAgainstIndexStream]] PLUS the index fold — the whole
@@ -387,16 +365,16 @@ object StreamingOps {
       withinBatch: Boolean = true,
       scoreCol: Option[String] = None,
       retainEpochs: Int = 2)(
-      write: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    semanticForeachBatch(newStream, vecCol, idCol, path, minCosine, nprobe,
+      write: DataFrame => Unit): DataStreamWriter[Row] =
+    semanticDedupBatches(newStream, vecCol, idCol, path, minCosine, nprobe,
       withinBatch, scoreCol, grow = true, retainEpochs)(write)
 
-  /** Shared foreachBatch core of the two streaming SemDeDup forms. The
+  /** Shared per-batch core of the two streaming SemDeDup forms. The
     * audited frame is materialized once per batch — `write` and the
     * survivor append both consume it, and the probe + closure lineage is
     * far too expensive to run twice.
     */
-  private def semanticForeachBatch(
+  private def semanticDedupBatches(
       newStream: DataFrame,
       vecCol: String,
       idCol: String,
@@ -407,31 +385,27 @@ object StreamingOps {
       scoreCol: Option[String],
       grow: Boolean,
       retainEpochs: Int)(
-      write: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      write: DataFrame => Unit): DataStreamWriter[Row] = {
     val clash = newStream.columns.toSet & Set("rep", "kept")
     require(clash.isEmpty,
       s"the audit adds ${clash.mkString(", ")} — rename the existing column first")
-    newStream.writeStream.foreachBatch {
-      (rawBatch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import graft.ops.{Materialize, Similarity}
-        if (!rawBatch.isEmpty) {
-          val batch = rawBatch.toDF().dropDuplicates(idCol)
-          val audit = scoreCol match {
-            case Some(s) => Similarity.semanticDedupKeepBestAgainstIndex(
-              batch, vecCol, idCol, s, path, minCosine, nprobe, withinBatch)
-            case None => Similarity.semanticDedupAgainstIndex(
-              batch, vecCol, idCol, path, minCosine, nprobe, withinBatch)
-          }
-          val audited = Materialize.eager(
-            if (idCol == "id") batch.join(audit, Seq("id"))
-            else batch.join(audit, batch(idCol) === audit("id")).drop(audit("id")))
-          write(audited)
-          if (grow) {
-            val survivors = audited.where(col("kept")).drop("rep", "kept")
-            if (!survivors.isEmpty)
-              Similarity.appendAnnIndex(survivors, vecCol, idCol, path, retainEpochs)
-          }
-        }
+    foldBatches(newStream) { (rawBatch, _) =>
+      val batch = rawBatch.dropDuplicates(idCol)
+      val audit = scoreCol match {
+        case Some(s) => Similarity.semanticDedupKeepBestAgainstIndex(
+          batch, vecCol, idCol, s, path, minCosine, nprobe, withinBatch)
+        case None => Similarity.semanticDedupAgainstIndex(
+          batch, vecCol, idCol, path, minCosine, nprobe, withinBatch)
+      }
+      val audited = Materialize.eager(
+        if (idCol == "id") batch.join(audit, Seq("id"))
+        else batch.join(audit, batch(idCol) === audit("id")).drop(audit("id")))
+      write(audited)
+      if (grow) {
+        val survivors = audited.where(col("kept")).drop("rep", "kept")
+        if (!survivors.isEmpty)
+          Similarity.appendAnnIndex(survivors, vecCol, idCol, path, retainEpochs)
+      }
     }
   }
 
@@ -448,20 +422,30 @@ object StreamingOps {
       idCol: String,
       textCol: String,
       path: String,
-      retainEpochs: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    appendUnindexed(newStream, idCol, path, graft.ops.Decontam.FingerprintIndex)(
-      graft.ops.Decontam.appendFingerprintIndex(_, idCol, textCol, path, retainEpochs))
+      retainEpochs: Int = 2): DataStreamWriter[Row] =
+    appendUnindexed(newStream, idCol, path, Decontam.FingerprintIndex)(
+      Decontam.appendFingerprintIndex(_, idCol, textCol, path, retainEpochs))
 
-  /** Winnowed-fingerprint hit count + suspect flag against a fixed bloom —
-    * the shared core of [[screenFingerprintsStream]] and
-    * [[screenFingerprintsRefreshing]]. Pure per-row codegen (winnowing
+  /** Loader of the fingerprint screen: the live epoch's winnowing (n, w)
+    * and a bloom over its postings keys, rebuilt only when the epoch moved.
+    */
+  private def fingerprintBloom(spark: SparkSession, path: String, fpp: Double,
+      prev: Option[(String, (Int, Int, Array[Byte]))]): (String, (Int, Int, Array[Byte])) = {
+    val ep = Decontam.resolveFingerprintIndex(spark, path)
+    perEpoch(ep, prev)((ep.header.int("n"), ep.header.int("w"), Decontam.gramKeyBloom(
+      EpochStore.readTable(spark, ep, "postings").select(col("__g")).distinct())(fpp)))
+  }
+
+  /** Winnowed-fingerprint hit count + suspect flag against a loaded
+    * [[fingerprintBloom]] — the per-row screen of [[screenFingerprintsStream]]
+    * and [[screenFingerprintsRefreshing]]. Pure per-row codegen (winnowing
     * fused into the scan, one bloom probe per selected fingerprint);
     * null text carries no fingerprints and is never suspect.
     */
-  private def fpScreenColumns(
-      df: DataFrame, textCol: String, n: Int, w: Int,
-      minShared: Long, bytes: Array[Byte]): DataFrame = {
-    import graft.ops.Decontam
+  private def fingerprintScreen(
+      df: DataFrame, textCol: String, minShared: Long,
+      bloom: (String, (Int, Int, Array[Byte]))): DataFrame = {
+    val (_, (n, w, bytes)) = bloom
     val hits = when(col(textCol).isNull, lit(0L)).otherwise(
       size(filter(Decontam.winnowedGramKeys(col(textCol), n, w),
         k => Decontam.bloomMightContainKey(bytes, k))).cast("long"))
@@ -500,14 +484,9 @@ object StreamingOps {
       path: String,
       minShared: Long = 2L,
       fpp: Double = 1e-6): DataFrame = {
-    import graft.ops.{Decontam, EpochStore}
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    val spark = newStream.sparkSession
-    val ep = Decontam.resolveFingerprintIndex(spark, path)
-    val bytes = Decontam.gramKeyBloom(
-      EpochStore.readTable(spark, ep, "postings").select(col("__g")).distinct())(fpp)
-    fpScreenColumns(newStream, textCol,
-      ep.header.int("n"), ep.header.int("w"), minShared, bytes)
+    fingerprintScreen(newStream, textCol, minShared,
+      fingerprintBloom(newStream.sparkSession, path, fpp, None))
   }
 
   /** [[screenFingerprintsStream]] with LIVE index-growth visibility — the
@@ -529,25 +508,10 @@ object StreamingOps {
       minShared: Long = 2L,
       fpp: Double = 1e-6,
       refreshEvery: Int = 1)(
-      write: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      write: DataFrame => Unit): DataStreamWriter[Row] = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    require(refreshEvery >= 1, s"refreshEvery must be >= 1, got $refreshEvery")
-    var cached: Option[(String, Int, Int, Array[Byte])] = None
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.ops.{Decontam, EpochStore}
-        val spark = batch.sparkSession
-        if (cached.isEmpty || batchId % refreshEvery == 0) {
-          val ep = Decontam.resolveFingerprintIndex(spark, path)
-          if (!cached.exists(_._1 == ep.dir))
-            cached = Some((ep.dir, ep.header.int("n"), ep.header.int("w"),
-              Decontam.gramKeyBloom(
-                EpochStore.readTable(spark, ep, "postings")
-                  .select(col("__g")).distinct())(fpp)))
-        }
-        val (_, n, w, bytes) = cached.get
-        write(fpScreenColumns(batch.toDF(), textCol, n, w, minShared, bytes))
-    }
+    refreshingScreen(newStream, refreshEvery, fingerprintBloom(_, path, fpp, _))(
+      fingerprintScreen(_, textCol, minShared, _), write)
   }
 
   /** [[appendToIndex]]'s PARAGRAPH twin: grow the standing
@@ -562,12 +526,9 @@ object StreamingOps {
       newStream: DataFrame,
       textCol: String,
       path: String,
-      retainEpochs: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.ops.Dedup.appendParagraphIndex(batch.toDF(), textCol, path, retainEpochs)
-    }
+      retainEpochs: Int = 2): DataStreamWriter[Row] =
+    foldBatches(newStream)((batch, _) =>
+      Dedup.appendParagraphIndex(batch, textCol, path, retainEpochs))
 
   /** Fold each micro-batch of arrivals into the standing TOKEN-FREQUENCY
     * index ([[graft.ops.TextOps.writeTokenFrequencyIndex]]) — the sixth
@@ -586,13 +547,9 @@ object StreamingOps {
       idCol: String,
       textCol: String,
       path: String,
-      retainEpochs: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.ops.TextOps.appendTokenFrequencyIndex(
-            batch.toDF(), idCol, textCol, path, retainEpochs)
-    }
+      retainEpochs: Int = 2): DataStreamWriter[Row] =
+    foldBatches(newStream)((batch, _) =>
+      TextOps.appendTokenFrequencyIndex(batch, idCol, textCol, path, retainEpochs))
 
   /** Stateless per-row quality scoring of a stream under a trained
     * classifier: adds `outCol` = `prior + Σ weight` (OOV tokens scoring
@@ -612,7 +569,7 @@ object StreamingOps {
       prior: Long,
       outCol: String = "quality_score"): DataFrame =
     newStream.withColumn(outCol,
-      graft.ops.LangModel.scoreColumn(col(textCol), weights, oovWeight, prior))
+      LangModel.scoreColumn(col(textCol), weights, oovWeight, prior))
 
   /** Stateless per-row CLASSIFICATION of a stream — language-ID / domain
     * routing in flight: adds `outCol` = `struct(score, cls)`, the
@@ -626,7 +583,7 @@ object StreamingOps {
       classes: Seq[(String, Map[String, Long], Long, Long)],
       outCol: String = "pred"): DataFrame =
     newStream.withColumn(outCol,
-      graft.ops.LangModel.predictColumn(col(textCol), classes))
+      LangModel.predictColumn(col(textCol), classes))
 
   /** Fold each micro-batch onto a standing [[graft.ops.Sink
     * .writeSizedShards]] corpus as a size-balanced LOG append: every
@@ -639,7 +596,8 @@ object StreamingOps {
     * when at-least-once delivery is possible).
     *
     * `compactEvery` (0 = never, the default) runs [[graft.ops.Sink
-    * .compactSizedShards]] after every Nth batch: a per-batch append
+    * .compactSizedShards]] after every Nth batch's append (an empty
+    * batch appends nothing and skips its turn): a per-batch append
     * adds one file per touched shard, so a long-running stream is
     * exactly the small-file producer compaction exists for, and folding
     * the pass into the same foreachBatch keeps it under the stream's
@@ -656,20 +614,12 @@ object StreamingOps {
       weightCol: String,
       targetWeight: Long,
       compactEvery: Int = 0,
-      maxFilesPerShard: Int = 1): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      maxFilesPerShard: Int = 1): DataStreamWriter[Row] = {
     require(compactEvery >= 0, s"compactEvery must be >= 0, got $compactEvery")
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.ops.Sink.appendSizedShards(
-            batch.toDF(), path, idCol, weightCol, targetWeight)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1 &&
-            graft.ops.EpochStore.hadoopFs(batch.sparkSession, path)
-              .exists(new org.apache.hadoop.fs.Path(path))) {
-          graft.ops.Sink.compactSizedShards(
-            batch.sparkSession, path, idCol, maxFilesPerShard)
-          ()
-        }
+    foldBatches(newStream) { (batch, batchId) =>
+      Sink.appendSizedShards(batch, path, idCol, weightCol, targetWeight)
+      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+        Sink.compactSizedShards(batch.sparkSession, path, idCol, maxFilesPerShard)
     }
   }
 
@@ -684,8 +634,7 @@ object StreamingOps {
       newStream: DataFrame,
       textCol: String,
       phrases: Seq[String]): DataFrame =
-    newStream.where(
-      !graft.ops.TextOps.blockedByPhrase(col(textCol), phrases))
+    TextOps.filterBlocklisted(newStream, textCol, phrases)
 
   /** In-flight repetition screen: keep arrivals passing the four
     * row-local line/paragraph repetition rules
@@ -697,7 +646,7 @@ object StreamingOps {
   def screenRepetitionStream(
       newStream: DataFrame,
       textCol: String): DataFrame =
-    newStream.where(graft.ops.TextOps.repetitionQuickPass(col(textCol)))
+    newStream.where(TextOps.repetitionQuickPass(col(textCol)))
 
   /** In-flight prototype routing + scoring: each arriving embedding
     * assigns to its cell under the FROZEN integer quantizer
@@ -721,9 +670,9 @@ object StreamingOps {
         "existing ones first (the integerCellAssign contract)")
     newStream
       .withColumn("cell",
-        graft.ops.Similarity.integerCellColumn(col(vecCol), seeds))
+        Similarity.integerCellColumn(col(vecCol), seeds))
       .withColumn("proto",
-        graft.ops.Similarity.prototypeScoreColumn(
+        Similarity.prototypeScoreColumn(
           col(vecCol), col("cell"), sums))
   }
 
@@ -768,29 +717,17 @@ object StreamingOps {
       budget: Long,
       stagingPath: String,
       mixPath: String,
-      remixEvery: Int = 1): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      remixEvery: Int = 1): DataStreamWriter[Row] = {
     require(remixEvery >= 1, s"remixEvery must be >= 1, got $remixEvery")
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val survivors = graft.ops.TextOps.filterBlocklisted(
-          batch.toDF(), textCol, phrases)
-        if (!survivors.isEmpty)
-          survivors.write.mode("append").parquet(stagingPath)
-        if (batchId % remixEvery == 0) {
-          val spark = batch.sparkSession
-          val fs = graft.ops.EpochStore.hadoopFs(spark, stagingPath)
-          if (fs.exists(new org.apache.hadoop.fs.Path(stagingPath)))
-            graft.ops.Sampling.takeWaterfillMix(
-              spark.read.parquet(stagingPath), sourceCol, idCol,
-              weights, budget)
-              .write.mode("overwrite").parquet(mixPath)
-        }
-    }
+    snapshotBatches(TextOps.filterBlocklisted(newStream, textCol, phrases),
+      stagingPath, remixEvery)(
+      Sampling.takeWaterfillMix(_, sourceCol, idCol, weights, budget)
+        .write.mode("overwrite").parquet(mixPath))
   }
 
-  /** The FULL [[graft.ops.Pipeline.curate]] chain as a stream — the
-    * round-15 flagship sibling. Per micro-batch, ON ARRIVAL: stage A
-    * (domain verdict, URL canonicalization, HTML extraction, the
+  /** The FULL [[graft.ops.Pipeline.curate]] chain as a stream. Per
+    * micro-batch, ON ARRIVAL: stage A (domain verdict, URL
+    * canonicalization, HTML extraction, the
     * Gopher/repetition/C4/blocklist screen chain, token count) runs as
     * the same one regex pass the batch ledger pays — each page's HTML is
     * read exactly once, ever — and the NARROW ledger rows append to
@@ -840,21 +777,15 @@ object StreamingOps {
       htmlCol: String,
       evalSet: DataFrame,
       evalTextCol: String,
-      cfg: graft.ops.Pipeline.CurationConfig,
+      cfg: Pipeline.CurationConfig,
       stagingPath: String,
       reportPath: String,
-      snapshotEvery: Int = 1): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      snapshotEvery: Int = 1): DataStreamWriter[Row] = {
     require(snapshotEvery >= 1, s"snapshotEvery must be >= 1, got $snapshotEvery")
-    val ledger = graft.ops.Pipeline.ledgerProjection(
-      newStream, idCol, urlCol, sourceCol, htmlCol, cfg)
-    ledger.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF().write.mode("append").parquet(stagingPath)
-        if (batchId % snapshotEvery == 0)
-          curateSnapshot(batch.sparkSession, stagingPath, evalSet,
-            evalTextCol, cfg, idCol, sourceCol, reportPath)
-    }
+    snapshotBatches(
+      Pipeline.ledgerProjection(newStream, idCol, urlCol, sourceCol, htmlCol, cfg),
+      stagingPath, snapshotEvery)(
+      curateReport(_, evalSet, evalTextCol, cfg, idCol, sourceCol, reportPath))
   }
 
   /** Re-run [[curateStream]]'s global-stage snapshot once, from the
@@ -867,18 +798,20 @@ object StreamingOps {
       stagingPath: String,
       evalSet: DataFrame,
       evalTextCol: String,
-      cfg: graft.ops.Pipeline.CurationConfig,
+      cfg: Pipeline.CurationConfig,
       idCol: String,
       sourceCol: String,
-      reportPath: String): Unit = {
-    val fs = graft.ops.EpochStore.hadoopFs(spark, stagingPath)
-    if (fs.exists(new org.apache.hadoop.fs.Path(stagingPath)))
-      graft.ops.Pipeline.curateFromLedger(
-        spark.read.parquet(stagingPath),
-        evalSet, evalTextCol, cfg, idCol, sourceCol)
-        .diagnosis
-        .write.mode("overwrite").parquet(reportPath)
-  }
+      reportPath: String): Unit =
+    staged(spark, stagingPath).foreach(
+      curateReport(_, evalSet, evalTextCol, cfg, idCol, sourceCol, reportPath))
+
+  /** The global stages over a standing `ledger`, overwriting `reportPath`. */
+  private def curateReport(
+      ledger: DataFrame, evalSet: DataFrame, evalTextCol: String,
+      cfg: Pipeline.CurationConfig, idCol: String, sourceCol: String,
+      reportPath: String): Unit =
+    Pipeline.curateFromLedger(ledger, evalSet, evalTextCol, cfg, idCol, sourceCol)
+      .diagnosis.write.mode("overwrite").parquet(reportPath)
 
   /** Periodic DoReMi weight snapshots over a STREAMING loss log (the
     * q184 batch op's duality): arriving per-row proxy/reference losses
@@ -903,26 +836,15 @@ object StreamingOps {
       reportPath: String,
       snapshotEvery: Int = 1,
       etaMicro: Long = 1000000L,
-      smoothMicro: Long = 1000L): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      smoothMicro: Long = 1000L): DataStreamWriter[Row] = {
     require(snapshotEvery >= 1, s"snapshotEvery must be >= 1, got $snapshotEvery")
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF().write.mode("append").parquet(stagingPath)
-        if (batchId % snapshotEvery == 0) {
-          val spark = batch.sparkSession
-          val fs = graft.ops.EpochStore.hadoopFs(spark, stagingPath)
-          if (fs.exists(new org.apache.hadoop.fs.Path(stagingPath))) {
-            val standing = spark.read.parquet(stagingPath)
-            if (!standing.where(col(domainCol).isNotNull).isEmpty) {
-              val w = graft.ops.Sampling.doremiWeights(standing,
-                stepCol, domainCol, proxyCol, refCol, etaMicro, smoothMicro)
-              import spark.implicits._
-              w.toDF(domainCol, "weight")
-                .write.mode("overwrite").parquet(reportPath)
-            }
-          }
-        }
+    snapshotBatches(newStream, stagingPath, snapshotEvery) { standing =>
+      if (!standing.where(col(domainCol).isNotNull).isEmpty) {
+        val w = Sampling.doremiWeights(standing,
+          stepCol, domainCol, proxyCol, refCol, etaMicro, smoothMicro)
+        import standing.sparkSession.implicits._
+        w.toDF(domainCol, "weight").write.mode("overwrite").parquet(reportPath)
+      }
     }
   }
 
@@ -955,22 +877,11 @@ object StreamingOps {
       stagingPath: String,
       reportPath: String,
       snapshotEvery: Int = 1,
-      minSentences: Int = 3): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      minSentences: Int = 3): DataStreamWriter[Row] = {
     require(snapshotEvery >= 1, s"snapshotEvery must be >= 1, got $snapshotEvery")
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF().write.mode("append").parquet(stagingPath)
-        if (batchId % snapshotEvery == 0) {
-          val spark = batch.sparkSession
-          val fs = graft.ops.EpochStore.hadoopFs(spark, stagingPath)
-          if (fs.exists(new org.apache.hadoop.fs.Path(stagingPath)))
-            graft.ops.TextOps.curationFunnelFull(
-              spark.read.parquet(stagingPath), stratumCol, textCol,
-              phrases, minSentences)
-              .write.mode("overwrite").parquet(reportPath)
-        }
-    }
+    snapshotBatches(newStream, stagingPath, snapshotEvery)(
+      TextOps.curationFunnelFull(_, stratumCol, textCol, phrases, minSentences)
+        .write.mode("overwrite").parquet(reportPath))
   }
 
   /** Periodic CORPUS-MAP snapshots (q180's cluster cards) over a stream
@@ -993,33 +904,18 @@ object StreamingOps {
       stagingPath: String,
       reportPath: String,
       snapshotEvery: Int = 1,
-      k: Int = 5): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      k: Int = 5): DataStreamWriter[Row] = {
     require(snapshotEvery >= 1, s"snapshotEvery must be >= 1, got $snapshotEvery")
     val routed = newStream
-      .withColumn("cell",
-        graft.ops.Similarity.integerCellColumn(col(vecCol), seeds))
+      .withColumn("cell", Similarity.integerCellColumn(col(vecCol), seeds))
       .select(col("cell"), col(textCol).as("__text"))
-    routed.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF().write.mode("append").parquet(stagingPath)
-        if (batchId % snapshotEvery == 0) {
-          val spark = batch.sparkSession
-          val fs = graft.ops.EpochStore.hadoopFs(spark, stagingPath)
-          if (fs.exists(new org.apache.hadoop.fs.Path(stagingPath))) {
-            val standing = spark.read.parquet(stagingPath)
-            val terms = graft.ops.TextOps.topTermsPerDoc(
-              standing, "cell", "__text", k)
-              .select(col("doc_id").as("cell"), col("rank"), col("token"),
-                col("score"))
-            val sizes = standing.groupBy(col("cell"))
-              .agg(count(lit(1)).as("n_docs"))
-            terms.join(sizes, Seq("cell"))
-              .select(col("cell"), col("n_docs"), col("rank"), col("token"),
-                col("score"))
-              .write.mode("overwrite").parquet(reportPath)
-          }
-        }
+    snapshotBatches(routed, stagingPath, snapshotEvery) { standing =>
+      val terms = TextOps.topTermsPerDoc(standing, "cell", "__text", k)
+        .select(col("doc_id").as("cell"), col("rank"), col("token"), col("score"))
+      val sizes = standing.groupBy(col("cell")).agg(count(lit(1)).as("n_docs"))
+      terms.join(sizes, Seq("cell"))
+        .select(col("cell"), col("n_docs"), col("rank"), col("token"), col("score"))
+        .write.mode("overwrite").parquet(reportPath)
     }
   }
 
@@ -1037,13 +933,9 @@ object StreamingOps {
       textCol: String,
       labelCol: String,
       path: String,
-      retainEpochs: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.ops.LangModel.appendClassifierIndex(
-            batch.toDF(), idCol, textCol, labelCol, path, retainEpochs)
-    }
+      retainEpochs: Int = 2): DataStreamWriter[Row] =
+    foldBatches(newStream)((batch, _) =>
+      LangModel.appendClassifierIndex(batch, idCol, textCol, labelCol, path, retainEpochs))
 
   /** Per-ROW stateless stream filter against the standing paragraph index
     * ([[graft.ops.Dedup.writeParagraphIndex]]): rebuild each streamed
@@ -1063,15 +955,28 @@ object StreamingOps {
       newStream: DataFrame,
       textCol: String,
       path: String,
-      fpp: Double = 1e-6): DataFrame = {
-    import graft.ops.{Decontam, Dedup}
-    val spark = newStream.sparkSession
-    val bytes = Decontam.gramKeyBloom(
-      Dedup.paragraphIndexHashes(spark, Dedup.resolveParagraphIndex(spark, path))
-        .withColumnRenamed("h", "__g"))(fpp)
+      fpp: Double = 1e-6): DataFrame =
+    paragraphScreen(newStream, textCol,
+      paragraphBloom(newStream.sparkSession, path, fpp, None))
+
+  /** Loader of the paragraph screen: a bloom over the live epoch's
+    * paragraph hashes, rebuilt only when the epoch moved.
+    */
+  private def paragraphBloom(spark: SparkSession, path: String, fpp: Double,
+      prev: Option[(String, Array[Byte])]): (String, Array[Byte]) = {
+    val ep = Dedup.resolveParagraphIndex(spark, path)
+    perEpoch(ep, prev)(Decontam.gramKeyBloom(
+      Dedup.paragraphIndexHashes(spark, ep).withColumnRenamed("h", "__g"))(fpp))
+  }
+
+  /** `cleaned` = the text minus every paragraph the loaded
+    * [[paragraphBloom]] might hold; null text stays null.
+    */
+  private def paragraphScreen(
+      df: DataFrame, textCol: String, bloom: (String, Array[Byte])): DataFrame = {
     val kept = filter(split(col(textCol), Dedup.ParaSep),
-      p => !Decontam.bloomMightContainKey(bytes, md5(p.cast("binary"))))
-    newStream.withColumn("cleaned",
+      p => !Decontam.bloomMightContainKey(bloom._2, md5(p.cast("binary"))))
+    df.withColumn("cleaned",
       when(col(textCol).isNull, lit(null).cast("string"))
         .otherwise(concat_ws("\n\n", kept)))
   }
@@ -1095,28 +1000,9 @@ object StreamingOps {
       path: String,
       fpp: Double = 1e-6,
       refreshEvery: Int = 1)(
-      write: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(refreshEvery >= 1, s"refreshEvery must be >= 1, got $refreshEvery")
-    var cached: Option[(String, Array[Byte])] = None
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.ops.{Decontam, Dedup}
-        val spark = batch.sparkSession
-        if (cached.isEmpty || batchId % refreshEvery == 0) {
-          val ep = Dedup.resolveParagraphIndex(spark, path)
-          if (!cached.exists(_._1 == ep.dir))
-            cached = Some((ep.dir, Decontam.gramKeyBloom(
-              Dedup.paragraphIndexHashes(spark, ep)
-                .withColumnRenamed("h", "__g"))(fpp)))
-        }
-        val bytes = cached.get._2
-        val kept = filter(split(col(textCol), Dedup.ParaSep),
-          p => !Decontam.bloomMightContainKey(bytes, md5(p.cast("binary"))))
-        write(batch.toDF().withColumn("cleaned",
-          when(col(textCol).isNull, lit(null).cast("string"))
-            .otherwise(concat_ws("\n\n", kept))))
-    }
-  }
+      write: DataFrame => Unit): DataStreamWriter[Row] =
+    refreshingScreen(newStream, refreshEvery, paragraphBloom(_, path, fpp, _))(
+      paragraphScreen(_, textCol, _), write)
 
   /** [[decontaminateStream]] with a refreshing eval set — an eval suite
     * that GROWS while the stream runs (new benchmarks added to the
@@ -1135,22 +1021,10 @@ object StreamingOps {
       n: Int = 8,
       fpp: Double = 1e-6,
       refreshEvery: Int = 1)(
-      write: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(refreshEvery >= 1, s"refreshEvery must be >= 1, got $refreshEvery")
-    var cached: Option[Array[Byte]] = None
-    newStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.ops.Decontam
-        if (cached.isEmpty || batchId % refreshEvery == 0)
-          cached = Some(Decontam.gramKeyBloom(
-            Decontam.evalGramKeys(evalSet(), textCol, n))(fpp))
-        val bytes = cached.get
-        val contaminated = exists(
-          Decontam.wordNgrams(col(textCol), n),
-          g => Decontam.bloomMightContainKey(bytes, Decontam.gramKey(g)))
-        write(batch.toDF().where(coalesce(!contaminated, lit(true))))
-    }
-  }
+      write: DataFrame => Unit): DataStreamWriter[Row] =
+    refreshingScreen[Array[Byte]](newStream, refreshEvery,
+      (_, _) => evalBloom(evalSet(), textCol, n, fpp))(
+      decontamScreen(_, textCol, n, _), write)
 
   /** Stream the corpus into a [[graft.ops.Sink.writeShards]]-layout
     * parquet directory: same engine-portable md5 shard key, same
@@ -1170,11 +1044,10 @@ object StreamingOps {
       newStream: DataFrame,
       idCol: String,
       nShards: Int,
-      filesPerShard: Int = 1): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      filesPerShard: Int = 1): DataStreamWriter[Row] = {
     require(!newStream.columns.contains("shard"),
       "input already has a 'shard' column — rename it first (the sink " +
         "derives its own shard key from the id)")
-    import graft.ops.Sink
     newStream
       .withColumn("shard", Sink.shardColumn(col(idCol), nShards))
       .repartition(nShards * filesPerShard, col("shard"),
@@ -1207,15 +1080,33 @@ object StreamingOps {
       idCol: String,
       textCol: String,
       n: Int = 8,
-      fpp: Double = 1e-6): DataFrame = {
-    import graft.ops.Decontam
-    val bytes = Decontam.gramKeyBloom(Decontam.evalGramKeys(evalSet, textCol, n))(fpp)
-    val contaminated = exists(
-      Decontam.wordNgrams(col(textCol), n),
-      g => Decontam.bloomMightContainKey(bytes, Decontam.gramKey(g)))
-    newStream.where(coalesce(!contaminated, lit(true)))
-  }
+      fpp: Double = 1e-6): DataFrame =
+    decontamScreen(newStream, textCol, n, evalBloom(evalSet, textCol, n, fpp))
 
+  /** Loader of the decontamination screen: a bloom over the eval grams. */
+  private def evalBloom(evalSet: DataFrame, textCol: String, n: Int, fpp: Double): Array[Byte] =
+    Decontam.gramKeyBloom(Decontam.evalGramKeys(evalSet, textCol, n))(fpp)
+
+  /** Rows sharing no word `n`-gram with the loaded [[evalBloom]]; null
+    * text carries no grams and passes.
+    */
+  private def decontamScreen(
+      df: DataFrame, textCol: String, n: Int, bytes: Array[Byte]): DataFrame =
+    df.where(coalesce(!exists(Decontam.wordNgrams(col(textCol), n),
+      g => Decontam.bloomMightContainKey(bytes, Decontam.gramKey(g))), lit(true)))
+
+  /** Stream-stream inner join bounded in event time: left rows match right
+    * rows with the same `key` whose `rightTs` lies in
+    * `[leftTs - maxLagMs, leftTs]` (e.g. a click joined to the purchases it
+    * preceded within the lag window). Both sides are watermarked and the
+    * time-range condition bounds the join state — Spark drops buffered rows
+    * once the watermark passes `ts + maxLagMs`, so state is O(rate × lag),
+    * never O(stream). Works identically on batch frames (the same plan
+    * minus state).
+    *
+    * Column names apart from `key` must be disjoint between the sides (the
+    * join preserves both frames' columns).
+    */
   def joinWithinTime(
       left: DataFrame,
       right: DataFrame,

@@ -182,6 +182,35 @@ class ValidatorSpec extends SparkSpec {
       Validator.fullReportDF(df, Schema("F3", Seq(FieldSpec.long("z", nullable = true)))))
   }
 
+  test("fullReportDF runs the aggregate-constraint pre-pass once") {
+    val m = Schema("Pizza", Seq(
+      FieldSpec.double("fraction").copy(constraints = Seq(sum(col("_")) === 1.0))))
+    val df = frame(struct("fraction" -> DoubleType), Row(0.25), Row(0.25))
+    // building the report runs only the scalar aggregate that inlines
+    // sum(_) — under AQE that one query is its shuffle-map job plus its
+    // result job, so the pin compares with one pre-pass, not a literal
+    val (_, prePass) = graft.JobCount.of(spark)(Validator.checkAggs(df, m, streamSafe = false))
+    val (report, jobs) = graft.JobCount.of(spark)(Validator.fullReportDF(df, m))
+    assert(prePass >= 1 && jobs == prePass,
+      s"fullReportDF construction launched $jobs jobs; one pre-pass is $prePass")
+    assert(report.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq ==
+      Seq(("fraction", "constraint", 2L), ("fraction", "nulls", 0L)))
+  }
+
+  test("V4: validRows, invalidRows, validate and reportDF share the inner-null check") {
+    val m = Schema("L", Seq(FieldSpec("xs", ArrayType(LongType, containsNull = false))))
+    val df = frame(struct("xs" -> ArrayType(LongType, containsNull = true)),
+      Row(Seq(1L, 2L)), Row(Seq(1L, null)))
+    def lists(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.getSeq[Any](0)).toSeq
+    val valid = graft.streaming.StreamingOps.validRows(df, m)
+    assert(lists(valid) == Seq(Seq(1L, 2L)))
+    assert(lists(graft.streaming.StreamingOps.invalidRows(df, m)) == Seq(Seq(1L, null)))
+    Validator.validate(valid, m) // a row validRows keeps must pass validation
+    val rows = Validator.reportDF(df, m).collect().map(r =>
+      (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    assert(rows == Seq(("xs", "inner_nulls", 1L), ("xs", "nulls", 0L)))
+  }
+
   test("uniqueReportDF compares native values, not string renderings") {
     // ["a, b"] and ["a", "b"] both render as "[a, b]" under a string cast —
     // a lossy rendering must not conflate distinct values (the reference's

@@ -5,14 +5,18 @@ comments and `/* */` block comments (which nest in Scala) are removed.
 Comment markers inside string and character literals are code, and a
 triple-quoted string counts on every line it spans.
 
-    python3 tools/loc.py [--rev REV] [PATH ...]
+    python3 tools/loc.py [--rev REV] [--defs] [PATH ...]
 
 PATHs are files or directories relative to the repo root (default
 `src/main`). With `--rev`, files are read from that git revision instead of
-the working tree.
+the working tree. With `--defs`, each top-level `def` (one not nested in
+another def) is listed with its own count instead: the lines from its
+`def` keyword up to the next member at its brace depth, or the brace that
+closes its enclosing body. A def nested inside counts in its parent.
 """
 import argparse
 import os
+import re
 import subprocess
 import sys
 
@@ -21,7 +25,13 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def count(text):
     """Number of lines of `text` holding code or string-literal characters."""
+    return len(scan(text)[0])
+
+
+def scan(text):
+    """(set of code line indices, [(line, +1 | -1)] for each code brace)."""
     code_lines = set()
+    braces = []
     line = 0
     depth = 0  # block comment nesting
     i, n = 0, len(text)
@@ -74,8 +84,50 @@ def count(text):
         elif c == "'" and i + 2 < n and text[i + 2] == "'":
             i += 3  # 'x'
         else:
+            if c in "{}":
+                braces.append((line, 1 if c == "{" else -1))
             i += 1
-    return len(code_lines)
+    return code_lines, braces
+
+
+MODIFIERS = r"(?:@\w+\s+|(?:private|protected)(?:\[[\w.]+\])?\s+|" \
+    r"(?:override|final|implicit|lazy|sealed|abstract|case)\s+)*"
+DEF = re.compile(r"^\s*" + MODIFIERS + r"def\s+([^\s(\[:=]+)")
+MEMBER = re.compile(r"^\s*" + MODIFIERS + r"(?:def|val|var|object|class|trait|type)\b")
+
+
+def defs(text):
+    """[(name, first line (1-based), count)] of each top-level def."""
+    code_lines, braces = scan(text)
+    lines = text.split("\n")
+    start = [0] * (len(lines) + 1)  # brace depth at the start of each line
+    low = [0] * (len(lines) + 1)  # lowest depth reached on the line
+    deltas = {}
+    for ln, d in braces:
+        deltas.setdefault(ln, []).append(d)
+    depth = 0
+    for ln in range(len(lines)):
+        start[ln] = low[ln] = depth
+        for d in deltas.get(ln, []):
+            depth += d
+            low[ln] = min(low[ln], depth)
+    out = []
+    cur = None  # [name, first line, depth, count]
+    for ln, src in enumerate(lines):
+        code = ln in code_lines
+        if cur and (low[ln] < cur[2] or (
+                code and start[ln] == cur[2] and MEMBER.match(src))):
+            out.append((cur[0], cur[1] + 1, cur[3]))
+            cur = None
+        if cur is None and code:
+            m = DEF.match(src)
+            if m:
+                cur = [m.group(1), ln, start[ln], 0]
+        if cur and code:
+            cur[3] += 1
+    if cur:
+        out.append((cur[0], cur[1] + 1, cur[3]))
+    return out
 
 
 def files(paths, rev):
@@ -111,8 +163,14 @@ def counts(paths=("src/main",), rev=None):
 def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--rev", help="git revision to read instead of the working tree")
+    ap.add_argument("--defs", action="store_true", help="count per top-level def")
     ap.add_argument("paths", nargs="*", default=["src/main"])
     args = ap.parse_args(argv)
+    if args.defs:
+        for p, text in files(args.paths, args.rev):
+            for name, line, c in defs(text):
+                print(f"{c:7d}  {p}:{line}  {name}")
+        return
     per_file = counts(args.paths, args.rev)
     for p, c in per_file.items():
         print(f"{c:7d}  {p}")

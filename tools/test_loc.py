@@ -41,6 +41,37 @@ class CountTest(unittest.TestCase):
         self.assertEqual(loc.count("\n// a\n/* b */\n\n"), 0)
 
 
+class DefsTest(unittest.TestCase):
+
+    def test_def_followed_by_scaladoc_def(self):
+        text = ("object A {\n"
+                "  def f(x: Int): Int =\n"
+                "    x + 1\n"
+                "\n"
+                "  /** Doc of g.\n"
+                "    * def notADef = 0\n"
+                "    */\n"
+                "  def g: Int = {\n"
+                "    val y = 2\n"
+                "    y\n"
+                "  }\n"
+                "}\n")
+        # f ends at g's scaladoc, which counts for neither; g ends at A's brace
+        self.assertEqual(loc.defs(text), [("f", 2, 2), ("g", 8, 4)])
+
+    def test_nested_def_counts_inside_its_parent(self):
+        text = ("object B {\n"
+                "  private[graft] def outer(): Int = {\n"
+                "    def inner(a: Int) =\n"
+                "      a * 2 // doubled\n"
+                "    inner(3)\n"
+                "  }\n"
+                "  val z = \"{\"\n"
+                "  override def toString = \"B\"\n"
+                "}\n")
+        self.assertEqual(loc.defs(text), [("outer", 2, 5), ("toString", 8, 1)])
+
+
 @unittest.skipUnless(has_rev(PARENT), "parent revision not in this checkout")
 class ParentTreeTest(unittest.TestCase):
 
