@@ -56,9 +56,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     non-`\s` runs joined by single spaces); the stopword normalization
   *     `regexp_replace(lower(w), "[^a-z]", "")` lowercases all-ASCII
   *     words with the ASCII table and everything else through
-  *     [[UTF8String.toLowerCase]] — the SAME code path Spark's `lower`
-  *     uses, so Unicode one-offs (Kelvin K → k, İ → i̇) normalize
-  *     identically — then keeps only `[a-z]`.
+  *     [[TextUtil.sparkLower]] — Spark's `lower` itself, under the
+  *     session's `spark.sql.icu.caseMappings.enabled` (ICU by default;
+  *     `UTF8String.toLowerCase` is only the JVM mapping), so Unicode
+  *     one-offs (Kelvin K → k, İ → i̇) normalize identically — then keeps
+  *     only `[a-z]`.
   *   - the anchor-variant block list can be SHORTER than the main list
   *     when an anchor body spans a block boundary (malformed HTML; the
   *     expression form's `element_at` would read past it). The kernel
@@ -331,16 +333,16 @@ object HtmlUtil {
 
   /** Is `regexp_replace(lower(word), "[^a-z]", "")` a stopword? The word
     * is s[from, to). All-ASCII words take the table path; any non-ASCII
-    * char routes the WHOLE word through [[UTF8String.toLowerCase]] — the
-    * exact code path of Spark's `lower` — before the [a-z] filter.
+    * char routes the WHOLE word through [[TextUtil.sparkLower]] (Spark's
+    * `lower` under `useICU`) before the [a-z] filter.
     */
-  private def isStopword(s: String, from: Int, to: Int): Boolean = {
+  private def isStopword(s: String, from: Int, to: Int, useICU: Boolean): Boolean = {
     val buf = new Array[Char](8)
     var n = 0
     var i = from
     while (i < to) {
       val c = s.charAt(i)
-      if (c >= 0x80) return isStopwordSlow(s.substring(from, to))
+      if (c >= 0x80) return isStopwordSlow(s.substring(from, to), useICU)
       val lc = lowerAscii(c)
       if (lc >= 'a' && lc <= 'z') {
         if (n == MaxStopwordLength) return false
@@ -352,8 +354,8 @@ object HtmlUtil {
     stopwordLookup(buf, n)
   }
 
-  private def isStopwordSlow(word: String): Boolean = {
-    val lowered = UTF8String.fromString(word).toLowerCase.toString
+  private def isStopwordSlow(word: String, useICU: Boolean): Boolean = {
+    val lowered = TextUtil.sparkLower(UTF8String.fromString(word), useICU).toString
     val buf = new Array[Char](8)
     var n = 0
     var i = 0
@@ -388,7 +390,7 @@ object HtmlUtil {
   /** One raw block's metrics in a single scan: (collapsed text, non-ws
     * code points, word count, stopword hits).
     */
-  private def blockScan(b: String): (String, Long, Long, Long) = {
+  private def blockScan(b: String, useICU: Boolean): (String, Long, Long, Long) = {
     val text = new java.lang.StringBuilder(b.length)
     var nChars = 0L
     var nWords = 0L
@@ -407,7 +409,7 @@ object HtmlUtil {
           i += 1
         }
         nWords += 1
-        if (isStopword(b, start, i)) stopHits += 1
+        if (isStopword(b, start, i, useICU)) stopHits += 1
         if (text.length > 0) text.append(' ')
         text.append(b, start, i)
       }
@@ -421,7 +423,7 @@ object HtmlUtil {
     * kept blocks (n_chars > 0) as parallel arrays via the visitor to keep
     * both kernels allocation-lean.
     */
-  private def scanBlocks(html: String)(
+  private def scanBlocks(html: String, useICU: Boolean)(
       visit: (Long, String, Long, Long, Long, Long,
               Boolean, Boolean, Boolean, Boolean) => Unit): Unit = {
     val pre = preStrip(html)
@@ -430,7 +432,7 @@ object HtmlUtil {
     var i = 0
     while (i < withAnchors.length) {
       val a = withAnchors(i)
-      val (text, nsA, nWords, stopHits) = blockScan(a)
+      val (text, nsA, nWords, stopHits) = blockScan(a, useICU)
       if (nsA > 0L) {
         // missing pair (anchor spanned a block boundary): anchor = 0,
         // matching greatest(nsA - null, 0) in the expression form
@@ -451,9 +453,9 @@ object HtmlUtil {
     * (block_id, text, n_chars, anchor_chars, n_words, stop_hits, len_ok,
     * link_ok, stop_ok, good) structs, non-empty blocks only.
     */
-  def blockMetrics(html: UTF8String): ArrayData = {
+  def blockMetrics(html: UTF8String, useICU: Boolean): ArrayData = {
     val rows = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
-    scanBlocks(html.toString) {
+    scanBlocks(html.toString, useICU) {
       (id, text, nChars, anchor, nWords, stopHits, lenOk, linkOk, stopOk, good) =>
         rows += new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](id, UTF8String.fromString(text), nChars, anchor,
@@ -465,9 +467,9 @@ object HtmlUtil {
   /** Kernel for [[graft.ops.TextOps.htmlExtractText]]: the good blocks'
     * collapsed text joined with newlines ("" when no block survives).
     */
-  def extractText(html: UTF8String): UTF8String = {
+  def extractText(html: UTF8String, useICU: Boolean): UTF8String = {
     val sb = new java.lang.StringBuilder()
-    scanBlocks(html.toString) {
+    scanBlocks(html.toString, useICU) {
       (_, text, _, _, _, _, _, _, _, good) =>
         if (good) {
           if (sb.length > 0) sb.append('\n')
@@ -490,11 +492,13 @@ case class HtmlExtractText(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def prettyName: String = "html_extract_text"
 
+  private lazy val useICU: Boolean = TextUtil.icuCaseMappings()
+
   override protected def nullSafeEval(input: Any): Any =
-    HtmlUtil.extractText(input.asInstanceOf[UTF8String])
+    HtmlUtil.extractText(input.asInstanceOf[UTF8String], useICU)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlUtil.extractText($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlUtil.extractText($c, $useICU)")
 
   override protected def withNewChildInternal(newChild: Expression): HtmlExtractText =
     copy(child = newChild)
@@ -523,11 +527,13 @@ case class HtmlBlockMetrics(child: Expression) extends UnaryExpression {
     containsNull = false)
   override def prettyName: String = "html_block_metrics"
 
+  private lazy val useICU: Boolean = TextUtil.icuCaseMappings()
+
   override protected def nullSafeEval(input: Any): Any =
-    HtmlUtil.blockMetrics(input.asInstanceOf[UTF8String])
+    HtmlUtil.blockMetrics(input.asInstanceOf[UTF8String], useICU)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlUtil.blockMetrics($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlUtil.blockMetrics($c, $useICU)")
 
   override protected def withNewChildInternal(newChild: Expression): HtmlBlockMetrics =
     copy(child = newChild)

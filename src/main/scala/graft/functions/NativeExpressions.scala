@@ -4,8 +4,10 @@ import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions (with codegen) for the per-row kernels that
@@ -48,6 +50,13 @@ object native {
   /** Character n-grams of a string column (empty array when shorter than n). */
   def charNgrams(text: Column, n: Int): Column =
     GraftBridge.column(CharNgrams(GraftBridge.expression(text), n))
+
+  /** Character n-grams of whitespace-normalized lowercase text:
+    * `charNgrams(regexp_replace(lower(trim(text)), "\\s+", " "), n)` as
+    * ONE kernel ([[NormalizedCharNgrams]]).
+    */
+  def normalizedCharNgrams(text: Column, n: Int): Column =
+    GraftBridge.column(NormalizedCharNgrams(GraftBridge.expression(text), n))
 
   /** 64-bit SimHash of a token-array column. */
   def simhash64(tokens: Column): Column =
@@ -235,6 +244,36 @@ case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.TextUtil.charNgrams($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): CharNgrams =
+    copy(child = newChild)
+}
+
+/** `char_ngrams(regexp_replace(lower(trim(s)), "\\s+", " "), n)` fused:
+  * all-ASCII text is trimmed, lowercased and whitespace-collapsed in one
+  * byte loop, never touching Spark's (ICU) `lower`; any other text runs
+  * that composition's own library calls ([[TextUtil.normalizedCharNgrams]]).
+  * Either way the grams are cut in one linear pass.
+  */
+case class NormalizedCharNgrams(child: Expression, n: Int) extends UnaryExpression {
+  require(n > 0, s"n must be positive, got $n")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires string input, got ${t.sql}")
+  }
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "normalized_char_ngrams"
+
+  private lazy val useICU: Boolean = TextUtil.icuCaseMappings()
+
+  override protected def nullSafeEval(input: Any): Any =
+    TextUtil.normalizedCharNgrams(input.asInstanceOf[UTF8String], n, useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.TextUtil.normalizedCharNgrams($c, $n, $useICU)")
+
+  override protected def withNewChildInternal(newChild: Expression): NormalizedCharNgrams =
     copy(child = newChild)
 }
 
@@ -482,17 +521,107 @@ object GramUtil {
 }
 
 object TextUtil {
+  /** The `n`-code-point windows of `s`, each a view into one private copy
+    * of its bytes. Character starts are recorded once, so the document is
+    * walked once in all (not once per gram). A lead byte whose declared
+    * width runs past the end — a truncated UTF-8 tail — ends at the end:
+    * no window ever reads beyond `s`.
+    */
   def charNgrams(s: UTF8String, n: Int): ArrayData = {
-    val len = s.numChars()
-    if (len < n) return new GenericArrayData(new Array[AnyRef](0))
-    val out = new Array[AnyRef](len - n + 1)
-    var i = 0
-    while (i <= len - n) {
-      out(i) = s.substringSQL(i + 1, n)
+    val bytes = new Array[Byte](s.numBytes())
+    s.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET)
+    windows(bytes, bytes.length, n)
+  }
+
+  /** [[charNgrams]] of `regexp_replace(lower(trim(s)), "\\s+", " ")`
+    * (Spark's `lower` under `useICU`). For all-ASCII `s`, one byte loop
+    * does the three steps, each one's ASCII meaning: `trim` drops spaces
+    * only, `lower` maps A-Z, and each run of Java-regex `\s` (space, \t,
+    * \n, \x0B, \f, \r) becomes one space. Any other `s` takes
+    * [[normalizeExact]].
+    */
+  def normalizedCharNgrams(s: UTF8String, n: Int, useICU: Boolean): ArrayData =
+    if (s.isFullAscii) {
+      val out = new Array[Byte](s.numBytes())
+      windows(out, normalizeAscii(s, out), n)
+    } else {
+      val out = normalizeExact(s, useICU).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      windows(out, out.length, n)
+    }
+
+  /** `regexp_replace(lower(trim(s)), "\\s+", " ")` through the library
+    * calls that composition makes: `UTF8String.trim`, [[sparkLower]], and
+    * the Java-regex replace over the decoded string.
+    */
+  private def normalizeExact(s: UTF8String, useICU: Boolean): String =
+    JavaWs.matcher(sparkLower(s.trim(), useICU).toString).replaceAll(" ")
+
+  private val JavaWs = java.util.regex.Pattern.compile("\\s+")
+
+  @inline private def isJavaWs(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+
+  /** The all-ASCII normalization of `s` into `out`; returns its length. A
+    * whitespace byte is written as a space only after a non-space, and no
+    * lowercased letter is a space, so `out`'s last byte tells whether a
+    * run is open.
+    */
+  private def normalizeAscii(s: UTF8String, out: Array[Byte]): Int = {
+    var from = 0
+    var to = s.numBytes()
+    while (from < to && s.getByte(from) == ' ') from += 1
+    while (to > from && s.getByte(to - 1) == ' ') to -= 1
+    var w = 0
+    var i = from
+    while (i < to) {
+      val b = s.getByte(i)
+      if (!isJavaWs(b)) {
+        out(w) = if (b >= 'A' && b <= 'Z') (b + ('a' - 'A')).toByte else b
+        w += 1
+      } else if (w == 0 || out(w - 1) != ' ') {
+        out(w) = ' '
+        w += 1
+      }
       i += 1
+    }
+    w
+  }
+
+  /** The `n`-char windows of `bytes[0, len)` as views into `bytes`, which
+    * the caller owns and never changes.
+    */
+  private def windows(bytes: Array[Byte], len: Int, n: Int): ArrayData = {
+    val starts = new Array[Int](len + 1)
+    var chars = 0
+    var i = 0
+    while (i < len) {
+      starts(chars) = i
+      chars += 1
+      i += UTF8String.numBytesForFirstByte(bytes(i))
+    }
+    starts(chars) = len
+    if (chars < n) return new GenericArrayData(new Array[AnyRef](0))
+    val out = new Array[AnyRef](chars - n + 1)
+    var k = 0
+    while (k < out.length) {
+      out(k) = UTF8String.fromBytes(bytes, starts(k), starts(k + n) - starts(k))
+      k += 1
     }
     new GenericArrayData(out)
   }
+
+  /** Spark's `lower` of a UTF8_BINARY string, computed as
+    * `org.apache.spark.sql.catalyst.expressions.Lower` computes it: ICU
+    * case mappings when `useICU` (the Spark 4 default), the JVM's
+    * otherwise. [[UTF8String.toLowerCase]] alone is only the second.
+    */
+  private[functions] def sparkLower(s: UTF8String, useICU: Boolean): UTF8String =
+    CollationSupport.Lower.exec(s, CollationFactory.UTF8_BINARY_COLLATION_ID, useICU)
+
+  /** The session's `spark.sql.icu.caseMappings.enabled`, read as Spark's
+    * `Lower` reads it: once per expression, through `SQLConf.get`.
+    */
+  private[functions] def icuCaseMappings(): Boolean =
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
 }
 
 object SetMath {

@@ -410,6 +410,18 @@ object Dedup {
       graft.functions.native.hashedShingleSet(tokens, k).as(hs))
   }
 
+  /** One `(band, bhash, keep…)` row per element of `side`'s `bh` band
+    * hashes. A plain `posexplode` would do, but Spark infers a
+    * `size(bh) > 0 AND isnotnull(bh)` filter under every inner generator,
+    * pushdown substitutes the signature kernel into it, and the kernel
+    * then runs up to three times per row. `posexplode_outer` gets no
+    * inferred filter; its one null row per empty or null `bh` is dropped
+    * above the generator, so the rows are the same.
+    */
+  private def bandRows(side: DataFrame, keep: String*): DataFrame =
+    side.select(posexplode_outer(col("bh")).as(Seq("band", "bhash")) +: keep.map(col): _*)
+      .where(col("band").isNotNull)
+
   /** `buckets` (band, bhash, …) rows with their bucket's size `n` — the
     * oversize guard's count, a window over the bucket key (no self-join).
     */
@@ -443,13 +455,12 @@ object Dedup {
   }
 
   /** Character n-grams of whitespace-normalized lowercase text (empty when
-    * shorter than n). Normalization is one regex pass; the gram windows are
-    * the native [[graft.functions.CharNgrams]] kernel (the HOF equivalent
-    * pays ~one interpreted lambda eval per gram).
+    * shorter than n): `regexp_replace(lower(trim(text)), "\\s+", " ")`
+    * cut into windows, as the one native
+    * [[graft.functions.NormalizedCharNgrams]] kernel.
     */
   def charNgrams(text: Column, n: Int): Column =
-    graft.functions.native.charNgrams(
-      regexp_replace(lower(trim(text)), "\\s+", " "), n)
+    graft.functions.native.normalizedCharNgrams(text, n)
 
   /** Shared LSH candidate-generation + exact-Jaccard verification.
     *
@@ -503,13 +514,7 @@ object Dedup {
       withHs: DataFrame,
       threshold: Double,
       maxBucketSize: Int = 4096): DataFrame = {
-    // No size(bh)>0 pre-filter: posexplode of an empty array emits no rows
-    // anyway, and an explicit filter gets pushed below this projection where
-    // it forces a SECOND evaluation of the (expensive) signature kernel per
-    // row per join side.
-    val buckets = sigs.select(
-      posexplode(col("bh")).as(Seq("band", "bhash")), col("id"))
-    candidatePairs(buckets, maxBucketSize)
+    candidatePairs(bandRows(sigs, "id"), maxBucketSize)
       .join(withHs.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
       .join(withHs.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
       .withColumn("jaccard",
@@ -544,8 +549,8 @@ object Dedup {
     // the corpus side derives exactly the persisted index's tables: the
     // oversize-guarded buckets of writeDedupIndex, and the shingle sets
     val buckets = withBucketSize(
-      minhashSide(existing, textCol, idCol, k, numHashes, bands, id = "existing_id")
-        .select(posexplode(col("bh")).as(Seq("band", "bhash")), col("existing_id")))
+      bandRows(minhashSide(existing, textCol, idCol, k, numHashes, bands, id = "existing_id"),
+        "existing_id"))
       .where(col("n") <= maxBucketSize)
       .drop("n")
     val sets = minhashSide(existing, textCol, idCol, k, numHashes, bands,
@@ -647,8 +652,7 @@ object Dedup {
       // split derives from the staged parquet — one signature-kernel pass
       // over the corpus text, not one per output table
       val side = minhashSide(existing, textCol, idCol, k, numHashes, bands)
-      val staged = out.stage(withBucketSize(
-        side.select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id"))))
+      val staged = out.stage(withBucketSize(bandRows(side, "id")))
       // the three epoch tables derive independently (buckets/dropped from the
       // staged parquet, sets from the corpus) — overlap their write jobs
       EpochStore.Arms.fresh(Map("k" -> k.toString, "num_hashes" -> numHashes.toString,
@@ -720,8 +724,7 @@ object Dedup {
       // count below derive from the staged parquet, so the signature kernel
       // runs exactly once over the new docs
       val side = minhashSide(newDocs, textCol, idCol, k, numHashes, bands)
-      val staged = out.stage(
-        side.select(posexplode(col("bh")).as(Seq("band", "bhash")), col("id")))
+      val staged = out.stage(bandRows(side, "id"))
       val touched = staged.select("band", "bhash").distinct()
       val tomb = indexDropped(spark, cur)
       // prior live counts for TOUCHED buckets only — the broadcast semi-join
@@ -826,8 +829,8 @@ object Dedup {
   private def probePairs(
       newDocs: DataFrame, textCol: String, idCol: String, k: Int, numHashes: Int,
       bands: Int, buckets: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
-    minhashSide(newDocs, textCol, idCol, k, numHashes, bands, id = "new_id", hs = "hs_a")
-      .select(col("new_id"), col("hs_a"), posexplode(col("bh")).as(Seq("band", "bhash")))
+    bandRows(minhashSide(newDocs, textCol, idCol, k, numHashes, bands, id = "new_id",
+        hs = "hs_a"), "new_id", "hs_a")
       .join(buckets, Seq("band", "bhash"))
       // hs_a is identical on every row of a new_id, so the arbitrary-row
       // keep of dropDuplicates is still deterministic content

@@ -71,6 +71,34 @@ class PlanSpec extends SparkSpec {
     assert(spans.nonEmpty, s"kernel fell out of codegen:\n${plan(df)}")
   }
 
+  test("the MinHash band kernel runs in exactly one operator of the pair plans") {
+    // an inferred `size(bh) > 0` filter under the band explode would be
+    // pushed below the projection with the kernel substituted into it
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case other => other.children
+      }
+      p +: kids.flatMap(allNodes)
+    }
+    val docs = Tables(spark, dir, "documents")
+    Seq(
+      "minhashPairs" -> ops.Dedup.minhashPairs(docs, "text", "doc_id"),
+      "ngramJaccardPairs" -> ops.Dedup.ngramJaccardPairs(docs, "text", "doc_id")
+    ).foreach { case (name, df) =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val withKernel = allNodes(plan).filter(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.MinHashBandHashes])))
+      assert(withKernel.size == 1,
+        s"$name: minhash_band_hashes in ${withKernel.size} operators " +
+          s"(${withKernel.map(_.nodeName).mkString(", ")}):\n$plan")
+    }
+  }
+
   test("jaccard threshold filters rewrite to the fused early-exit predicate") {
     val df = Tables(spark, dir, "documents").select(
       col("doc_id"),

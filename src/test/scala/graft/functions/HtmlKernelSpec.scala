@@ -187,7 +187,13 @@ class HtmlKernelSparkSpec extends SparkSpec {
     "<p>the of and a to in is it that for twenty chars padd</p>",
     "<div><a href=x>pure link farm of the day in the set</a></div>",
     "xy\fz\rw\tv the of and it", "<p></p><p> </p><p>\t</p>",
-    "<br/><BR><br >text between the breaks of the day for it")
+    "<br/><BR><br >text between the breaks of the day for it",
+    // Kelvin sign, dotted capital I (İT lowercases to a stopword after the
+    // [a-z] filter), Greek sigma in final and medial position, and two
+    // capitals that only ICU lowercases
+    "<p>\u0130T \u0130S the \u212Aelvin \u212A of \u0130N a \u039F\u0394\u039F\u03A3 " +
+      "\u03A3\u0391\u03A3 to \u03A3\u039F\u03A6\u0399\u0391 for that twenty</p>",
+    "<div>TH\u0130S \u0130 \u212A\u212A and \u03C3\u03C2\u03A3 it \uA7C0\u2C2F is in</div>")
 
   private def corpusDF(pages: Seq[String]) = {
     val rows = pages.zipWithIndex.map { case (h, i) => Row(i.toLong, h) } ++
@@ -224,15 +230,20 @@ class HtmlKernelSparkSpec extends SparkSpec {
   }
 
   test("kernel ≡ expression chain: extract + block metrics, fixture corpus") {
-    val df = corpusDF(fixturePages)
-    val bad = df.select(
-        TextOps.htmlExtractText(col("html")).as("k_text"),
-        TextOps.htmlExtractTextExpr(col("html")).as("e_text"),
-        TextOps.htmlBlockMetrics(col("html")).as("k_m"),
-        TextOps.htmlBlockMetricsExpr(col("html")).as("e_m"))
-      .where(!(col("k_text") <=> col("e_text")) ||
-        !(col("k_m") <=> col("e_m")))
-    assert(bad.count() === 0L)
+    // both settings of Spark's `lower`: ICU case mappings and the JVM's
+    Seq(true, false).foreach { icu =>
+      spark.conf.set("spark.sql.icu.caseMappings.enabled", icu)
+      try {
+        val bad = corpusDF(fixturePages).select(
+            TextOps.htmlExtractText(col("html")).as("k_text"),
+            TextOps.htmlExtractTextExpr(col("html")).as("e_text"),
+            TextOps.htmlBlockMetrics(col("html")).as("k_m"),
+            TextOps.htmlBlockMetricsExpr(col("html")).as("e_m"))
+          .where(!(col("k_text") <=> col("e_text")) ||
+            !(col("k_m") <=> col("e_m")))
+        assert(bad.count() === 0L, s"icu=$icu")
+      } finally spark.conf.unset("spark.sql.icu.caseMappings.enabled")
+    }
   }
 
   test("kernel ≡ expression chain: 400 seeded adversarial pages") {
