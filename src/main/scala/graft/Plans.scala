@@ -68,7 +68,7 @@ object Plans {
       "only (id_a, id_b) pairs and counters move after it — text reaches " +
       "no Exchange. The 'Scan ExistingRDD' leaves are the ONCE-materialized " +
       "gram table (its multi-consumer subtree otherwise recomputes 6×; " +
-      "PlanSpec pins the full lazy derivation via materialize = false)"),
+      "PlanSpec pins the full lazy derivation via the private pair core)"),
     "q121_winnowing_pairs" -> ("winnowing fingerprints: the per-window " +
       "minima are let-bound array math fused into the scan (no shuffle for " +
       "selection), so the pair machinery runs on ~2/(w+1) of the gram " +

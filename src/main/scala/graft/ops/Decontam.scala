@@ -35,11 +35,6 @@ object Decontam {
   def gramKey(gram: Column): Column =
     substring(md5(gram.cast("binary")), 1, 16)
 
-  /** Per-document contamination report: corpus documents sharing at least
-    * one word `n`-gram with `evalSet`, with the count of DISTINCT shared
-    * grams as `n_shared_grams`. Set `broadcastEval = false` only if the
-    * eval side is too large to broadcast (then AQE picks the join).
-    */
   private def grams(
       df: DataFrame, textCol: String, n: Int, keep: Seq[Column],
       foldCase: Boolean = false) = {
@@ -55,7 +50,12 @@ object Decontam {
     if (bcast) broadcast(evalGrams) else evalGrams
   }
 
-  /** `foldCase = true` lowercases both sides before gram matching — the
+  /** Per-document contamination report: corpus documents sharing at least
+    * one word `n`-gram with `evalSet`, with the count of DISTINCT shared
+    * grams as `n_shared_grams`. Set `broadcastEval = false` only if the
+    * eval side is too large to broadcast (then AQE picks the join).
+    *
+    * `foldCase = true` lowercases both sides before gram matching — the
     * normalization the published decontamination recipes apply (the GPT-3
     * data card matches on lowercased n-grams), so a re-cased leak ("The
     * Quick Brown Fox…" quoted in a different style) still counts as
@@ -116,41 +116,49 @@ object Decontam {
       textCol: String,
       n: Int = 8,
       broadcastEval: Boolean = true): DataFrame = {
-    val matches = corpus
-      .select(col(idCol), posexplode(wordNgrams(col(textCol), n)).as(Seq("__pos", "__gram")))
-      .select(col(idCol), col("__pos"), gramKey(col("__gram")).as("__g"))
+    val matches = occurrences(corpus, idCol, wordNgrams(col(textCol), n))
       .join(evalSide(evalSet, textCol, n, broadcastEval), Seq("__g"))
-      .groupBy(col(idCol))
-      .agg(collect_list(col("__pos")).as("__starts"))
-    redactByStarts(corpus, matches, idCol, textCol, n)
+    redactByStarts(corpus, matches, idCol, textCol, n,
+      "__toks" -> TextOps.wsTokens(col(textCol)), " ", "n_removed_tokens")
   }
 
-  /** Shared tail of the span-removal ops: join the per-doc matched-start
-    * arrays back onto the corpus and remove exactly the covered tokens.
-    * `starts` must be `(idCol, __starts: array<int>)`, one row per doc
-    * that has at least one matched gram start (0-based token positions).
-    * Coverage is pure array math fused into the scan: token j is removed
-    * iff some matched start s satisfies s ≤ j < s + n.
+  /** `(idCol, __pos, __g)` occurrence rows of a gram-array column: each
+    * gram's 0-based start position and 64-bit key — the narrow table every
+    * span-removal op matches on.
+    */
+  private def occurrences(df: DataFrame, idCol: String, gramArr: Column): DataFrame =
+    df.select(col(idCol), posexplode(gramArr).as(Seq("__pos", "__gram")))
+      .select(col(idCol), col("__pos"), gramKey(col("__gram")).as("__g"))
+
+  /** Shared tail of the span-removal ops: collect the matched gram starts
+    * per document, join them back onto the corpus and remove exactly the
+    * covered elements. `hits` holds `(idCol, __pos)` rows, one per matched
+    * gram start (0-based positions into the element array); `elems` pairs
+    * that array (tokens or characters) with its working column's name.
+    * Coverage is pure array math fused into the scan:
+    * element j is removed iff some matched start s satisfies
+    * s ≤ j < s + n; the survivors are rejoined with `joiner` into
+    * `cleaned`, and their shortfall is reported as `removedCol`.
     */
   private def redactByStarts(
-      corpus: DataFrame,
-      starts: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int): DataFrame =
+      corpus: DataFrame, hits: DataFrame, idCol: String, textCol: String, n: Int,
+      elems: (String, Column), joiner: String, removedCol: String): DataFrame = {
+    val starts = hits.groupBy(col(idCol)).agg(collect_list(col("__pos")).as("__starts"))
+    val (es, elemsOf) = elems
     corpus.join(starts, Seq(idCol), "left")
       .withColumn("__starts", coalesce(col("__starts"), array().cast("array<int>")))
-      .withColumn("__toks", TextOps.wsTokens(col(textCol)))
+      .withColumn(es, elemsOf)
       .withColumn("__kept",
-        keptOutsideWindows(col("__toks"), col("__starts"), n))
+        keptOutsideWindows(col(es), col("__starts"), n))
       .withColumn("cleaned",
         when(col(textCol).isNull, lit(null).cast("string"))
-          .otherwise(concat_ws(" ", col("__kept"))))
-      .withColumn("n_removed_tokens",
-        // null text tokenizes to null arrays whose size() is null under
+          .otherwise(concat_ws(joiner, col("__kept"))))
+      .withColumn(removedCol,
+        // null text splits to null arrays whose size() is null under
         // ANSI semantics — nothing was removed from it, so report 0
-        coalesce((size(col("__toks")) - size(col("__kept"))).cast("bigint"), lit(0L)))
-      .drop("__starts", "__toks", "__kept")
+        coalesce((size(col(es)) - size(col("__kept"))).cast("bigint"), lit(0L)))
+      .drop("__starts", es, "__kept")
+  }
 
   /** Per-document exact repeated-substring report — the corpus analysed
     * against ITSELF instead of an eval set: for every document, how many
@@ -177,7 +185,7 @@ object Decontam {
       n: Int = 8,
       minDocs: Int = 2): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    val pg = grams(corpus, textCol, n, Seq(col(idCol))).distinct()
+    val pg = gramPostings(corpus, idCol, textCol, n)
     val gc = pg.groupBy(col("__g")).agg(count(lit(1)).as("__nd"))
     pg.join(gc, Seq("__g"))
       .groupBy(col(idCol))
@@ -253,23 +261,6 @@ object Decontam {
   private[graft] def evalGramKeys(evalSet: DataFrame, textCol: String, n: Int): DataFrame =
     grams(evalSet, textCol, n, Seq.empty).distinct()
 
-  /** Pairwise stratum-overlap matrix — "which sources leak into which":
-    * for every pair of corpus strata (sources, dumps, snapshots …), the
-    * number of DISTINCT word `n`-grams they share. The mixing-table
-    * diagnostic run before combining corpora: a large off-diagonal entry
-    * means two "independent" sources substantially duplicate each other
-    * (mirrors, re-crawls), and their mixing weights double-count.
-    * Output: `(stratum_a, stratum_b, n_shared_grams)` with
-    * `stratum_a < stratum_b`; non-overlapping pairs are absent.
-    *
-    * Plan shape for 100 TB: text reduces map-side to DISTINCT (stratum,
-    * 64-bit gram-key) pairs — the corpus collapses to at most
-    * nStrata × distinct-grams narrow rows before the one self-join on the
-    * gram key. Per shared gram the join yields at most nStrata²/2 pairs,
-    * so this is for MIXING-GRADE strata counts (tens to hundreds of
-    * sources), not per-document grouping — [[repeatedGramReport]] is the
-    * per-document form.
-    */
   /** Asymmetric n-gram CONTAINMENT pairs — the quote/subset detector
     * Jaccard misses: a short document wholly quoted inside a long one has
     * tiny Jaccard (the union is dominated by the long doc) but containment
@@ -302,39 +293,110 @@ object Decontam {
       textCol: String,
       n: Int = 8,
       minContainment: Double = 0.5,
-      maxDf: Long = 10000L,
-      materialize: Boolean = true): DataFrame = {
-    require(maxDf >= 2, s"maxDf must be >= 2 (no pair can share a df-1 gram), got $maxDf")
+      maxDf: Long = 10000L): DataFrame = {
+    requirePairArgs(maxDf)
     // the distinct gram table feeds sizes, the df counts, AND both pair
     // sides; consumers optimize the shared subtree differently, so AQE
     // never reuses its stages — materialize ONCE (measured: 6 corpus
     // scans without this) instead of re-running scan+explode+md5 per use.
-    // `materialize = false` keeps the derivation lazy for plan inspection
-    // (PlanSpec pins the pre-materialization shape)
-    val pgLazy = grams(corpus, textCol, n, Seq(col(idCol))).distinct()
-    val pg = if (materialize) Materialize.eager(pgLazy) else pgLazy
-    val sizes = pg.groupBy(col(idCol)).agg(count(lit(1)).as("__ng"))
-    val kept = pg.join(
-      pg.groupBy(col("__g")).agg(count(lit(1)).as("__nd"))
-        .where(col("__nd") >= 2 && col("__nd") <= maxDf)
-        .select(col("__g")),
-      Seq("__g"))
-    val a = kept.select(col(idCol).as("id_a"), col("__g"))
-    val b = kept.select(col(idCol).as("id_b"), col("__g"))
-    val shared = a.join(b, Seq("__g"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("shared_grams"))
-    shared
-      .join(sizes.select(col(idCol).as("id_a"), col("__ng").as("n_grams_a")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("__ng").as("n_grams_b")), Seq("id_b"))
-      .withColumn("containment",
-        col("shared_grams").cast("double") /
-          least(col("n_grams_a"), col("n_grams_b")).cast("double"))
-      .where(col("containment") >= minContainment)
-      .select(col("id_a"), col("id_b"), col("shared_grams"),
-        col("n_grams_a"), col("n_grams_b"), col("containment"))
+    // PlanSpec pins the pre-materialization shape through [[containment]]
+    val pg = Materialize.eager(gramPostings(corpus, idCol, textCol, n))
+    containment(pg, pg, Seq(pg), Within, maxDf, minContainment)
   }
+
+  /** Distinct `(idCol, __g)` gram-key postings of every document — the
+    * table the containment forms pair on and [[repeatedGramReport]] counts.
+    */
+  private[graft] def gramPostings(
+      df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    grams(df, textCol, n, Seq(col(idCol))).distinct()
+
+  /** Output names of one pair form: the two id columns, the suffixes of
+    * the per-side count columns, and the predicate the pair core applies
+    * before counting.
+    */
+  private[graft] case class Sides(ids: (String, String), tags: (String, String), pair: Column)
+
+  /** One table paired with itself: each unordered pair once. */
+  private[graft] val Within = Sides(("id_a", "id_b"), ("a", "b"), col("id_a") < col("id_b"))
+
+  /** A batch against the standing corpus: cross-side pairs only. */
+  private[graft] val Across = Sides(("new_id", "existing_id"), ("new", "existing"), lit(true))
+
+  private def requirePairArgs(maxDf: Long, minShared: Long = 1L): Unit = {
+    require(maxDf >= 2, s"maxDf must be >= 2 (no pair can share a df-1 key), got $maxDf")
+    require(minShared >= 1, s"minShared must be >= 1, got $minShared")
+  }
+
+  /** The df-capped shared-key pair core of every containment and
+    * winnowing form. `left` and `right` are `(id, __g)` postings, the id
+    * under any name (ids already under their output name are not
+    * re-aliased); keys whose document frequency over the union
+    * of `dfOver` lies in `[2, maxDf]` join the two sides on the key, the
+    * side ids take `s.ids`' names, `s.pair` drops pairs BEFORE the count
+    * (a self join never shuffles ordered or self pairs), and each pair
+    * carries its number of shared keys as `sharedCol`.
+    */
+  private def sharedKeyPairs(
+      left: DataFrame, right: DataFrame, dfOver: Seq[DataFrame], s: Sides,
+      maxDf: Long, sharedCol: String): DataFrame = {
+    val capped = dfOver.map(_.select(col("__g"))).reduce(_ unionAll _)
+      .groupBy(col("__g")).agg(count(lit(1)).as("__nd"))
+      .where(col("__nd") >= 2 && col("__nd") <= maxDf)
+      .select(col("__g"))
+    def side(p: DataFrame, id: String) = p.join(capped, Seq("__g")).transform(kept =>
+      if (idOf(p) == id) kept else kept.select(col(idOf(p)).as(id), col("__g")))
+    side(left, s.ids._1).join(side(right, s.ids._2), Seq("__g"))
+      .where(s.pair)
+      .groupBy(col(s.ids._1), col(s.ids._2))
+      .agg(count(lit(1)).as(sharedCol))
+  }
+
+  /** The id column of `(id, __g)` postings (a USING join puts `__g` first). */
+  private def idOf(postings: DataFrame): String = postings.columns.find(_ != "__g").get
+
+  /** Per-document key counts `(id, __n)` of `(id, __g)` postings. */
+  private def keyCounts(postings: DataFrame): DataFrame =
+    postings.groupBy(col(idOf(postings))).agg(count(lit(1)).as("__n"))
+
+  /** `pairs` with each side's key count attached as `<prefix>_<tag>`. */
+  private def withSizes(
+      pairs: DataFrame, s: Sides, prefix: String,
+      leftSizes: DataFrame, rightSizes: DataFrame): DataFrame =
+    pairs
+      .join(leftSizes.toDF(s.ids._1, s"${prefix}_${s.tags._1}"), Seq(s.ids._1))
+      .join(rightSizes.toDF(s.ids._2, s"${prefix}_${s.tags._2}"), Seq(s.ids._2))
+
+  /** Containment over the pair core: shared distinct grams against the
+    * smaller side's UNCAPPED distinct-gram count, kept at
+    * `minContainment`.
+    */
+  private[graft] def containment(
+      left: DataFrame, right: DataFrame, dfOver: Seq[DataFrame], s: Sides,
+      maxDf: Long, minContainment: Double): DataFrame = {
+    val (na, nb) = (s"n_grams_${s.tags._1}", s"n_grams_${s.tags._2}")
+    withSizes(sharedKeyPairs(left, right, dfOver, s, maxDf, "shared_grams"), s, "n_grams",
+      keyCounts(left), keyCounts(right))
+      .withColumn("containment",
+        col("shared_grams").cast("double") / least(col(na), col(nb)).cast("double"))
+      .where(col("containment") >= minContainment)
+      .select(col(s.ids._1), col(s.ids._2), col("shared_grams"),
+        col(na), col(nb), col("containment"))
+  }
+
+  /** Winnowing over the pair core: pairs sharing at least `minShared`
+    * fingerprints, with both sides' fingerprint counts (`rightSizes`
+    * overrides the right side's, counted from `right` by default).
+    */
+  private[graft] def winnowing(
+      left: DataFrame, right: DataFrame, dfOver: Seq[DataFrame], s: Sides,
+      maxDf: Long, minShared: Long, rightSizes: Option[DataFrame] = None): DataFrame =
+    withSizes(
+      sharedKeyPairs(left, right, dfOver, s, maxDf, "shared_fps")
+        .where(col("shared_fps") >= minShared),
+      s, "n_fps", keyCounts(left), rightSizes.getOrElse(keyCounts(right)))
+      .select(col(s.ids._1), col(s.ids._2), col("shared_fps"),
+        col(s"n_fps_${s.tags._1}"), col(s"n_fps_${s.tags._2}"))
 
   /** Winnowed fingerprint keys of one document (Schleimer et al. 2003,
     * SIGMOD — the MOSS algorithm, public): hash every word `n`-gram, slide
@@ -384,33 +446,13 @@ object Decontam {
       n: Int = 8,
       w: Int = 4,
       minShared: Long = 2L,
-      maxDf: Long = 10000L,
-      materialize: Boolean = true): DataFrame = {
-    require(maxDf >= 2, s"maxDf must be >= 2 (no pair can share a df-1 fingerprint), got $maxDf")
-    require(minShared >= 1, s"minShared must be >= 1, got $minShared")
+      maxDf: Long = 10000L): DataFrame = {
+    requirePairArgs(maxDf, minShared)
     // winnowedGramKeys is per-doc distinct already — no dedup shuffle; the
     // fingerprint table feeds sizes, df counts, and both pair sides, so it
     // materializes once (same rationale as [[containmentPairs]])
-    val fpLazy = corpus.select(
-      col(idCol), explode(winnowedGramKeys(col(textCol), n, w)).as("__g"))
-    val fp = if (materialize) Materialize.eager(fpLazy) else fpLazy
-    val sizes = fp.groupBy(col(idCol)).agg(count(lit(1)).as("__nf"))
-    val kept = fp.join(
-      fp.groupBy(col("__g")).agg(count(lit(1)).as("__nd"))
-        .where(col("__nd") >= 2 && col("__nd") <= maxDf)
-        .select(col("__g")),
-      Seq("__g"))
-    val a = kept.select(col(idCol).as("id_a"), col("__g"))
-    val b = kept.select(col(idCol).as("id_b"), col("__g"))
-    a.join(b, Seq("__g"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("shared_fps"))
-      .where(col("shared_fps") >= minShared)
-      .join(sizes.select(col(idCol).as("id_a"), col("__nf").as("n_fps_a")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("__nf").as("n_fps_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("shared_fps"),
-        col("n_fps_a"), col("n_fps_b"))
+    val fp = Materialize.eager(fpPostings(corpus, idCol, textCol, n, w, idCol))
+    winnowing(fp, fp, Seq(fp), Within, maxDf, minShared)
   }
 
   /** Incremental [[winnowingPairs]]: today's batch against the standing
@@ -430,37 +472,10 @@ object Decontam {
       w: Int = 4,
       minShared: Long = 2L,
       maxDf: Long = 10000L): DataFrame = {
-    require(maxDf >= 2, s"maxDf must be >= 2 (no pair can share a df-1 fingerprint), got $maxDf")
-    require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    val nf = Materialize.eager(newDocs.select(
-      col(idCol).as("new_id"), explode(winnowedGramKeys(col(textCol), n, w)).as("__g")))
-    val ef = Materialize.eager(existing.select(
-      col(idCol).as("existing_id"), explode(winnowedGramKeys(col(textCol), n, w)).as("__g")))
-    crossSideFpPairs(nf, ef, minShared, maxDf)
-  }
-
-  /** Cross-side fingerprint pair core shared by the direct and the
-    * index-backed probes: df cap over the union of both posting sets,
-    * pairs only across sides, per-side total fingerprint counts attached.
-    */
-  private def crossSideFpPairs(
-      nf: DataFrame, ef: DataFrame,
-      minShared: Long, maxDf: Long): DataFrame = {
-    val gc = nf.select(col("__g"))
-      .unionAll(ef.select(col("__g")))
-      .groupBy(col("__g")).agg(count(lit(1)).as("__nd"))
-      .where(col("__nd") >= 2 && col("__nd") <= maxDf)
-      .select(col("__g"))
-    nf.join(gc, Seq("__g"))
-      .join(ef.join(gc, Seq("__g")), Seq("__g"))
-      .groupBy(col("new_id"), col("existing_id"))
-      .agg(count(lit(1)).as("shared_fps"))
-      .where(col("shared_fps") >= minShared)
-      .join(nf.groupBy(col("new_id")).agg(count(lit(1)).as("n_fps_new")), Seq("new_id"))
-      .join(ef.groupBy(col("existing_id")).agg(count(lit(1)).as("n_fps_existing")),
-        Seq("existing_id"))
-      .select(col("new_id"), col("existing_id"), col("shared_fps"),
-        col("n_fps_new"), col("n_fps_existing"))
+    requirePairArgs(maxDf, minShared)
+    val nf = Materialize.eager(fpPostings(newDocs, idCol, textCol, n, w, "new_id"))
+    val ef = Materialize.eager(fpPostings(existing, idCol, textCol, n, w, "existing_id"))
+    winnowing(nf, ef, Seq(nf, ef), Across, maxDf, minShared)
   }
 
   // ---- persisted winnowing-fingerprint index ([[EpochStore]] layout) ----
@@ -474,10 +489,11 @@ object Decontam {
     EpochStore.IndexKind("fingerprint", FingerprintIndexFormatVersion, "writeFingerprintIndex"),
     tables = Seq("postings", "fsizes"), idTable = Some("fsizes"))
 
-  private def fpPostings(
-      df: DataFrame, idCol: String, textCol: String, n: Int, w: Int): DataFrame =
-    df.select(col(idCol).as("id"),
-      explode(winnowedGramKeys(col(textCol), n, w)).as("__g"))
+  /** `(idAs, __g)` winnowed-fingerprint postings of every document. */
+  private[graft] def fpPostings(
+      df: DataFrame, idCol: String, textCol: String, n: Int, w: Int,
+      idAs: String = "id"): DataFrame =
+    df.select(col(idCol).as(idAs), explode(winnowedGramKeys(col(textCol), n, w)).as("__g"))
 
   private[graft] def resolveFingerprintIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
@@ -574,41 +590,25 @@ object Decontam {
       path: String,
       minShared: Long = 2L,
       maxDf: Long = 10000L): DataFrame = {
-    require(maxDf >= 2, s"maxDf must be >= 2 (no pair can share a df-1 fingerprint), got $maxDf")
-    require(minShared >= 1, s"minShared must be >= 1, got $minShared")
+    requirePairArgs(maxDf, minShared)
     val spark = batch.sparkSession
     val ep = resolveFingerprintIndex(spark, path)
-    val n = ep.header.int("n")
-    val w = ep.header.int("w")
     // the batch's fingerprints feed the touched-key broadcast, the df
     // counts, the pair join, and the per-doc sizes — materialize once so
     // the batch text is winnowed exactly once. The PRUNED standing side
     // stays lazy: its two consumers (df counts, pair join) each re-run
     // only a narrow two-column postings scan behind the broadcast
     // semi-join — cheap by construction, and the probe plan stays
-    // inspectable (PlanSpec pins the prune shape)
-    val nf = Materialize.eager(fpPostings(batch, idCol, textCol, n, w)
-      .withColumnRenamed("id", "new_id"))
+    // inspectable (PlanSpec pins the prune shape). Standing sizes come
+    // from `fsizes`: the pruned postings hold only the touched keys.
+    val nf = Materialize.eager(fpPostings(
+      batch, idCol, textCol, ep.header.int("n"), ep.header.int("w"), "new_id"))
     val touched = nf.select(col("__g")).distinct()
     val ef = EpochStore.readTable(spark, ep, "postings")
       .join(broadcast(touched), Seq("__g"), "left_semi")
       .withColumnRenamed("id", "existing_id")
-    val gc = nf.select(col("__g"))
-      .unionAll(ef.select(col("__g")))
-      .groupBy(col("__g")).agg(count(lit(1)).as("__nd"))
-      .where(col("__nd") >= 2 && col("__nd") <= maxDf)
-      .select(col("__g"))
-    nf.join(gc, Seq("__g"))
-      .join(ef.join(gc, Seq("__g")), Seq("__g"))
-      .groupBy(col("new_id"), col("existing_id"))
-      .agg(count(lit(1)).as("shared_fps"))
-      .where(col("shared_fps") >= minShared)
-      .join(nf.groupBy(col("new_id")).agg(count(lit(1)).as("n_fps_new")), Seq("new_id"))
-      .join(EpochStore.readTable(spark, ep, "fsizes")
-        .select(col("id").as("existing_id"), col("nf").as("n_fps_existing")),
-        Seq("existing_id"))
-      .select(col("new_id"), col("existing_id"), col("shared_fps"),
-        col("n_fps_new"), col("n_fps_existing"))
+    winnowing(nf, ef, Seq(nf, ef), Across, maxDf, minShared,
+      Some(EpochStore.readTable(spark, ep, "fsizes")))
   }
 
   /** Incremental [[containmentPairs]]: today's batch against the standing
@@ -632,31 +632,29 @@ object Decontam {
       n: Int = 8,
       minContainment: Double = 0.5,
       maxDf: Long = 10000L): DataFrame = {
-    require(maxDf >= 2, s"maxDf must be >= 2 (no pair can share a df-1 gram), got $maxDf")
-    val ng = Materialize.eager(grams(newDocs, textCol, n, Seq(col(idCol))).distinct())
-    val eg = Materialize.eager(grams(existing, textCol, n, Seq(col(idCol))).distinct())
-    val gc = ng.unionByName(eg)
-      .groupBy(col("__g")).agg(count(lit(1)).as("__nd"))
-      .where(col("__nd") >= 2 && col("__nd") <= maxDf)
-      .select(col("__g"))
-    val a = ng.join(gc, Seq("__g")).select(col(idCol).as("new_id"), col("__g"))
-    val b = eg.join(gc, Seq("__g")).select(col(idCol).as("existing_id"), col("__g"))
-    val shared = a.join(b, Seq("__g"))
-      .groupBy(col("new_id"), col("existing_id"))
-      .agg(count(lit(1)).as("shared_grams"))
-    shared
-      .join(ng.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams_new"))
-        .withColumnRenamed(idCol, "new_id"), Seq("new_id"))
-      .join(eg.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams_existing"))
-        .withColumnRenamed(idCol, "existing_id"), Seq("existing_id"))
-      .withColumn("containment",
-        col("shared_grams").cast("double") /
-          least(col("n_grams_new"), col("n_grams_existing")).cast("double"))
-      .where(col("containment") >= minContainment)
-      .select(col("new_id"), col("existing_id"), col("shared_grams"),
-        col("n_grams_new"), col("n_grams_existing"), col("containment"))
+    requirePairArgs(maxDf)
+    val ng = Materialize.eager(gramPostings(newDocs, idCol, textCol, n))
+    val eg = Materialize.eager(gramPostings(existing, idCol, textCol, n))
+    containment(ng, eg, Seq(ng, eg), Across, maxDf, minContainment)
   }
 
+  /** Pairwise stratum-overlap matrix — "which sources leak into which":
+    * for every pair of corpus strata (sources, dumps, snapshots …), the
+    * number of DISTINCT word `n`-grams they share. The mixing-table
+    * diagnostic run before combining corpora: a large off-diagonal entry
+    * means two "independent" sources substantially duplicate each other
+    * (mirrors, re-crawls), and their mixing weights double-count.
+    * Output: `(stratum_a, stratum_b, n_shared_grams)` with
+    * `stratum_a < stratum_b`; non-overlapping pairs are absent.
+    *
+    * Plan shape for 100 TB: text reduces map-side to DISTINCT (stratum,
+    * 64-bit gram-key) pairs — the corpus collapses to at most
+    * nStrata × distinct-grams narrow rows before the one self-join on the
+    * gram key. Per shared gram the join yields at most nStrata²/2 pairs,
+    * so this is for MIXING-GRADE strata counts (tens to hundreds of
+    * sources), not per-document grouping — [[repeatedGramReport]] is the
+    * per-document form.
+    */
   def sourceOverlapMatrix(
       corpus: DataFrame,
       stratumCol: String,
@@ -697,18 +695,22 @@ object Decontam {
       idCol: String,
       textCol: String,
       n: Int = 8): DataFrame = {
-    val occ = corpus
-      .select(col(idCol), posexplode(wordNgrams(col(textCol), n)).as(Seq("__pos", "__gram")))
-      .select(col(idCol), col("__pos"), gramKey(col("__gram")).as("__g"))
+    val occ = occurrences(corpus, idCol, wordNgrams(col(textCol), n))
+    redactByStarts(corpus, losingStarts(occ, idCol), idCol, textCol, n,
+      "__toks" -> TextOps.wsTokens(col(textCol)), " ", "n_removed_tokens")
+  }
+
+  /** The span-dedup winner election: for every gram key occurring in two
+    * or more documents, the smallest id wins; the `(idCol, __pos)`
+    * occurrences of every OTHER document are returned as the starts to
+    * remove.
+    */
+  private def losingStarts(occ: DataFrame, idCol: String): DataFrame = {
     val winners = occ.groupBy(col("__g"))
       .agg(min(col(idCol)).as("__w"), countDistinct(col(idCol)).as("__nd"))
       .where(col("__nd") >= 2)
       .select(col("__g"), col("__w"))
-    val starts = occ.join(winners, Seq("__g"))
-      .where(col(idCol) =!= col("__w"))
-      .groupBy(col(idCol))
-      .agg(collect_list(col("__pos")).as("__starts"))
-    redactByStarts(corpus, starts, idCol, textCol, n)
+    occ.join(winners, Seq("__g")).where(col(idCol) =!= col("__w"))
   }
 
   /** [[dedupRepeatedSpans]] at CHARACTER granularity — the ExactSubstr
@@ -744,37 +746,14 @@ object Decontam {
       n: Int = 20): DataFrame = {
     require(n >= 2, s"n must be >= 2, got $n (n = 1 would dedup every " +
       "character the corpus shares)")
-    val occ = corpus
-      .select(col(idCol), posexplode(
-        graft.functions.native.charNgrams(col(textCol), n))
-        .as(Seq("__pos", "__gram")))
-      .select(col(idCol), col("__pos"), gramKey(col("__gram")).as("__g"))
-    val winners = occ.groupBy(col("__g"))
-      .agg(min(col(idCol)).as("__w"), countDistinct(col(idCol)).as("__nd"))
-      .where(col("__nd") >= 2)
-      .select(col("__g"), col("__w"))
-    val starts = occ.join(winners, Seq("__g"))
-      .where(col(idCol) =!= col("__w"))
-      .groupBy(col(idCol))
-      .agg(collect_list(col("__pos")).as("__starts"))
-    corpus.join(starts, Seq(idCol), "left")
-      .withColumn("__starts", coalesce(col("__starts"), array().cast("array<int>")))
-      .withColumn("__chars",
-        graft.functions.native.charNgrams(col(textCol), 1))
-      .withColumn("__kept",
-        keptOutsideWindows(col("__chars"), col("__starts"), n))
-      .withColumn("cleaned",
-        when(col(textCol).isNull, lit(null).cast("string"))
-          .otherwise(concat_ws("", col("__kept"))))
-      .withColumn("n_removed_chars",
-        coalesce((size(col("__chars")) - size(col("__kept"))).cast("bigint"),
-          lit(0L)))
-      .drop("__starts", "__chars", "__kept")
+    val chars = graft.functions.native.charNgrams(col(textCol), _: Int)
+    redactByStarts(corpus, losingStarts(occurrences(corpus, idCol, chars(n)), idCol),
+      idCol, textCol, n, "__chars" -> chars(1), "", "n_removed_chars")
   }
 
   /** The elements of `elems` NOT covered by any window `[s, s+n)` for
-    * `s ∈ starts` — the shared coverage kernel of [[redactByStarts]] and
-    * [[dedupRepeatedCharSpans]]. Round-15 shape: the round-14 form
+    * `s ∈ starts` — the coverage kernel of [[redactByStarts]], which
+    * every span-removal op ends in. Round-15 shape: the round-14 form
     * tested every position against the raw start list
     * (`O(len · |starts|)` interpreted lambda steps per row — toward
     * `O(len²)` on a document where most positions start a duplicated

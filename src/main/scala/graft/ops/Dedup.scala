@@ -89,10 +89,8 @@ object Dedup {
       corpus: DataFrame,
       idCol: String,
       textCol: String): DataFrame = {
-    val keepPos = firstOccurrence(paragraphOccurrences(corpus, idCol, textCol), idCol)
-      .groupBy(col(idCol))
-      .agg(collect_list(col("__pos")).as("__keep"))
-    attachKeptParagraphs(corpus, keepPos, idCol, textCol)
+    val occ = paragraphOccurrences(corpus, textCol, col(idCol))
+    attachKeptParagraphs(corpus, firstOccurrence(occ, idCol), idCol, textCol)
   }
 
   /** [[dedupParagraphs]] with a QUALITY key — the C4-style refinement
@@ -123,19 +121,9 @@ object Dedup {
       idCol: String,
       textCol: String,
       scoreCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val occ = corpus.select(
-        col(idCol), col(scoreCol),
-        posexplode(split(col(textCol), ParaSep)).as(Seq("__pos", "__para")))
-      .select(col(idCol), col(scoreCol), col("__pos"),
-        md5(col("__para").cast("binary")).as("__h"))
-    val w = Window.partitionBy(col("__h"))
-      .orderBy(col(scoreCol).desc, col(idCol).asc, col("__pos").asc)
-    val keepPos = occ
-      .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-      .groupBy(col(idCol))
-      .agg(collect_list(col("__pos")).as("__keep"))
-    attachKeptParagraphs(corpus, keepPos, idCol, textCol)
+    val occ = paragraphOccurrences(corpus, textCol, col(idCol), col(scoreCol))
+    attachKeptParagraphs(corpus, firstOccurrence(occ, idCol, col(scoreCol).desc),
+      idCol, textCol)
   }
 
   /** SITE-level boilerplate removal — the complement of
@@ -166,11 +154,7 @@ object Dedup {
       minDocs: Int = 2): DataFrame = {
     require(minDocs >= 2,
       s"minDocs must be >= 2 (1 would strip every paragraph), got $minDocs")
-    val occ = corpus.select(
-        col(domainCol).as("__dom"), col(idCol),
-        posexplode(split(col(textCol), ParaSep)).as(Seq("__pos", "__para")))
-      .select(col("__dom"), col(idCol), col("__pos"),
-        md5(col("__para").cast("binary")).as("__h"))
+    val occ = paragraphOccurrences(corpus, textCol, col(domainCol).as("__dom"), col(idCol))
     // boiler derives FROM occ — rename its keys so the anti-join
     // condition can't resolve both sides to the same attribute (the
     // self-join trap: '__h == __h' is trivially true and drops all)
@@ -180,12 +164,9 @@ object Dedup {
       .select(col("__dom").as("__bdom"), col("__h").as("__bh"))
     // null-safe domain key: a null domain must match the boilerplate rows
     // it produced (plain === would drop the whole unknown-site group)
-    val keepPos = occ.join(boiler,
-        col("__dom") <=> col("__bdom") && col("__h") === col("__bh"),
-        "left_anti")
-      .groupBy(col(idCol))
-      .agg(collect_list(col("__pos")).as("__keep"))
-    attachKeptParagraphs(corpus, keepPos, idCol, textCol)
+    val kept = occ.join(boiler,
+      col("__dom") <=> col("__bdom") && col("__h") === col("__bh"), "left_anti")
+    attachKeptParagraphs(corpus, kept, idCol, textCol)
   }
 
   /** Blank-line paragraph separator shared by every paragraph op —
@@ -195,26 +176,34 @@ object Dedup {
     */
   private[graft] val ParaSep = "(?:\r?\n){2,}"
 
-  /** (id, position, md5-hash) per paragraph — the narrow occurrence table
-    * all paragraph dedup variants key on.
+  /** (carried columns…, position, md5-hash) per paragraph — the narrow
+    * occurrence table all paragraph dedup variants key on; `carry` lists
+    * the leading columns (the document id among them).
     */
-  private def paragraphOccurrences(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol), posexplode(split(col(textCol), ParaSep)).as(Seq("__pos", "__para")))
-      .select(col(idCol), col("__pos"), md5(col("__para").cast("binary")).as("__h"))
+  private def paragraphOccurrences(df: DataFrame, textCol: String, carry: Column*): DataFrame = {
+    val occ = df.select(carry :+
+      posexplode(split(col(textCol), ParaSep)).as(Seq("__pos", "__para")): _*)
+    occ.select(occ.columns.toSeq.filter(_ != "__para").map(col) :+
+      md5(col("__para").cast("binary")).as("__h"): _*)
+  }
 
-  /** First occurrence of each distinct hash: min (id, position). */
-  private def firstOccurrence(occ: DataFrame, idCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("__h")).orderBy(col(idCol).asc, col("__pos").asc)
+  /** First occurrence of each distinct hash: the least by `first`, then
+    * (id, position).
+    */
+  private def firstOccurrence(occ: DataFrame, idCol: String, first: Column*): DataFrame = {
+    val w = Window.partitionBy(col("__h"))
+      .orderBy(first ++ Seq(col(idCol).asc, col("__pos").asc): _*)
     occ.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
   }
 
-  /** Rebuild documents from surviving paragraph positions (`(idCol,
-    * __keep: array<int>)`) — array math fused into the corpus scan.
+  /** Rebuild documents from their surviving paragraph occurrences
+    * (`(idCol, __pos)` rows) — the positions collect per document, and
+    * reassembly is array math fused into the corpus scan.
     */
   private def attachKeptParagraphs(
-      corpus: DataFrame, keepPos: DataFrame, idCol: String, textCol: String): DataFrame =
-    corpus.join(keepPos, Seq(idCol), "left")
+      corpus: DataFrame, kept: DataFrame, idCol: String, textCol: String): DataFrame =
+    corpus.join(kept.groupBy(col(idCol)).agg(collect_list(col("__pos")).as("__keep")),
+        Seq(idCol), "left")
       .withColumn("__keep", coalesce(col("__keep"), array().cast("array<int>")))
       .withColumn("__paras", split(col(textCol), ParaSep))
       .withColumn("__kept", filter(col("__paras"), (p, i) => array_contains(col("__keep"), i)))
@@ -326,12 +315,10 @@ object Dedup {
     val spark = docs.sparkSession
     val idx = paragraphIndexHashes(spark, resolveParagraphIndex(spark, path))
       .withColumnRenamed("h", "__h")
-    val fresh = paragraphOccurrences(docs, idCol, textCol)
+    val fresh = paragraphOccurrences(docs, textCol, col(idCol))
       .join(idx, Seq("__h"), "left_anti")
     val keep = if (withinBatch) firstOccurrence(fresh, idCol) else fresh
-    val keepPos = keep.groupBy(col(idCol))
-      .agg(collect_list(col("__pos")).as("__keep"))
-    attachKeptParagraphs(docs, keepPos, idCol, textCol)
+    attachKeptParagraphs(docs, keep, idCol, textCol)
   }
 
   /** k-word shingles of a text column (empty when fewer than k tokens).
@@ -462,20 +449,6 @@ object Dedup {
   def charNgrams(text: Column, n: Int): Column =
     graft.functions.native.normalizedCharNgrams(text, n)
 
-  /** Shared LSH candidate-generation + exact-Jaccard verification.
-    *
-    * @param sigs  (id, bh: array<bigint>) — per-doc band hashes; empty array
-    *   ⇒ doc is skipped.
-    * @param withHs (id, hs: array<bigint>) — sorted-distinct hashed shingle
-    *   sets ([[graft.functions.HashedShingleSet]]) used for exact
-    *   verification: one merge scan per candidate pair, and the
-    *   verification join shuffles 8-byte hashes instead of gram strings.
-    *
-    * The bucket shuffle carries ONLY (band, bandHash, id) — never shingle
-    * arrays. At 100 TB the explode is `bands`× the id column, not `bands`×
-    * the corpus text; verification re-joins hashed sets onto the (small)
-    * deduplicated candidate set.
-    */
   /** Candidate pairs from LSH buckets WITHOUT a self-join: one shuffle
     * groups ids per (band, bucket-hash), oversized buckets are dropped
     * (`maxBucketSize` — the standard production-LSH guard: a degenerate
@@ -509,6 +482,20 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
+  /** Shared LSH candidate-generation + exact-Jaccard verification.
+    *
+    * @param sigs  (id, bh: array<bigint>) — per-doc band hashes; empty array
+    *   ⇒ doc is skipped.
+    * @param withHs (id, hs: array<bigint>) — sorted-distinct hashed shingle
+    *   sets ([[graft.functions.HashedShingleSet]]) used for exact
+    *   verification: one merge scan per candidate pair, and the
+    *   verification join shuffles 8-byte hashes instead of gram strings.
+    *
+    * The bucket shuffle carries ONLY (band, bandHash, id) — never shingle
+    * arrays. At 100 TB the explode is `bands`× the id column, not `bands`×
+    * the corpus text; verification re-joins hashed sets onto the (small)
+    * deduplicated candidate set.
+    */
   private def lshVerifiedPairs(
       sigs: DataFrame,
       withHs: DataFrame,
@@ -938,6 +925,28 @@ object Dedup {
     * adversarial key distribution costs a counted-and-skipped bucket, not
     * memory.
     */
+  def embeddingNearDup(
+      df: DataFrame,
+      vecCol: String,
+      idCol: String,
+      planes: Int = 12,
+      bands: Int = 16,
+      threshold: Double = 0.99,
+      maxBucketSize: Int = 4096): DataFrame = {
+    val vecs = df.select(col(idCol).as("id"), col(vecCol).as("v"))
+    val buckets = vecs.select(
+      col("id"),
+      posexplode(array((0 until bands).map(b =>
+        Similarity.hyperplaneBucket(col("v"), planes, offset = b * planes)): _*))
+        .as(Seq("band", "bhash")))
+    candidatePairs(buckets, maxBucketSize)
+      .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
+      .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
+      .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
+      .where(col("cosine") >= threshold)
+      .select(col("id_a"), col("id_b"), col("cosine"))
+  }
+
   /** The "SIZE `planes` TO THE CORPUS" rule above as code: the smallest
     * `planes` whose 2^planes per-band buckets keep the AVERAGE bucket at
     * or below `targetBucket` vectors. Pair work per bucket is quadratic
@@ -966,59 +975,6 @@ object Dedup {
   def sizedBands(planes: Int, min: Int = 8): Int =
     math.max(min, 2 * planes)
 
-  def embeddingNearDup(
-      df: DataFrame,
-      vecCol: String,
-      idCol: String,
-      planes: Int = 12,
-      bands: Int = 16,
-      threshold: Double = 0.99,
-      maxBucketSize: Int = 4096): DataFrame = {
-    val vecs = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val buckets = vecs.select(
-      col("id"),
-      posexplode(array((0 until bands).map(b =>
-        Similarity.hyperplaneBucket(col("v"), planes, offset = b * planes)): _*))
-        .as(Seq("band", "bhash")))
-    candidatePairs(buckets, maxBucketSize)
-      .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
-      .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
-      .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
-  }
-
-  /** Duplicate clusters from verified near-dup pairs: connected components
-    * of the pair graph by iterative min-label propagation, so an entire
-    * duplicate cluster (a A~B, B~C chain) collapses to one representative —
-    * the step that turns pairwise LSH output into "keep one copy per
-    * cluster".
-    *
-    * Each iteration is one join + one aggregate (a single shuffle round)
-    * propagating the smallest reachable id; convergence needs
-    * O(component diameter) rounds — near-dup clusters are dense template
-    * families with tiny diameters, so 3–5 rounds in practice. Each round's
-    * labels are persisted and the previous round unpersisted, keeping
-    * lineage flat; `maxIters` bounds the worst case (a path graph), and
-    * hitting it without convergence THROWS rather than returning labels
-    * where one component carries two representatives — silently-partial
-    * dedup is the worst failure mode a 100 TB pipeline can have.
-    * Returns (id, rep) for EVERY node; singletons are their own rep. The
-    * returned frame is eagerly materialized with lineage truncated (the
-    * loop's cache is released before returning; no unpersist needed):
-    * a RELIABLE checkpoint when `spark.sparkContext.setCheckpointDir` has
-    * been called — set one in cluster deployments, since a local checkpoint
-    * cannot be recomputed after an executor is lost — and an executor-local
-    * checkpoint otherwise.
-    *
-    * `maxDriverEdges` gates the same adaptive small-graph fast path as
-    * [[dedupClustersStar]]: an integral-id pair graph under the cap runs
-    * as ONE bounded collect + driver union-find (identical min-id
-    * labels, zero propagation rounds). NOTE the cap is a DRIVER-side
-    * footprint callers inherit by default — up to 1M edge rows (~tens of
-    * MB) on the driver heap; size it down for small-heap drivers, or
-    * pass 0 to force the distributed rounds.
-    */
   /** Shared ADAPTIVE small-graph fast path of [[dedupClusters]] and
     * [[dedupClustersStar]]: a bounded probe (at most `cap + 1` edge rows
     * ever land on the driver, so the probe itself cannot OOM — but note
@@ -1082,6 +1038,37 @@ object Dedup {
       .select(col("id"), coalesce(col("__rep0"), col("id")).as("rep")))
   }
 
+  /** Duplicate clusters from verified near-dup pairs: connected components
+    * of the pair graph by iterative min-label propagation, so an entire
+    * duplicate cluster (a A~B, B~C chain) collapses to one representative —
+    * the step that turns pairwise LSH output into "keep one copy per
+    * cluster".
+    *
+    * Each iteration is one join + one aggregate (a single shuffle round)
+    * propagating the smallest reachable id; convergence needs
+    * O(component diameter) rounds — near-dup clusters are dense template
+    * families with tiny diameters, so 3–5 rounds in practice. Each round's
+    * labels are persisted and the previous round unpersisted, keeping
+    * lineage flat; `maxIters` bounds the worst case (a path graph), and
+    * hitting it without convergence THROWS rather than returning labels
+    * where one component carries two representatives — silently-partial
+    * dedup is the worst failure mode a 100 TB pipeline can have.
+    * Returns (id, rep) for EVERY node; singletons are their own rep. The
+    * returned frame is eagerly materialized with lineage truncated (the
+    * loop's cache is released before returning; no unpersist needed):
+    * a RELIABLE checkpoint when `spark.sparkContext.setCheckpointDir` has
+    * been called — set one in cluster deployments, since a local checkpoint
+    * cannot be recomputed after an executor is lost — and an executor-local
+    * checkpoint otherwise.
+    *
+    * `maxDriverEdges` gates the same adaptive small-graph fast path as
+    * [[dedupClustersStar]]: an integral-id pair graph under the cap runs
+    * as ONE bounded collect + driver union-find (identical min-id
+    * labels, zero propagation rounds). NOTE the cap is a DRIVER-side
+    * footprint callers inherit by default — up to 1M edge rows (~tens of
+    * MB) on the driver heap; size it down for small-heap drivers, or
+    * pass 0 to force the distributed rounds.
+    */
   def dedupClusters(
       nodes: DataFrame,
       idCol: String,
@@ -1218,8 +1205,8 @@ object Dedup {
     *     set-difference that only runs when the checksum matches, so a
     *     hash collision can delay convergence detection but never emit
     *     wrong reps.
-    */
-  /** `maxDriverEdges` gates the ADAPTIVE small-graph fast path: when the
+    *
+    * `maxDriverEdges` gates the ADAPTIVE small-graph fast path: when the
     * (deduplicated, self-loop-free) edge set fits under it, the closure
     * runs as a driver-side union-find over one bounded collect instead of
     * alternating star rounds — identical min-id labels, zero iterative

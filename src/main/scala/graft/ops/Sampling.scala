@@ -240,13 +240,6 @@ object Sampling {
       bucketHexLen, maxClassificationRows)
   }
 
-  /** Per-stratum-budget core of [[takeTokenBudget]] (same two-phase
-    * bucket-prefix plan; only the driver-side classification consults a
-    * per-stratum budget). `budgetOf` receives the stratum value (None for
-    * the null stratum); a budget <= 0 drops the stratum entirely.
-    * `tokens` is any non-negative long expression — `lit(1L)` turns the
-    * token budget into an exact row quota.
-    */
   /** Hard bound on the driver-side bucket-classification table (strata ×
     * 16^bucketHexLen rows at the widest attempted width). 2M rows ≈ low
     * hundreds of MB of Rows — below where the collect would take down the
@@ -258,6 +251,13 @@ object Sampling {
     */
   private[ops] val MaxClassificationRows: Int = 2000000
 
+  /** Per-stratum-budget core of [[takeTokenBudget]] (same two-phase
+    * bucket-prefix plan; only the driver-side classification consults a
+    * per-stratum budget). `budgetOf` receives the stratum value (None for
+    * the null stratum); a budget <= 0 drops the stratum entirely.
+    * `tokens` is any non-negative long expression — `lit(1L)` turns the
+    * token budget into an exact row quota.
+    */
   private[ops] def takeBudgets(
       df: DataFrame,
       stratumCol: String,

@@ -176,25 +176,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
   }
 
-  /** IVF (inverted-file) top-k: the classic two-stage ANN index expressed
-    * as dataframes.
-    *
-    *  1. *Train*: a deterministic coarse quantizer — corpus vectors are
-    *     hashed into `nlist` cells by [[hyperplaneBucket]] and each cell's
-    *     centroid is its element-wise mean (one `posexplode` + groupBy
-    *     job, the only action in the build).
-    *  2. *Assign*: every corpus vector re-assigns to its nearest centroid
-    *     (one Lloyd half-step — tightens cells vs. the raw hash) via a
-    *     per-row argmax over the broadcast centroid literals; native cosine
-    *     kernel, no shuffle.
-    *  3. *Probe*: each query scores all centroids, keeps the `nprobe`
-    *     nearest cells, and only same-cell corpus vectors get an exact
-    *     cosine + window top-k.
-    *
-    * At 100 TB: centroids are tiny (nlist × dim) and live in the plan as
-    * literals — no join to distribute them; the one corpus shuffle is on the
-    * int cell key; recall trades against `nprobe` exactly like FAISS IVF.
-    */
   /** A built IVF index: the trained centroids (tiny — nlist × dim, they
     * live in query plans as literals) plus the cell-assigned corpus.
     * Nothing corpus-sized is cached — [[ivfBuild]] trains centroids on a
@@ -349,7 +330,26 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
   }
 
-  /** One-shot build + probe. The probe result (queries × k rows — tiny) is
+  /** IVF (inverted-file) top-k: the classic two-stage ANN index expressed
+    * as dataframes.
+    *
+    *  1. *Train*: a deterministic coarse quantizer — corpus vectors are
+    *     hashed into `nlist` cells by [[hyperplaneBucket]] and each cell's
+    *     centroid is its element-wise mean (one `posexplode` + groupBy
+    *     job, the only action in the build).
+    *  2. *Assign*: every corpus vector re-assigns to its nearest centroid
+    *     (one Lloyd half-step — tightens cells vs. the raw hash) via a
+    *     per-row argmax over the broadcast centroid literals; native cosine
+    *     kernel, no shuffle.
+    *  3. *Probe*: each query scores all centroids, keeps the `nprobe`
+    *     nearest cells, and only same-cell corpus vectors get an exact
+    *     cosine + window top-k.
+    *
+    * At 100 TB: centroids are tiny (nlist × dim) and live in the plan as
+    * literals — no join to distribute them; the one corpus shuffle is on the
+    * int cell key; recall trades against `nprobe` exactly like FAISS IVF.
+    *
+    * One-shot build + probe. The probe result (queries × k rows — tiny) is
     * eagerly materialized (reliable checkpoint when a checkpoint dir is
     * set, local otherwise — see [[Materialize.eager]]) so downstream
     * actions read the small result instead of re-running the corpus scans;
@@ -507,13 +507,6 @@ object Similarity {
     Materialize.eager(ivfKnnJoinPlan(idx, df, vecCol, idCol, k, nprobe))
   }
 
-  /** The un-materialized [[ivfKnnJoin]] plan against an already-built
-    * index — exposed so multi-batch callers can reuse one build and the
-    * plan suite can pin the join shape. The candidate join carries no
-    * strategy hint: Catalyst picks by size stats (broadcast when one side
-    * is genuinely small, shuffle join on the int cell key when both are
-    * corpus-sized — the 100 TB shape).
-    */
   /** The candidate-join sides, salted when the index flags dense cells
     * ([[IvfIndex.cellSalts]]): the assigned side salts deterministically by
     * `xxhash64(id) mod S(cell)`, the probe side explodes every salt of each
@@ -540,6 +533,13 @@ object Similarity {
         .drop("salt")
     }
 
+  /** The un-materialized [[ivfKnnJoin]] plan against an already-built
+    * index — exposed so multi-batch callers can reuse one build and the
+    * plan suite can pin the join shape. The candidate join carries no
+    * strategy hint: Catalyst picks by size stats (broadcast when one side
+    * is genuinely small, shuffle join on the int cell key when both are
+    * corpus-sized — the 100 TB shape).
+    */
   private[graft] def ivfKnnJoinPlan(
       idx: IvfIndex,
       df: DataFrame,

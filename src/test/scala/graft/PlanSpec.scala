@@ -490,9 +490,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("containment pairs shuffle gram keys and id pairs, never document text") {
-    val p = plan(ops.Decontam.containmentPairs(
-      Tables(spark, dir, "documents"), "doc_id", "text", n = 5,
-      materialize = false))
+    val pg = ops.Decontam.gramPostings(Tables(spark, dir, "documents"), "doc_id", "text", n = 5)
+    val p = plan(ops.Decontam.containment(
+      pg, pg, Seq(pg), ops.Decontam.Within, maxDf = 10000L, minContainment = 0.5))
     p.split("\n").filter(_.contains("Exchange")).foreach { line =>
       assert(!line.contains("text#"), s"text reached a shuffle:\n$p")
     }
@@ -500,9 +500,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("winnowing pairs: selection fused into the scan, no text in any shuffle") {
-    val p = plan(ops.Decontam.winnowingPairs(
-      Tables(spark, dir, "documents"), "doc_id", "text", n = 5, w = 4,
-      materialize = false))
+    val fp = ops.Decontam.fpPostings(
+      Tables(spark, dir, "documents"), "doc_id", "text", n = 5, w = 4, idAs = "doc_id")
+    val p = plan(ops.Decontam.winnowing(
+      fp, fp, Seq(fp), ops.Decontam.Within, maxDf = 10000L, minShared = 2L))
     p.split("\n").filter(_.contains("Exchange")).foreach { line =>
       assert(!line.contains("text#"), s"text reached a shuffle:\n$p")
     }

@@ -319,7 +319,7 @@ object OpsPropertySpec extends Properties("graft.ops") {
         Gen.listOfN(len, Gen.oneOf("a", "b", "c", "d", "e")))))
 
   property("containmentPairs equals the exhaustive set-containment computation") =
-    forAll(genTokenDocs) { docsToks =>
+    forAll(genTokenDocs, Gen.oneOf(2L, 3L, Long.MaxValue)) { (docsToks, maxDf) =>
       val n = 3
       val tau = 0.3
       val rows = docsToks.zipWithIndex.map { case (ts, i) =>
@@ -332,20 +332,35 @@ object OpsPropertySpec extends Properties("graft.ops") {
       val gsets = docsToks.zipWithIndex.map { case (ts, i) =>
         (i + 1).toLong -> ts.sliding(n).filter(_.sizeIs == n).map(_.mkString(" ")).toSet
       }.filter(_._2.nonEmpty).toMap
-      val expected = (for {
+      // document frequency over the whole corpus (both sides of the cross
+      // forms): a gram counts as shared only while at most maxDf docs hold it
+      val docFreq = gsets.values.toSeq.flatten.groupBy(identity).map { case (g, o) => g -> o.size }
+      def pairs(keep: (Long, Long) => Boolean) = (for {
         (a, ga) <- gsets
         (b, gb) <- gsets
-        if a < b
-        sh = ga.intersect(gb).size
+        if keep(a, b)
+        sh = ga.intersect(gb).count(docFreq(_) <= maxDf)
         if sh > 0
-        if sh.toDouble / math.min(ga.size, gb.size) >= tau
       } yield (a, b, sh.toLong, ga.size.toLong, gb.size.toLong)).toSet
-      val got = Decontam.containmentPairs(
-        df, "doc_id", "text", n, minContainment = tau, maxDf = Long.MaxValue)
-        .collect()
+      def contained(ps: Set[(Long, Long, Long, Long, Long)]) = ps.filter {
+        case (_, _, sh, na, nb) => sh.toDouble / math.min(na, nb) >= tau
+      }
+      def got(out: org.apache.spark.sql.DataFrame) = out.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
         .toSet
-      got == expected
+      import org.apache.spark.sql.functions.col
+      val within = got(Decontam.containmentPairs(
+        df, "doc_id", "text", n, minContainment = tau, maxDf = maxDf))
+      // odd ids arrive against the even-id standing corpus
+      val across = got(Decontam.containmentPairsAgainst(
+        df.where(col("doc_id") % 2 === 1), df.where(col("doc_id") % 2 === 0),
+        "doc_id", "text", n, minContainment = tau, maxDf = maxDf))
+      // w = 1 keeps every distinct gram: shared_fps = shared distinct grams
+      val winnowed = got(Decontam.winnowingPairs(
+        df, "doc_id", "text", n, w = 1, minShared = 1L, maxDf = maxDf))
+      within == contained(pairs(_ < _)) &&
+        across == contained(pairs((a, b) => a % 2 == 1 && b % 2 == 0)) &&
+        winnowed == pairs(_ < _)
     }
 
   private val genVecs: Gen[List[List[Float]]] =
@@ -528,6 +543,42 @@ object OpsPropertySpec extends Properties("graft.ops") {
             p until p + n
         }.flatten.toSet
         id -> covered.size.toLong
+      }
+      got == expect
+    }
+
+  property("dedupRepeatedCharSpans matches an independent interval-union recomputation") =
+    forAll(Gen.choose(1, 6).flatMap(k => Gen.listOfN(k,
+      Gen.choose(1, 3).flatMap(m => Gen.listOfN(m, Gen.choose(0, 4)))))) { docFrags =>
+      val n = 4
+      // fragments concatenate with no separator, so windows straddle them;
+      // the pool mixes CJK, ASCII and a supplementary-plane code point
+      val pool = Vector("重复的段落", "abcab", "𝄞xy𝄞", "数据集", "q r s")
+      val rows = docFrags.zipWithIndex.map { case (ps, i) =>
+        ((i + 1).toLong, ps.map(pool).mkString)
+      }
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map { case (id, t) => Row(id, t) }, 2), docSt)
+      val got = Decontam.dedupRepeatedCharSpans(df, "doc_id", "text", n)
+        .select("doc_id", "cleaned", "n_removed_chars").collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+      // independent recomputation over code points: gram → owning docs,
+      // winner = min id, covered = union of [p, p+n) over losing occurrences
+      val cps = rows.map { case (id, t) =>
+        id -> t.codePoints().toArray.toSeq.map(c => new String(Character.toChars(c)))
+      }.toMap
+      val occ = for {
+        (id, cs) <- cps.toSeq
+        p <- 0 to cs.length - n
+      } yield (id, p, cs.slice(p, p + n).mkString)
+      val gramDocs = occ.groupBy(_._3).map { case (g, os) => g -> os.map(_._1).toSet }
+      val expect = cps.map { case (id, cs) =>
+        val covered = occ.collect {
+          case (d, p, g) if d == id && gramDocs(g).size >= 2 && gramDocs(g).min != id =>
+            p until p + n
+        }.flatten.toSet
+        val kept = cs.indices.filterNot(covered).map(cs).mkString
+        id -> (kept, covered.size.toLong)
       }
       got == expect
     }

@@ -5,7 +5,7 @@ comments and `/* */` block comments (which nest in Scala) are removed.
 Comment markers inside string and character literals are code, and a
 triple-quoted string counts on every line it spans.
 
-    python3 tools/loc.py [--rev REV] [--defs] [PATH ...]
+    python3 tools/loc.py [--rev REV] [--defs | --stacked-docs] [PATH ...]
 
 PATHs are files or directories relative to the repo root (default
 `src/main`). With `--rev`, files are read from that git revision instead of
@@ -13,6 +13,9 @@ the working tree. With `--defs`, each top-level `def` (one not nested in
 another def) is listed with its own count instead: the lines from its
 `def` keyword up to the next member at its brace depth, or the brace that
 closes its enclosing body. A def nested inside counts in its parent.
+With `--stacked-docs`, each scaladoc whose next non-blank line opens another
+`/**` is listed as `path:line`: Scaladoc attaches only the last of two
+stacked doc comments, so the first one documents nothing.
 """
 import argparse
 import os
@@ -29,11 +32,14 @@ def count(text):
 
 
 def scan(text):
-    """(set of code line indices, [(line, +1 | -1)] for each code brace)."""
+    """(set of code line indices, [(line, +1 | -1)] for each code brace,
+    [(start, end)] text offsets of each outermost `/** */` comment)."""
     code_lines = set()
     braces = []
+    docs = []
     line = 0
     depth = 0  # block comment nesting
+    doc = None  # offset of the open outermost comment when it is a scaladoc
     i, n = 0, len(text)
     while i < n:
         c = text[i]
@@ -48,6 +54,8 @@ def scan(text):
             elif text.startswith("*/", i):
                 depth -= 1
                 i += 2
+                if not depth and doc is not None:
+                    docs.append((doc, i))
             else:
                 i += 1
             continue
@@ -56,6 +64,7 @@ def scan(text):
                 i += 1
             continue
         if text.startswith("/*", i):
+            doc = i if text.startswith("/**", i) and not text.startswith("/**/", i) else None
             depth = 1
             i += 2
             continue
@@ -87,7 +96,7 @@ def scan(text):
             if c in "{}":
                 braces.append((line, 1 if c == "{" else -1))
             i += 1
-    return code_lines, braces
+    return code_lines, braces, docs
 
 
 MODIFIERS = r"(?:@\w+\s+|(?:private|protected)(?:\[[\w.]+\])?\s+|" \
@@ -98,7 +107,7 @@ MEMBER = re.compile(r"^\s*" + MODIFIERS + r"(?:def|val|var|object|class|trait|ty
 
 def defs(text):
     """[(name, first line (1-based), count)] of each top-level def."""
-    code_lines, braces = scan(text)
+    code_lines, braces, _ = scan(text)
     lines = text.split("\n")
     start = [0] * (len(lines) + 1)  # brace depth at the start of each line
     low = [0] * (len(lines) + 1)  # lowest depth reached on the line
@@ -127,6 +136,21 @@ def defs(text):
             cur[3] += 1
     if cur:
         out.append((cur[0], cur[1] + 1, cur[3]))
+    return out
+
+
+def stacked_docs(text):
+    """First lines (1-based) of the scaladocs followed, past blank space
+    only, by another scaladoc."""
+    docs = scan(text)[2]
+    opens = {start for start, _ in docs}
+    out = []
+    for start, end in docs:
+        nxt = end
+        while nxt < len(text) and text[nxt].isspace():
+            nxt += 1
+        if nxt in opens:
+            out.append(text.count("\n", 0, start) + 1)
     return out
 
 
@@ -163,13 +187,21 @@ def counts(paths=("src/main",), rev=None):
 def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--rev", help="git revision to read instead of the working tree")
-    ap.add_argument("--defs", action="store_true", help="count per top-level def")
+    mode = ap.add_mutually_exclusive_group()
+    mode.add_argument("--defs", action="store_true", help="count per top-level def")
+    mode.add_argument("--stacked-docs", action="store_true",
+                      help="list scaladocs directly followed by another scaladoc")
     ap.add_argument("paths", nargs="*", default=["src/main"])
     args = ap.parse_args(argv)
     if args.defs:
         for p, text in files(args.paths, args.rev):
             for name, line, c in defs(text):
                 print(f"{c:7d}  {p}:{line}  {name}")
+        return
+    if args.stacked_docs:
+        for p, text in files(args.paths, args.rev):
+            for line in stacked_docs(text):
+                print(f"{p}:{line}")
         return
     per_file = counts(args.paths, args.rev)
     for p, c in per_file.items():

@@ -72,6 +72,36 @@ class DefsTest(unittest.TestCase):
         self.assertEqual(loc.defs(text), [("outer", 2, 5), ("toString", 8, 1)])
 
 
+class StackedDocsTest(unittest.TestCase):
+
+    def test_stacked_scaladocs_list_the_first(self):
+        text = ("object A {\n"
+                "  /** Orphaned doc of f.\n"
+                "    */\n"
+                "  /** Doc of g. */\n"
+                "  def g = 1\n"
+                "}\n")
+        self.assertEqual(loc.stacked_docs(text), [2])
+
+    def test_docs_separated_by_code_are_not_stacked(self):
+        text = ("/** Doc of f. */\n"
+                "def f = 1\n"
+                "/** Doc of g.\n"
+                "  */\n"
+                "def g = \"/** not a doc */\"\n"
+                "/** Doc of h. */ def h = 2\n")
+        self.assertEqual(loc.stacked_docs(text), [])
+
+    def test_docs_separated_by_blank_lines_only_are_stacked(self):
+        text = ("/** First. */\n"
+                "\n"
+                "   \n"
+                "/** Second. */\n"
+                "/* a plain block comment is not a doc */\n"
+                "def f = 1\n")
+        self.assertEqual(loc.stacked_docs(text), [1])
+
+
 @unittest.skipUnless(has_rev(PARENT), "parent revision not in this checkout")
 class ParentTreeTest(unittest.TestCase):
 
