@@ -1043,6 +1043,78 @@ class OpsSpec extends SparkSpec {
     assert(all == Set(1L, 2L, 3L))
   }
 
+  test("a zero-norm neighbor ranks first in every top-k form and matches no range or band form") {
+    // vector 0 has zero magnitude: its cosine to anything is NaN, and NaN
+    // sorts above every number — top-k forms rank it first, floor and band
+    // forms must drop it
+    val st = struct("vec_id" -> LongType, "embedding" -> ArrayType(FloatType))
+    val corpus = frame(st,
+      Row(0L, Seq(0.0f, 0.0f, 0.0f)),
+      Row(1L, Seq(1.0f, 0.1f, 0.0f)), Row(2L, Seq(0.9f, 0.2f, 0.1f)),
+      Row(3L, Seq(-0.8f, 0.5f, 0.2f)), Row(4L, Seq(0.1f, -1.0f, 0.3f)),
+      Row(5L, Seq(0.2f, 0.3f, -0.9f)), Row(6L, Seq(-0.5f, -0.5f, 0.6f)))
+    val queries = frame(st,
+      Row(100L, Seq(1.0f, 0.0f, 0.0f)), Row(101L, Seq(-0.3f, 0.8f, 0.4f)),
+      Row(102L, Seq(0.4f, -0.6f, -0.5f)))
+    val (nlist, zero) = (4, 0L)
+    // (query, rank, neighbor, cosine) rows of a top-k frame
+    def ranked(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    def firstIsZero(name: String, rows: Seq[(Long, Int, Long, Double)], qs: Set[Long]) = {
+      val first = rows.filter(_._2 == 1).map(r => r._1 -> r).toMap
+      assert(first.keySet == qs, s"$name: rank-1 rows for ${first.keySet}, want $qs")
+      qs.foreach { q =>
+        assert(first(q)._3 == zero && first(q)._4.isNaN,
+          s"$name: query $q rank 1 is ${first(q)}, want the zero vector with NaN")
+      }
+    }
+    val qIds = Set(100L, 101L, 102L)
+    firstIsZero("bruteForceTopK",
+      ranked(Similarity.bruteForceTopK(corpus, queries, "embedding", "vec_id", k = 2)), qIds)
+    val idx = Similarity.ivfBuild(corpus, "embedding", "vec_id", nlist = nlist)
+    firstIsZero("ivfProbe", ranked(Similarity.ivfProbe(
+      idx, queries, "embedding", "vec_id", k = 2, nprobe = nlist)), qIds)
+    // self-join: every vector but the zero one itself finds it first
+    firstIsZero("ivfKnnJoinPlan", ranked(Similarity.ivfKnnJoinPlan(
+      idx, corpus, "embedding", "vec_id", k = 2, nprobe = nlist)).filter(_._1 != zero),
+      (1L to 6L).toSet)
+    // one plane, one band: the zero vector's bucket is 0, so exactly the
+    // queries in bucket 0 collide with it
+    val planes = 1
+    val bucket0 = queries
+      .where(Similarity.hyperplaneBucket(col("embedding"), planes) === 0)
+      .collect().map(_.getLong(0)).toSet
+    assert(bucket0.nonEmpty, "fixture must put a query in the zero vector's bucket")
+    firstIsZero("lshTopK", ranked(Similarity.lshTopK(corpus, queries, "embedding", "vec_id",
+      k = 2, planes = planes, bands = 1)).filter(r => bucket0(r._1)), bucket0)
+    val dir = java.nio.file.Files.createTempDirectory("graft_nanidx").toString + "/idx"
+    Similarity.writeAnnIndex(corpus, "embedding", "vec_id", dir, nlist = nlist)
+    firstIsZero("annTopKAgainstIndex", ranked(Similarity.annTopKAgainstIndex(
+      queries, "embedding", "vec_id", dir, k = 2, nprobe = nlist)), qIds)
+
+    // floor and band forms: the widest floor and band still never return it
+    def neighbors(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().flatMap(r => cols.indices.map(r.getLong)).toSet
+    val noZero = Seq(
+      "rangeSearch" -> neighbors(Similarity.rangeSearch(
+        corpus, queries, "embedding", "vec_id", minCosine = -1.0), "query_id", "neighbor_id"),
+      "ivfSimilarityJoinPlan" -> neighbors(Similarity.ivfSimilarityJoinPlan(
+        idx, corpus, "embedding", "vec_id", minCosine = -1.0, nprobe = nlist), "id_a", "id_b"),
+      "annRangeAgainstIndex" -> neighbors(Similarity.annRangeAgainstIndex(
+        queries, "embedding", "vec_id", dir, floor = -1.0, nprobe = nlist),
+        "query_id", "neighbor_id"),
+      "hardNegatives" -> neighbors(Similarity.hardNegatives(
+        corpus, queries, "embedding", "vec_id", k = 10, maxCosine = 1.0, minCosine = -1.0),
+        "query_id", "neighbor_id"),
+      "hardNegativesAgainstIndex" -> neighbors(Similarity.hardNegativesAgainstIndex(
+        queries, "embedding", "vec_id", dir, k = 10, maxCosine = 1.0, minCosine = -1.0,
+        nprobe = nlist), "query_id", "neighbor_id"))
+    noZero.foreach { case (name, ids) =>
+      assert(ids.nonEmpty, s"$name: the fixture must yield some neighbors")
+      assert(!ids.contains(zero), s"$name returned the zero-norm vector")
+    }
+  }
+
   test("takePerStratum: exactly n per stratum, deterministic, small strata whole") {
     val df = docs((1L to 30L).map(i => i -> s"doc number $i body"): _*)
       .withColumn("grp", (col("doc_id") % 3 === 0).cast("string"))
