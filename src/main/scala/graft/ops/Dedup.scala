@@ -943,7 +943,8 @@ object Dedup {
       .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
       .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
       .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
-      .where(col("cosine") >= threshold)
+      // a zero vector scores NaN against everything, and Spark orders NaN above every number
+      .where(col("cosine") >= threshold && !isnan(col("cosine")))
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
 
@@ -1384,7 +1385,7 @@ object Dedup {
     val r = df.select(col(idCol).as("id_b"), col(vecCol).as("v_b"))
     l.join(r, col("id_a") < col("id_b"))
       .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
-      .where(col("cosine") >= threshold)
+      .where(col("cosine") >= threshold && !isnan(col("cosine")))
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
 

@@ -67,6 +67,79 @@ object Similarity {
       when(dot > 0, shiftleft(lit(1), p)).otherwise(lit(0))
     }.reduce(_ + _)
 
+  /** Where a neighbor op's queries find their candidates. Each op keeps its
+    * own join strategy:
+    *   - [[Cross]]: the broadcast query side against every corpus row;
+    *   - [[Cells]]: the query side explodes its `nprobe` nearest cells and
+    *     joins the cell-assigned corpus — as a broadcast, unsalted probe
+    *     ([[ivfProbe]]'s small query batch) or through
+    *     [[saltedCandidateJoin]] with no hint (corpus-sized query sides);
+    *   - [[Bands]]: both sides posexplode `bands` hyperplane buckets of
+    *     `planes` bits each, the query side broadcast.
+    */
+  private sealed trait Candidates
+  private final case class Cross(corpus: DataFrame) extends Candidates
+  private final case class Cells(idx: IvfIndex, nprobe: Int, broadcastProbe: Boolean)
+    extends Candidates
+  private final case class Bands(corpus: DataFrame, planes: Int, bands: Int)
+    extends Candidates
+
+  /** The one candidate scorer behind every neighbor op: the query side
+    * `(query_id, qv)` meets its candidates `(neighbor_id, cv)`, self-pairs
+    * drop, and each remaining pair gets its exact `cosine` — returned with
+    * the join's own columns (`cell`, `band`, …) for the caller to project.
+    */
+  private def scoredCandidates(
+      queries: DataFrame, vecCol: String, idCol: String, from: Candidates): DataFrame = {
+    def side(df: DataFrame, id: String, vec: String, extra: Column*) =
+      df.select(Seq(col(idCol).as(id), col(vecCol).as(vec)) ++ extra: _*)
+    def bandBuckets(planes: Int, bands: Int) =
+      posexplode(array((0 until bands).map(b =>
+        hyperplaneBucket(col(vecCol), planes, offset = b * planes)): _*))
+        .as(Seq("band", "bucket"))
+    val pairs = from match {
+      case Cross(corpus) =>
+        broadcast(side(queries, "query_id", "qv"))
+          .crossJoin(side(corpus, "neighbor_id", "cv"))
+      case Cells(idx, nprobe, broadcastProbe) =>
+        val probed = side(queries, "query_id", "qv",
+          explode(probeCells(idx.centroids, col(vecCol), nprobe)).as("cell"))
+        if (broadcastProbe) broadcast(probed).join(idx.assigned, Seq("cell"))
+        else saltedCandidateJoin(idx, probed)
+      case Bands(corpus, planes, bands) =>
+        broadcast(side(queries, "query_id", "qv", bandBuckets(planes, bands)))
+          .join(side(corpus, "neighbor_id", "cv", bandBuckets(planes, bands)),
+            Seq("band", "bucket"))
+    }
+    pairs.where(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine", cosine(col("qv"), col("cv")))
+  }
+
+  /** The one band/floor filter: scored pairs with `cosine` in
+    * `[floor, ceiling)`. A zero-magnitude vector on either side scores NaN,
+    * which sorts ABOVE every number in both Spark and DuckDB: a ceiling
+    * already rejects it, and a bare floor needs the explicit guard, or a
+    * zero vector would match every neighbor at any floor.
+    */
+  private def inBand(
+      scored: DataFrame, floor: Double, ceiling: Option[Double] = None): DataFrame =
+    scored.where(col("cosine") >= floor &&
+      ceiling.fold(!isnan(col("cosine")))(col("cosine") < _))
+
+  /** The one per-query rank window: each query's `k` best scored pairs by
+    * `(cosine DESC, neighbor_id)` as `(query_id, rank, neighbor_id,
+    * cosine)`. NaN ranks first, so an unfiltered zero-magnitude neighbor
+    * tops every list.
+    */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    scored
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+  }
+
   /** Exact top-k neighbors for each query id. Queries (few) are broadcast;
     * the corpus streams through map-side — no corpus shuffle, then one
     * window partitioned by query for ranking.
@@ -76,20 +149,8 @@ object Similarity {
       queries: DataFrame,
       vecCol: String,
       idCol: String,
-      k: Int): DataFrame = {
-    val q = broadcast(queries.select(
-      col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = q.crossJoin(c)
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-  }
+      k: Int): DataFrame =
+    topKPerQuery(scoredCandidates(queries, vecCol, idCol, Cross(corpus)), k)
 
   /** Element-wise mean of per-row embedding arrays grouped by id — the
     * pooling step that turns per-frame (or per-chunk) vectors into one
@@ -162,19 +223,9 @@ object Similarity {
       queries: DataFrame,
       vecCol: String,
       idCol: String,
-      minCosine: Double): DataFrame = {
-    val q = broadcast(queries.select(
-      col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    q.crossJoin(c)
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-      // NaN (a zero-magnitude vector on either side) sorts ABOVE every
-      // number in both Spark and DuckDB, so without this guard a zero
-      // vector would "match" every neighbor at any threshold
-      .where(col("cosine") >= minCosine && !isnan(col("cosine")))
+      minCosine: Double): DataFrame =
+    inBand(scoredCandidates(queries, vecCol, idCol, Cross(corpus)), minCosine)
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
-  }
 
   /** A built IVF index: the trained centroids (tiny — nlist × dim, they
     * live in query plans as literals) plus the cell-assigned corpus.
@@ -198,51 +249,55 @@ object Similarity {
   final case class IvfIndex(
       centroids: Seq[(Int, Seq[Float])],
       assigned: DataFrame,
-      cellSalts: Map[Int, Int] = Map.empty) {
+      cellSalts: Map[Int, Int] = Map.empty)
 
-    /** No-op, kept for source compatibility: [[ivfBuild]] no longer
-      * persists anything (a 100 TB build must not park the corpus in
-      * executor storage to train a few centroids).
-      */
-    def unpersist(): Unit = ()
+  /** Trained IVF centroids: `(cell id, centroid)`, sorted by cell id. */
+  private type Centroids = Seq[(Int, Seq[Float])]
 
-    /** One `(sim, negcid, cid)` struct per centroid. Lexicographic struct
-      * ordering then gives argmax/top-n directly — max sim, ties broken
-      * toward the lowest cid (negcid inverts the tie direction) — through
-      * codegen'd `greatest` / `sort_array`, no lambda comparators.
-      *
-      * nanvl: a zero-norm vector has NaN cosine with every centroid and
-      * would otherwise lose the argmax to the -2.0 sentinel, landing in an
-      * unreachable cell -1 — map NaN below every real similarity but above
-      * the sentinel so such vectors stay probe-able.
-      */
-    private[Similarity] def cellSimStructs(vec: Column): Seq[Column] =
-      centroids.map { case (cid, cv) =>
-        struct(
-          nanvl(cosine(vec, typedlit(cv)), lit(-1.5)).as("sim"),
-          lit(-cid).as("negcid"),
-          lit(cid).as("cid"))
-      }
-
-    /** Nearest-centroid argmax via `greatest` over the sim structs. The
-      * sentinel beats only null sims (null vector → cell -1, unreachable),
-      * preserving the pre-struct semantics.
-      */
-    private[Similarity] def nearestCell(vec: Column): Column = {
-      val sentinel = struct(
-        lit(-2.0).as("sim"), lit(Int.MinValue).as("negcid"), lit(-1).as("cid"))
-      greatest((sentinel +: cellSimStructs(vec)): _*).getField("cid")
+  /** One `(sim, negcid, cid)` struct per centroid. Lexicographic struct
+    * ordering then gives argmax/top-n directly — max sim, ties broken
+    * toward the lowest cid (negcid inverts the tie direction) — through
+    * codegen'd `greatest` / `sort_array`, no lambda comparators.
+    *
+    * nanvl: a zero-norm vector has NaN cosine with every centroid and
+    * would otherwise lose the argmax to the -2.0 sentinel, landing in an
+    * unreachable cell -1 — map NaN below every real similarity but above
+    * the sentinel so such vectors stay probe-able.
+    */
+  private def cellSimStructs(centroids: Centroids, vec: Column): Seq[Column] =
+    centroids.map { case (cid, cv) =>
+      struct(
+        nanvl(cosine(vec, typedlit(cv)), lit(-1.5)).as("sim"),
+        lit(-cid).as("negcid"),
+        lit(cid).as("cid"))
     }
 
-    /** The `nprobe` nearest cell ids, best first — `sort_array` descending
-      * on the struct ordering (no comparator lambda; the old array_sort
-      * comparator was interpreted per comparison per query row).
-      */
-    private[Similarity] def probeCells(vec: Column, nprobe: Int): Column =
-      transform(
-        slice(sort_array(array(cellSimStructs(vec): _*), asc = false), 1, nprobe),
-        s => s.getField("cid"))
+  /** Nearest-centroid argmax via `greatest` over the sim structs. The
+    * sentinel beats only null sims (null vector → cell -1, unreachable),
+    * preserving the pre-struct semantics.
+    */
+  private def nearestCell(centroids: Centroids, vec: Column): Column = {
+    val sentinel = struct(
+      lit(-2.0).as("sim"), lit(Int.MinValue).as("negcid"), lit(-1).as("cid"))
+    greatest((sentinel +: cellSimStructs(centroids, vec)): _*).getField("cid")
   }
+
+  /** The `nprobe` nearest cell ids, best first — `sort_array` descending
+    * on the struct ordering (no comparator lambda; the old array_sort
+    * comparator was interpreted per comparison per query row).
+    */
+  private def probeCells(centroids: Centroids, vec: Column, nprobe: Int): Column =
+    transform(
+      slice(sort_array(array(cellSimStructs(centroids, vec): _*), asc = false), 1, nprobe),
+      s => s.getField("cid"))
+
+  /** An IVF assigned side: `(neighbor_id, cv, cell)` rows of `df`, each
+    * vector in its nearest centroid's cell — a plain projection.
+    */
+  private def cellAssigned(
+      centroids: Centroids, df: DataFrame, vecCol: String, idCol: String): DataFrame =
+    df.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+      nearestCell(centroids, col(vecCol)).as("cell"))
 
   /** Default dense-cell threshold for persisted-index probe joins: a cell
     * holding more than this fraction of the stored corpus salts. Matches
@@ -278,7 +333,7 @@ object Similarity {
   }
 
   /** Train the IVF index WITHOUT caching anything corpus-sized:
-    * [[trainCentroids]] over a content-keyed sample (ONE aggregation job,
+    * [[trainCentroidsAndCounts]] over a content-keyed sample (ONE aggregation job,
     * map-side partial means — `trainFraction = 1.0` reproduces the
     * historical full-corpus centroids bit-for-bit; at 100 TB pass a small
     * fraction), then `assigned` is a plain projection — the one Lloyd
@@ -298,10 +353,8 @@ object Similarity {
       maxCellFraction: Double = 0.25): IvfIndex = {
     val (centroids, counts) =
       trainCentroidsAndCounts(corpus, vecCol, idCol, nlist, trainFraction)
-    val idx = IvfIndex(centroids, null, saltFactors(counts, maxCellFraction))
-    idx.copy(assigned = corpus.select(
-      col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      idx.nearestCell(col(vecCol)).as("cell")))
+    IvfIndex(centroids, cellAssigned(centroids, corpus, vecCol, idCol),
+      saltFactors(counts, maxCellFraction))
   }
 
   /** Probe a built index: each query scores all centroids (plan literals —
@@ -314,21 +367,9 @@ object Similarity {
       vecCol: String,
       idCol: String,
       k: Int,
-      nprobe: Int = 4): DataFrame = {
-    val probed = queries.select(
-      col(idCol).as("query_id"), col(vecCol).as("qv"),
-      explode(index.probeCells(col(vecCol), nprobe)).as("cell"))
-
-    val scored = broadcast(probed).join(index.assigned, Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-  }
+      nprobe: Int = 4): DataFrame =
+    topKPerQuery(scoredCandidates(queries, vecCol, idCol,
+      Cells(index, nprobe, broadcastProbe = true)), k)
 
   /** IVF (inverted-file) top-k: the classic two-stage ANN index expressed
     * as dataframes.
@@ -467,19 +508,8 @@ object Similarity {
       minCosine: Double = -1.0): DataFrame = {
     require(minCosine < maxCosine,
       s"empty band: minCosine $minCosine must be < maxCosine $maxCosine")
-    val q = broadcast(queries.select(
-      col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = q.crossJoin(c)
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-      .where(col("cosine") >= minCosine && col("cosine") < maxCosine)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    topKPerQuery(inBand(scoredCandidates(queries, vecCol, idCol, Cross(corpus)),
+      minCosine, Some(maxCosine)), k)
   }
 
   /** IVF-accelerated k-nearest-neighbor SELF-join — the corpus-scale
@@ -546,20 +576,9 @@ object Similarity {
       vecCol: String,
       idCol: String,
       k: Int,
-      nprobe: Int): DataFrame = {
-    val probed = df.select(
-      col(idCol).as("query_id"), col(vecCol).as("qv"),
-      explode(idx.probeCells(col(vecCol), nprobe)).as("cell"))
-    val scored = saltedCandidateJoin(idx, probed)
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-  }
+      nprobe: Int): DataFrame =
+    topKPerQuery(scoredCandidates(df, vecCol, idCol,
+      Cells(idx, nprobe, broadcastProbe = false)), k)
 
   /** IVF-celled similarity SELF-join: every unordered pair with cosine at
     * or above `minCosine` whose members share a probed cell — the
@@ -589,20 +608,13 @@ object Similarity {
       vecCol: String,
       idCol: String,
       minCosine: Double,
-      nprobe: Int): DataFrame = {
-    val probed = df.select(
-      col(idCol).as("query_id"), col(vecCol).as("qv"),
-      explode(idx.probeCells(col(vecCol), nprobe)).as("cell"))
-    saltedCandidateJoin(idx, probed)
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-      .where(col("cosine") >= minCosine && !isnan(col("cosine")))
+      nprobe: Int): DataFrame =
+    cellRange(idx, df, vecCol, idCol, minCosine, nprobe)
       .select(
         least(col("query_id"), col("neighbor_id")).as("id_a"),
         greatest(col("query_id"), col("neighbor_id")).as("id_b"),
         col("cosine"))
       .dropDuplicates("id_a", "id_b")
-  }
 
   /** SemDeDup-style semantic deduplication (Abbas et al., "SemDeDup:
     * Data-efficient learning at web-scale through semantic deduplication",
@@ -787,16 +799,15 @@ object Similarity {
     val spark = batch.sparkSession
     val ep = resolveAnnIndex(spark, path)
     val ids = batch.select(col(idCol).as("id"))
+    val idx = annIndexAt(spark, ep)
+    val probePlan = cellRange(idx, batch, vecCol, idCol, minCosine, nprobe)
+      .select(col("query_id").as("id_a"), col("neighbor_id").as("id_b"))
     // replay guard: an already-indexed id anchors to itself (self-edges
     // are closure no-ops, but the id joins the anchor set below). The
     // epoch's id bloom clears the COMMON case — a batch of genuinely new
     // ids — without touching the standing id column at all (no false
     // negatives, so an all-miss batch provably has no replays); only
     // bloom hits pay the exact semi-join.
-    val (centroids, counts) = readAnnCentroidsWithCounts(spark, ep)
-    val probePlan = annRangeAt(spark, ep, centroids, counts, batch, vecCol, idCol,
-        minCosine, nprobe)
-      .select(col("query_id").as("id_a"), col("neighbor_id").as("id_b"))
     val withReplays =
       if (!EpochStore.idGuardNeedsExact(spark, ep, batch, idCol)) probePlan
       else probePlan.unionByName(ids
@@ -812,12 +823,9 @@ object Similarity {
         // the standing index's per-cell populations proxy the batch's own
         // distribution (a templated cell in the corpus is templated in its
         // arrivals too), so the in-batch join inherits the salt guard
-        val idx0 = IvfIndex(centroids, null,
-          saltFactors(counts, DefaultMaxCellFraction))
-        val idx = idx0.copy(assigned = batch.select(
-          col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-          idx0.nearestCell(col(vecCol)).as("cell")))
-        ivfSimilarityJoinPlan(idx, batch, vecCol, idCol, minCosine, nprobe)
+        val batchIdx = idx.copy(
+          assigned = cellAssigned(idx.centroids, batch, vecCol, idCol))
+        ivfSimilarityJoinPlan(batchIdx, batch, vecCol, idCol, minCosine, nprobe)
           .select(col("id_a"), col("id_b"))
       }
     val anchors = cross.select(col("id_b").as("id")).distinct()
@@ -864,26 +872,12 @@ object Similarity {
       planes: Int = 8,
       bands: Int = 1): DataFrame = {
     require(bands >= 1, s"bands must be >= 1, got $bands")
-    def banded(df: DataFrame, idAs: String, vecAs: String) =
-      df.select(col(idCol).as(idAs), col(vecCol).as(vecAs),
-        posexplode(array((0 until bands).map(b =>
-          hyperplaneBucket(col(vecCol), planes, offset = b * planes)): _*))
-          .as(Seq("band", "bucket")))
-    val q = broadcast(banded(queries, "query_id", "qv"))
-    val c = banded(corpus, "neighbor_id", "cv")
-    val scored = q.join(c, Seq("band", "bucket"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      // cosine before dedup: a pair colliding in several bands computes the
-      // (cheap, codegen) kernel per collision but shuffles only the triple
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qv"), col("cv")).as("cosine"))
-      .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    // cosine before dedup: a pair colliding in several bands computes the
+    // (cheap, codegen) kernel per collision but shuffles only the triple
+    topKPerQuery(
+      scoredCandidates(queries, vecCol, idCol, Bands(corpus, planes, bands))
+        .select(col("query_id"), col("neighbor_id"), col("cosine"))
+        .distinct(), k)
   }
 
   /** On-disk format version of the persisted ANN (IVF) index — same loud
@@ -902,16 +896,12 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String): EpochStore.Epoch =
     AnnIndex.resolve(spark, path)
 
-  private def readAnnCentroids(
-      spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch): Seq[(Int, Seq[Float])] =
-    readAnnCentroidsWithCounts(spark, ep)._1
-
   /** Centroids plus the PERSISTED per-cell population estimates (the
     * dense-cell salt guard's input — see [[saltFactors]]).
     */
   private def readAnnCentroidsWithCounts(
       spark: org.apache.spark.sql.SparkSession,
-      ep: EpochStore.Epoch): (Seq[(Int, Seq[Float])], Map[Int, Long]) = {
+      ep: EpochStore.Epoch): (Centroids, Map[Int, Long]) = {
     val rows = EpochStore.readEpochTable(spark, ep, "centroids").collect()
     (rows.map(r => (r.getInt(0), r.getSeq[Float](1))).toSeq.sortBy(_._1),
       rows.map(r => r.getInt(0) -> r.getLong(2)).toMap)
@@ -920,7 +910,7 @@ object Similarity {
   /** The epoch's `centroids` table: (cell, centroid, n) in one file. */
   private def annCentroidsTable(
       spark: org.apache.spark.sql.SparkSession,
-      centroids: Seq[(Int, Seq[Float])], counts: Map[Int, Long]): DataFrame = {
+      centroids: Centroids, counts: Map[Int, Long]): DataFrame = {
     import spark.implicits._
     centroids.map { case (c, v) => (c, v, counts.getOrElse(c, 0L)) }
       .toDF("cell", "centroid", "n").coalesce(1)
@@ -928,7 +918,7 @@ object Similarity {
 
   /** The header params of an ANN epoch. */
   private def annParams(
-      centroids: Seq[(Int, Seq[Float])], nlist: Int, quantized: Boolean): Map[String, String] =
+      centroids: Centroids, nlist: Int, quantized: Boolean): Map[String, String] =
     Map("nlist" -> nlist.toString,
       "dim" -> centroids.headOption.map(_._2.length).getOrElse(0).toString,
       "quantized" -> quantized.toString)
@@ -943,6 +933,19 @@ object Similarity {
     if (ep.header.bool("quantized"))
       dequantizeInt8(t, "qvec", "scale", "vec").select("cell", "id", "vec")
     else t.select("cell", "id", "vec")
+  }
+
+  /** The persisted index at epoch `ep` as an [[IvfIndex]]: its centroids,
+    * the stored corpus as the assigned side, and dense-cell salts from the
+    * PERSISTED population estimates (see [[saltFactors]]).
+    */
+  private def annIndexAt(
+      spark: org.apache.spark.sql.SparkSession, ep: EpochStore.Epoch): IvfIndex = {
+    val (centroids, counts) = readAnnCentroidsWithCounts(spark, ep)
+    IvfIndex(centroids,
+      readAssignedVecs(spark, ep).select(
+        col("cell"), col("id").as("neighbor_id"), col("vec").as("cv")),
+      saltFactors(counts, DefaultMaxCellFraction))
   }
 
   /** The storage projection of one batch of (cell, id, vec) rows: float
@@ -967,28 +970,20 @@ object Similarity {
     * learned (pinned by the OpsPropertySpec property and RecallSpec).
     * The sample is keyed on `xxhash64(id)`, so it is reproducible across
     * runs, engines, and partitionings.
-    */
-  private def trainCentroids(
-      corpus: DataFrame,
-      vecCol: String,
-      idCol: String,
-      nlist: Int,
-      trainFraction: Double): Seq[(Int, Seq[Float])] =
-    trainCentroidsAndCounts(corpus, vecCol, idCol, nlist, trainFraction)._1
-
-  /** [[trainCentroids]] plus per-seed-cell sample vector counts (the skew
-    * estimate feeding [[saltFactors]]) — same single aggregation job, the
-    * count rides the existing (cell, pos) groups for free. Counts are of
-    * SEEDED cells (raw hyperplane bucket); the Lloyd half-step re-assigns
-    * some boundary vectors, but a degenerate dense cluster (identical
-    * vectors) moves together either way, which is what the guard is for.
+    *
+    * Also returns per-seed-cell sample vector counts (the skew estimate
+    * feeding [[saltFactors]]) — same single aggregation job, the count
+    * rides the existing (cell, pos) groups for free. Counts are of SEEDED
+    * cells (raw hyperplane bucket); the Lloyd half-step re-assigns some
+    * boundary vectors, but a degenerate dense cluster (identical vectors)
+    * moves together either way, which is what the guard is for.
     */
   private def trainCentroidsAndCounts(
       corpus: DataFrame,
       vecCol: String,
       idCol: String,
       nlist: Int,
-      trainFraction: Double): (Seq[(Int, Seq[Float])], Map[Int, Long]) = {
+      trainFraction: Double): (Centroids, Map[Int, Long]) = {
     require(nlist > 1 && Integer.bitCount(nlist) == 1, "nlist must be a power of 2")
     require(trainFraction > 0.0 && trainFraction <= 1.0,
       s"trainFraction must be in (0, 1], got $trainFraction")
@@ -1069,13 +1064,12 @@ object Similarity {
       val counts = sampleCounts.map { case (c, n) =>
         c -> math.round(n / trainFraction)
       }
-      val idx = IvfIndex(centroids, null)
       // the corpus-sized assigned write (then its read-back bloom) overlaps
       // the O(nlist) centroids write
       EpochStore.Arms.fresh(annParams(centroids, nlist, quantize))(
         () => out.write("assigned", assignedStorage(
           corpus.select(
-            idx.nearestCell(col(vecCol)).as("cell"),
+            nearestCell(centroids, col(vecCol)).as("cell"),
             col(idCol).as("id"), col(vecCol).as("vec")),
           quantize)),
         () => out.write("centroids", annCentroidsTable(spark, centroids, counts)))
@@ -1103,11 +1097,10 @@ object Similarity {
       "duplicate neighbors") { (cur, out) =>
       val quantized = cur.header.bool("quantized") // storage scheme is the index's, not the caller's
       val (centroids, standingCounts) = readAnnCentroidsWithCounts(spark, cur)
-      val idx = IvfIndex(centroids, null)
       // successor cell counts: standing + the batch's own (one tiny agg —
       // nlist rows — over the batch's frozen-quantizer assignment)
       val deltaCounts = newVecs
-        .select(idx.nearestCell(col(vecCol)).as("cell"))
+        .select(nearestCell(centroids, col(vecCol)).as("cell"))
         .groupBy("cell").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       val counts = (standingCounts.keySet ++ deltaCounts.keySet).map { c =>
@@ -1118,7 +1111,7 @@ object Similarity {
       EpochStore.Arms(
         () => out.write("assigned", assignedStorage(
           newVecs.select(
-            idx.nearestCell(col(vecCol)).as("cell"),
+            nearestCell(centroids, col(vecCol)).as("cell"),
             col(idCol).as("id"), col(vecCol).as("vec")),
           quantized)),
         () => out.write("centroids", annCentroidsTable(spark, centroids, counts)))
@@ -1148,13 +1141,9 @@ object Similarity {
       nprobe: Int = 4): DataFrame = {
     require(minCosine < maxCosine,
       s"empty band: minCosine $minCosine must be < maxCosine $maxCosine")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    annRangeAgainstIndex(queries, vecCol, idCol, path, minCosine, nprobe)
-      .where(col("cosine") < maxCosine)
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    // the floor (and its NaN guard) is the range probe's; only the ceiling is added
+    topKPerQuery(annRangeAgainstIndex(queries, vecCol, idCol, path, minCosine, nprobe)
+      .where(col("cosine") < maxCosine), k)
   }
 
   /** Diversity-aware downsample: cluster the corpus by embedding (the IVF
@@ -1181,15 +1170,15 @@ object Similarity {
       trainFraction: Double = 1.0): DataFrame = {
     require(!corpus.columns.contains("cell"),
       "diversitySample adds a 'cell' column — rename the existing one first")
-    val idx = IvfIndex(
-      trainCentroids(corpus, vecCol, idCol, nlist, trainFraction), null)
+    val (centroids, _) =
+      trainCentroidsAndCounts(corpus, vecCol, idCol, nlist, trainFraction)
     Sampling.takePerStratum(
-      corpus.withColumn("cell", idx.nearestCell(col(vecCol))),
+      corpus.withColumn("cell", nearestCell(centroids, col(vecCol))),
       "cell", idCol, nPerCell)
   }
 
   /** Deterministic integer-exact k-center cell assignment — the
-    * engine-portable twin of the float-IVF `trainCentroids` path for
+    * engine-portable twin of the float-IVF centroid training for
     * pipelines whose downstream decisions must replay bit-exact: seeds
     * are the first `k` rows in `(md5(id), id)` content order, every
     * vector is int8-quantized ([[int8Codes]]), and its cell is the seed
@@ -1733,43 +1722,30 @@ object Similarity {
       floor: Double,
       nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    val ep = resolveAnnIndex(spark, path)
-    val (centroids, counts) = readAnnCentroidsWithCounts(spark, ep)
-    annRangeAt(spark, ep, centroids, counts, queries, vecCol, idCol, floor, nprobe)
+    cellRange(annIndexAt(spark, resolveAnnIndex(spark, path)),
+      queries, vecCol, idCol, floor, nprobe)
   }
 
-  /** [[annRangeAgainstIndex]] over a resolved epoch and its centroids. */
-  private def annRangeAt(
-      spark: org.apache.spark.sql.SparkSession,
-      ep: EpochStore.Epoch,
-      centroids: Seq[(Int, Seq[Float])],
-      counts: Map[Int, Long],
+  /** Every `(query_id, neighbor_id, cosine)` at or above `floor` among the
+    * pairs sharing one of the query's `nprobe` nearest cells — the range
+    * core of [[annRangeAgainstIndex]] and [[ivfSimilarityJoinPlan]]. The
+    * candidate join salts the index's dense cells: with a corpus-sized
+    * query frame it shuffles on the cell key, and a templated-embedding
+    * cell would otherwise funnel through one task (small/broadcast query
+    * sides are skew-free either way — a broadcast join never co-locates a
+    * cell). Salts are deterministic constants, so the plan stays
+    * streaming-compatible.
+    */
+  private def cellRange(
+      idx: IvfIndex,
       queries: DataFrame,
       vecCol: String,
       idCol: String,
       floor: Double,
-      nprobe: Int): DataFrame = {
-    // dense cells salt from the PERSISTED population estimates: with a
-    // corpus-sized query frame this join shuffles on the cell key, and a
-    // templated-embedding cell would otherwise funnel through one task
-    // (small/broadcast query sides are skew-free either way — a broadcast
-    // join never co-locates a cell). Deterministic constants, so the plan
-    // stays streaming-compatible.
-    val idx = IvfIndex(
-      centroids,
-      readAssignedVecs(spark, ep).select(
-        col("cell"), col("id").as("neighbor_id"), col("vec").as("cv")),
-      saltFactors(counts, DefaultMaxCellFraction))
-    saltedCandidateJoin(idx, queries.select(
-        col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(idx.probeCells(col(vecCol), nprobe)).as("cell")))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-      // same NaN guard as [[rangeSearch]]: NaN sorts above every number,
-      // so a zero-magnitude vector would otherwise match at any floor
-      .where(col("cosine") >= floor && !isnan(col("cosine")))
+      nprobe: Int): DataFrame =
+    inBand(scoredCandidates(queries, vecCol, idCol,
+      Cells(idx, nprobe, broadcastProbe = false)), floor)
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
-  }
 
   /** Merge an ANN index's delta history back into one optimally-sized file
     * set — the ANN twin of [[Dedup.compactDedupIndex]]. Each
@@ -1811,17 +1787,15 @@ object Similarity {
       val withVec =
         if (retrain && quantized) dequantizeInt8(standing, "qvec", "scale", "vec")
         else standing
-      val centroids =
-        if (retrain) trainCentroids(withVec, "vec", "id", nlist, trainFraction)
-        else readAnnCentroids(spark, cur)
+      val (centroids, _) =
+        if (retrain) trainCentroidsAndCounts(withVec, "vec", "id", nlist, trainFraction)
+        else readAnnCentroidsWithCounts(spark, cur)
       val storageCols =
         if (quantized) Seq(col("id"), col("qvec"), col("scale"))
         else Seq(col("id"), col("vec"))
       val compacted =
-        if (retrain) {
-          val idx = IvfIndex(centroids, null)
-          withVec.select(idx.nearestCell(col("vec")).as("cell") +: storageCols: _*)
-        } else standing
+        if (retrain) withVec.select(nearestCell(centroids, col("vec")).as("cell") +: storageCols: _*)
+        else standing
       // one arm: the assigned rewrite (and its fresh read-back bloom), then
       // the EXACT cell counts of the written dir (compaction is where the
       // salt guard's estimates get trued up, like the bloom), then centroids
@@ -1849,11 +1823,7 @@ object Similarity {
       k: Int,
       nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    val ep = resolveAnnIndex(spark, path)
-    val idx = IvfIndex(
-      readAnnCentroids(spark, ep),
-      readAssignedVecs(spark, ep).select(
-        col("cell"), col("id").as("neighbor_id"), col("vec").as("cv")))
-    ivfProbe(idx, queries, vecCol, idCol, k, nprobe)
+    ivfProbe(annIndexAt(spark, resolveAnnIndex(spark, path)),
+      queries, vecCol, idCol, k, nprobe)
   }
 }

@@ -646,7 +646,6 @@ class PlanSpec extends SparkSpec {
         s"ivfBuild persisted something corpus-sized:\n$p")
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      idx.unpersist()
     }
   }
 

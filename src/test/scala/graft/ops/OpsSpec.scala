@@ -123,6 +123,26 @@ class OpsSpec extends SparkSpec {
     assert(pairs.toSeq == exact.toSeq)
   }
 
+  test("embeddingNearDup: a zero-norm vector is nobody's near-duplicate") {
+    // the zero vector lands in bucket 0 of every band and scores NaN against
+    // everything; NaN >= threshold is true in Spark, so only an explicit
+    // guard keeps it out (DuckDB's oracle scores the pair -1 and drops it)
+    val vecs = frame(
+      struct("vec_id" -> LongType, "embedding" -> ArrayType(FloatType)),
+      Row(0L, Seq(0.0f, 0.0f, 0.0f)),
+      Row(1L, Seq(1.0f, 2.0f, 3.0f)),
+      Row(2L, Seq(1.0f, 2.0f, 3.001f)),
+      Row(3L, Seq(-3.0f, 1.0f, -2.0f)),
+      Row(4L, Seq(-1.0f, -2.0f, 0.5f)))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val banded = pairs(Dedup.embeddingNearDup(vecs, "embedding", "vec_id",
+      planes = 1, bands = 4, threshold = 0.999))
+    val exact = pairs(Dedup.embeddingNearDupExact(vecs, "embedding", "vec_id", 0.999))
+    assert(exact == Seq((1L, 2L)), s"exact form paired the zero vector: $exact")
+    assert(banded == Seq((1L, 2L)), s"banded form paired the zero vector: $banded")
+  }
+
   test("text ops: token counts, quality, langid, fingerprint") {
     val df = docs(
       1L -> "the cat and the dog, it is fine!",
@@ -251,7 +271,6 @@ class OpsSpec extends SparkSpec {
       k = 3, nlist = 4, nprobe = 2))
     val p2 = rows(Similarity.ivfProbe(idx, queries, "embedding", "vec_id", k = 3, nprobe = 2))
     assert(p1 == once && p2 == once)
-    idx.unpersist()
   }
 
   test("prototype pruning: integer cells, exact scores, per-cell drop") {
