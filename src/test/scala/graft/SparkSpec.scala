@@ -50,6 +50,12 @@ trait SparkSpec extends AnyFunSuite {
   def struct(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (n, t) => StructField(n, t, nullable = true) })
 
+  /** Every message down `t`'s cause chain, concatenated: an in-plan
+    * `raise_error` reaches the caller wrapped in job-failure exceptions.
+    */
+  def messages(t: Throwable): String =
+    if (t == null) "" else t.getMessage + messages(t.getCause)
+
   def collectSorted(df: DataFrame, by: String*): Seq[Row] =
     df.orderBy(by.map(org.apache.spark.sql.functions.col): _*).collect().toSeq
 

@@ -1223,6 +1223,54 @@ object OpsPropertySpec extends Properties("graft.ops") {
         got == naive
     }
 
+  property("epochShuffle, curriculumShuffle and sizedShardAssignment ≡ one naive global window") =
+    forAll(
+      Gen.choose(1, 60).flatMap(k => Gen.listOfN(k, Gen.zip(
+          Gen.choose(1L, 100000L), Gen.choose(0, 3),
+          Gen.frequency(
+            2 -> Gen.const(None), 2 -> Gen.const(Some(0L)),
+            6 -> Gen.choose(1L, 30L).map(Some(_)),
+            1 -> Gen.choose(31L, 120L).map(Some(_)))))
+        .map(_.distinctBy(_._1))),
+      Gen.choose(1L, 50L), Gen.oneOf(1, 1, 2, 3), Gen.choose(1L, 40L),
+      Gen.oneOf(Gen.const(0L), Gen.choose(1L, 500L))) {
+      (rows, epoch, hexLen, target, baseOffset) =>
+        import org.apache.spark.sql.expressions.Window
+        import org.apache.spark.sql.functions._
+        val st = StructType(Seq(
+          StructField("id", LongType, nullable = false),
+          StructField("stage", IntegerType, nullable = false),
+          StructField("w", LongType, nullable = true)))
+        val df = spark.createDataFrame(
+          spark.sparkContext.parallelize(rows.map { case (i, s, w) =>
+            Row(i, s, w.map(Long.box).orNull) }, 2), st)
+        def byId(out: org.apache.spark.sql.DataFrame, c: String) =
+          out.select(col("id"), col(c)).collect()
+            .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val epochHash =
+          md5(concat(lit(epoch.toString), lit("#"), col("id").cast("string"))
+            .cast("binary"))
+        def rank(order: org.apache.spark.sql.Column*) =
+          byId(df.withColumn("pos",
+            row_number().over(Window.orderBy(order: _*)).cast("long") - 1L), "pos")
+        val wt = coalesce(col("w"), lit(0L))
+        val cumBefore = byId(df.withColumn("cb", sum(wt).over(
+            Window.orderBy(md5(col("id").cast("string").cast("binary")), col("id"))
+              .rowsBetween(Window.unboundedPreceding, Window.currentRow)) - wt),
+          "cb")
+        val shuffled = Sampling.epochShuffle(df, "id", epoch, bucketHexLen = hexLen)
+        val staged = Sampling.curriculumShuffle(
+          df, "id", "stage", epoch, bucketHexLen = hexLen)
+        val sized = Sink.sizedShardAssignment(df, "id", "w", target,
+          bucketHexLen = hexLen, baseOffset = baseOffset)
+        byId(shuffled, "pos") == rank(epochHash, col("id")) &&
+          byId(staged, "pos") == rank(col("stage").cast("long"), epochHash, col("id")) &&
+          byId(sized, "shard") ==
+            cumBefore.map { case (i, cb) => i -> (baseOffset + cb) / target } &&
+          Seq(shuffled, staged, sized).forall(_.columns.take(3).toSeq ==
+            Seq("id", "stage", "w"))
+    }
+
   property("daily SemDeDup loop: each day's audit ≡ the closure against the GROWN standing set") =
     forAll(
       Gen.choose(9, 18).flatMap(k => Gen.listOfN(k,

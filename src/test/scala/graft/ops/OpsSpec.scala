@@ -1442,8 +1442,6 @@ class OpsSpec extends SparkSpec {
     val de = intercept[Exception] {
       Sampling.epochShuffle(withDup, "doc_id", 1L).collect()
     }
-    def messages(t: Throwable): String =
-      if (t == null) "" else t.getMessage + messages(t.getCause)
     assert(messages(de).contains("duplicate"))
   }
 
@@ -1512,8 +1510,6 @@ class OpsSpec extends SparkSpec {
     val de = intercept[Exception] {
       Sampling.curriculumShuffle(withDup, "doc_id", "stage", 1L).collect()
     }
-    def messages(t: Throwable): String =
-      if (t == null) "" else t.getMessage + messages(t.getCause)
     assert(messages(de).contains("duplicate"))
     // the SAME key in two different stages is two items, both positioned
     val crossStage = frame(st, Row(1L, 0), Row(1L, 1), Row(2L, 0))
@@ -1897,8 +1893,6 @@ class OpsSpec extends SparkSpec {
     val e3 = intercept[Exception] {
       Sink.sizedShardAssignment(dup, "id", "w", 10L).collect()
     }
-    def messages(t: Throwable): String =
-      if (t == null) "" else t.getMessage + messages(t.getCause)
     assert(messages(e3).contains("duplicate"))
   }
 

@@ -813,8 +813,6 @@ class StreamingSpec extends SparkSpec {
         Files.createTempDirectory("graft-szs-ck2").toString)
       .trigger(Trigger.AvailableNow()).start()
     val err = intercept[Exception] { q2.awaitTermination(120000) }
-    def messages(t: Throwable): String =
-      if (t == null) "" else t.getMessage + messages(t.getCause)
     assert(messages(err).contains("re-appends"))
   }
 
