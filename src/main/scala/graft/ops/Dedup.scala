@@ -346,17 +346,6 @@ object Dedup {
         i => array_min(transform(shv, s => xxhash64(i, s))))
     }
 
-  /** LSH banding: split the signature into `bands` equal bands and hash each
-    * — docs agreeing on any whole band become candidates. Signature is
-    * let-bound (computed once, sliced `bands` times); the band index is not
-    * part of the hash because candidate keys are (band, bandHash) pairs.
-    */
-  def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    bind(sig) { s =>
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(s, b * rowsPerBand + 1, lit(rowsPerBand))))
-    }
-
   /** Candidate near-duplicate pairs via MinHash LSH over k-word shingles,
     * verified with exact shingle-set Jaccard. Returns (idA, idB, jaccard)
     * with idA < idB.
@@ -375,9 +364,9 @@ object Dedup {
     // Fused native kernel (graft.functions.MinHashBandHashes): one codegen
     // call per row computes shingles → numHashes minima → band hashes,
     // hashing each shingle ONCE and deriving the hash family by
-    // long-mixing. The HOF composition (minhashSignature ∘ bandHashes)
-    // has the same banding semantics over a different (per-seed string
-    // hash) family, and pays interpreted lambda evaluation per element.
+    // long-mixing. The HOF `minhashSignature` computes a signature over a
+    // different (per-seed string hash) family, and pays interpreted lambda
+    // evaluation per element.
     val side = minhashSide(df, textCol, idCol, k, numHashes, bands)
     lshVerifiedPairs(side, side, threshold)
   }
@@ -944,7 +933,7 @@ object Dedup {
       .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
       .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
       // a zero vector scores NaN against everything, and Spark orders NaN above every number
-      .where(col("cosine") >= threshold && !isnan(col("cosine")))
+      .where(Similarity.atLeast(col("cosine"), threshold))
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
 
@@ -1385,7 +1374,7 @@ object Dedup {
     val r = df.select(col(idCol).as("id_b"), col(vecCol).as("v_b"))
     l.join(r, col("id_a") < col("id_b"))
       .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
-      .where(col("cosine") >= threshold && !isnan(col("cosine")))
+      .where(Similarity.atLeast(col("cosine"), threshold))
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
 

@@ -1607,6 +1607,108 @@ object Sampling {
       bucketHexLen)
   }
 
+  /** The internal columns [[contentOrderPositions]] joins onto the
+    * caller's frame and drops again.
+    */
+  private val ContentOrderInternals = Seq("__s", "__b", "__off", "__cb")
+
+  /** The one content-order position core of [[epochShuffle]],
+    * [[curriculumShuffle]] and [[Sink.sizedShardAssignment]]: `df` plus
+    * `outCol = finish(before)`, where `before` is `baseOffset` plus the
+    * exact sum of the weights of every row strictly before this one in
+    * `(stageCol, hash, keyCol)` order. A row's weight is `weightCol`
+    * (null counts 0), or 1 without one; `stageCol` must be integral.
+    *
+    * Plan shape for 100 TB — no global single-task sort anywhere: the
+    * md5 bucket prefix of `hash` IS the leading prefix of the sort key
+    * (the [[takeBudgets]] discipline), so one map-side-combining
+    * per-(stage, bucket) weight sum (≤ #stages × 16^bucketHexLen rows to
+    * the driver, guarded by `maxClassificationRows`), a driver prefix sum
+    * and a per-bucket running-sum window plus a broadcast offset yield
+    * the exact global running weight. Size `bucketHexLen` so a bucket
+    * fits one window task: the default 4 (65 536 buckets) puts a 100 TB
+    * narrow-ledger corpus at ~1.5 GB per task; 5 (1 M buckets, still
+    * under the driver cap) divides it again by 16.
+    *
+    * Null keys cannot hash, null stages cannot be ordered, and a negative
+    * weight would break the running sum's monotonicity: each is refused
+    * after the driver sum, before the window runs. DUPLICATE keys within a
+    * stage would take their running weight from partition order —
+    * positions that silently change across reruns and clusters — so a
+    * lag-equality tripwire over the same window order (dups hash to one
+    * bucket and sort adjacent; same partitioning, no extra shuffle) fails
+    * the job on the first one. It lives inside `outCol`'s expression, so
+    * column pruning can never drop it. `op` names the caller and `noun` a
+    * key in messages (both are in the plan text, as the tripwire's message).
+    */
+  private[graft] def contentOrderPositions(
+      df: DataFrame,
+      op: String,
+      keyCol: String,
+      noun: String,
+      hash: Column,
+      stageCol: Option[String],
+      weightCol: Option[String],
+      baseOffset: Long,
+      bucketHexLen: Int,
+      maxClassificationRows: Int,
+      outCol: String)(finish: Column => Column): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types._
+    require(bucketHexLen >= 1 && bucketHexLen <= 6,
+      s"bucketHexLen must be in [1, 6], got $bucketHexLen")
+    require(!df.columns.contains(outCol),
+      s"$op adds a '$outCol' column — rename the existing one first")
+    requireUnreserved(df, op, ContentOrderInternals)
+    val spark = df.sparkSession
+    val groups = stageCol.map(s => "__s" -> col(s).cast("long")).toSeq :+
+      ("__b" -> substring(hash, 1, bucketHexLen))
+    val names = groups.map(_._1)
+    val n = names.size
+    val w = weightCol.fold(lit(1L))(c => coalesce(col(c).cast("long"), lit(0L)))
+    val counts = df.select(groups.map { case (g, c) => c.as(g) } :+ w.as("__w"): _*)
+      .groupBy(names.map(col): _*)
+      .agg(sum("__w").as("__sum"), min("__w").as("__min"))
+      .limit(maxClassificationRows + 1).collect()
+    require(counts.length <= maxClassificationRows,
+      s"$op: ${stageCol.fold("")(_ => "stages × ")}16^$bucketHexLen groups exceed " +
+      s"$maxClassificationRows driver rows — lower bucketHexLen")
+    stageCol.foreach(s => require(counts.forall(!_.isNullAt(0)),
+      s"$op: null '$s' stages cannot be ordered — assign every row a stage first"))
+    require(counts.forall(!_.isNullAt(n - 1)),
+      s"$op: null '$keyCol' ${noun}s cannot be placed — filter or fill them first")
+    weightCol.foreach(c => require(counts.forall(_.getLong(n + 1) >= 0L),
+      s"$op: negative '$c' weights — a size cannot be negative; fix the weight column"))
+    // driver prefix in (stage, bucket) = sort-key-prefix order: each
+    // group's offset is the weight of all rows sorting strictly below it
+    val sorted = counts.sortBy(r =>
+      (if (stageCol.isDefined) r.getLong(0) else 0L, r.getString(n - 1)))
+    val offRows = sorted.zip(sorted.scanLeft(baseOffset)(_ + _.getLong(n)))
+      .map { case (r, off) => Row.fromSeq(r.toSeq.take(n) :+ off) }.toSeq
+    val offDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(offRows, 1),
+      StructType(stageCol.map(_ => StructField("__s", LongType, nullable = false)).toSeq ++ Seq(
+        StructField("__b", StringType, nullable = false),
+        StructField("__off", LongType, nullable = false))))
+    val lagWin = Window.partitionBy(names.map(col): _*)
+      .orderBy(hash.asc, col(keyCol).asc)
+    val win = lagWin.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    groups.foldLeft(df) { case (d, (g, c)) => d.withColumn(g, c) }
+      .join(broadcast(offDf), names)
+      .withColumn("__cb", col("__off") + sum(w).over(win) - w)
+      .withColumn(outCol,
+        when(lag(col(keyCol), 1).over(lagWin) === col(keyCol),
+          raise_error(concat(
+            lit(s"$op: duplicate '$keyCol' $noun "),
+            col(keyCol).cast("string"),
+            lit(stageCol.fold("")(s => s" within one '$s' stage") +
+              s" — duplicate ${noun}s have no deterministic placement; " +
+              "deduplicate or re-key first"))).cast("long"))
+        .otherwise(finish(col("__cb"))))
+      .drop(names ++ Seq("__off", "__cb"): _*)
+  }
+
   /** Deterministic, engine-portable GLOBAL training-order shuffle: every
     * row gets its position in the `md5(epoch # key)` order — the epoch
     * shuffle a training pipeline runs between passes. A different `epoch`
@@ -1616,84 +1718,26 @@ object Sampling {
     * the shuffled order with `orderBy("pos")` into a sink, or
     * `repartitionByRange` on it.
     *
-    * Plan shape for 100 TB — no global single-task sort anywhere: the
-    * md5 bucket prefix IS the leading prefix of the sort key (the
-    * [[takeBudgets]] discipline), so one map-side-combining per-bucket
-    * count (≤ 16^bucketHexLen rows to the driver), a driver prefix sum,
-    * and a per-bucket `row_number` window (each bucket ~1/16^hexLen of
-    * the corpus, uniform by construction) plus a broadcast offset yield
-    * the exact global rank. Size `bucketHexLen` so a bucket's ledger fits
-    * one window task: the default 4 (65 536 buckets) puts a 100 TB
-    * narrow-ledger corpus at ~1.5 GB per task; 5 (1 M buckets, still
-    * under the driver cap) divides it again by 16.
-    *
-    * Null keys cannot hash to a position and are rejected loudly, and so
-    * are DUPLICATE keys: tied keys would take their
-    * `row_number` from partition order — positions that silently change
-    * across reruns/clusters — so a lag-equality tripwire inside the
-    * per-bucket window (dups sort adjacent; same window, no extra cost)
-    * fails the job on the first duplicate instead of leaving the caveat
-    * to documentation. Pass a unique id.
+    * The position is [[contentOrderPositions]]' running weight at weight
+    * 1 — no global sort (see its plan shape for sizing `bucketHexLen`).
+    * Null keys are rejected loudly, and so are DUPLICATE keys, whose
+    * positions would depend on partition order. Pass a unique id.
     */
   def epochShuffle(
       df: DataFrame,
       keyCol: String,
       epoch: Long,
       bucketHexLen: Int = 4,
-      maxClassificationRows: Int = MaxClassificationRows): DataFrame = {
-    require(bucketHexLen >= 1 && bucketHexLen <= 6,
-      s"bucketHexLen must be in [1, 6], got $bucketHexLen")
-    require(!df.columns.contains("pos"),
-      "epochShuffle adds a 'pos' column — rename the existing one first")
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types._
-    val spark = df.sparkSession
-    def hashOf(key: Column): Column =
-      md5(concat(lit(epoch.toString), lit("#"), key.cast("string"))
-        .cast("binary"))
-    val bucketOf = substring(hashOf(col(keyCol)), 1, bucketHexLen)
-    val counts = df.select(bucketOf.as("__b")).groupBy("__b").count()
-      .limit(maxClassificationRows + 1).collect()
-    require(counts.length <= maxClassificationRows,
-      s"epochShuffle: 16^$bucketHexLen buckets exceed " +
-      s"$maxClassificationRows driver rows — lower bucketHexLen")
-    require(counts.forall(!_.isNullAt(0)),
-      s"epochShuffle: null '$keyCol' keys cannot be ordered — filter or " +
-      "fill them first")
-    // driver prefix in bucket (= hash-prefix) order: each bucket's offset
-    // is the count of all rows hashing strictly below it
-    var acc = 0L
-    val offRows = counts.sortBy(_.getString(0)).map { r =>
-      val o = acc
-      acc += r.getLong(1)
-      org.apache.spark.sql.Row(r.getString(0), o)
-    }.toSeq
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offRows, 1),
-      StructType(Seq(
-        StructField("__b", StringType, nullable = false),
-        StructField("__off", LongType, nullable = false))))
-    val w = Window.partitionBy(col("__b"))
-      .orderBy(hashOf(col(keyCol)).asc, col(keyCol).asc)
-    // duplicate-key tripwire, riding the SAME window (equal keys hash to
-    // the same bucket and sort adjacent, so a lag-equality catches every
-    // dup; row_number ties between dup rows would otherwise make their
-    // positions partition-order-dependent, silently breaking the
-    // "same positions on any cluster/rerun" contract). The check lives
-    // INSIDE the pos expression so column pruning can never drop it, and
-    // lag shares the window spec — one WindowExec, no extra shuffle.
-    df.withColumn("__b", bucketOf)
-      .join(broadcast(offDf), Seq("__b"))
-      .withColumn("pos",
-        when(lag(col(keyCol), 1).over(w) === col(keyCol),
-          raise_error(concat(
-            lit(s"epochShuffle: duplicate '$keyCol' key "),
-            col(keyCol).cast("string"),
-            lit(" — duplicate keys have no deterministic order; " +
-              "deduplicate or re-key first"))).cast("long"))
-        .otherwise(col("__off") + row_number().over(w).cast("long") - 1L))
-      .drop("__b", "__off")
-  }
+      maxClassificationRows: Int = MaxClassificationRows): DataFrame =
+    contentOrderPositions(df, "epochShuffle", keyCol, "key", epochHash(keyCol, epoch),
+      None, None, 0L, bucketHexLen, maxClassificationRows, "pos")(identity)
+
+  /** `md5(epoch # key)`: the engine-portable hash order of
+    * [[epochShuffle]] and [[curriculumShuffle]].
+    */
+  private def epochHash(keyCol: String, epoch: Long): Column =
+    md5(concat(lit(epoch.toString), lit("#"), col(keyCol).cast("string"))
+      .cast("binary"))
 
   /** Multi-epoch training schedule: epochs `startEpoch ..
     * startEpoch+nEpochs-1` concatenated into ONE frame — each row appears
@@ -1708,7 +1752,7 @@ object Sampling {
     * each epoch's permutation is genuinely different work, so the cost is
     * inherently nEpochs passes; persist the input first if it is not
     * file-backed (each arm scans it). No global sort anywhere
-    * ([[epochShuffle]]'s bucket machinery per arm).
+    * ([[contentOrderPositions]] per arm).
     */
   def multiEpochOrder(
       df: DataFrame,
@@ -1737,19 +1781,16 @@ object Sampling {
     * uses, so each epoch reshuffles within stages while the stage
     * progression stands.
     *
-    * Same no-global-sort plan as [[epochShuffle]] with the stage as a
-    * leading group column: per-(stage, bucket) counts → driver prefix sum
-    * in (stage, bucket) order → per-group `row_number` + broadcast
-    * offsets. The driver table is #stages × 16^`bucketHexLen` rows
-    * (guarded); stages are ordinal by definition, so `stageCol` must be
-    * integral — reject floats/strings loudly rather than inherit an
+    * [[contentOrderPositions]] with the stage as the leading sort key:
+    * its driver table is #stages × 16^`bucketHexLen` rows (guarded).
+    * Stages are ordinal by definition, so `stageCol` must be integral —
+    * floats and strings are rejected loudly rather than inherit an
     * engine-specific collation.
     *
-    * Null stages and null keys are rejected loudly. Duplicate keys WITHIN
-    * a stage are caught by the same in-window lag tripwire as
-    * [[epochShuffle]] (dups hash to one bucket and sort adjacent); the
-    * same key appearing in TWO stages is two distinct curriculum items
-    * and keeps deterministic positions (the stage leads the sort).
+    * Null stages and null keys are rejected loudly, and so are duplicate
+    * keys WITHIN a stage; the same key appearing in TWO stages is two
+    * distinct curriculum items and keeps deterministic positions (the
+    * stage leads the sort).
     */
   def curriculumShuffle(
       df: DataFrame,
@@ -1758,11 +1799,6 @@ object Sampling {
       epoch: Long,
       bucketHexLen: Int = 4,
       maxClassificationRows: Int = MaxClassificationRows): DataFrame = {
-    require(bucketHexLen >= 1 && bucketHexLen <= 6,
-      s"bucketHexLen must be in [1, 6], got $bucketHexLen")
-    require(!df.columns.contains("pos"),
-      "curriculumShuffle adds a 'pos' column — rename the existing one first")
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     df.schema(stageCol).dataType match {
       case ByteType | ShortType | IntegerType | LongType => ()
@@ -1770,52 +1806,8 @@ object Sampling {
         s"curriculumShuffle: stage column '$stageCol' must be integral " +
           s"(ordinal stages), got $t")
     }
-    val spark = df.sparkSession
-    def hashOf(key: Column): Column =
-      md5(concat(lit(epoch.toString), lit("#"), key.cast("string"))
-        .cast("binary"))
-    val stageOf = col(stageCol).cast("long")
-    val bucketOf = substring(hashOf(col(keyCol)), 1, bucketHexLen)
-    val counts = df.select(stageOf.as("__s"), bucketOf.as("__b"))
-      .groupBy("__s", "__b").count()
-      .limit(maxClassificationRows + 1).collect()
-    require(counts.length <= maxClassificationRows,
-      s"curriculumShuffle: stages × 16^$bucketHexLen groups exceed " +
-      s"$maxClassificationRows driver rows — lower bucketHexLen or " +
-      "coarsen the stages")
-    require(counts.forall(!_.isNullAt(0)),
-      s"curriculumShuffle: null '$stageCol' stages cannot be ordered — " +
-      "assign every row a stage first")
-    require(counts.forall(!_.isNullAt(1)),
-      s"curriculumShuffle: null '$keyCol' keys cannot be ordered — " +
-      "filter or fill them first")
-    var acc = 0L
-    val offRows = counts.sortBy(r => (r.getLong(0), r.getString(1))).map { r =>
-      val o = acc
-      acc += r.getLong(2)
-      org.apache.spark.sql.Row(r.getLong(0), r.getString(1), o)
-    }.toSeq
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offRows, 1),
-      StructType(Seq(
-        StructField("__s", LongType, nullable = false),
-        StructField("__b", StringType, nullable = false),
-        StructField("__off", LongType, nullable = false))))
-    val w = Window.partitionBy(col("__s"), col("__b"))
-      .orderBy(hashOf(col(keyCol)).asc, col(keyCol).asc)
-    df.withColumn("__s", stageOf)
-      .withColumn("__b", bucketOf)
-      .join(broadcast(offDf), Seq("__s", "__b"))
-      .withColumn("pos",
-        when(lag(col(keyCol), 1).over(w) === col(keyCol),
-          raise_error(concat(
-            lit(s"curriculumShuffle: duplicate '$keyCol' key "),
-            col(keyCol).cast("string"),
-            lit(s" within one '$stageCol' stage — duplicate keys have " +
-              "no deterministic order; deduplicate or re-key first")))
-            .cast("long"))
-        .otherwise(col("__off") + row_number().over(w).cast("long") - 1L))
-      .drop("__s", "__b", "__off")
+    contentOrderPositions(df, "curriculumShuffle", keyCol, "key", epochHash(keyCol, epoch),
+      Some(stageCol), None, 0L, bucketHexLen, maxClassificationRows, "pos")(identity)
   }
 
   /** Deterministic GLOBAL sample: exactly `n` rows from the whole corpus

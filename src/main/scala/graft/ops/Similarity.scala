@@ -118,13 +118,20 @@ object Similarity {
   /** The one band/floor filter: scored pairs with `cosine` in
     * `[floor, ceiling)`. A zero-magnitude vector on either side scores NaN,
     * which sorts ABOVE every number in both Spark and DuckDB: a ceiling
-    * already rejects it, and a bare floor needs the explicit guard, or a
-    * zero vector would match every neighbor at any floor.
+    * already rejects it, and a bare floor needs the guard, or a zero
+    * vector would match every neighbor at any floor.
     */
   private def inBand(
       scored: DataFrame, floor: Double, ceiling: Option[Double] = None): DataFrame =
-    scored.where(col("cosine") >= floor &&
-      ceiling.fold(!isnan(col("cosine")))(col("cosine") < _))
+    scored.where(ceiling.fold(atLeast(col("cosine"), floor))(c =>
+      col("cosine") >= floor && col("cosine") < c))
+
+  /** `score >= floor` with NaN failing it: the score is named once, so a
+    * filter pushed into a join condition evaluates its kernel once (an
+    * explicit `!isnan(score)` conjunct evaluates it again).
+    */
+  private[graft] def atLeast(score: Column, floor: Double): Column =
+    nanvl(score, lit(null).cast("double")) >= floor
 
   /** The one per-query rank window: each query's `k` best scored pairs by
     * `(cosine DESC, neighbor_id)` as `(query_id, rank, neighbor_id,

@@ -102,18 +102,15 @@ object Sink {
     * function of (id, weight) — any engine recomputes the same layout,
     * and reruns agree.
     *
-    * The global cumulative sum costs NO global sort (the [[graft.ops.
-    * Sampling.epochShuffle]] machinery in weight space): per-bucket
-    * weight sums over the md5-prefix buckets → driver prefix sum →
-    * per-bucket cumsum windows + broadcast offsets. Null weights count
-    * 0; negative weights are rejected in-plan (a negative byte count is
-    * corrupt input, and it would break cum monotonicity); null ids
-    * cannot hash and fail loudly; duplicate ids would make the tied
-    * rows' cums partition-order-dependent, so the same in-window lag
-    * tripwire as epochShuffle fails the job. A single row heavier than
-    * `targetWeight` occupies its own shard and the next shard index
-    * jumps — shard numbers are monotone in content order but not
-    * necessarily contiguous.
+    * The global cumulative sum costs NO global sort: it is
+    * [[Sampling.contentOrderPositions]]' running weight in `(md5(id), id)`
+    * order. Null weights count 0; negative weights are rejected (a
+    * negative byte count is corrupt input, and it would break cum
+    * monotonicity); null ids cannot hash and fail loudly; duplicate ids
+    * would make the tied rows' cums partition-order-dependent, so they
+    * fail the job. A single row heavier than `targetWeight` occupies its
+    * own shard and the next shard index jumps — shard numbers are
+    * monotone in content order but not necessarily contiguous.
     *
     * `baseOffset` shifts the whole cumsum (shard = floor((baseOffset +
     * cum_before) / target)) — the [[appendSizedShards]] log-append hook.
@@ -128,57 +125,12 @@ object Sink {
       baseOffset: Long = 0L): DataFrame = {
     require(targetWeight >= 1, s"targetWeight must be >= 1, got $targetWeight")
     require(baseOffset >= 0L, s"baseOffset must be >= 0, got $baseOffset")
-    require(bucketHexLen >= 1 && bucketHexLen <= 6,
-      s"bucketHexLen must be in [1, 6], got $bucketHexLen")
-    require(!df.columns.contains("shard"),
-      "input already has a 'shard' column — rename it first")
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    val hashOf = md5(col(idCol).cast("string").cast("binary"))
-    val bucketOf = substring(hashOf, 1, bucketHexLen)
-    val w = coalesce(col(weightCol).cast("long"), lit(0L))
-    val counts = df.select(bucketOf.as("__b"), w.as("__w"))
-      .groupBy("__b").agg(sum("__w").as("__sum"), min("__w").as("__min"))
-      .limit(maxClassificationRows + 1).collect()
-    require(counts.length <= maxClassificationRows,
-      s"sizedShardAssignment: 16^$bucketHexLen buckets exceed " +
-      s"$maxClassificationRows driver rows — lower bucketHexLen")
-    require(counts.forall(!_.isNullAt(0)),
-      s"sizedShardAssignment: null '$idCol' ids cannot be placed — " +
-      "filter or fill them first")
-    require(counts.forall(r => r.isNullAt(2) || r.getLong(2) >= 0L),
-      s"sizedShardAssignment: negative '$weightCol' weights — a size " +
-      "cannot be negative; fix the weight column")
-    var acc = baseOffset
-    val offRows = counts.sortBy(_.getString(0)).map { r =>
-      val o = acc
-      acc += r.getLong(1)
-      org.apache.spark.sql.Row(r.getString(0), o)
-    }.toSeq
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offRows, 1),
-      StructType(Seq(
-        StructField("__b", StringType, nullable = false),
-        StructField("__off", LongType, nullable = false))))
-    val win = Window.partitionBy(col("__b"))
-      .orderBy(hashOf.asc, col(idCol).asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val lagWin = Window.partitionBy(col("__b"))
-      .orderBy(hashOf.asc, col(idCol).asc)
-    df.withColumn("__b", bucketOf)
-      .join(broadcast(offDf), Seq("__b"))
-      // exact integral division (`div`), not double `/` — cum weights at
-      // 100 TB byte scale must not round through a double
-      .withColumn("__cb", col("__off") + sum(w).over(win) - w)
-      .withColumn("shard",
-        when(lag(col(idCol), 1).over(lagWin) === col(idCol),
-          raise_error(concat(
-            lit(s"sizedShardAssignment: duplicate '$idCol' id "),
-            col(idCol).cast("string"),
-            lit(" — duplicate ids have no deterministic placement; " +
-              "deduplicate or re-key first"))).cast("long"))
-        .otherwise(expr(s"__cb div CAST($targetWeight AS BIGINT)")))
-      .drop("__b", "__off", "__cb")
+    // exact integral division (`div`), not double `/` — cum weights at
+    // 100 TB byte scale must not round through a double
+    Sampling.contentOrderPositions(df, "sizedShardAssignment", idCol, "id",
+      md5(col(idCol).cast("string").cast("binary")), None, Some(weightCol),
+      baseOffset, bucketHexLen, maxClassificationRows, "shard")(
+      call_function("div", _, lit(targetWeight)))
   }
 
   /** [[writeShards]] at SIZE-balanced layout: shard by

@@ -1518,6 +1518,22 @@ class OpsSpec extends SparkSpec {
     assert(cs == Seq(0L, 1L, 2L))
   }
 
+  test("content-order ops refuse caller columns named like their internals") {
+    // unrefused, the core would overwrite a caller's `__b` and join an
+    // ambiguous `__off`
+    val st = struct("id" -> LongType, "stage" -> IntegerType, "w" -> LongType)
+    Seq("__b", "__off").foreach { name =>
+      val df = frame(st, Row(1L, 0, 3L), Row(2L, 1, 4L)).withColumn(name, lit(7L))
+      Seq[() => org.apache.spark.sql.DataFrame](
+        () => Sampling.epochShuffle(df, "id", 1L),
+        () => Sampling.curriculumShuffle(df, "id", "stage", 1L),
+        () => Sink.sizedShardAssignment(df, "id", "w", 5L)).foreach { op =>
+        val e = intercept[IllegalArgumentException](op().collect())
+        assert(e.getMessage.contains(name) && e.getMessage.contains("reserved"))
+      }
+    }
+  }
+
   test("waterfillQuotas: exact fixpoint — saturation, redistribution, exclusion") {
     def k(s: String): Option[Any] = Some(s)
     // hand-computed: B=100, weights a:5 b:3 c:2, avail a:10 b:100 c:100.
