@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -483,22 +482,15 @@ object HtmlUtil {
 /** Whole-stage-codegen expression over [[HtmlUtil.extractText]]. Null html
   * → null (the expression form's explicit `when(html.isNull, null)`).
   */
-case class HtmlExtractText(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${t.sql}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "html_extract_text"
-
+case class HtmlExtractText(child: Expression)
+    extends UnaryKernel("html_extract_text", StringType, StringType, "HtmlUtil.extractText") {
   private lazy val useICU: Boolean = TextUtil.icuCaseMappings()
 
   override protected def nullSafeEval(input: Any): Any =
     HtmlUtil.extractText(input.asInstanceOf[UTF8String], useICU)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlUtil.extractText($c, $useICU)")
+    defineCodeGen(ctx, ev, c => call(c, useICU))
 
   override protected def withNewChildInternal(newChild: Expression): HtmlExtractText =
     copy(child = newChild)
@@ -507,33 +499,26 @@ case class HtmlExtractText(child: Expression) extends UnaryExpression {
 /** Whole-stage-codegen expression over [[HtmlUtil.blockMetrics]]. Null
   * html → null array (the regexp_replace-chain null propagation).
   */
-case class HtmlBlockMetrics(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("block_id", LongType, nullable = false),
-    StructField("text", StringType, nullable = false),
-    StructField("n_chars", LongType, nullable = false),
-    StructField("anchor_chars", LongType, nullable = false),
-    StructField("n_words", LongType, nullable = false),
-    StructField("stop_hits", LongType, nullable = false),
-    StructField("len_ok", BooleanType, nullable = false),
-    StructField("link_ok", BooleanType, nullable = false),
-    StructField("stop_ok", BooleanType, nullable = false),
-    StructField("good", BooleanType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "html_block_metrics"
-
+case class HtmlBlockMetrics(child: Expression)
+    extends UnaryKernel("html_block_metrics", StringType, ArrayType(StructType(Seq(
+      StructField("block_id", LongType, nullable = false),
+      StructField("text", StringType, nullable = false),
+      StructField("n_chars", LongType, nullable = false),
+      StructField("anchor_chars", LongType, nullable = false),
+      StructField("n_words", LongType, nullable = false),
+      StructField("stop_hits", LongType, nullable = false),
+      StructField("len_ok", BooleanType, nullable = false),
+      StructField("link_ok", BooleanType, nullable = false),
+      StructField("stop_ok", BooleanType, nullable = false),
+      StructField("good", BooleanType, nullable = false))),
+      containsNull = false), "HtmlUtil.blockMetrics") {
   private lazy val useICU: Boolean = TextUtil.icuCaseMappings()
 
   override protected def nullSafeEval(input: Any): Any =
     HtmlUtil.blockMetrics(input.asInstanceOf[UTF8String], useICU)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlUtil.blockMetrics($c, $useICU)")
+    defineCodeGen(ctx, ev, c => call(c, useICU))
 
   override protected def withNewChildInternal(newChild: Expression): HtmlBlockMetrics =
     copy(child = newChild)

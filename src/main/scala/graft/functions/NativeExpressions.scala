@@ -25,6 +25,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * §2.11) — these are the phase-2 training-data-pipeline extensions built
   * on extension point (b) of the build brief: custom Catalyst `Expression`
   * with `doGenCode`.
+  *
+  * Every kernel is one case class over the kernel template, [[UnaryKernel]]
+  * or [[BinaryKernel]], which it hands its SQL name, the type each input
+  * must have, its result type, and the static method its generated code
+  * calls with the constants that follow the inputs. Input types compare
+  * with array element nullability ignored. The template owns `prettyName`,
+  * `dataType`, the one `"<name> requires (…), got (…)"` type-check failure
+  * and a `doGenCode` of that one call; a kernel adds `nullSafeEval`, the
+  * same call made on the interpreted path (`KernelCodegenSpec` runs both
+  * paths of every kernel), and its `copy`. A kernel whose call needs
+  * per-instance state overrides `doGenCode` and still builds the call with
+  * the template's `call`: a session conf read lazily (`useICU`, which must
+  * not be read at construction), reference objects, or a branch.
   */
 object native {
 
@@ -110,6 +123,55 @@ object native {
       cells.toIndexedSeq, cents.map(_.toIndexedSeq).toIndexedSeq))
 }
 
+/** The unary form of the kernel template (see the header of this file).
+  * Serializable so a task can deserialize a kernel: Java serialization
+  * rebuilds it through its first non-serializable parent's no-arg
+  * constructor, which this class does not have.
+  */
+private[functions] abstract class UnaryKernel(
+    name: String, input: DataType, result: DataType, method: String, consts: Any*)
+    extends UnaryExpression with Serializable {
+  override def prettyName: String = name
+  override def dataType: DataType = result
+  override def checkInputDataTypes(): TypeCheckResult =
+    Kernel.check(name, input, children.map(_.dataType))
+  protected def call(args: Any*): String = Kernel.call(method, args)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => call(c +: consts: _*))
+}
+
+/** The binary form of the kernel template: both inputs take `input`. */
+private[functions] abstract class BinaryKernel(
+    name: String, input: DataType, result: DataType, method: String, consts: Any*)
+    extends BinaryExpression with Serializable {
+  override def prettyName: String = name
+  override def dataType: DataType = result
+  override def checkInputDataTypes(): TypeCheckResult =
+    Kernel.check(name, input, children.map(_.dataType))
+  protected def call(args: Any*): String = Kernel.call(method, args)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => call(a +: b +: consts: _*))
+}
+
+private object Kernel {
+  /** Every input must be `want`. */
+  def check(name: String, want: DataType, got: Seq[DataType]): TypeCheckResult = {
+    def sig(ts: Seq[DataType]) = ts.map(_.simpleString).mkString("(", ", ", ")")
+    if (got.forall(accepts(want, _))) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name requires ${sig(got.map(_ => want))}, got ${sig(got)}")
+  }
+
+  /** `got` is `want` up to array element nullability. */
+  private def accepts(want: DataType, got: DataType): Boolean = (want, got) match {
+    case (ArrayType(w, _), ArrayType(g, _)) => accepts(w, g)
+    case _ => want == got
+  }
+
+  def call(method: String, args: Seq[Any]): String =
+    s"graft.functions.$method(${args.mkString(", ")})"
+}
+
 /** Fused shingle→minhash→band kernel. One pass over the shingles; for each
   * shingle the 64 (=`numHashes`) seeded xxhash64 values update running
   * minima; bands are then chain-hashes of their signature slice. Identical
@@ -117,24 +179,13 @@ object native {
   * iff their signatures agree on that whole slice.
   */
 case class MinHashBandHashes(child: Expression, k: Int, numHashes: Int, bands: Int)
-    extends UnaryExpression {
+    extends UnaryKernel("minhash_band_hashes", ArrayType(StringType),
+      ArrayType(LongType, containsNull = false), "MinHashUtil.bandHashes", k, numHashes, bands) {
   require(k > 0 && numHashes > 0 && bands > 0 && numHashes % bands == 0,
     s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_band_hashes"
-
   override protected def nullSafeEval(input: Any): Any =
     MinHashUtil.bandHashes(input.asInstanceOf[ArrayData], k, numHashes, bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashUtil.bandHashes($c, $k, $numHashes, $bands)")
 
   override protected def withNewChildInternal(newChild: Expression): MinHashBandHashes =
     copy(child = newChild)
@@ -145,23 +196,11 @@ case class MinHashBandHashes(child: Expression, k: Int, numHashes: Int, bands: I
   * form it replaces). Zero vectors yield NaN, like `0.0 / 0.0` in SQL.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<float> inputs, got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_similarity"
+    extends BinaryKernel("cosine_similarity", ArrayType(FloatType), DoubleType,
+      "VectorMath.cosine") {
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     VectorMath.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorMath.cosine($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
@@ -174,23 +213,11 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * candidate verification in the LSH dedup operators runs millions of these.
   */
 case class JaccardSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<string> inputs, got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaccard_similarity"
+    extends BinaryKernel("jaccard_similarity", ArrayType(StringType), DoubleType,
+      "SetMath.jaccard") {
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     SetMath.jaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SetMath.jaccard($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaccardSimilarity =
@@ -202,21 +229,11 @@ case class JaccardSimilarity(left: Expression, right: Expression)
   * bit j of the result is set when the vote total is positive. Bit-identical
   * to the HOF-expression form in [[graft.ops.Dedup.simhash64Expr]].
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${t.sql}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
+case class SimHash64(child: Expression)
+    extends UnaryKernel("simhash64", ArrayType(StringType), LongType, "MinHashUtil.simhash64") {
 
   override protected def nullSafeEval(input: Any): Any =
     MinHashUtil.simhash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashUtil.simhash64($c)")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
@@ -226,22 +243,13 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   * equivalent (`transform(sequence(...), i => substr(t, i, n))`) pays one
   * interpreted lambda eval per gram — ~300 per row on typical documents.
   */
-case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class CharNgrams(child: Expression, n: Int)
+    extends UnaryKernel("char_ngrams", StringType, ArrayType(StringType, containsNull = false),
+      "TextUtil.charNgrams", n) {
   require(n > 0, s"n must be positive, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "char_ngrams"
 
   override protected def nullSafeEval(input: Any): Any =
     TextUtil.charNgrams(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextUtil.charNgrams($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): CharNgrams =
     copy(child = newChild)
@@ -253,16 +261,10 @@ case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
   * that composition's own library calls ([[TextUtil.normalizedCharNgrams]]).
   * Either way the grams are cut in one linear pass.
   */
-case class NormalizedCharNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class NormalizedCharNgrams(child: Expression, n: Int)
+    extends UnaryKernel("normalized_char_ngrams", StringType,
+      ArrayType(StringType, containsNull = false), "TextUtil.normalizedCharNgrams") {
   require(n > 0, s"n must be positive, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "normalized_char_ngrams"
 
   private lazy val useICU: Boolean = TextUtil.icuCaseMappings()
 
@@ -270,8 +272,7 @@ case class NormalizedCharNgrams(child: Expression, n: Int) extends UnaryExpressi
     TextUtil.normalizedCharNgrams(input.asInstanceOf[UTF8String], n, useICU)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextUtil.normalizedCharNgrams($c, $n, $useICU)")
+    defineCodeGen(ctx, ev, c => call(c, n, useICU))
 
   override protected def withNewChildInternal(newChild: Expression): NormalizedCharNgrams =
     copy(child = newChild)
@@ -286,23 +287,13 @@ case class NormalizedCharNgrams(child: Expression, n: Int) extends UnaryExpressi
   * collisions merge two shingles (P ≈ |set|²/2⁶⁵ ≈ 1e-13 per document —
   * negligible against the float noise floor of any similarity threshold).
   */
-case class HashedShingleSet(child: Expression, k: Int) extends UnaryExpression {
+case class HashedShingleSet(child: Expression, k: Int)
+    extends UnaryKernel("hashed_shingle_set", ArrayType(StringType),
+      ArrayType(LongType, containsNull = false), "MinHashUtil.hashedShingleSet", k) {
   require(k > 0, s"k must be positive, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hashed_shingle_set"
 
   override protected def nullSafeEval(input: Any): Any =
     MinHashUtil.hashedShingleSet(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashUtil.hashedShingleSet($c, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): HashedShingleSet =
     copy(child = newChild)
@@ -312,23 +303,11 @@ case class HashedShingleSet(child: Expression, k: Int) extends UnaryExpression {
   * allocation. Pairs with [[HashedShingleSet]].
   */
 case class JaccardSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint> inputs, got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaccard_sorted"
+    extends BinaryKernel("jaccard_sorted", ArrayType(LongType), DoubleType,
+      "SetMath.jaccardSorted") {
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     SetMath.jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SetMath.jaccardSorted($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaccardSorted =
@@ -347,18 +326,9 @@ case class JaccardSorted(left: Expression, right: Expression)
   * scan and only survivors pay the full merge.
   */
 case class JaccardSortedGE(left: Expression, right: Expression, threshold: Double)
-    extends BinaryExpression {
+    extends BinaryKernel("jaccard_sorted_ge", ArrayType(LongType), BooleanType,
+      "SetMath.jaccardSortedGE", threshold) {
   require(threshold > 0, s"threshold must be positive, got $threshold")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint> inputs, got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "jaccard_sorted_ge"
 
   /** The O(1) size-ratio reject is sound only when element counts equal
     * effective set sizes — i.e. no null elements. Arrays typed
@@ -383,9 +353,7 @@ case class JaccardSortedGE(left: Expression, right: Expression, threshold: Doubl
     if (elemsMayBeNull)
       defineCodeGen(ctx, ev, (a, b) =>
         s"(graft.functions.SetMath.jaccardSorted($a, $b) >= $threshold)")
-    else
-      defineCodeGen(ctx, ev, (a, b) =>
-        s"graft.functions.SetMath.jaccardSortedGE($a, $b, $threshold)")
+    else super.doGenCode(ctx, ev)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaccardSortedGE =
@@ -401,24 +369,13 @@ case class JaccardSortedGE(left: Expression, right: Expression, threshold: Doubl
   * lambda evaluations per row.
   */
 case class HyperplaneBucket(child: Expression, planes: Int, offset: Int = 0)
-    extends UnaryExpression {
+    extends UnaryKernel("hyperplane_bucket", ArrayType(FloatType), IntegerType,
+      "VectorMath.hyperplaneBucket", planes, offset) {
   require(planes > 0 && planes < 31, s"planes must be in [1, 30], got $planes")
   require(offset >= 0, s"offset must be non-negative, got $offset")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${t.sql}")
-  }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "hyperplane_bucket"
-
   override protected def nullSafeEval(input: Any): Any =
     VectorMath.hyperplaneBucket(input.asInstanceOf[ArrayData], planes, offset)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorMath.hyperplaneBucket($c, $planes, $offset)")
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneBucket =
     copy(child = newChild)
@@ -428,22 +385,12 @@ case class HyperplaneBucket(child: Expression, planes: Int, offset: Int = 0)
   * LinkedHashMap keeps first-encounter order, so the map (and anything
   * exploded from it) is a deterministic function of the array.
   */
-case class ElementCounts(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${t.sql}")
-  }
-  override def dataType: DataType =
-    MapType(StringType, LongType, valueContainsNull = false)
-  override def prettyName: String = "element_counts"
+case class ElementCounts(child: Expression)
+    extends UnaryKernel("element_counts", ArrayType(StringType),
+      MapType(StringType, LongType, valueContainsNull = false), "GramUtil.elementCounts") {
 
   override protected def nullSafeEval(input: Any): Any =
     GramUtil.elementCounts(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GramUtil.elementCounts($c)")
 
   override protected def withNewChildInternal(newChild: Expression): ElementCounts =
     copy(child = newChild)
@@ -458,20 +405,13 @@ case class ElementCounts(child: Expression) extends UnaryExpression {
 case class IntKMeansAssign(
     child: Expression,
     cells: IndexedSeq[Long],
-    cents: IndexedSeq[IndexedSeq[Long]]) extends UnaryExpression {
+    cents: IndexedSeq[IndexedSeq[Long]])
+    extends UnaryKernel("int_kmeans_assign", ArrayType(LongType), StructType(Seq(
+      StructField("d", LongType, nullable = false),
+      StructField("s", LongType, nullable = false))), "VectorMath.kmeansAssign") {
   require(cells.nonEmpty && cells.length == cents.length,
     s"$prettyName needs aligned non-empty cells/centroids, got " +
       s"${cells.length}/${cents.length}")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${t.sql}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("d", LongType, nullable = false),
-    StructField("s", LongType, nullable = false)))
-  override def prettyName: String = "int_kmeans_assign"
 
   @transient private lazy val cellsArr: Array[Long] = cells.toArray
   @transient private lazy val centsArr: Array[Array[Long]] =
@@ -483,8 +423,7 @@ case class IntKMeansAssign(
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cellsRef = ctx.addReferenceObj("kmCells", cellsArr, "long[]")
     val centsRef = ctx.addReferenceObj("kmCents", centsArr, "long[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorMath.kmeansAssign($c, $cellsRef, $centsRef)")
+    defineCodeGen(ctx, ev, c => call(c, cellsRef, centsRef))
   }
 
   override protected def withNewChildInternal(newChild: Expression): IntKMeansAssign =

@@ -789,8 +789,7 @@ object Dedup {
       .withColumnRenamed("id", "existing_id")
     val sets = indexSets(spark, ep)
       .select(col("id").as("existing_id"), col("hs").as("hs_b"))
-    probePairs(newDocs, textCol, idCol, ep.header.int("k"), ep.header.int("num_hashes"),
-      ep.header.int("bands"), buckets, sets, threshold)
+    probePairs(newDocs, textCol, idCol, k, numHashes, bands, buckets, sets, threshold)
   }
 
   /** The probe plan of both `…Against` ops: the new side is hashed ONCE and

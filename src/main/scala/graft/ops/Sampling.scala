@@ -1610,7 +1610,7 @@ object Sampling {
   /** The internal columns [[contentOrderPositions]] joins onto the
     * caller's frame and drops again.
     */
-  private val ContentOrderInternals = Seq("__s", "__b", "__off", "__cb")
+  private val ContentOrderInternals = Seq("__s", "__b", "__off")
 
   /** The one content-order position core of [[epochShuffle]],
     * [[curriculumShuffle]] and [[Sink.sizedShardAssignment]]: `df` plus
@@ -1636,9 +1636,10 @@ object Sampling {
     * stage would take their running weight from partition order —
     * positions that silently change across reruns and clusters — so a
     * lag-equality tripwire over the same window order (dups hash to one
-    * bucket and sort adjacent; same partitioning, no extra shuffle) fails
-    * the job on the first one. It lives inside `outCol`'s expression, so
-    * column pruning can never drop it. `op` names the caller and `noun` a
+    * bucket and sort adjacent) fails the job on the first one. It lives
+    * inside `outCol`'s expression, next to the running sum, so column
+    * pruning can never drop it and both share one Window and its one
+    * in-partition sort. `op` names the caller and `noun` a
     * key in messages (both are in the plan text, as the tripwire's message).
     */
   private[graft] def contentOrderPositions(
@@ -1696,7 +1697,6 @@ object Sampling {
     val win = lagWin.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     groups.foldLeft(df) { case (d, (g, c)) => d.withColumn(g, c) }
       .join(broadcast(offDf), names)
-      .withColumn("__cb", col("__off") + sum(w).over(win) - w)
       .withColumn(outCol,
         when(lag(col(keyCol), 1).over(lagWin) === col(keyCol),
           raise_error(concat(
@@ -1705,8 +1705,8 @@ object Sampling {
             lit(stageCol.fold("")(s => s" within one '$s' stage") +
               s" — duplicate ${noun}s have no deterministic placement; " +
               "deduplicate or re-key first"))).cast("long"))
-        .otherwise(finish(col("__cb"))))
-      .drop(names ++ Seq("__off", "__cb"): _*)
+        .otherwise(finish(col("__off") + sum(w).over(win) - w)))
+      .drop(names :+ "__off": _*)
   }
 
   /** Deterministic, engine-portable GLOBAL training-order shuffle: every

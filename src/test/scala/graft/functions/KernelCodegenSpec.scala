@@ -176,6 +176,15 @@ class KernelCodegenSpec extends SparkSpec {
     }
   }
 
+  test("a registered kernel called with a wrong argument count names its arities") {
+    Seq("simhash64(toks, toks2)" -> "simhash64 expects 1 arguments, got 2",
+      "hyperplane_bucket(vec)" -> "hyperplane_bucket expects 2 or 3 arguments, got 1")
+      .foreach { case (call, msg) =>
+        val e = intercept[Exception](sql(call))
+        assert(messages(e).contains(msg), messages(e))
+      }
+  }
+
   kernels.foreach { case (cls, _, _, wrong, name) =>
     test(s"${cls.getSimpleName}: a wrong-typed call fails analysis naming $name") {
       val e = intercept[AnalysisException](kernel(wrong))

@@ -9,7 +9,8 @@ A and B are directories written by the 4-arg
 by query name whatever tag each side used. Two runs of one tree differ in
 ids the planner allocates, so each plan is masked before the compare:
 expression ids (`#123`), JVM lambda class names and their hashes, `x_N`
-lambda variable numbers, RDD ids, `.scala:N` line numbers, `plan_id`s,
+lambda variable numbers, RDD ids, the `File.scala:N` of RDD call sites
+(a call moving between files is no plan change), `plan_id`s,
 part-file UUIDs, 9-digit epoch and data dir numbers, and, with `--roots`,
 each side's checkout path.
 
@@ -34,7 +35,8 @@ MASKS = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"\bplan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
-    (re.compile(r"\.scala:\d+"), ".scala:N"),
+    # RDD call sites: `at createDataFrame at Sink.scala:46`, file and line
+    (re.compile(r"\w+\.scala:\d+"), "F.scala:N"),
     (re.compile(r"part-(\d+)-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"), r"part-\1-UUID"),
     (re.compile(r"(?<!\d)\d{9}(?!\d)"), "NNNNNNNNN"),
 ]

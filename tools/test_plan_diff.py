@@ -18,7 +18,7 @@ Arguments: HashedRelationBroadcastMode(List(input[0, bigint, true]),false), [pla
 
 (2) Scan ExistingRDD
 Output [2]: [neighbor_id#%(a)dL, cv#%(b)d]
-Arguments: [neighbor_id#%(a)dL, cv#%(b)d], MapPartitionsRDD[%(rdd)d] at createDataFrame at Tables.scala:%(line)d
+Arguments: [neighbor_id#%(a)dL, cv#%(b)d], MapPartitionsRDD[%(rdd)d] at createDataFrame at %(site)s.scala:%(line)d
 
 (3) Project
 Output [1]: [transform(cv#%(b)d, lambdafunction((lambda x_%(x)d#%(xid)d * 2.0), lambda x_%(x)d#%(xid)d, false)) AS t#%(c)d]
@@ -28,7 +28,7 @@ Function: graft.ops.Similarity$$$$Lambda$%(lam)d/0x00000008012%(lam)d@%(hash)x
 
 
 def plan(**kw):
-    base = dict(plan=101, a=1, b=2, rdd=7, line=46, x=3, xid=9, c=10, root="/src/a",
+    base = dict(plan=101, a=1, b=2, rdd=7, site="Tables", line=46, x=3, xid=9, c=10, root="/src/a",
                 ep=3, uuid="0f3a1b2c-1111-2222-3333-444455556666", lam=812, hash=0x5f3a2b)
     base.update(kw)
     return PLAN % base
@@ -59,7 +59,7 @@ class PlanDiffTest(unittest.TestCase):
     def test_masked_only_differences_compare_equal(self):
         self.write(self.a, "q37_ann_topk_before.txt", plan())
         self.write(self.b, "q37_ann_topk_after.txt", plan(
-            plan=202, a=41, b=42, rdd=99, line=51, x=17, xid=93, c=50, root="/src/b",
+            plan=202, a=41, b=42, rdd=99, site="Sink", line=51, x=17, xid=93, c=50, root="/src/b",
             ep=8, uuid="9a8b7c6d-aaaa-bbbb-cccc-ddddeeeeffff", lam=1204, hash=0xabc123))
         code, out = self.run_main("--roots", "/src/a", "/src/b")
         self.assertEqual(code, 0, out)
